@@ -2541,10 +2541,11 @@ def q_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_c01_cache_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1: result memoization (reference cache.go:54-155). The same query
-    twice on an unchanged db: second serve comes from the cache parquet and
-    is row-identical; one append then invalidates (version key changes) and
-    the recompute sees the new doc. hits/misses counters and the final
-    (invalidated, recomputed) per-bucket aggregate are all oracle-checked."""
+    twice on an unchanged db: second serve comes from the cache's Arrow
+    entry and is row-identical; one append then invalidates (version key
+    changes) and the recompute sees the new doc. hits/misses counters and
+    the final (invalidated, recomputed) per-bucket aggregate are all
+    oracle-checked."""
     pairs = _event_doc_pairs(spark, sf_dir, 200)
     dbs, root = _scratch_db(spark)
     try:

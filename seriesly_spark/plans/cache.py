@@ -5,27 +5,41 @@ The reference keys cached per-bucket results on
 ``db # bucket # fnv64(doc-ids + ptrs + reducers + filters)`` (reference
 cache.go:157-172) — i.e. the cache entry is valid exactly while the bucket's
 document set is unchanged. Here the whole result is memoized keyed on
-(query spec, database version), where the database version is the max write
-sequence + live-file fingerprint: any append, delete or compaction changes
-the version and naturally invalidates every cached result, which is the
-same correctness contract without per-bucket bookkeeping. Hits skip the
-Spark job entirely (read one tiny parquet); misses compute and store
-through. Cache entries are parquet, so the cache itself scales to any
-result size and any shared filesystem.
+(query spec, sum mode, extraction engine, database version), where the
+database version is the live-file fingerprint: any append, delete or
+compaction changes the version and naturally invalidates every cached
+result, which is the same correctness contract without per-bucket
+bookkeeping.
+
+An entry is one Arrow IPC file, written under a unique ``*.tmp`` name and
+``os.replace``d onto its key, so a reader sees a whole entry or none. A hit
+reads it on the driver with pyarrow and returns ``createDataFrame`` of the
+table: a local relation whose ``collect()`` launches no Spark job. A miss
+computes the answer once with ``toArrow()``, stores it and returns the same
+kind of local DataFrame. An answer of more than ``MAX_CACHED_ROWS`` rows is
+not cached; the miss returns the lazy query plan instead, so the driver
+never holds more than that many rows for the cache.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import tempfile
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 from seriesly_spark.db import SerieslyDB
-from seriesly_spark.plans.query import SerieslyQuery
+from seriesly_spark.plans.query import SerieslyQuery, resolve_extract_impl
+
+# Largest answer (in rows: one per bucket) a cache entry holds.
+MAX_CACHED_ROWS = 100_000
 
 
-def _query_fingerprint(name: str, q: SerieslyQuery, version: str) -> str:
+def _query_fingerprint(
+    name: str, q: SerieslyQuery, version: str, exact_sums: bool
+) -> str:
     parts = [
         name,
         version,
@@ -35,6 +49,8 @@ def _query_fingerprint(name: str, q: SerieslyQuery, version: str) -> str:
         repr(q.from_ts),
         repr(q.to_ts),
         repr(q.aliases),
+        repr(exact_sums),
+        resolve_extract_impl(),
     ]
     return hashlib.sha256("\x01".join(parts).encode()).hexdigest()[:32]
 
@@ -53,6 +69,32 @@ def db_version(dbs: SerieslyDB, name: str) -> str:
     return h.hexdigest()[:16]
 
 
+def _read_entry(path: str) -> pa.Table:
+    with pa.OSFile(path, "rb") as f:
+        return pa.ipc.open_file(f).read_all()
+
+
+def _write_entry(path: str, table: pa.Table) -> None:
+    fd, tmp = tempfile.mkstemp(suffix=".tmp", dir=os.path.dirname(path))
+    os.close(fd)
+    try:
+        with pa.ipc.new_file(tmp, table.schema) as w:
+            w.write_table(table)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
+def _local_df(spark: SparkSession, table: pa.Table) -> DataFrame:
+    # An empty answer, from toArrow() or read back from IPC, can have no
+    # chunks, and PySpark 4.1's createDataFrame fails on a nested (list)
+    # column without chunks.
+    if table.num_rows == 0:
+        table = table.schema.empty_table()
+    return spark.createDataFrame(table)
+
+
 class QueryCache:
     def __init__(self, dbs: SerieslyDB, cache_dir: str):
         self.dbs = dbs
@@ -63,21 +105,24 @@ class QueryCache:
 
     def query(self, name: str, q: SerieslyQuery, exact_sums: bool = False) -> DataFrame:
         """Memoized ``SerieslyDB.query``: identical query + unchanged
-        database -> served from the cache parquet (no scan of the data);
-        any write/delete/compact -> recompute (miss falls through to
+        database -> served from the cache entry (no Spark job); any
+        write/delete/compact -> recompute (miss falls through to
         compute-and-store, like the reference's GET-miss path,
         cache.go:54-155)."""
-        key = _query_fingerprint(name, q, db_version(self.dbs, name))
-        path = os.path.join(self.cache_dir, key)
+        key = _query_fingerprint(name, q, db_version(self.dbs, name), exact_sums)
+        path = os.path.join(self.cache_dir, key + ".arrow")
         spark = self.dbs.spark
-        if os.path.isdir(path):
-            try:
-                out = spark.read.parquet(path)
-                self.hits += 1
-                return out
-            except Exception:
-                pass  # corrupt/partial entry: recompute
+        try:
+            table = _read_entry(path)
+        except FileNotFoundError:
+            pass
+        else:
+            self.hits += 1
+            return _local_df(spark, table)
         self.misses += 1
         res = self.dbs.query(name, q, exact_sums=exact_sums)
-        res.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        table = res.limit(MAX_CACHED_ROWS + 1).toArrow()
+        if table.num_rows > MAX_CACHED_ROWS:
+            return res
+        _write_entry(path, table)
+        return _local_df(spark, table)

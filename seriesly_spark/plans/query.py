@@ -112,6 +112,15 @@ def _py_parse_ts_str(s: str) -> int:
     raise ValueError(f"unparseable time: {s!r}")
 
 
+def resolve_extract_impl(extract_impl: str | None = None) -> str:
+    """The pointer-extraction engine a query runs with: ``extract_impl``,
+    else the ``SERIESLY_EXTRACT_IMPL`` env var, else ``"json"``."""
+    impl = extract_impl or os.environ.get("SERIESLY_EXTRACT_IMPL", "json")
+    if impl not in ("json", "variant"):
+        raise ValueError(f"unknown extract_impl: {impl!r}")
+    return impl
+
+
 def seriesly_query(
     df: DataFrame,
     query: SerieslyQuery,
@@ -137,9 +146,7 @@ def seriesly_query(
     normalizations; see ``functions.jsonptr.extract_ptr_from_variant``).
     Falls back to the ``SERIESLY_EXTRACT_IMPL`` env var when unset.
     """
-    impl = extract_impl or os.environ.get("SERIESLY_EXTRACT_IMPL", "json")
-    if impl not in ("json", "variant"):
-        raise ValueError(f"unknown extract_impl: {impl!r}")
+    impl = resolve_extract_impl(extract_impl)
     fields = query.fields
     if not fields:
         raise ValueError("at least one pointer is required")  # query.go:151

@@ -1,13 +1,18 @@
 """Tests for P8 (query deadline) and C1 (result memoization)."""
 
 import json
+import os
 import time
+import uuid
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from seriesly_spark.db import SerieslyDB
+from seriesly_spark.plans import cache as cache_mod
 from seriesly_spark.plans.cache import QueryCache, db_version
+from seriesly_spark.plans.emit import to_seriesly_json
 from seriesly_spark.plans.limits import QueryTimeout, run_with_timeout
 from seriesly_spark.plans.query import SerieslyQuery
 
@@ -47,6 +52,9 @@ class TestQueryCache:
             [
                 ("2024-01-01T00:00:00Z", json.dumps({"v": 1})),
                 ("2024-01-01T00:10:00Z", json.dumps({"v": 2})),
+                ("2024-01-01T01:00:00Z", json.dumps({"v": 4, "h": "a", "o": {"b": 1, "a": 2}})),
+                ("2024-01-01T01:30:00Z", json.dumps({"v": 7, "h": "b"})),
+                ("2024-01-01T02:00:00Z", json.dumps({"v": 9.5, "h": "a", "o": {"z": 0}})),
             ],
         )
         return d
@@ -88,3 +96,134 @@ class TestQueryCache:
         dbs.compact("t")
         qc.query("t", self._q())
         assert (qc.misses, qc.hits) == (2, 0)
+
+    @pytest.mark.parametrize(
+        "field, first, second",
+        [
+            (("/v", "sum"), ({"exact_sums": True}, "json"), ({}, "json")),
+            (("/o", "obj_keys"), ({}, "variant"), ({}, "json")),
+        ],
+        ids=["exact_sums", "extract_impl"],
+    )
+    def test_key_covers_answer_options(
+        self, spark, tmp_path, monkeypatch, field, first, second
+    ):
+        # Two calls whose answers differ only by the sum mode or the
+        # extraction engine must not share an entry.
+        d = SerieslyDB(spark, str(tmp_path / "dbroot"))
+        d.create("t")
+        d.write_batch(
+            "t",
+            [
+                ("2024-01-01T00:00:00Z", json.dumps({"v": 0.1, "o": {"b": 1, "a": 2}})),
+                ("2024-01-01T00:10:00Z", json.dumps({"v": 0.2})),
+            ],
+        )
+        qc = QueryCache(d, str(tmp_path / "cache"))
+        q = SerieslyQuery(group_ms=3_600_000, fields=[field], aliases=["x"])
+        answers = []
+        for kwargs, impl in (first, second):
+            monkeypatch.setenv("SERIESLY_EXTRACT_IMPL", impl)
+            want = d.query("t", q, **kwargs).collect()
+            assert qc.query("t", q, **kwargs).collect() == want
+            answers.append(want)
+        assert answers[0] != answers[1]
+        assert (qc.misses, qc.hits) == (2, 0)
+
+    PANELS = {
+        "plain": dict(fields=[("/v", "sum"), ("/v", "avg"), ("/v", "count"), ("/v", "min")]),
+        "list": dict(fields=[("/h", "identity"), ("/h", "distinct"), ("/o", "obj_keys")]),
+        "rate": dict(fields=[("/v", "c")]),
+        "host": dict(fields=[("/v", "sum"), ("/v", "c")], filters=[("/h", "a")]),
+        "empty": dict(
+            fields=[("/v", "sum"), ("/h", "distinct")], from_ts="2030-01-01", to_ts="2030-01-02"
+        ),
+    }
+
+    @pytest.mark.parametrize("panel", sorted(PANELS))
+    def test_hit_is_jobless_and_equals_fill(self, spark, dbs, tmp_path, panel):
+        spec = self.PANELS[panel]
+        q = SerieslyQuery(
+            group_ms=3_600_000,
+            aliases=[f"f{i}" for i in range(len(spec["fields"]))],
+            **spec,
+        )
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        miss = qc.query("t", q)
+        fill = to_seriesly_json(miss, q.aliases)
+
+        def serve():
+            df = qc.query("t", q)
+            return df, to_seriesly_json(df, q.aliases)
+
+        (hit, text), jobs = _spark_jobs(spark, serve)
+        assert jobs == 0
+        assert (qc.misses, qc.hits) == (1, 1)
+        # Rate sums differ in the last bits between separate uncached
+        # runs, so the hit is compared with the miss that filled it.
+        assert text == fill
+        assert (text == "{}") == (panel == "empty")
+        assert miss.dtypes == hit.dtypes == dbs.query("t", q).dtypes
+
+    def test_failed_write_leaves_no_entry(self, dbs, tmp_path, monkeypatch):
+        real_new_file = pa.ipc.new_file
+
+        class TornWriter:
+            """Writes part of the table, then fails like a full disk."""
+
+            def __init__(self, sink, schema):
+                self.w = real_new_file(sink, schema)
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                self.w.close()
+
+            def write_table(self, table):
+                self.w.write_table(table.slice(0, 1))
+                raise OSError("disk full")
+
+        monkeypatch.setattr(pa.ipc, "new_file", TornWriter)
+        cache = tmp_path / "cache"
+        qc = QueryCache(dbs, str(cache))
+        with pytest.raises(OSError, match="disk full"):
+            qc.query("t", self._q())
+        assert os.listdir(cache) == []
+        monkeypatch.undo()
+        assert qc.query("t", self._q()).collect()[0].s == 3.0
+        assert (qc.misses, qc.hits) == (2, 0)
+
+    def test_answer_over_row_cap_is_not_cached(self, dbs, tmp_path, monkeypatch):
+        monkeypatch.setattr(cache_mod, "MAX_CACHED_ROWS", 2)
+        cache = tmp_path / "cache"
+        qc = QueryCache(dbs, str(cache))
+        want = dbs.query("t", self._q()).collect()
+        assert len(want) == 3
+        for _ in range(2):
+            assert qc.query("t", self._q()).collect() == want
+        assert os.listdir(cache) == []
+        assert (qc.misses, qc.hits) == (2, 0)
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn`` under its own job group; return its result and how many
+    Spark jobs it launched."""
+    sc = spark.sparkContext
+    group, marker = (f"jobs-{uuid.uuid4().hex}" for _ in range(2))
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        # The status tracker hears of jobs through the asynchronous
+        # listener bus, in order: once a marker job run afterwards is
+        # seen, every job fn launched is seen too.
+        sc.setJobGroup(marker, marker)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
