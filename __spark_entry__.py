@@ -1270,10 +1270,9 @@ def q_t01_parse_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.createDataFrame(
         [(c[0],) for c in _T01_CASES], "input string"
     )
-    ns = parse_any_ts_ns(F.col("input"))
     return df.select(
-        "input", ns.alias("ts_ns"), canonical_key(ns).alias("canonical")
-    )
+        "input", parse_any_ts_ns(F.col("input")).alias("ts_ns")
+    ).select("input", "ts_ns", canonical_key("ts_ns").alias("canonical"))
 
 
 # ---------------------------------------------------------------------------
@@ -2696,7 +2695,7 @@ def q_daily_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     type (explicit vocabulary, zero-filled) — Spark pivot compiling to a
     single wide conditional aggregate."""
     ev = _events(spark, sf_dir).withColumn(
-        "bucket_ms", bucket_ms_col(F.col("ts_ns"), DAY_MS)
+        "bucket_ms", bucket_ms_col("ts_ns", DAY_MS)
     )
     return pivot_counts(
         ev, "bucket_ms", "event_type",

@@ -24,9 +24,11 @@ Storage layout — one directory per database, hive-partitioned by UTC date:
 
     <root>/<db>/date=YYYY-MM-DD/part-*.parquet   (ts_ns LONG, seq LONG, doc STRING)
 
-Design for scale: the date partition column turns every time-range
-predicate into partition pruning plus parquet min/max skipping on ts_ns
-(the B-tree range-walk analogue); appends are new files (no read-modify-
+Design for scale: a read lists the in-range ``date=`` directories on the
+driver and reads exactly those with the declared schema — no schema-
+inference job, no listing of other days — keeping the ts_ns bounds on the
+scan for parquet min/max skipping (the B-tree range-walk analogue); a
+point ``get`` reads only its key's day; appends are new files (no read-modify-
 write); delete_range drops fully-covered partition directories without
 touching their data and rewrites only the two edge partitions; compact
 merges small files per partition. On a real deployment the same API maps
@@ -36,16 +38,17 @@ repo dependency-free.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import shutil
 import time
 import uuid
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from seriesly_spark.functions.timeparse import canonical_key
+from seriesly_spark.functions.timeparse import canonical_key, timestamp_from_ts_ns
 from seriesly_spark.plans.query import SerieslyQuery, py_parse_ts_ns, seriesly_query
 from seriesly_spark.sources.tables import latest_by_key
 
@@ -208,7 +211,7 @@ class SerieslyDB:
         else:
             df = self.spark.createDataFrame(out, DOC_SCHEMA)
         df = df.withColumn(
-            "date", F.to_date(F.timestamp_micros(F.expr("ts_ns div 1000")))
+            "date", F.to_date(timestamp_from_ts_ns("ts_ns"))
         )
         if len(out) > 10_000:
             df = df.repartition("date")
@@ -309,36 +312,61 @@ class SerieslyDB:
 
     # -- Reads (S1-S3, S10/S11) --------------------------------------------
 
-    def df(self, name: str, from_ts=None, to_ts=None) -> DataFrame:
-        """Live view of the database: time-range pruned, one row per key
-        (last write wins). Range bounds are inclusive ns keys (P4)."""
+    def _read_partitions(self, name: str, parts: list[str]) -> DataFrame:
+        """Raw rows (``ts_ns, seq, doc`` plus the ``date`` partition
+        column) of the listed ``date=`` directories: the store's one
+        reader. The declared schema means no schema-inference job, and
+        naming the directories means Spark lists only those (on the
+        driver, up to 32 of them)."""
         path = self._path(name)
-        if not os.path.isdir(path):
-            raise KeyError(f"no such db: {name}")
-        try:
-            raw = self.spark.read.parquet(path)
-        except Exception:
-            # Partition discovery needs at least one file; empty db => empty df.
+        return (
+            self.spark.read.schema(DOC_SCHEMA)
+            .option("basePath", path)
+            .parquet(*[os.path.join(path, p) for p in parts])
+        )
+
+    def df(self, name: str, from_ts=None, to_ts=None) -> DataFrame:
+        """Live view of the database: one row per key (last write wins).
+        Range bounds are inclusive ns keys (P4). Pruning is a driver-side
+        list of the in-range ``date=`` directories; the ``ts_ns`` bounds
+        stay on the scan for row-group skipping. A range that touches no
+        partition is the empty frame; an unreadable file raises."""
+        lo = None if from_ts is None else py_parse_ts_ns(from_ts)
+        hi = None if to_ts is None else py_parse_ts_ns(to_ts)
+        lo_d = None if lo is None else _ns_date(lo)
+        hi_d = None if hi is None else _ns_date(hi)
+        parts = [
+            p for p in self._partitions(name)
+            if (lo_d is None or p[len("date="):] >= lo_d)
+            and (hi_d is None or p[len("date="):] <= hi_d)
+        ]
+        if not parts:
             return self.spark.createDataFrame([], DOC_SCHEMA)
-        if from_ts is not None:
-            lo = py_parse_ts_ns(from_ts)
-            # date predicate -> partition pruning; ts_ns -> row-group skipping
-            raw = raw.where(
-                (F.col("date") >= F.to_date(F.timestamp_micros(F.lit(lo // 1000))))
-                & (F.col("ts_ns") >= F.lit(lo))
-            )
-        if to_ts is not None:
-            hi = py_parse_ts_ns(to_ts)
-            raw = raw.where(
-                (F.col("date") <= F.to_date(F.timestamp_micros(F.lit(hi // 1000))))
-                & (F.col("ts_ns") <= F.lit(hi))
-            )
+        raw = self._read_partitions(name, parts)
+        bounds = []
+        if lo is not None:
+            bounds.append(f"ts_ns >= {lo}")
+        if hi is not None:
+            bounds.append(f"ts_ns <= {hi}")
+        if bounds:
+            raw = raw.where(" AND ".join(bounds))
         return latest_by_key(raw.select("ts_ns", "seq", "doc"), ["ts_ns"], "seq")
 
     def get(self, name: str, ts) -> str | None:
+        """Point read (S3): only the key's date partition is read, with
+        the key pushed to the scan; one Spark job. The newest ``seq``
+        among the key's revisions wins."""
         ns = py_parse_ts_ns(ts)
-        row = self.df(name).where(F.col("ts_ns") == ns).select("doc").first()
-        return row[0] if row else None
+        part = f"date={_ns_date(ns)}"
+        if part not in self._partitions(name):
+            return None
+        rows = (
+            self._read_partitions(name, [part])
+            .where(f"ts_ns = {ns}")
+            .select("seq", "doc")
+            .collect()
+        )
+        return max(rows, key=lambda r: r.seq).doc if rows else None
 
     def all_docs(
         self, name: str, from_ts=None, to_ts=None, limit: int | None = None
@@ -347,7 +375,7 @@ class SerieslyDB:
         out = (
             self.df(name, from_ts, to_ts)
             .orderBy("ts_ns")
-            .select(canonical_key(F.col("ts_ns")).alias("key"), "doc")
+            .select(canonical_key("ts_ns").alias("key"), "doc")
         )
         return out.limit(limit) if limit is not None else out
 
@@ -388,7 +416,7 @@ class SerieslyDB:
             .select(
                 F.concat(
                     F.lit('{"'),
-                    canonical_key(F.col("ts_ns")),
+                    canonical_key("ts_ns"),
                     F.lit('": '),
                     F.col("doc"),
                     F.lit("}"),
@@ -406,6 +434,8 @@ class SerieslyDB:
 
     def _partitions(self, name: str) -> list[str]:
         path = self._path(name)
+        if not os.path.isdir(path):
+            raise KeyError(f"no such db: {name}")
         return sorted(
             d for d in os.listdir(path)
             if d.startswith("date=") and os.path.isdir(os.path.join(path, d))
@@ -515,7 +545,9 @@ class SerieslyDB:
                 )
             shutil.rmtree(trash)
 
-        cur = self.spark.read.schema(DOC_SCHEMA).parquet(part_dir)
+        cur = self._read_partitions(name, [f"date={date}"]).select(
+            "ts_ns", "seq", "doc"
+        )
         new = transform(cur)
         if new.isEmpty():
             _check_no_raced_append()
@@ -792,10 +824,18 @@ class SerieslyDB:
     ) -> DataFrame:
         """The `GET /db/_query` equivalent over the live LWW view."""
         src = self.df(name, q.from_ts, q.to_ts)
+        # The view already holds only the range's keys: the compiler need
+        # not filter it a second time.
+        unbounded = dataclasses.replace(q, from_ts=None, to_ts=None)
         return seriesly_query(
-            src, q, doc_col="doc", ts_ns_col="ts_ns", exact_sums=exact_sums
+            src, unbounded, doc_col="doc", ts_ns_col="ts_ns", exact_sums=exact_sums
         )
 
 
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
 def _ns_date(ns: int) -> str:
-    return datetime.fromtimestamp(ns / 1e9, tz=timezone.utc).strftime("%Y-%m-%d")
+    """The ``date=`` partition of key ``ns``: the UTC day of its µs floor,
+    as ``write_batch`` derives it (exact integer math, no float)."""
+    return (_EPOCH + timedelta(microseconds=ns // 1000)).strftime("%Y-%m-%d")

@@ -1,4 +1,4 @@
-"""Value coercion semantics of the reference engine, as Column builders.
+"""Value coercion semantics of the reference engine, as SQL-text builders.
 
 The reference stringifies scalar pointer values with Go ``%v`` before
 reducers see them (reference query.go:135-143), and numeric reducers then
@@ -8,9 +8,9 @@ re-parse with ``strconv.ParseFloat``, silently dropping anything unparseable
 and structural values drop out.
 
 In this engine the extracted value column ``v`` is ``get_json_object``'s
-string rendering, so:
-  * ``to_num(v)``  = try_cast to double — the ParseFloat analogue.
-  * ``is_structural(v)`` — object/array detection (they arrive as JSON text
+string rendering, so (as SQL text, the form the query compiler builds):
+  * ``to_num_sql(v)``  = try_cast to double — the ParseFloat analogue.
+  * ``is_structural_sql(v)`` — object/array detection (they arrive as JSON text
     starting with '{' or '['). A *string scalar* whose content starts with
     '{' is indistinguishable at this layer; the reference's own corpus never
     hits that case.
@@ -33,15 +33,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def to_num(v: Column) -> Column:
+def to_num_sql(v: str) -> str:
     """ParseFloat analogue: string -> double, NULL when unparseable."""
-    return v.try_cast(T.DoubleType())
+    return f"try_cast({v} as double)"
 
 
-def is_structural(v: Column) -> Column:
+def is_structural_sql(v: str) -> str:
     """True when the extracted value is an object or array (JSON text)."""
-    first = F.substring(v, 1, 1)
-    return first.isin("{", "[")
+    return f"substring({v}, 1, 1) in ('{{', '[')"
 
 
 def go_fmt_float(x: float) -> str:

@@ -24,8 +24,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from seriesly_spark.functions.sqltext import sql_str
 
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 _NUM_RE = re.compile(r"^(0|[1-9][0-9]*)$")
@@ -55,8 +54,8 @@ def ptr_to_jsonpath(ptr: str) -> str:
     return path
 
 
-def extract_ptr(doc: Column, ptr: str) -> Column:
-    """Extract a pointer from a JSON-string column as a string column.
+def extract_ptr_sql(doc: str, ptr: str) -> str:
+    """SQL text extracting a pointer from the JSON-string expression ``doc``.
 
     ``get_json_object`` dequotes string scalars, renders numbers/booleans as
     their raw JSON text, returns object/array values as JSON text, and NULL
@@ -64,17 +63,19 @@ def extract_ptr(doc: Column, ptr: str) -> Column:
     value model (scalars stringified, structural values passed through,
     missing/null -> nil; reference query.go:130-143).
     """
-    return F.get_json_object(doc, ptr_to_jsonpath(ptr))
+    return f"get_json_object({doc}, {sql_str(ptr_to_jsonpath(ptr))})"
 
 
-def extract_ptr_from_variant(doc: Column, doc_v: Column, ptr: str) -> Column:
-    """Variant-backed pointer extraction (opt-in fast path): ``doc_v`` is
-    ``try_parse_json(doc)`` computed ONCE, and each pointer becomes one
-    cheap binary ``try_variant_get`` probe — ~1.5x faster than N
-    ``get_json_object`` re-parses on multi-pointer queries (PLANS.md).
-    Malformed document bodies parse to a NULL Variant, so every pointer
-    probe yields NULL — same degrade-to-nil as the json path and the
-    reference (query.go resolveFetch).
+def extract_ptr_from_variant_sql(doc: str, ptr: str) -> str:
+    """Variant-backed pointer extraction (opt-in fast path): the document
+    is parsed with ``try_parse_json(doc)`` (one parse per row: every
+    pointer repeats the same expression, which subexpression elimination
+    evaluates once), and each pointer becomes one cheap binary
+    ``try_variant_get`` probe — ~1.5x faster than N ``get_json_object``
+    re-parses on multi-pointer queries (PLANS.md). Malformed document
+    bodies parse to a NULL Variant, so every pointer probe yields NULL —
+    same degrade-to-nil as the json path and the reference (query.go
+    resolveFetch).
 
     ``try_variant_get(..., 'string')`` matches the reference value model
     (string scalars dequoted, numbers/booleans rendered, object/array as
@@ -90,4 +91,7 @@ def extract_ptr_from_variant(doc: Column, doc_v: Column, ptr: str) -> Column:
     """
     if ptr == "":
         return doc  # structural fallback: preserve document key order
-    return F.try_variant_get(doc_v, ptr_to_jsonpath(ptr), "string")
+    return (
+        f"try_variant_get(try_parse_json({doc}), "
+        f"{sql_str(ptr_to_jsonpath(ptr))}, 'string')"
+    )

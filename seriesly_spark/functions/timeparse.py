@@ -8,8 +8,9 @@ handlers.go:63-72). Spark timestamps are µs-precision, so the engine
 carries nanoseconds as a separate ``ts_ns LONG`` (ns since epoch) and all
 bucket math runs on it.
 
-Everything here is a Column-expression builder (JVM-side, codegen'd):
-no Python runs per row.
+Everything here builds JVM-side, codegen'd expressions: no Python runs per
+row. What the query compiler also needs is defined once as SQL text over an
+input given as SQL text (``*_sql``); the Column helpers parse that text.
 """
 
 from __future__ import annotations
@@ -18,7 +19,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from seriesly_spark.functions.bucketing import idiv_sql
+from seriesly_spark.functions.sqltext import sql_str
+
 _MAX_INT32 = 2_147_483_647
+_KEY_FORMAT = "yyyy-MM-dd'T'HH:mm:ss"
 
 # String formats beyond ISO handled by the chain below — Java
 # DateTimeFormatter patterns mirroring reference timelib/time.go:12-25.
@@ -45,20 +50,22 @@ _DOW_STRIPPED_FORMATS = [
 _ISO_FRAC_RE = r"^(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})\.(\d{1,9})(Z|[+-]\d{2}:\d{2})$"
 
 
-def ts_ns_from_timestamp(ts: Column) -> Column:
+def ts_ns_from_timestamp_sql(ts: str) -> str:
     """µs-precision timestamp -> ns epoch (lower 3 ns digits zero).
 
     Accepts TIMESTAMP or TIMESTAMP_NTZ (unix_micros rejects NTZ; the
     cast is a no-op on TIMESTAMP and value-preserving on NTZ under the
     engine's UTC session timezone)."""
-    return (F.unix_micros(ts.cast("timestamp")) * F.lit(1000)).cast(T.LongType())
+    return f"cast(unix_micros(cast({ts} as timestamp)) * 1000 as bigint)"
 
 
-def timestamp_from_ts_ns(ts_ns: Column) -> Column:
+def ts_ns_from_timestamp(ts: str) -> Column:
+    return F.expr(ts_ns_from_timestamp_sql(ts))
+
+
+def timestamp_from_ts_ns(ts_ns: str) -> Column:
     """ns epoch -> Spark timestamp (truncates to µs; exact integer div)."""
-    from seriesly_spark.functions.bucketing import idiv
-
-    return F.timestamp_micros(idiv(ts_ns, 1000))
+    return F.expr(f"timestamp_micros({idiv_sql(ts_ns, 1000)})")
 
 
 def parse_any_ts_ns(s: Column) -> Column:
@@ -102,18 +109,21 @@ def parse_any_ts_ns(s: Column) -> Column:
     return F.coalesce(by_magnitude, iso_frac_ns, plain_ns)
 
 
-def canonical_key(ts_ns: Column) -> Column:
+def canonical_key_sql(ts_ns: str) -> str:
     """ns epoch -> the reference's canonical document key: UTC RFC3339Nano
     with trailing fractional zeros stripped (reference handlers.go:63-72,
     Go time.Format(time.RFC3339Nano))."""
-    from seriesly_spark.functions.bucketing import idiv
-
-    secs = idiv(ts_ns, 1_000_000_000)
-    rem = F.pmod(ts_ns, F.lit(1_000_000_000)).cast(T.LongType())
-    base = F.date_format(F.timestamp_seconds(secs), "yyyy-MM-dd'T'HH:mm:ss")
-    frac = F.regexp_replace(F.lpad(rem.cast(T.StringType()), 9, "0"), "0+$", "")
-    return F.concat(
-        base,
-        F.when(frac == "", F.lit("")).otherwise(F.concat(F.lit("."), frac)),
-        F.lit("Z"),
+    secs = idiv_sql(ts_ns, 1_000_000_000)
+    base = f"date_format(timestamp_seconds({secs}), {sql_str(_KEY_FORMAT)})"
+    frac = (
+        f"regexp_replace(lpad(cast(cast(pmod(({ts_ns}), 1000000000) as bigint)"
+        f" as string), 9, '0'), '0+$', '')"
     )
+    return (
+        f"concat({base}, case when {frac} = '' then '' "
+        f"else concat('.', {frac}) end, 'Z')"
+    )
+
+
+def canonical_key(ts_ns: str) -> Column:
+    return F.expr(canonical_key_sql(ts_ns))

@@ -50,7 +50,7 @@ def cohort_retention(
     return (
         days.select(
             "cohort_bucket",
-            idiv(F.col("b") - F.col("cohort_bucket"), step_ms).alias("bucket_offset"),
+            idiv("b - cohort_bucket", step_ms).alias("bucket_offset"),
         )
         .groupBy("cohort_bucket", "bucket_offset")
         .agg(F.count(F.lit(1)).alias("n_users"))

@@ -115,8 +115,8 @@ def pack_sequences(
     gstart = F.col("__end") - F.col("__n")
     # idiv: exact integer floor-division — global token offsets outgrow a
     # double's 53-bit mantissa long before 100 TB of text does 2^63.
-    first_seq = idiv(gstart, seq_len)
-    last_seq = idiv(F.col("__end") - 1, seq_len)
+    first_seq = idiv("__gs", seq_len)
+    last_seq = idiv("__end - 1", seq_len)
     seq_lo = F.col("seq_id") * seq_len
     s = F.greatest(F.col("__gs"), seq_lo)
     e = F.least(F.col("__end"), seq_lo + seq_len)

@@ -40,10 +40,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from seriesly_spark.functions.bucketing import bucket_ms_col
+from seriesly_spark.functions.bucketing import bucket_ms_sql
+from seriesly_spark.functions.sqltext import sql_ident
 from seriesly_spark.operators.reducers import REDUCERS
 from seriesly_spark.operators.util import scoped_persist
 
@@ -131,42 +132,39 @@ def rate_aggregate(
     ``base`` holds ``ts_ns`` and ``nv{i}`` for one representative index
     (all fields in ``field_indexes`` share the same pointer, hence the same
     parseable sample set). Returns one row per (series, bucket_ms) that has
-    at least one rate pair.
+    at least one rate pair. Built from SQL text, like the query compiler.
     """
     i0 = field_indexes[0]
-    samples = base.select(
-        *series_cols, "ts_ns", F.col(f"nv{i0}").alias("x")
-    ).where(F.col("x").isNotNull())
+    series = [sql_ident(c) for c in series_cols]
+    samples = base.selectExpr(*series, "ts_ns", f"nv{i0} AS x").where(
+        "x IS NOT NULL"
+    )
 
     if series_cols:
-        w = Window.partitionBy(*[F.col(c) for c in series_cols]).orderBy("ts_ns")
-        paired = samples.select(
-            *series_cols,
+        w = f"OVER (PARTITION BY {', '.join(series)} ORDER BY ts_ns)"
+        paired = samples.selectExpr(
+            *series,
             "ts_ns",
             "x",
-            F.lead("ts_ns").over(w).alias("next_ts_ns"),
-            F.lead("x").over(w).alias("next_x"),
+            f"lead(ts_ns) {w} AS next_ts_ns",
+            f"lead(x) {w} AS next_x",
         )
     else:
         # No series to partition the window by: the distributed pairing
         # path (identical pairs, identical double arithmetic).
         paired = _global_pairs_scalable(samples)
-    rate = (F.col("next_x") - F.col("x")) / (
-        (F.col("next_ts_ns") - F.col("ts_ns")) / F.lit(1e9)
-    )
-    rates = (
-        paired.withColumn("rate", rate)
-        .where(
-            F.col("rate").isNotNull()
-            & ~F.isnan("rate")
-            & (F.abs("rate") != F.lit(float("inf")))
-        )
-        .withColumn("bucket_ms", bucket_ms_col(F.col("ts_ns"), group_ms))
+    rate = "(next_x - x) / ((next_ts_ns - ts_ns) / 1000000000D)"
+    rates = paired.selectExpr(
+        *series, f"{bucket_ms_sql('ts_ns', group_ms)} AS bucket_ms",
+        f"{rate} AS rate",
+    ).where(
+        "rate IS NOT NULL AND NOT isnan(rate) "
+        "AND abs(rate) != double('Infinity')"
     )
     aggs = []
     for i in field_indexes:
         spec = REDUCERS[reducers_by_index[i]]
         # rate{i} aliases the shared pair column for the spec's SQL.
         expr = spec.rate_sql(i, exact_sums).replace(f"rate{i}", "rate")
-        aggs.append(F.expr(expr).alias(aliases_by_index[i]))
+        aggs.append(F.expr(f"{expr} AS {sql_ident(aliases_by_index[i])}"))
     return rates.groupBy(*series_cols, "bucket_ms").agg(*aggs)

@@ -46,6 +46,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
+from seriesly_spark.functions.coerce import is_structural_sql
+
 # chr(1) sentinel: encodes NULL inside collected arrays (collect_list drops
 # real NULLs); restored to NULL after collection. Sorts before any printable
 # string, so NULLs lead in sorted arrays.
@@ -121,7 +123,7 @@ def _identity(i: int) -> str:
 def _distinct(i: int) -> str:
     inner = (
         f"case when v{i} = {_SENT} then {_SENT} "
-        f"when substring(v{i}, 1, 1) in ('{{', '[') then null "
+        f"when {is_structural_sql(f'v{i}')} then null "
         f"else v{i} end"
     )
     return (

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from seriesly_spark.functions.bucketing import idiv
+from seriesly_spark.functions.sqltext import sql_ident
 from seriesly_spark.operators.util import scoped_persist
 
 
@@ -223,10 +224,9 @@ def time_weighted_avg(
     first sample — the standard per-bucket LOCF convention).
     """
     us = bucket_ms * 1000
-    ts = F.col(ts_us_col)
     # idiv, not `/`+floor: double division of µs-scale longs rounds at
     # bucket boundaries (see functions/bucketing.py).
-    bucket_idx = idiv(ts, us)
+    bucket_idx = idiv(sql_ident(ts_us_col), us)
     bucket_end = (bucket_idx + 1) * us
     # The window partitions by (series, BUCKET), not just series: the
     # LOCF clamp means a sample's held interval never needs the next
@@ -304,7 +304,7 @@ def minmax_downsample(
     min_ts_us, max_v, max_ts_us)."""
     us = bucket_ms * 1000
     ts = F.col(ts_us_col)
-    b = (idiv(ts, us) * F.lit(bucket_ms)).cast("long")
+    b = (idiv(sql_ident(ts_us_col), us) * F.lit(bucket_ms)).cast("long")
     lo = F.min(F.struct(F.col(value_col).alias("v"), ts.alias("t")))
     hi = F.max(F.struct(F.col(value_col).alias("v"), ts.alias("t")))
     return (

@@ -9,10 +9,18 @@ handlers.go:113-227, query.go:240-299) is:
 
 This module compiles those parameters into a single declarative DataFrame
 expression, and lets Catalyst do what the reference hand-builds with
-channels and goroutine pools:
+channels and goroutine pools. The plan is built from SQL text in a handful
+of DataFrame calls — range filter, extraction + bucket select, pass mask +
+value-column select, one ``groupBy().agg``, the rate joins, the final
+ordered select — because every Column-builder call is a py4j round trip
+(~0.3 ms) and a plan assembled from hundreds of them costs more driver
+time than scanning a small range does. The expressions come from the
+``*_sql`` builders in ``functions/`` and the reducer registry, so each has
+one definition. Catalyst then:
 
-  * the time-range predicate lands on the scan (partition pruning + parquet
-    min/max skipping — the B-tree range walk analogue);
+  * the time-range predicate lands on the scan (parquet min/max skipping;
+    ``SerieslyDB`` hands it only the in-range date partitions — together
+    the B-tree range walk analogue);
   * all pointers are extracted in one pass (Catalyst collapses multiple
     ``get_json_object`` over one column into a shared parse — the
     ``jsonpointer.FindMany`` analogue, reference query.go:94-110);
@@ -41,13 +49,14 @@ from collections import OrderedDict
 from dataclasses import dataclass, field as dc_field
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from seriesly_spark.functions.bucketing import bucket_ms_col
-from seriesly_spark.functions.coerce import go_fmt_scalar, is_structural, to_num
-from seriesly_spark.functions.jsonptr import extract_ptr, extract_ptr_from_variant
-from seriesly_spark.functions.timeparse import canonical_key, ts_ns_from_timestamp
+from seriesly_spark.functions.bucketing import bucket_ms_sql
+from seriesly_spark.functions.coerce import go_fmt_scalar, is_structural_sql, to_num_sql
+from seriesly_spark.functions.jsonptr import extract_ptr_from_variant_sql, extract_ptr_sql
+from seriesly_spark.functions.sqltext import sql_ident, sql_str
+from seriesly_spark.functions.timeparse import canonical_key_sql, ts_ns_from_timestamp_sql
 from seriesly_spark.operators.rate import rate_aggregate
 from seriesly_spark.operators.reducers import _SENT, REDUCERS
 
@@ -143,7 +152,7 @@ def seriesly_query(
     (default; ``get_json_object``, raw-text-faithful) or ``"variant"``
     (one ``parse_json`` + binary probes per pointer — faster on
     multi-pointer queries, with the documented Variant number/key-order
-    normalizations; see ``functions.jsonptr.extract_ptr_from_variant``).
+    normalizations; see ``functions.jsonptr.extract_ptr_from_variant_sql``).
     Falls back to the ``SERIESLY_EXTRACT_IMPL`` env var when unset.
     """
     impl = resolve_extract_impl(extract_impl)
@@ -159,14 +168,20 @@ def seriesly_query(
     if len(aliases) != len(fields):
         raise ValueError("aliases arity must match fields")
 
+    doc = sql_ident(doc_col)
+    series = [sql_ident(c) for c in series_cols]
+    keys = [*series_cols, "bucket_ms"]
     ts_ns = (
-        F.col(ts_ns_col) if ts_ns_col else ts_ns_from_timestamp(F.col(ts_col))
+        sql_ident(ts_ns_col) if ts_ns_col
+        else ts_ns_from_timestamp_sql(sql_ident(ts_col))
     )
-    base = df.withColumn("ts_ns", ts_ns)
+    bounds = []
     if query.from_ts is not None:
-        base = base.where(F.col("ts_ns") >= F.lit(py_parse_ts_ns(query.from_ts)))
+        bounds.append(f"{ts_ns} >= {py_parse_ts_ns(query.from_ts)}")
     if query.to_ts is not None:
-        base = base.where(F.col("ts_ns") <= F.lit(py_parse_ts_ns(query.to_ts)))
+        bounds.append(f"{ts_ns} <= {py_parse_ts_ns(query.to_ts)}")
+    if bounds:
+        df = df.where(" AND ".join(bounds))
 
     # One extraction column per distinct pointer (filters + fields), so the
     # JSON document is parsed once however many times a pointer is reused.
@@ -175,34 +190,27 @@ def seriesly_query(
         if ptr not in ptr_cols:
             ptr_cols[ptr] = f"e{len(ptr_cols)}"
 
-    # Variant path: parse the document ONCE into a binary Variant column;
-    # each pointer is then a cheap probe instead of a full JSON re-parse.
-    # (Physical-level subexpression elimination also dedupes the
-    # parse_json across the projection's variant_get calls.)
-    # try_parse_json (not parse_json): malformed bodies must degrade to
-    # NULL pointers like the json path and the reference (query.go
-    # resolveFetch swallows parse errors), not fail the whole query —
-    # SerieslyDB/poll_copy can store arbitrary non-JSON bodies.
-    doc_v = F.try_parse_json(F.col(doc_col)) if impl == "variant" else None
-
-    def extracted(ptr: str) -> Column:
+    def extracted(ptr: str) -> str:
         if ptr == "_id":
             # Pseudo-pointer: the document key (reference query.go:132-134).
-            return canonical_key(F.col("ts_ns"))
+            return canonical_key_sql(ts_ns)
         if impl == "variant":
-            c = extract_ptr_from_variant(F.col(doc_col), doc_v, ptr)
-        else:
-            c = extract_ptr(F.col(doc_col), ptr)
-        if canonical_numbers:
-            c = go_fmt_scalar(c)
-        return c
+            return extract_ptr_from_variant_sql(doc, ptr)
+        return extract_ptr_sql(doc, ptr)
 
-    base = base.select(
-        *series_cols,
-        "ts_ns",
-        bucket_ms_col(F.col("ts_ns"), query.group_ms).alias("bucket_ms"),
-        *[extracted(p).alias(cname) for p, cname in ptr_cols.items()],
-    )
+    head = [*series, f"{ts_ns} AS ts_ns",
+            f"{bucket_ms_sql(ts_ns, query.group_ms)} AS bucket_ms"]
+    if canonical_numbers:
+        # The %v canonicalizer is a pandas UDF: the one Column in the plan.
+        base = df.select(*map(F.expr, head), *[
+            (F.expr(extracted(p)) if p == "_id"
+             else go_fmt_scalar(F.expr(extracted(p)))).alias(c)
+            for p, c in ptr_cols.items()
+        ])
+    else:
+        base = df.selectExpr(
+            *head, *[f"{extracted(p)} AS {c}" for p, c in ptr_cols.items()]
+        )
 
     # Conjunctive equality filters (reference query.go:112-128): a doc
     # passes iff every filter field is a non-null scalar equal to the value.
@@ -212,60 +220,50 @@ def seriesly_query(
     # aggregate computes bucket presence and filtered-stream reducers in a
     # single shuffle (vs aggregate-twice + join). See operators/reducers.py
     # for the column encoding.
-    cond = F.lit(True)
+    conds = []
     for ptr, val in query.filters:
-        e = F.col(ptr_cols[ptr])
-        cond = cond & e.isNotNull() & ~is_structural(e) & (e == F.lit(val))
-    base = base.withColumn("__pass", cond)
-
-    sel_cols = [*series_cols, "ts_ns", "bucket_ms", "__pass"]
+        e = ptr_cols[ptr]
+        conds.append(
+            f"({e} IS NOT NULL AND NOT ({is_structural_sql(e)}) "
+            f"AND {e} = {sql_str(val)})"
+        )
+    passes = " AND ".join(conds) or "true"
+    sel_cols = [*series, "bucket_ms", "ts_ns", f"{passes} AS __pass"]
     for i, (ptr, red) in enumerate(fields):
-        e = F.col(ptr_cols[ptr])
-        vn = F.when(F.col("__pass"), e)
-        v = F.when(F.col("__pass"), F.coalesce(e, F.expr(_SENT)))
-        sel_cols.append(v.alias(f"v{i}"))
-        sel_cols.append(vn.alias(f"vn{i}"))
-        sel_cols.append(to_num(vn).alias(f"nv{i}"))
+        e = ptr_cols[ptr]
+        vn = f"CASE WHEN {passes} THEN {e} END"
+        v = f"CASE WHEN {passes} THEN coalesce({e}, {_SENT}) END"
+        sel_cols += [f"{v} AS v{i}", f"{vn} AS vn{i}", f"{to_num_sql(vn)} AS nv{i}"]
         if REDUCERS[red].pre_obj:
             # Parse in the codegen'd Project, not inside the aggregate
             # buffer: two obj-keys reducers on the SAME pointer build
             # identical ok{i} trees, which subexpression elimination
             # evaluates once per row (from_json is the dominant cost of
             # these reducers — measured 2x on the r02 gate entry).
-            ok = F.when(
-                F.substring(v, 1, 1) == "{",
-                F.struct(
-                    F.col("ts_ns").alias("ts_ns"),
-                    F.map_keys(
-                        F.from_json(v, "map<string,string>")
-                    ).alias("ks"),
-                ),
+            sel_cols.append(
+                f"CASE WHEN substring({v}, 1, 1) = '{{' THEN named_struct("
+                f"'ts_ns', ts_ns, 'ks', map_keys(from_json({v}, "
+                f"'map<string,string>'))) END AS ok{i}"
             )
-            sel_cols.append(ok.alias(f"ok{i}"))
-    sel = base.select(*sel_cols)
-
-    keys = [*series_cols, "bucket_ms"]
-
-    plain_idx = [i for i, (_, r) in enumerate(fields) if REDUCERS[r].kind == "plain"]
-    rate_idx = [i for i, (_, r) in enumerate(fields) if REDUCERS[r].kind == "rate"]
+    sel = base.selectExpr(*sel_cols)
 
     # Empty-input defaults for plain reducers fall out of the conditional
     # aggregate: a bucket whose docs are all masked still has rows, and the
     # aggregates see zero non-NULL inputs (sum-like specs yield 0.0, count
     # 0, min/max/avg NULL, list reducers []).
-    agg_exprs = [
-        F.expr(REDUCERS[fields[i][1]].plain_sql(i, exact_sums)).alias(aliases[i])
-        for i in plain_idx
-    ]
-    agg_exprs.append(F.count("*").alias("__n"))
-    result = sel.groupBy(*keys).agg(*agg_exprs)
+    result = sel.groupBy(*keys).agg(*[
+        F.expr(f"{REDUCERS[red].plain_sql(i, exact_sums)} AS {sql_ident(aliases[i])}")
+        for i, (_, red) in enumerate(fields)
+        if REDUCERS[red].kind == "plain"
+    ], F.expr("count(1) AS __n"))
 
     # Rate fields: one window dataflow per distinct rate pointer, over the
     # passing docs only (the reference filters before reducer fan-out).
     rate_by_ptr: dict[str, list[int]] = {}
-    for i in rate_idx:
-        rate_by_ptr.setdefault(fields[i][0], []).append(i)
-    rate_src = sel.where(F.col("__pass")) if query.filters else sel
+    for i, (ptr, red) in enumerate(fields):
+        if REDUCERS[red].kind == "rate":
+            rate_by_ptr.setdefault(ptr, []).append(i)
+    rate_src = sel.where("__pass") if query.filters else sel
     for ptr, idxs in rate_by_ptr.items():
         rframe = rate_aggregate(
             rate_src,
@@ -280,11 +278,12 @@ def seriesly_query(
 
     # Final projection: restore empty-input defaults where the rate row was
     # absent (no rate pairs in the bucket).
-    out_cols = [F.col(k) for k in keys]
-    for i, alias in enumerate(aliases):
-        spec = REDUCERS[fields[i][1]]
-        c = F.col(alias)
+    out_cols = [*series, "bucket_ms"]
+    for (_, red), alias in zip(fields, aliases):
+        spec = REDUCERS[red]
+        a = sql_ident(alias)
         if spec.kind == "rate" and spec.default_sql != "null":
-            c = F.coalesce(c, F.expr(spec.default_sql))
-        out_cols.append(c.alias(alias))
-    return result.select(*out_cols).orderBy(*keys)
+            out_cols.append(f"coalesce({a}, {spec.default_sql}) AS {a}")
+        else:
+            out_cols.append(a)
+    return result.selectExpr(*out_cols).orderBy(*keys)

@@ -36,8 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from seriesly_spark.db import SerieslyDB
-from seriesly_spark.functions.coerce import to_num
-from seriesly_spark.functions.jsonptr import extract_ptr
+from seriesly_spark.functions.bucketing import bucket_ms_sql
+from seriesly_spark.functions.coerce import to_num_sql
+from seriesly_spark.functions.jsonptr import extract_ptr_sql
 from seriesly_spark.sources.tables import latest_by_key
 
 _DEC = "decimal(38,18)"
@@ -93,19 +94,15 @@ class ContinuousRollup:
             return {}
 
     def _aggregate(self, dates: list[str]) -> DataFrame:
-        spark = self.dbs.spark
-        raw = spark.read.parquet(self.dbs._path(self.name)).where(
-            F.col("date").cast("string").isin(dates)
-        )
+        raw = self.dbs._read_partitions(self.name, [f"date={d}" for d in dates])
         live = latest_by_key(raw, ["ts_ns"], "seq")
-        val = to_num(extract_ptr(F.col("doc"), self.pointer))
-        group_ns = self.group_ms * 1_000_000
+        val = to_num_sql(extract_ptr_sql("doc", self.pointer))
         return (
-            live.withColumn(
-                "bucket_ms",
-                F.expr(f"(ts_ns div {group_ns}) * {self.group_ms}"),
+            live.selectExpr(
+                "date",
+                f"{bucket_ms_sql('ts_ns', self.group_ms)} AS bucket_ms",
+                f"cast({val} as {_DEC}) AS __v",
             )
-            .withColumn("__v", val.cast(_DEC))
             .groupBy("date", "bucket_ms")
             .agg(
                 F.count(F.lit(1)).alias("cnt"),

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from seriesly_spark.functions.sqltext import sql_ident
 from seriesly_spark.functions.timeparse import (
     timestamp_from_ts_ns,
     ts_ns_from_timestamp,
@@ -40,13 +41,13 @@ def normalize_events(df: DataFrame) -> DataFrame:
     t = dtypes.get("ts")
     if t == "bigint":  # ns epoch via legacy nanosAsLong
         return df.withColumn("ts_ns", F.col("ts")).withColumn(
-            "ts", timestamp_from_ts_ns(F.col("ts_ns"))
+            "ts", timestamp_from_ts_ns("ts_ns")
         )
     if t == "timestamp_ntz":
         # µs parquet timestamp without tz; session tz is UTC, so the cast
         # is value-preserving (same µs instant, now comparable/joinable).
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df.withColumn("ts_ns", ts_ns_from_timestamp(F.col("ts")))
+    return df.withColumn("ts_ns", ts_ns_from_timestamp("ts"))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -62,10 +63,8 @@ def latest_by_key(
     on the key, map-side partial max_by, no window sort. Delta MERGE is the
     mutable-table equivalent; this is the read-side view of the same
     semantics over an append-only log."""
-    others = [c for c in df.columns if c not in key_cols]
-    best = F.max_by(
-        F.struct(*[F.col(c).alias(c) for c in others]), F.col(seq_col)
-    ).alias("__r")
+    others = ", ".join(sql_ident(c) for c in df.columns if c not in key_cols)
+    best = F.expr(f"max_by(struct({others}), {sql_ident(seq_col)}) AS __r")
     return df.groupBy(*key_cols).agg(best).select(*key_cols, "__r.*")
 
 

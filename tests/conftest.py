@@ -1,4 +1,6 @@
 import os
+import time
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -45,6 +47,34 @@ def spark():
     sp = int(os.environ.get("SPARK_TEST_SHUFFLE_PARTITIONS", str(cpus)))
     s = get_spark("seriesly-spark-tests", cpus=cpus, shuffle_partitions=sp)
     yield s
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn`` under its own job group and returns
+    its result and how many Spark jobs it launched."""
+
+    def run(fn):
+        sc = spark.sparkContext
+        group, marker = (f"jobs-{uuid.uuid4().hex}" for _ in range(2))
+        try:
+            sc.setJobGroup(group, group)
+            out = fn()
+            # The status tracker hears of jobs through the asynchronous
+            # listener bus, in order: once a marker job run afterwards is
+            # seen, every job fn launched is seen too.
+            sc.setJobGroup(marker, marker)
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(marker):
+            assert time.monotonic() < deadline, "marker job never reported"
+            time.sleep(0.05)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

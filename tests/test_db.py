@@ -5,6 +5,7 @@ analytical query path over a written database.
 """
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -84,6 +85,103 @@ class TestIngestAndRead:
         dbs.create("t")
         assert dbs.df("t").count() == 0
         assert dbs.all_docs("t").count() == 0
+        # A range outside every partition reads as empty too.
+        dbs.write("t", _doc(1), ts="2024-01-02T00:00:00Z")
+        assert dbs.df("t", "2030-01-01", "2030-01-02").count() == 0
+        assert dbs.all_docs("t", to_ts="2023-12-31").count() == 0
+        q = SerieslyQuery(
+            group_ms=3_600_000, fields=[("/k", "sum")],
+            from_ts="2030-01-01", to_ts="2030-01-02",
+        )
+        assert dbs.query("t", q).collect() == []
+
+    def test_unreadable_file_raises(self, dbs):
+        """One corrupt parquet file must fail the reads that cover it,
+        not make the store read as empty."""
+        self._two_days(dbs)
+        part = os.path.join(dbs.root, "t", "date=2024-01-01")
+        (victim,) = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        with open(os.path.join(part, victim), "wb") as fh:
+            fh.write(b"not a parquet file")
+        q = SerieslyQuery(group_ms=86_400_000, fields=[("/k", "count")])
+        with pytest.raises(Exception):
+            dbs.query("t", q).collect()
+        with pytest.raises(Exception):
+            dbs.info("t")
+        with pytest.raises(Exception):
+            dbs.get("t", "2024-01-01T06:00:00Z")
+        # get reads only its key's day, which is intact.
+        assert json.loads(dbs.get("t", "2024-01-02T06:00:00Z")) == {"k": 2}
+
+    def test_get_reads_one_partition_in_one_job(self, dbs, spark_jobs):
+        self._two_days(dbs)
+        doc, jobs = spark_jobs(lambda: dbs.get("t", "2024-01-02T06:00:00Z"))
+        assert json.loads(doc) == {"k": 2}
+        assert jobs == 1
+        assert spark_jobs(lambda: dbs.get("t", "2024-01-03T06:00:00Z")) == (None, 0)
+
+    def test_key_just_before_midnight(self, dbs):
+        """Partition choice is exact integer math: 1 ns before midnight
+        belongs to the earlier day (a float division rounds it over)."""
+        dbs.create("t")
+        k = dbs.write("t", _doc(1), ts=1_704_153_599_999_999_999)
+        assert dbs.get("t", k) == _doc(1)
+        assert dbs.df("t", k, k).count() == 1
+        dbs.delete_range("t", k, k)
+        assert dbs.get("t", k) is None
+
+    def test_query_build_is_a_few_jvm_calls(self, dbs, spark_jobs):
+        """Building a plan costs driver time per py4j round trip: the
+        compiled query must stay a small, fixed number of them."""
+        self._two_days(dbs)
+        q = SerieslyQuery(
+            group_ms=3_600_000,
+            fields=[("/k", "avg"), ("/k", "max"), ("/x", "count")],
+            filters=[("/host", "a")],
+            from_ts="2024-01-01", to_ts="2024-01-02T23:00:00Z",
+        )
+        dbs.query("t", q)  # first build warms per-session caches
+        client = dbs.spark.sparkContext._gateway._gateway_client
+        real = client.send_command
+        calls = []
+
+        def counting(command, *args, **kwargs):
+            # Proxy garbage collection sends memory-delete commands
+            # whenever Python's collector runs; they are not plan work.
+            if not command.startswith("m\nd\n"):
+                calls.append(command)
+            return real(command, *args, **kwargs)
+
+        def build():
+            client.send_command = counting
+            try:
+                return dbs.query("t", q)
+            finally:
+                del client.send_command
+
+        _, jobs = spark_jobs(build)
+        assert jobs == 0
+        assert len(calls) < 200
+
+    def test_filter_values_and_pointers_are_quoted(self, dbs):
+        dbs.create("t")
+        hosts = ["it's", "back\\slash", "${spark.app.name}", "\u00e9t\u00e9", "a"]
+        dbs.write_batch("t", [
+            (f"2024-01-01T0{i}:00:00Z", json.dumps({"h": h, "x.y": i + 1}))
+            for i, h in enumerate(hosts)
+        ])
+        for i, h in enumerate(hosts):
+            q = SerieslyQuery(
+                group_ms=86_400_000, fields=[("/x.y", "sum")],
+                filters=[("/h", h)], aliases=["s"],
+            )
+            assert dbs.query("t", q).collect()[0].s == float(i + 1), h
+
+    @staticmethod
+    def _two_days(dbs):
+        dbs.create("t")
+        dbs.write("t", _doc(1), ts="2024-01-01T06:00:00Z")
+        dbs.write("t", _doc(2), ts="2024-01-02T06:00:00Z")
 
     def test_dump_files_matches_dump_lines(self, dbs, tmp_path):
         dbs.create("t")

@@ -3,7 +3,6 @@
 import json
 import os
 import time
-import uuid
 
 import pyarrow as pa
 import pytest
@@ -141,7 +140,7 @@ class TestQueryCache:
     }
 
     @pytest.mark.parametrize("panel", sorted(PANELS))
-    def test_hit_is_jobless_and_equals_fill(self, spark, dbs, tmp_path, panel):
+    def test_hit_is_jobless_and_equals_fill(self, dbs, tmp_path, panel, spark_jobs):
         spec = self.PANELS[panel]
         q = SerieslyQuery(
             group_ms=3_600_000,
@@ -156,7 +155,7 @@ class TestQueryCache:
             df = qc.query("t", q)
             return df, to_seriesly_json(df, q.aliases)
 
-        (hit, text), jobs = _spark_jobs(spark, serve)
+        (hit, text), jobs = spark_jobs(serve)
         assert jobs == 0
         assert (qc.misses, qc.hits) == (1, 1)
         # Rate sums differ in the last bits between separate uncached
@@ -204,26 +203,3 @@ class TestQueryCache:
             assert qc.query("t", self._q()).collect() == want
         assert os.listdir(cache) == []
         assert (qc.misses, qc.hits) == (2, 0)
-
-
-def _spark_jobs(spark, fn):
-    """Run ``fn`` under its own job group; return its result and how many
-    Spark jobs it launched."""
-    sc = spark.sparkContext
-    group, marker = (f"jobs-{uuid.uuid4().hex}" for _ in range(2))
-    try:
-        sc.setJobGroup(group, group)
-        out = fn()
-        # The status tracker hears of jobs through the asynchronous
-        # listener bus, in order: once a marker job run afterwards is
-        # seen, every job fn launched is seen too.
-        sc.setJobGroup(marker, marker)
-        spark.range(1).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(marker):
-        assert time.monotonic() < deadline, "marker job never reported"
-        time.sleep(0.05)
-    return out, len(tracker.getJobIdsForGroup(group))
