@@ -32,8 +32,10 @@ Semantics preserved from the reference:
     iteration is arbitrary, so any fixed order is a valid refinement);
     ``obj_distinct_keys`` dedups (sorted — again a deterministic refinement
     of the reference's arbitrary set order, reference query.go:552-569).
-  * rate family (``c``/``c_min``/``c_avg``/``c_max``) is a separate window
-    dataflow — see operators/rate.py.
+  * rate family (``c``/``c_min``/``c_avg``/``c_max``) folds the bucket's
+    pair-rate array, which the planner builds from the samples the same
+    hash aggregate collects plus one boundary window — see
+    operators/rate.py. ``c`` is 0.0 with no pairs, the others NULL.
 
 Ordering refinement: everywhere the reference emits values in arbitrary
 (Go-map or channel) order, this engine emits a deterministic order
@@ -68,11 +70,9 @@ class ReducerSpec:
     kind: str  # "plain" | "rate"
     # plain: SQL aggregate over columns v{i}, nv{i}, ts_ns
     agg_sql: Callable[[int], str] | None = None
-    # rate: SQL aggregate over the per-pair column rate{i}
-    rate_agg_sql: Callable[[int], str] | None = None
-    # SQL literal used when the bucket exists but the aggregate row is
-    # absent (all docs filtered out / no rate pairs)
-    default_sql: str = "null"
+    # rate: SQL expression over the bucket's pair-rate array (SQL text of
+    # an array<double> with no NULL, NaN or ±Inf elements)
+    rates_sql: Callable[[str], str] | None = None
     # exact variants: double-summing aggregates accumulated as
     # DECIMAL(38,18) — addition becomes exact and therefore independent of
     # partial-aggregation order, so results are bit-stable across engines
@@ -80,7 +80,7 @@ class ReducerSpec:
     # per-element double arithmetic is IEEE-identical everywhere, only the
     # summation needed taming).
     agg_sql_exact: Callable[[int], str] | None = None
-    rate_agg_sql_exact: Callable[[int], str] | None = None
+    rates_sql_exact: Callable[[str], str] | None = None
     # True for the obj_keys family: the planner projects a parsed
     # per-row column ok{i} = CASE WHEN doc is an object THEN
     # struct(ts_ns, map_keys(from_json(doc))) END so the JSON parse
@@ -95,13 +95,13 @@ class ReducerSpec:
         fn = self.agg_sql_exact if exact and self.agg_sql_exact else self.agg_sql
         return fn(i)
 
-    def rate_sql(self, i: int, exact: bool = False) -> str:
+    def rate_sql(self, rates: str, exact: bool = False) -> str:
         fn = (
-            self.rate_agg_sql_exact
-            if exact and self.rate_agg_sql_exact
-            else self.rate_agg_sql
+            self.rates_sql_exact
+            if exact and self.rates_sql_exact
+            else self.rates_sql
         )
-        return fn(i)
+        return fn(rates)
 
 
 _DEC = "decimal(38,18)"
@@ -109,6 +109,28 @@ _DEC = "decimal(38,18)"
 
 def _dsum(expr: str) -> str:
     return f"cast(sum(cast(({expr}) as {_DEC})) as double)"
+
+
+def _rsum(rates: str) -> str:
+    return f"aggregate({rates}, 0D, (s, r) -> s + r)"
+
+
+# A decimal(38,18) + decimal(38,18) rounds to scale 17 in Spark, so the
+# exact fold over an array accumulates in decimal(37,18), whose sums stay
+# at scale 18: the same exact sum as _dsum, which overflows at 1e20 where
+# this overflows at 1e19.
+_RDEC = "decimal(37,18)"
+
+
+def _rsum_exact(rates: str) -> str:
+    return (
+        f"cast(aggregate({rates}, cast(0 as {_RDEC}), "
+        f"(s, r) -> cast(s + cast(r as {_RDEC}) as {_RDEC})) as double)"
+    )
+
+
+def _ravg(rsum: Callable[[str], str]) -> Callable[[str], str]:
+    return lambda r: f"CASE WHEN size({r}) > 0 THEN {rsum(r)} / size({r}) END"
 
 
 def _identity(i: int) -> str:
@@ -154,28 +176,20 @@ def _sum_like(term: str, exact: bool = False) -> Callable[[int], str]:
 
 
 REDUCERS: dict[str, ReducerSpec] = {
-    "identity": ReducerSpec(
-        "identity", "plain", agg_sql=_identity,
-        default_sql="cast(array() as array<string>)",
-    ),
+    "identity": ReducerSpec("identity", "plain", agg_sql=_identity),
     "any": ReducerSpec(
         "any", "plain",
         agg_sql=lambda i: f"min_by(vn{i}, ts_ns) filter (where vn{i} is not null)",
     ),
-    "distinct": ReducerSpec(
-        "distinct", "plain", agg_sql=_distinct,
-        default_sql="cast(array() as array<string>)",
-    ),
-    "count": ReducerSpec(
-        "count", "plain", agg_sql=lambda i: f"count(vn{i})", default_sql="0L"
-    ),
+    "distinct": ReducerSpec("distinct", "plain", agg_sql=_distinct),
+    "count": ReducerSpec("count", "plain", agg_sql=lambda i: f"count(vn{i})"),
     "sum": ReducerSpec(
         "sum", "plain", agg_sql=_sum_like("nv{i}"),
-        agg_sql_exact=_sum_like("nv{i}", exact=True), default_sql="0.0d",
+        agg_sql_exact=_sum_like("nv{i}", exact=True),
     ),
     "sumsq": ReducerSpec(
         "sumsq", "plain", agg_sql=_sum_like("nv{i} * nv{i}"),
-        agg_sql_exact=_sum_like("nv{i} * nv{i}", exact=True), default_sql="0.0d",
+        agg_sql_exact=_sum_like("nv{i} * nv{i}", exact=True),
     ),
     "max": ReducerSpec("max", "plain", agg_sql=lambda i: _norm(f"max(nv{i})")),
     "min": ReducerSpec("min", "plain", agg_sql=lambda i: _norm(f"min(nv{i})")),
@@ -183,27 +197,18 @@ REDUCERS: dict[str, ReducerSpec] = {
         "avg", "plain", agg_sql=lambda i: _norm(f"avg(nv{i})"),
         agg_sql_exact=lambda i: _norm(f"({_dsum(f'nv{i}')} / count(nv{i}))"),
     ),
-    "obj_keys": ReducerSpec(
-        "obj_keys", "plain", agg_sql=_obj_keys,
-        default_sql="cast(array() as array<string>)",
-        pre_obj=True,
-    ),
+    "obj_keys": ReducerSpec("obj_keys", "plain", agg_sql=_obj_keys, pre_obj=True),
     "obj_distinct_keys": ReducerSpec(
         "obj_distinct_keys", "plain",
         agg_sql=lambda i: f"array_sort(array_distinct({_obj_keys(i)}))",
-        default_sql="cast(array() as array<string>)",
         pre_obj=True,
     ),
     # Rate family: per-consecutive-pair rates (value delta / seconds delta)
     # attributed to the earlier sample's bucket; reference query.go:358-405.
-    "c": ReducerSpec(
-        "c", "rate", rate_agg_sql=lambda i: f"sum(rate{i})",
-        rate_agg_sql_exact=lambda i: _dsum(f"rate{i}"), default_sql="0.0d",
-    ),
-    "c_min": ReducerSpec("c_min", "rate", rate_agg_sql=lambda i: f"min(rate{i})"),
+    "c": ReducerSpec("c", "rate", rates_sql=_rsum, rates_sql_exact=_rsum_exact),
+    "c_min": ReducerSpec("c_min", "rate", rates_sql=lambda r: f"array_min({r})"),
     "c_avg": ReducerSpec(
-        "c_avg", "rate", rate_agg_sql=lambda i: f"avg(rate{i})",
-        rate_agg_sql_exact=lambda i: f"({_dsum(f'rate{i}')} / count(rate{i}))",
+        "c_avg", "rate", rates_sql=_ravg(_rsum), rates_sql_exact=_ravg(_rsum_exact),
     ),
-    "c_max": ReducerSpec("c_max", "rate", rate_agg_sql=lambda i: f"max(rate{i})"),
+    "c_max": ReducerSpec("c_max", "rate", rates_sql=lambda r: f"array_max({r})"),
 }

@@ -44,7 +44,9 @@ def _query_fingerprint(
         name,
         version,
         str(q.group_ms),
-        repr(sorted(q.fields)),
+        # Fields in order: output column i is field i's answer. Filters
+        # are a conjunction, so their order does not change the answer.
+        repr(q.fields),
         repr(sorted(q.filters)),
         repr(q.from_ts),
         repr(q.to_ts),

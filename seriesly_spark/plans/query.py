@@ -11,8 +11,8 @@ This module compiles those parameters into a single declarative DataFrame
 expression, and lets Catalyst do what the reference hand-builds with
 channels and goroutine pools. The plan is built from SQL text in a handful
 of DataFrame calls — range filter, extraction + bucket select, pass mask +
-value-column select, one ``groupBy().agg``, the rate joins, the final
-ordered select — because every Column-builder call is a py4j round trip
+value-column select, one ``groupBy().agg``, the rate boundary window, the
+final ordered select — because every Column-builder call is a py4j round trip
 (~0.3 ms) and a plan assembled from hundreds of them costs more driver
 time than scanning a small range does. The expressions come from the
 ``*_sql`` builders in ``functions/`` and the reducer registry, so each has
@@ -27,7 +27,9 @@ one definition. Catalyst then:
   * equality filters run before any aggregation (reference query.go:112-128);
   * bucket aggregation is a partial+final hash aggregate (the per-bucket
     map/reduce fan-out, reference query.go:147-217);
-  * rate reducers become a ``lead()`` window + re-bucket (operators/rate.py).
+  * rate reducers collect each bucket's sorted samples in that same
+    aggregate; one window over the bucket rows adds the pair that crosses
+    into the next bucket (operators/rate.py).
 
 Semantics pinned by the reference and preserved here:
   * A bucket appears in the output iff at least one document exists in it
@@ -57,7 +59,7 @@ from seriesly_spark.functions.coerce import go_fmt_scalar, is_structural_sql, to
 from seriesly_spark.functions.jsonptr import extract_ptr_from_variant_sql, extract_ptr_sql
 from seriesly_spark.functions.sqltext import sql_ident, sql_str
 from seriesly_spark.functions.timeparse import canonical_key_sql, ts_ns_from_timestamp_sql
-from seriesly_spark.operators.rate import rate_aggregate
+from seriesly_spark.operators.rate import next_sample_sql, pair_rates_sql, samples_sql
 from seriesly_spark.operators.reducers import _SENT, REDUCERS
 
 
@@ -145,8 +147,8 @@ def seriesly_query(
 
     Output columns: ``*series_cols, bucket_ms, *aliases`` ordered by
     (series, bucket_ms). ``series_cols`` generalizes the reference's
-    one-database-per-query model to grouped series in one pass (and keeps
-    the rate window partitioned at cluster scale).
+    one-database-per-query model to grouped series in one pass; rate
+    pairs never cross a series.
 
     ``extract_impl`` selects the pointer-extraction engine: ``"json"``
     (default; ``get_json_object``, raw-text-faithful) or ``"variant"``
@@ -228,7 +230,7 @@ def seriesly_query(
             f"AND {e} = {sql_str(val)})"
         )
     passes = " AND ".join(conds) or "true"
-    sel_cols = [*series, "bucket_ms", "ts_ns", f"{passes} AS __pass"]
+    sel_cols = [*series, "bucket_ms", "ts_ns"]
     for i, (ptr, red) in enumerate(fields):
         e = ptr_cols[ptr]
         vn = f"CASE WHEN {passes} THEN {e} END"
@@ -247,43 +249,35 @@ def seriesly_query(
             )
     sel = base.selectExpr(*sel_cols)
 
-    # Empty-input defaults for plain reducers fall out of the conditional
-    # aggregate: a bucket whose docs are all masked still has rows, and the
-    # aggregates see zero non-NULL inputs (sum-like specs yield 0.0, count
-    # 0, min/max/avg NULL, list reducers []).
+    # Empty-input defaults fall out of the conditional aggregate: a bucket
+    # whose docs are all masked still has rows, and the aggregates see zero
+    # non-NULL inputs (sum-like specs yield 0.0, count 0, min/max/avg NULL,
+    # list reducers []). The same aggregate collects each distinct rate
+    # pointer's sorted samples into __s{i} (nv{i} is already filter-masked,
+    # so a masked bucket has none and its pair-rate array is empty).
+    rate_src: dict[str, int] = {}
+    for i, (ptr, red) in enumerate(fields):
+        if REDUCERS[red].kind == "rate":
+            rate_src.setdefault(ptr, i)
     result = sel.groupBy(*keys).agg(*[
         F.expr(f"{REDUCERS[red].plain_sql(i, exact_sums)} AS {sql_ident(aliases[i])}")
         for i, (_, red) in enumerate(fields)
         if REDUCERS[red].kind == "plain"
-    ], F.expr("count(1) AS __n"))
+    ], *[F.expr(f"{samples_sql(f'nv{i}')} AS __s{i}") for i in rate_src.values()])
+    if rate_src:
+        # One window over the bucket rows supplies each bucket's boundary
+        # pair; __pr{i} is the bucket's pair-rate array.
+        result = result.selectExpr("*", *[
+            f"{pair_rates_sql(f'__s{i}', next_sample_sql(f'__s{i}', series))} AS __pr{i}"
+            for i in rate_src.values()
+        ])
 
-    # Rate fields: one window dataflow per distinct rate pointer, over the
-    # passing docs only (the reference filters before reducer fan-out).
-    rate_by_ptr: dict[str, list[int]] = {}
-    for i, (ptr, red) in enumerate(fields):
-        if REDUCERS[red].kind == "rate":
-            rate_by_ptr.setdefault(ptr, []).append(i)
-    rate_src = sel.where("__pass") if query.filters else sel
-    for ptr, idxs in rate_by_ptr.items():
-        rframe = rate_aggregate(
-            rate_src,
-            idxs,
-            {i: fields[i][1] for i in idxs},
-            {i: aliases[i] for i in idxs},
-            tuple(series_cols),
-            query.group_ms,
-            exact_sums=exact_sums,
-        )
-        result = result.join(rframe, on=keys, how="left")
-
-    # Final projection: restore empty-input defaults where the rate row was
-    # absent (no rate pairs in the bucket).
     out_cols = [*series, "bucket_ms"]
-    for (_, red), alias in zip(fields, aliases):
+    for (ptr, red), alias in zip(fields, aliases):
         spec = REDUCERS[red]
         a = sql_ident(alias)
-        if spec.kind == "rate" and spec.default_sql != "null":
-            out_cols.append(f"coalesce({a}, {spec.default_sql}) AS {a}")
+        if spec.kind == "rate":
+            out_cols.append(f"{spec.rate_sql(f'__pr{rate_src[ptr]}', exact_sums)} AS {a}")
         else:
             out_cols.append(a)
     return result.selectExpr(*out_cols).orderBy(*keys)

@@ -347,6 +347,31 @@ class TestQueryPath:
         q = SerieslyQuery(group_ms=86_400_000, fields=[("/v", "sum")], aliases=["s"])
         assert dbs.query("t", q).collect()[0].s == 1.0
 
+    def test_rate_runs_in_the_bucket_aggregate(self, dbs, spark_jobs):
+        """A rate field costs at most one Spark job more than a plain one
+        (its boundary window) and runs no Python and no cached subplan."""
+        dbs.create("t")
+        dbs.write_batch("t", [
+            (f"2024-01-0{d}T{h:02d}:00:00Z", json.dumps({"v": d * 100 + h}))
+            for d in (1, 2) for h in range(24)
+        ])
+
+        def run(red):
+            q = SerieslyQuery(group_ms=3_600_000, fields=[("/v", red)], aliases=["x"])
+            df = dbs.query("t", q)
+            return df, df.collect()
+
+        jobs = {}
+        for red in ("sum", "c"):
+            (df, rows), jobs[red] = spark_jobs(lambda: run(red))
+            assert len(rows) == 48
+        assert jobs["c"] <= jobs["sum"] + 1
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for op in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                   "InMemoryTableScan"):
+            assert op not in plan, op
+        assert rows[0].x == pytest.approx(1 / 3600)
+
 
 class TestCompactTargetSize:
     def test_target_splits_partition_into_ranged_files(self, spark, tmp_path):

@@ -89,6 +89,15 @@ class TestQueryCache:
         assert qc.query("t", q2).collect()[0].n == 2
         assert (qc.misses, qc.hits) == (2, 0)
 
+    def test_field_order_is_part_of_the_key(self, dbs, tmp_path):
+        # Alias i names field i: the same fields in another order under
+        # the same aliases is another answer.
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        for fields in ([("/v", "sum"), ("/v", "max")], [("/v", "max"), ("/v", "sum")]):
+            q = SerieslyQuery(group_ms=3_600_000, fields=fields, aliases=["f0", "f1"])
+            assert qc.query("t", q).collect() == dbs.query("t", q).collect()
+        assert (qc.misses, qc.hits) == (2, 0)
+
     def test_compact_invalidates(self, dbs, tmp_path):
         qc = QueryCache(dbs, str(tmp_path / "cache"))
         qc.query("t", self._q())

@@ -170,6 +170,104 @@ class TestRateUnits:
         assert rows[0]["c"] == pytest.approx(0.5)
 
 
+    # Boundary-pair cases: docs as (ms after T0_MS, doc, series), the query
+    # options, and the expected c / c_max per (series, bucket index).
+    # Buckets are GROUP_MS = 11 s wide.
+    PAIR_CASES = {
+        # bucket 1 holds no parseable sample: bucket 0's last sample pairs
+        # with bucket 2's first, charged to bucket 0; bucket 2 is last.
+        "skips_unparseable_bucket": (
+            [(0, {"v": 10}, None), (5000, {"v": 20}, None),
+             (12000, {"v": "foo"}, None), (23000, {"v": 42}, None)],
+            {},
+            {(None, 0): (2.0 + 22 / 18, 2.0), (None, 1): (0.0, None),
+             (None, 2): (0.0, None)},
+        ),
+        # the same across a bucket whose docs are all filtered out (the
+        # bucket itself stays, with the empty-input answer)
+        "skips_filtered_bucket": (
+            [(0, {"v": 10, "h": "a"}, None), (5000, {"v": 20, "h": "a"}, None),
+             (12000, {"v": 100, "h": "b"}, None), (23000, {"v": 42, "h": "a"}, None)],
+            {"filters": [("/h", "a")]},
+            {(None, 0): (2.0 + 22 / 18, 2.0), (None, 1): (0.0, None),
+             (None, 2): (0.0, None)},
+        ),
+        # the last bucket in range gets no boundary pair from a doc past
+        # the range's end
+        "last_bucket_in_range": (
+            [(0, {"v": 10}, None), (5000, {"v": 20}, None),
+             (12000, {"v": 30}, None), (30000, {"v": 1000}, None)],
+            {"to_ts": (T0_MS + 20_000) * 1_000_000},
+            {(None, 0): (2.0 + 10 / 7, 2.0), (None, 1): (0.0, None)},
+        ),
+        # two samples at one ts: their pair is dropped, not an error, and
+        # the later of them (in value order) pairs onward
+        "equal_timestamps": (
+            [(0, {"v": 1}, None), (0, {"v": 5}, None), (1000, {"v": 7}, None)],
+            {},
+            {(None, 0): (2.0, 2.0)},
+        ),
+        # series interleave in time but pair only within themselves
+        "within_each_series": (
+            [(0, {"v": 0}, "a"), (5000, {"v": 100}, "b"),
+             (12000, {"v": 12}, "a"), (14000, {"v": 10}, "b")],
+            {},
+            {("a", 0): (1.0, 1.0), ("a", 1): (0.0, None),
+             ("b", 0): (-10.0, -10.0), ("b", 1): (0.0, None)},
+        ),
+    }
+
+    @pytest.mark.parametrize("case", sorted(PAIR_CASES))
+    def test_boundary_pair(self, spark, case):
+        from datetime import datetime, timezone
+
+        docs, opts, want = self.PAIR_CASES[case]
+        rows = [
+            (datetime.fromtimestamp((T0_MS + ms) / 1000.0, tz=timezone.utc)
+             .replace(tzinfo=None), json.dumps(doc), s)
+            for ms, doc, s in docs
+        ]
+        df = spark.createDataFrame(rows, "ts timestamp, doc string, s string")
+        series = ("s",) if docs[0][2] else ()
+        q = SerieslyQuery(
+            group_ms=GROUP_MS, fields=[("/v", "c"), ("/v", "c_max")],
+            aliases=["c", "c_max"], **opts,
+        )
+        got = {
+            (r["s"] if series else None, (r["bucket_ms"] - T0_MS) // GROUP_MS):
+            (r["c"], r["c_max"])
+            for r in seriesly_query(df, q, series_cols=series).collect()
+        }
+        assert got == pytest.approx(want)
+
+    def test_two_rate_pointers_without_series(self, spark):
+        # Every consecutive pair counts once per pointer, however the
+        # samples spread over input partitions, and one pointer's pairs
+        # do not depend on another's.
+        n = 3000
+        vals = [(i * 37) % 101 for i in range(n)]
+        rows = [
+            (T0_MS * 1_000_000 + i * 1_000_000_000, json.dumps({"v": v, "w": i}))
+            for i, v in enumerate(vals)
+        ]
+        df = spark.createDataFrame(rows, "ts_ns long, doc string").repartition(4)
+        q = SerieslyQuery(
+            group_ms=GROUP_MS, fields=[("/v", "c"), ("/v", "c_avg"), ("/w", "c")],
+            aliases=["c", "c_avg", "cw"],
+        )
+        rates = {}
+        for i in range(n - 1):
+            rates.setdefault(i // 11, []).append(float(vals[i + 1] - vals[i]))
+        got = {
+            (r["bucket_ms"] - T0_MS) // GROUP_MS: (r["c"], r["c_avg"], r["cw"])
+            for r in seriesly_query(df, q, ts_ns_col="ts_ns").collect()
+        }
+        assert got == {
+            b: pytest.approx((sum(rs), sum(rs) / len(rs), float(len(rs))))
+            for b, rs in rates.items()
+        }
+
+
 class TestFiltersAndBuckets:
     def test_filter_keeps_bucket_alive(self, spark):
         # Two buckets; filter matches docs only in bucket 1. Bucket 2 must
