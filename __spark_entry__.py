@@ -1228,11 +1228,8 @@ def q_p02_canonical_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
         fields=[("/n", "any"), ("/n", "distinct"), ("/n", "identity")],
         aliases=["any_n", "distinct_n", "identity_n"],
     )
-    # extract_impl pinned: Variant normalizes -0.0 to 0 at parse time, so
-    # %v parity for signed zero exists only on the json path.
     res = seriesly_query(
-        df, q, doc_col="doc", ts_ns_col="ts_ns", canonical_numbers=True,
-        extract_impl="json",
+        df, q, doc_col="doc", ts_ns_col="ts_ns", canonical_numbers=True
     )
     return res.select(
         "bucket_ms",
@@ -1256,8 +1253,7 @@ def q_p02_canonical_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         filters=[("/n", "1e+06")],
     )
     res = seriesly_query(
-        df, q, doc_col="doc", ts_ns_col="ts_ns", canonical_numbers=True,
-        extract_impl="json",
+        df, q, doc_col="doc", ts_ns_col="ts_ns", canonical_numbers=True
     )
     return res.select("bucket_ms", "cnt", F.to_json("vals").alias("vals"))
 

@@ -39,17 +39,19 @@ repo dependency-free.
 from __future__ import annotations
 
 import dataclasses
+import hashlib
+import json
 import os
 import shutil
 import time
 import uuid
-from datetime import datetime, timedelta, timezone
+from datetime import timedelta
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from seriesly_spark.functions.timeparse import canonical_key, timestamp_from_ts_ns
-from seriesly_spark.plans.query import SerieslyQuery, py_parse_ts_ns, seriesly_query
+from seriesly_spark.plans.query import _EPOCH, SerieslyQuery, py_parse_ts_ns, seriesly_query
 from seriesly_spark.sources.tables import latest_by_key
 
 DOC_SCHEMA = "ts_ns long, seq long, doc string"
@@ -57,21 +59,6 @@ CHANGELOG_SCHEMA = (
     "seq long, op string, ts_lo_ns long, ts_hi_ns long, n_rows long"
 )
 _CHANGELOG_DIR = ".changelog"
-
-
-def _footer_rows(d: str) -> int:
-    """Exact row count of every parquet file under ``d`` from footer
-    metadata — driver-side milliseconds, no Spark job. Hidden dirs
-    (commit log) excluded, like Spark's readers exclude them."""
-    import pyarrow.parquet as pq
-
-    total = 0
-    for dirpath, dirnames, files in os.walk(d):
-        dirnames[:] = [x for x in dirnames if not x.startswith(".")]
-        for f in files:
-            if f.endswith(".parquet"):
-                total += pq.read_metadata(os.path.join(dirpath, f)).num_rows
-    return total
 
 
 def _changelog_has_stranded_dups(d: str, files: list[str]) -> bool:
@@ -102,11 +89,12 @@ def _changelog_has_stranded_dups(d: str, files: list[str]) -> bool:
 class SerieslyDB:
     """Filesystem-rooted database registry + per-database operations.
 
-    ``changelog=True`` (default) additionally appends one tiny parquet
-    segment per mutating commit to ``<db>/.changelog/`` — a write-ahead
+    Every mutating commit also appends one tiny parquet segment to
+    ``<db>/.changelog/``; the log is always on. It is a write-ahead
     commit log in the style of lakehouse table formats (Delta's _delta_log
     analogue, metadata-sized). The dot-prefixed directory is invisible to
-    Spark's data readers. Mutations only ever ADD segments, so streaming
+    Spark's data readers, and to :meth:`_data_files`, the one listing of
+    what the database holds. Mutations only ever ADD segments, so streaming
     it surfaces deletes and compaction as first-class change rows — the
     piece the plain append-only docs feed (:meth:`changes`) cannot
     observe. One maintenance step does rewrite the log: :meth:`compact`
@@ -131,10 +119,9 @@ class SerieslyDB:
     window.
     """
 
-    def __init__(self, spark: SparkSession, root: str, changelog: bool = True):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.changelog = changelog
         # Per-db last commit seq. The changelog directory listing is the
         # durable source of truth, but listing it on EVERY mutation makes
         # commit cost grow with log length; a handle lists once on first
@@ -151,13 +138,9 @@ class SerieslyDB:
         return os.path.join(self.root, name)
 
     def create(self, name: str) -> None:
-        os.makedirs(self._path(name), exist_ok=True)
-        if self.changelog:
-            # Pre-create the commit-log dir so log streams can attach to
-            # an empty database (file-stream sources need the path).
-            os.makedirs(
-                os.path.join(self._path(name), _CHANGELOG_DIR), exist_ok=True
-            )
+        # The commit-log dir too, so log streams can attach to an empty
+        # database (file-stream sources need the path).
+        os.makedirs(os.path.join(self._path(name), _CHANGELOG_DIR), exist_ok=True)
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._path(name), ignore_errors=True)
@@ -185,10 +168,13 @@ class SerieslyDB:
     def write_batch(self, name: str, rows: list[tuple[object, str]]) -> list[int]:
         """Batched append — the engine-side analogue of the reference's
         write queue flush (1000 ops / 5 s, database.go:175-254): callers
-        batch; each call is one commit (one parquet write job)."""
+        batch; each call is one commit (one parquet write job). An empty
+        batch is no commit: no job, no log segment."""
         path = self._path(name)
         if not os.path.isdir(path):
             raise KeyError(f"no such db: {name}")
+        if not rows:
+            return []
         seq = time.time_ns()
         keys: list[int] = []
         out = []
@@ -229,8 +215,6 @@ class SerieslyDB:
         log row is metadata, not data — one job per mutation would dwarf
         the mutation itself). File names embed the monotone seq, so the
         log reads back in commit order with a plain sort."""
-        if not self.changelog:
-            return
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -282,8 +266,8 @@ class SerieslyDB:
         """Batch view of the commit log, in commit order: one row per
         mutating operation. ``n_rows`` is op-specific: docs appended
         (write), raw rows removed (delete), live rows remaining
-        (compact). Empty (no mutations yet, or ``changelog=False``)
-        databases return an empty frame."""
+        (compact). A database with no mutations yet returns an empty
+        frame."""
         path = self._path(name)
         if not os.path.isdir(path):
             raise KeyError(f"no such db: {name}")
@@ -441,6 +425,55 @@ class SerieslyDB:
             if d.startswith("date=") and os.path.isdir(os.path.join(path, d))
         )
 
+    def _data_files(
+        self, name: str, dates: list[str] | None = None
+    ) -> dict[str, list[tuple[str, int]]]:
+        """What the database holds: date -> the sorted ``(file, bytes)`` of
+        its ``date=`` partition's parquet files, for every partition or
+        for ``dates``. The one file listing behind the cache version, the
+        rollup's refresh diff, :meth:`info` and the footer row counts;
+        driver-side metadata, no Spark job. Hidden and ``_``-prefixed
+        names (the commit log, Spark's markers) are not data, as Spark's
+        readers skip them. A partition missing from disk (dropped by a
+        rewrite) is left out."""
+        path = self._path(name)
+        if dates is None:
+            dates = [p[len("date="):] for p in self._partitions(name)]
+        out = {}
+        for d in dates:
+            try:
+                with os.scandir(os.path.join(path, f"date={d}")) as it:
+                    out[d] = sorted(
+                        (e.name, e.stat().st_size) for e in it
+                        if e.name.endswith(".parquet")
+                        and not e.name.startswith((".", "_"))
+                    )
+            except FileNotFoundError:
+                continue
+        return out
+
+    def _partition_versions(self, name: str) -> dict[str, str]:
+        """date -> fingerprint of the partition's file listing. A commit
+        changes the fingerprint of exactly the partitions it writes,
+        rewrites or drops; the commit log is not part of it."""
+        return {
+            d: hashlib.md5(json.dumps(files).encode()).hexdigest()
+            for d, files in self._data_files(name).items()
+        }
+
+    def _footer_rows(self, name: str, dates: list[str] | None = None) -> int:
+        """Exact row count of the listed data files (every partition, or
+        ``dates``) from parquet footer metadata — driver-side
+        milliseconds, no Spark job."""
+        import pyarrow.parquet as pq
+
+        path = self._path(name)
+        return sum(
+            pq.read_metadata(os.path.join(path, f"date={d}", f)).num_rows
+            for d, files in self._data_files(name, dates).items()
+            for f, _ in files
+        )
+
     def delete_range(self, name: str, from_ts, to_ts, compact: bool = False) -> None:
         """Bulk range delete (S6). Partitions fully inside the range are
         dropped as directories (no data read); the two edge partitions are
@@ -463,17 +496,17 @@ class SerieslyDB:
             d = part[len("date="):]
             part_dir = os.path.join(path, part)
             if lo_d < d < hi_d:
-                n_removed += _footer_rows(part_dir)
+                n_removed += self._footer_rows(name, [d])
                 shutil.rmtree(part_dir)
             elif d == lo_d or d == hi_d:
-                before = _footer_rows(part_dir)
+                before = self._footer_rows(name, [d])
                 self._rewrite_partition(
                     name, d,
                     lambda df: df.where(
                         ~((F.col("ts_ns") >= lo) & (F.col("ts_ns") <= hi))
                     ),
                 )
-                after = _footer_rows(part_dir)
+                after = self._footer_rows(name, [d])
                 n_removed += before - after
         self._log_change(name, "delete", lo, hi, n_removed)
         if compact:
@@ -610,23 +643,17 @@ class SerieslyDB:
                 lambda df: latest_by_key(df, ["ts_ns"], "seq"),
                 target_bytes=target_file_bytes,
             )
-        if self.changelog:
-            # Fold the accumulated one-file-per-commit log segments into
-            # a single consolidated segment BEFORE recording this
-            # compaction (which then lands as a fresh segment). The log
-            # grows one tiny file per mutation; without folding, both
-            # change_log reads and the first-touch seq listing degrade
-            # with mutation count.
-            if fold_changelog:
-                self._fold_changelog(name)
-            # Post-compaction the physical rows ARE the live set (the
-            # LWW fold just ran); the count comes straight from the
-            # freshly-written parquet footers — no job.
-            n_live = sum(
-                _footer_rows(os.path.join(self._path(name), p))
-                for p in self._partitions(name)
-            )
-            self._log_change(name, "compact", None, None, n_live)
+        # Fold the accumulated one-file-per-commit log segments into a
+        # single consolidated segment BEFORE recording this compaction
+        # (which then lands as a fresh segment). The log grows one tiny
+        # file per mutation; without folding, both change_log reads and
+        # the first-touch seq listing degrade with mutation count.
+        if fold_changelog:
+            self._fold_changelog(name)
+        # Post-compaction the physical rows ARE the live set (the LWW fold
+        # just ran); the count comes straight from the freshly-written
+        # parquet footers — no job.
+        self._log_change(name, "compact", None, None, self._footer_rows(name))
 
     def _fold_changelog(self, name: str) -> None:
         """Merge every commit-log segment into one file named with the
@@ -684,23 +711,13 @@ class SerieslyDB:
         prefer a table format whose snapshot carries row counts, or the
         continuous rollup's cnt partials (plans/rollup.py), and treat
         this as the slow exact path."""
-        path = self._path(name)
-        n_files = space = 0
-        for dirpath, dirnames, files in os.walk(path):
-            # Hidden dirs (the .changelog commit log) are metadata, not
-            # data — excluded from space/file accounting like Spark's
-            # readers exclude them.
-            dirnames[:] = [d for d in dirnames if not d.startswith(".")]
-            for f_ in files:
-                if f_.endswith(".parquet"):
-                    n_files += 1
-                    space += os.path.getsize(os.path.join(dirpath, f_))
+        listing = self._data_files(name)
         return {
             "db_name": name,
             "doc_count": self.df(name).count(),
-            "space_used": space,
-            "n_partitions": len(self._partitions(name)),
-            "n_files": n_files,
+            "space_used": sum(b for files in listing.values() for _, b in files),
+            "n_partitions": len(listing),
+            "n_files": sum(map(len, listing.values())),
         }
 
     # -- Changes feed (S13) -------------------------------------------------
@@ -830,9 +847,6 @@ class SerieslyDB:
         return seriesly_query(
             src, unbounded, doc_col="doc", ts_ns_col="ts_ns", exact_sums=exact_sums
         )
-
-
-_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 def _ns_date(ns: int) -> str:

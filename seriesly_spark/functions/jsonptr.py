@@ -8,6 +8,13 @@ string transform; the per-row work stays in the JVM via
 ``get_json_object`` (which Catalyst collapses into a shared JsonTuple-style
 single parse when several pointers hit the same column).
 
+This is the engine's one extraction path, as ``jsonpointer.FindMany`` is the
+reference's. It keeps each value's raw JSON text. Spark's Variant type
+(``try_variant_get`` over ``parse_json``) is faster per pointer but would
+change answers: it drops the sign of ``-0.0`` and the trailing ``.0`` of
+``1000000.0``, and it stores object keys sorted, so ``obj_keys`` would lose
+document order.
+
 Semantics notes:
   * ``""`` (empty pointer) addresses the whole document -> ``$``.
   * ``~1`` unescapes to ``/`` and ``~0`` to ``~`` (RFC 6901 §4).
@@ -65,33 +72,3 @@ def extract_ptr_sql(doc: str, ptr: str) -> str:
     """
     return f"get_json_object({doc}, {sql_str(ptr_to_jsonpath(ptr))})"
 
-
-def extract_ptr_from_variant_sql(doc: str, ptr: str) -> str:
-    """Variant-backed pointer extraction (opt-in fast path): the document
-    is parsed with ``try_parse_json(doc)`` (one parse per row: every
-    pointer repeats the same expression, which subexpression elimination
-    evaluates once), and each pointer becomes one cheap binary
-    ``try_variant_get`` probe — ~1.5x faster than N ``get_json_object``
-    re-parses on multi-pointer queries (PLANS.md). Malformed document
-    bodies parse to a NULL Variant, so every pointer probe yields NULL —
-    same degrade-to-nil as the json path and the reference (query.go
-    resolveFetch).
-
-    ``try_variant_get(..., 'string')`` matches the reference value model
-    (string scalars dequoted, numbers/booleans rendered, object/array as
-    JSON text, missing and JSON null -> NULL) with two deviations, which is
-    why this stays opt-in:
-      * the Variant encoding normalizes numbers at parse time — trailing
-        ``.0`` is dropped (1000000.0 -> "1000000") and ``-0.0`` loses its
-        sign — so raw-text parity for exotic floats needs the default impl
-        (the %v canonicalizer cannot recover -0 from Variant);
-      * Variant objects store keys sorted, losing document key order, so
-        the whole-document pointer ("" -> obj_keys key-order semantics)
-        falls back to the raw JSON text column.
-    """
-    if ptr == "":
-        return doc  # structural fallback: preserve document key order
-    return (
-        f"try_variant_get(try_parse_json({doc}), "
-        f"{sql_str(ptr_to_jsonpath(ptr))}, 'string')"
-    )

@@ -5,11 +5,13 @@ The reference keys cached per-bucket results on
 ``db # bucket # fnv64(doc-ids + ptrs + reducers + filters)`` (reference
 cache.go:157-172) — i.e. the cache entry is valid exactly while the bucket's
 document set is unchanged. Here the whole result is memoized keyed on
-(query spec, sum mode, extraction engine, database version), where the
-database version is the live-file fingerprint: any append, delete or
-compaction changes the version and naturally invalidates every cached
+(query spec, sum mode, database version), where the database version is a
+hash of the per-partition fingerprints of the data-file listing
+(``SerieslyDB._data_files``): any append, delete or compaction that
+changes a data file changes the version and invalidates every cached
 result, which is the same correctness contract without per-bucket
-bookkeeping.
+bookkeeping. The commit log is not part of the version, so a commit that
+changes no data file (a ``delete_range`` over empty days) keeps the entries.
 
 An entry is one Arrow IPC file, written under a unique ``*.tmp`` name and
 ``os.replace``d onto its key, so a reader sees a whole entry or none. A hit
@@ -31,7 +33,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from seriesly_spark.db import SerieslyDB
-from seriesly_spark.plans.query import SerieslyQuery, resolve_extract_impl
+from seriesly_spark.plans.query import SerieslyQuery
 
 # Largest answer (in rows: one per bucket) a cache entry holds.
 MAX_CACHED_ROWS = 100_000
@@ -52,22 +54,17 @@ def _query_fingerprint(
         repr(q.to_ts),
         repr(q.aliases),
         repr(exact_sums),
-        resolve_extract_impl(),
     ]
     return hashlib.sha256("\x01".join(parts).encode()).hexdigest()[:32]
 
 
 def db_version(dbs: SerieslyDB, name: str) -> str:
-    """Cheap change detector: sorted list of live parquet files + sizes
-    (appends add files; delete/compact remove or replace them)."""
-    h = hashlib.sha256()
-    root = dbs._path(name)
-    for dirpath, _, files in sorted(os.walk(root)):
-        for f in sorted(files):
-            if f.endswith(".parquet"):
-                p = os.path.join(dirpath, f)
-                h.update(p.encode())
-                h.update(str(os.path.getsize(p)).encode())
+    """Cheap change detector: a hash of the database's path and its
+    per-partition data-file fingerprints (appends add files;
+    delete/compact remove or replace them)."""
+    h = hashlib.sha256(dbs._path(name).encode())
+    for d, fp in sorted(dbs._partition_versions(name).items()):
+        h.update(f"\x00{d}={fp}".encode())
     return h.hexdigest()[:16]
 
 

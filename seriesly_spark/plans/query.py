@@ -23,7 +23,9 @@ one definition. Catalyst then:
     the B-tree range walk analogue);
   * all pointers are extracted in one pass (Catalyst collapses multiple
     ``get_json_object`` over one column into a shared parse — the
-    ``jsonpointer.FindMany`` analogue, reference query.go:94-110);
+    ``jsonpointer.FindMany`` analogue, reference query.go:94-110). That
+    is the one extraction engine; it keeps each value's raw JSON text
+    (``functions.jsonptr`` says why it is not Spark's Variant type);
   * equality filters run before any aggregation (reference query.go:112-128);
   * bucket aggregation is a partial+final hash aggregate (the per-bucket
     map/reduce fan-out, reference query.go:147-217);
@@ -46,17 +48,16 @@ Semantics pinned by the reference and preserved here:
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 from dataclasses import dataclass, field as dc_field
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from seriesly_spark.functions.bucketing import bucket_ms_sql
 from seriesly_spark.functions.coerce import go_fmt_scalar, is_structural_sql, to_num_sql
-from seriesly_spark.functions.jsonptr import extract_ptr_from_variant_sql, extract_ptr_sql
+from seriesly_spark.functions.jsonptr import extract_ptr_sql
 from seriesly_spark.functions.sqltext import sql_ident, sql_str
 from seriesly_spark.functions.timeparse import canonical_key_sql, ts_ns_from_timestamp_sql
 from seriesly_spark.operators.rate import next_sample_sql, pair_rates_sql, samples_sql
@@ -75,14 +76,19 @@ class SerieslyQuery:
     aliases: list[str] | None = None
 
 
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
 def py_parse_ts_ns(value: int | str | datetime) -> int:
     """Plan-time from/to constant -> ns epoch (reference ParseTime,
     timelib/time.go:130-157). Mirrors functions.timeparse.parse_any_ts_ns
-    for driver-side literals."""
+    for driver-side literals. A naive ``datetime`` is UTC; its µs count is
+    exact integer math (a float ``timestamp()`` product truncates some
+    µs values to the one below)."""
     if isinstance(value, datetime):
         if value.tzinfo is None:
             value = value.replace(tzinfo=timezone.utc)
-        return int(value.timestamp() * 1_000_000) * 1000
+        return (value - _EPOCH) // timedelta(microseconds=1) * 1000
     s = str(value).strip()
     try:
         n = int(s)
@@ -123,15 +129,6 @@ def _py_parse_ts_str(s: str) -> int:
     raise ValueError(f"unparseable time: {s!r}")
 
 
-def resolve_extract_impl(extract_impl: str | None = None) -> str:
-    """The pointer-extraction engine a query runs with: ``extract_impl``,
-    else the ``SERIESLY_EXTRACT_IMPL`` env var, else ``"json"``."""
-    impl = extract_impl or os.environ.get("SERIESLY_EXTRACT_IMPL", "json")
-    if impl not in ("json", "variant"):
-        raise ValueError(f"unknown extract_impl: {impl!r}")
-    return impl
-
-
 def seriesly_query(
     df: DataFrame,
     query: SerieslyQuery,
@@ -141,7 +138,6 @@ def seriesly_query(
     series_cols: tuple[str, ...] = (),
     canonical_numbers: bool = False,
     exact_sums: bool = False,
-    extract_impl: str | None = None,
 ) -> DataFrame:
     """Compile a seriesly query over ``df`` into one result DataFrame.
 
@@ -149,15 +145,7 @@ def seriesly_query(
     (series, bucket_ms). ``series_cols`` generalizes the reference's
     one-database-per-query model to grouped series in one pass; rate
     pairs never cross a series.
-
-    ``extract_impl`` selects the pointer-extraction engine: ``"json"``
-    (default; ``get_json_object``, raw-text-faithful) or ``"variant"``
-    (one ``parse_json`` + binary probes per pointer — faster on
-    multi-pointer queries, with the documented Variant number/key-order
-    normalizations; see ``functions.jsonptr.extract_ptr_from_variant_sql``).
-    Falls back to the ``SERIESLY_EXTRACT_IMPL`` env var when unset.
     """
-    impl = resolve_extract_impl(extract_impl)
     fields = query.fields
     if not fields:
         raise ValueError("at least one pointer is required")  # query.go:151
@@ -196,8 +184,6 @@ def seriesly_query(
         if ptr == "_id":
             # Pseudo-pointer: the document key (reference query.go:132-134).
             return canonical_key_sql(ts_ns)
-        if impl == "variant":
-            return extract_ptr_from_variant_sql(doc, ptr)
         return extract_ptr_sql(doc, ptr)
 
     head = [*series, f"{ts_ns} AS ts_ns",

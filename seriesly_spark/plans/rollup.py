@@ -9,10 +9,12 @@ the hypertable "continuous aggregate" pattern expressed Spark-first:
 
   * the db is hive-partitioned by ``date`` (db.py layout), so each date
     is an independently refreshable unit;
-  * ``refresh()`` fingerprints every date partition from FILE METADATA
-    only (sorted names + sizes — no data read), diffs against the
-    manifest stored with the rollup, and recomputes the aggregate ONLY
-    for dates whose fingerprint changed (writes, deletes, compaction);
+  * ``refresh()`` takes every date partition's fingerprint from the
+    store's one data-file listing (``SerieslyDB._partition_versions``:
+    sorted names + sizes, FILE METADATA only — no data read), diffs them
+    against the manifest stored with the rollup, and recomputes the
+    aggregate ONLY for dates whose fingerprint changed (writes, deletes,
+    compaction);
   * recomputed dates dynamically overwrite just their partitions of the
     rollup table; dates that disappeared from the db (range delete) drop
     from the rollup; everything else is untouched.
@@ -27,7 +29,6 @@ partition: per-partition last-write-wins equals global last-write-wins.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
@@ -42,26 +43,6 @@ from seriesly_spark.functions.jsonptr import extract_ptr_sql
 from seriesly_spark.sources.tables import latest_by_key
 
 _DEC = "decimal(38,18)"
-
-
-def _partition_fingerprints(db_path: str) -> dict[str, str]:
-    """date -> md5 of the partition's (file name, size) listing. Metadata
-    only; on object storage this is one LIST call per partition."""
-    out: dict[str, str] = {}
-    if not os.path.isdir(db_path):
-        return out
-    for d in sorted(os.listdir(db_path)):
-        if not d.startswith("date="):
-            continue
-        pdir = os.path.join(db_path, d)
-        entries = sorted(
-            (f, os.path.getsize(os.path.join(pdir, f)))
-            for f in os.listdir(pdir)
-            if not f.startswith(("_", "."))
-        )
-        h = hashlib.md5(json.dumps(entries).encode()).hexdigest()
-        out[d.split("=", 1)[1]] = h
-    return out
 
 
 class ContinuousRollup:
@@ -115,7 +96,7 @@ class ContinuousRollup:
         {"changed": recomputed, "removed": dropped, "unchanged": kept} —
         the driver-checkable evidence that cold history is not rescanned.
         """
-        current = _partition_fingerprints(self.dbs._path(self.name))
+        current = self.dbs._partition_versions(self.name)
         seen = self._load_manifest()
         changed = [d for d, fp in current.items() if seen.get(d) != fp]
         removed = [d for d in seen if d not in current]

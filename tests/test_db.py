@@ -6,6 +6,7 @@ analytical query path over a written database.
 
 import json
 import os
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,6 +63,24 @@ class TestIngestAndRead:
         dbs.create("t")
         k = dbs.write("t", _doc(1))
         assert isinstance(k, int) and k > 1_700_000_000_000_000_000
+
+    def test_datetime_key_is_exact(self, dbs):
+        # A float timestamp() product truncates this µs to the one below.
+        dbs.create("t")
+        ts = datetime(2005, 4, 17, 8, 29, 2, 646319, tzinfo=timezone.utc)
+        k = dbs.write("t", _doc(1), ts=ts)
+        assert k == 1_113_726_542_646_319_000
+        assert dbs.get("t", "2005-04-17T08:29:02.646319Z") == _doc(1)
+        assert dbs.all_docs("t").first().key == "2005-04-17T08:29:02.646319Z"
+        assert dbs.write("t", _doc(2), ts=ts.replace(tzinfo=None)) == k
+
+    def test_empty_batch_is_no_commit(self, dbs, spark_jobs):
+        dbs.create("t")
+        log = os.path.join(dbs._path("t"), ".changelog")
+        before = set(os.listdir(log))
+        assert spark_jobs(lambda: dbs.write_batch("t", [])) == ([], 0)
+        assert set(os.listdir(log)) == before
+        assert dbs._partitions("t") == []
 
     def test_all_docs_order_and_limit(self, dbs):
         dbs.create("t")
@@ -493,13 +512,6 @@ class TestChangeLog:
         assert len(set(seqs)) == 3
         assert seqs == sorted(seqs)
         assert [r.op for r in rows] == ["write", "write", "delete"]
-
-    def test_changelog_opt_out(self, spark, tmp_path):
-        dbs = SerieslyDB(spark, str(tmp_path / "nolog"), changelog=False)
-        dbs.create("x")
-        dbs.write_batch("x", [(self.k(1), _doc(1))])
-        dbs.delete_range("x", self.k(1), self.k(1))
-        assert dbs.change_log("x").count() == 0
 
     def test_log_invisible_to_data_paths(self, dbs):
         dbs.create("cl")

@@ -14,6 +14,7 @@ from seriesly_spark.plans.cache import QueryCache, db_version
 from seriesly_spark.plans.emit import to_seriesly_json
 from seriesly_spark.plans.limits import QueryTimeout, run_with_timeout
 from seriesly_spark.plans.query import SerieslyQuery
+from seriesly_spark.plans.rollup import ContinuousRollup
 
 
 class TestTimeout:
@@ -98,6 +99,27 @@ class TestQueryCache:
             assert qc.query("t", q).collect() == dbs.query("t", q).collect()
         assert (qc.misses, qc.hits) == (2, 0)
 
+    def test_commit_without_data_change_keeps_entries(self, dbs, tmp_path):
+        # A delete over days that hold no partition commits a log segment
+        # but changes no data file, so the entry still answers.
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        want = qc.query("t", self._q()).collect()
+        dbs.delete_range("t", "2023-06-01", "2023-06-03")
+        assert qc.query("t", self._q()).collect() == want
+        assert (qc.misses, qc.hits) == (1, 1)
+
+    def test_one_day_append_changes_one_partition_version(self, dbs, tmp_path):
+        # The cache version and the rollup refresh read the same listing.
+        dbs.write("t", json.dumps({"v": 3}), ts="2024-01-02T00:00:00Z")
+        cr = ContinuousRollup(dbs, "t", str(tmp_path / "rollup"), 3_600_000, "/v")
+        cr.refresh()
+        before = dbs._partition_versions("t")
+        dbs.write("t", json.dumps({"v": 5}), ts="2024-01-02T05:00:00Z")
+        after = dbs._partition_versions("t")
+        assert sorted(before) == sorted(after) == ["2024-01-01", "2024-01-02"]
+        assert [d for d in after if after[d] != before[d]] == ["2024-01-02"]
+        assert cr.refresh() == {"changed": 1, "removed": 0, "unchanged": 1}
+
     def test_compact_invalidates(self, dbs, tmp_path):
         qc = QueryCache(dbs, str(tmp_path / "cache"))
         qc.query("t", self._q())
@@ -107,31 +129,25 @@ class TestQueryCache:
 
     @pytest.mark.parametrize(
         "field, first, second",
-        [
-            (("/v", "sum"), ({"exact_sums": True}, "json"), ({}, "json")),
-            (("/o", "obj_keys"), ({}, "variant"), ({}, "json")),
-        ],
-        ids=["exact_sums", "extract_impl"],
+        [(("/v", "sum"), {"exact_sums": True}, {})],
+        ids=["exact_sums"],
     )
-    def test_key_covers_answer_options(
-        self, spark, tmp_path, monkeypatch, field, first, second
-    ):
-        # Two calls whose answers differ only by the sum mode or the
-        # extraction engine must not share an entry.
+    def test_key_covers_answer_options(self, spark, tmp_path, field, first, second):
+        # Two calls whose answers differ only by the sum mode must not
+        # share an entry.
         d = SerieslyDB(spark, str(tmp_path / "dbroot"))
         d.create("t")
         d.write_batch(
             "t",
             [
-                ("2024-01-01T00:00:00Z", json.dumps({"v": 0.1, "o": {"b": 1, "a": 2}})),
+                ("2024-01-01T00:00:00Z", json.dumps({"v": 0.1})),
                 ("2024-01-01T00:10:00Z", json.dumps({"v": 0.2})),
             ],
         )
         qc = QueryCache(d, str(tmp_path / "cache"))
         q = SerieslyQuery(group_ms=3_600_000, fields=[field], aliases=["x"])
         answers = []
-        for kwargs, impl in (first, second):
-            monkeypatch.setenv("SERIESLY_EXTRACT_IMPL", impl)
+        for kwargs in (first, second):
             want = d.query("t", q, **kwargs).collect()
             assert qc.query("t", q, **kwargs).collect() == want
             answers.append(want)

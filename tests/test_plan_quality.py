@@ -12,7 +12,14 @@ never appear —
 Some gate queries execute work during construction (db mutations,
 eager persists, the PCA sketch collect) — that's fine here; the final
 DataFrame's executedPlan is still the artifact under audit.
+
+It also guards against engine knobs read from the environment: only
+``seriesly_spark/session.py`` (deployment settings: CPUs, driver memory)
+may read ``os.environ`` or ``os.getenv``.
 """
+
+import ast
+import pathlib
 
 import pytest
 
@@ -44,3 +51,27 @@ def test_no_plan_smells(spark, entry_artifacts, name):
         f"{name}: row-at-a-time Python UDF (BatchEvalPython) — use "
         f"Arrow-batched pandas UDFs"
     )
+
+
+PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "seriesly_spark"
+
+
+def _env_reads(tree):
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Attribute) and node.attr in ("environ", "getenv")
+                and isinstance(node.value, ast.Name) and node.value.id == "os"):
+            yield node.lineno
+        elif isinstance(node, ast.ImportFrom) and node.module == "os" and any(
+            a.name in ("environ", "getenv") for a in node.names
+        ):
+            yield node.lineno
+
+
+def test_only_session_reads_the_environment():
+    found = [
+        f"{path.relative_to(PACKAGE)}:{line}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path.name != "session.py" or path.parent != PACKAGE
+        for line in _env_reads(ast.parse(path.read_text()))
+    ]
+    assert found == [], f"environment read outside session.py: {found}"

@@ -315,6 +315,61 @@ class TestFiltersAndBuckets:
         assert rows[0]["any"] == "2012-09-10T05:40:57Z"
 
 
+class TestPointerShapes:
+    """The extraction engine's answers on the pointer shapes the reference
+    exercises: RFC 6901 escapes, nested array indexes, string numbers,
+    the ``_id`` pseudo-pointer, structural values under a filter, and
+    number text kept as written (-0.0 keeps its sign, 1000000.0 its .0)."""
+
+    DOCS = [
+        (1_000_000_000_000_000_000, '{"kind": "a", "nested": {"arr": [{"v": 3}, {"v": 4}]}, "a/b": 1, "m~n": "x", "obj": {"k": 1}}'),
+        (1_000_000_001_000_000_000, '{"kind": "b", "nested": {"arr": [{"v": "12"}]}, "s": "42"}'),
+        (1_000_000_002_000_000_000, '{"kind": "a", "other": null}'),
+    ]
+    DAY_BUCKET = 999_993_600_000
+    CASES = {
+        "pointer_shapes": (
+            DOCS,
+            [("/kind", "distinct"), ("/nested/arr/0/v", "sum"),
+             ("/nested/arr/1/v", "count"), ("/a~1b", "count"), ("/m~0n", "any"),
+             ("/s", "identity"), ("_id", "any")],
+            [],
+            {"bucket_ms": DAY_BUCKET, "distinct_0": ["a", "b"], "sum_1": 15.0,
+             "count_2": 1, "count_3": 1, "any_4": "x",
+             "identity_5": [None, "42", None], "any_6": "2001-09-09T01:46:40Z"},
+        ),
+        "filter": (
+            DOCS,
+            [("/kind", "count"), ("/nested/arr/0/v", "identity")],
+            [("/kind", "a")],
+            {"bucket_ms": DAY_BUCKET, "count_0": 2, "identity_1": ["3", None]},
+        ),
+        # Only scalars compare (reference query.go:112-128): a filter on a
+        # structural value fails every doc.
+        "structural_filter": (
+            DOCS,
+            [("/obj", "count")],
+            [("/obj", '{"k":1}')],
+            {"bucket_ms": DAY_BUCKET, "count_0": 0},
+        ),
+        "raw_number_text": (
+            [(1, '{"neg": -0.0, "f": 1000000.0}')],
+            [("/neg", "identity"), ("/f", "identity"), ("/f", "sum")],
+            [],
+            {"bucket_ms": 0, "identity_0": ["-0.0"], "identity_1": ["1000000.0"],
+             "sum_2": 1000000.0},
+        ),
+    }
+
+    @pytest.mark.parametrize("case", sorted(CASES))
+    def test_json_answers(self, spark, case):
+        docs, fields, filters, expected = self.CASES[case]
+        df = spark.createDataFrame(docs, "ts_ns long, doc string")
+        q = SerieslyQuery(group_ms=86_400_000, fields=fields, filters=filters)
+        rows = seriesly_query(df, q, doc_col="doc", ts_ns_col="ts_ns").collect()
+        assert [r.asDict() for r in rows] == [expected]
+
+
 class TestEmitter:
     def test_json_object_shape(self, spark):
         df = _mkdf(spark, GOLDEN_VALUES)
