@@ -11,7 +11,7 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
-from seriesly_spark.db import SerieslyDB
+from seriesly_spark.db import SerieslyDB, _ns_date
 from seriesly_spark.plans.query import SerieslyQuery
 
 
@@ -81,6 +81,73 @@ class TestIngestAndRead:
         assert spark_jobs(lambda: dbs.write_batch("t", [])) == ([], 0)
         assert set(os.listdir(log)) == before
         assert dbs._partitions("t") == []
+
+    def test_non_str_docs_are_rejected(self, dbs):
+        """Only JSON bodies are stored: a None doc would read back as a
+        missing key, and neither None nor an int dumps as JSON. The
+        whole batch fails before any file is published."""
+        dbs.create("t")
+        log = os.path.join(dbs._path("t"), ".changelog")
+        before = set(os.listdir(log))
+        batch = [
+            ("2024-01-01T00:00:00Z", _doc(1)),
+            ("2024-01-02T00:00:00Z", None),
+        ]
+        with pytest.raises(TypeError):
+            dbs.write_batch("t", batch)
+        with pytest.raises(TypeError):
+            dbs.write("t", 7, ts="2024-01-01T00:00:00Z")
+        assert set(os.listdir(log)) == before
+        assert dbs._partitions("t") == []
+
+    def test_commit_is_one_driver_file_per_date(self, dbs, spark_jobs):
+        """A commit is driver-side I/O: no Spark job, one visible
+        ``part-*.parquet`` per date and one log segment. The files are
+        what Spark's writer made: int64/int64/string, snappy, PLAIN
+        (no dictionary pages), with ts_ns min/max for row-group
+        skipping."""
+        import pyarrow.parquet as pq
+
+        dbs.create("t")
+        path = dbs._path("t")
+        log = os.path.join(path, ".changelog")
+        before = set(os.listdir(log))
+        rows = [
+            (f"2024-01-0{d}T{h:02d}:00:00Z", _doc(d * 100 + h))
+            for h in (5, 1, 9)
+            for d in (1, 2, 3)
+        ]
+        keys, jobs = spark_jobs(lambda: dbs.write_batch("t", rows))
+        assert jobs == 0
+        assert len(set(os.listdir(log)) - before) == 1
+        assert dbs._partitions("t") == [f"date=2024-01-0{d}" for d in (1, 2, 3)]
+        for d in (1, 2, 3):
+            part = os.path.join(path, f"date=2024-01-0{d}")
+            (name,) = os.listdir(part)
+            assert name.startswith("part-") and name.endswith(".parquet")
+            meta = pq.read_metadata(os.path.join(part, name))
+            assert meta.num_rows == 3
+            assert [
+                (c.name, str(c.physical_type), c.logical_type.type)
+                for c in meta.schema
+            ] == [
+                ("ts_ns", "INT64", "NONE"),
+                ("seq", "INT64", "NONE"),
+                ("doc", "BYTE_ARRAY", "STRING"),
+            ]
+            day = [k for k in keys if _ns_date(k) == f"2024-01-0{d}"]
+            for g in range(meta.num_row_groups):
+                cols = [meta.row_group(g).column(c) for c in range(3)]
+                assert {c.compression for c in cols} == {"SNAPPY"}
+                assert not any(
+                    "DICTIONARY" in e for c in cols for e in c.encodings
+                )
+                stats = cols[0].statistics
+                assert stats.has_min_max
+                assert (stats.min, stats.max) == (min(day), max(day))
+        assert json.loads(dbs.get("t", "2024-01-02T09:00:00Z")) == {"k": 209}
+        got = {r.ts_ns: json.loads(r.doc)["k"] for r in dbs.df("t").collect()}
+        assert got == {k: json.loads(doc)["k"] for k, (_, doc) in zip(keys, rows)}
 
     def test_all_docs_order_and_limit(self, dbs):
         dbs.create("t")
@@ -266,6 +333,40 @@ class TestMaintenance:
         info1 = dbs.info("t")
         assert info1["n_files"] == 1 and info1["doc_count"] == 1
         assert json.loads(dbs.get("t", "2024-01-01T00:00:00Z")) == {"k": 4}
+
+    def test_date_dir_without_data_file_is_not_a_partition(self, dbs):
+        """A commit that crashes between creating its ``date=`` directory
+        and publishing its file leaves a directory holding only a hidden
+        staging file. No read or listing may count it, and the next
+        compact sweeps it."""
+        self._seed_days(dbs, [1])
+        stray = os.path.join(dbs._path("t"), "date=2024-01-05")
+        os.makedirs(stray)
+        with open(os.path.join(stray, ".part-x.parquet.tmp"), "wb") as fh:
+            fh.write(b"half a parquet file")
+        assert dbs.df("t").count() == 2
+        assert dbs.df("t", "2024-01-05", "2024-01-06").count() == 0
+        assert dbs.get("t", "2024-01-05T00:00:00Z") is None
+        q = SerieslyQuery(group_ms=86_400_000, fields=[("/k", "count")])
+        assert [r[1] for r in dbs.query("t", q).collect()] == [2]
+        info = dbs.info("t")
+        assert (info["n_partitions"], info["n_files"]) == (1, 1)
+        assert list(dbs._partition_versions("t")) == ["2024-01-01"]
+        stream = (
+            dbs.changes("t")
+            .writeStream.format("memory")
+            .queryName("t_changes_stray")
+            .outputMode("append")
+            .start()
+        )
+        try:
+            stream.processAllAvailable()
+            assert dbs.spark.table("t_changes_stray").count() == 2
+        finally:
+            stream.stop()
+        dbs.compact("t")
+        assert not os.path.exists(stray)
+        assert dbs.df("t").count() == 2
 
     def test_info_counts(self, dbs):
         self._seed_days(dbs, [1, 2])
