@@ -2250,7 +2250,8 @@ def _scratch_db(spark: SparkSession) -> tuple[SerieslyDB, str]:
 def q_s07_compact_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7: compaction reclaims superseded revisions and merges partition
     files (reference database.go:136-171 — couch-file rewrite drops old
-    revisions). Seed 200 docs, overwrite the lower half of the distinct
+    revisions). Seed 200 docs (one stored row per distinct key: a batch
+    folds a repeated key), overwrite the lower half of the distinct
     keys, then measure live/physical doc counts before and after
     ``compact``: live counts are unchanged, physical rows shrink to one
     per key, and every partition ends at exactly one file."""
@@ -8986,9 +8987,9 @@ FROM sc
         "s07_compact_effect": """
 WITH s AS (SELECT epoch_us(ts)*1000 AS ts_ns
            FROM (SELECT ts, event_id FROM events ORDER BY ts, event_id LIMIT 200)),
-k AS (SELECT count(*) AS n_rows, count(DISTINCT ts_ns) AS nk FROM s)
+k AS (SELECT count(DISTINCT ts_ns) AS nk FROM s)
 SELECT nk AS live_before,
-       n_rows + nk // 2 AS phys_before,
+       nk + nk // 2 AS phys_before,
        nk AS live_after,
        nk AS phys_after,
        true AS one_file_per_partition

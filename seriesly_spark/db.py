@@ -7,9 +7,9 @@ Reference parity map (SURVEY §2.1):
     reference database.go:85-134, handlers.go:28-44,282-289)
   * write/write_batch        ≙ S4/S5 (keyed upsert + batched flush;
     reference database.go:175-302, handlers.go:56-100) — append-only log
-    with a write sequence; same-key overwrite resolved at read time by
-    last-write-wins (sources.tables.latest_by_key), the lakehouse analogue
-    of couchstore's B-tree key replace.
+    with a write sequence; same-key overwrite resolved by last-write-wins
+    (sources.tables.latest_by_key), the lakehouse analogue of
+    couchstore's B-tree key replace.
   * get                      ≙ S3  (point lookup, database.go:324-337)
   * all_docs / dump_lines    ≙ S10/S11 (_all/_dump range reads with limit,
     handlers.go:331-420)
@@ -24,17 +24,25 @@ Storage layout — one directory per database, hive-partitioned by UTC date:
 
     <root>/<db>/date=YYYY-MM-DD/part-*.parquet   (ts_ns LONG, seq LONG, doc STRING)
 
-Design for scale: a read lists the in-range ``date=`` directories on the
-driver and reads exactly those with the declared schema — no schema-
-inference job, no listing of other days — keeping the ts_ns bounds on the
-scan for parquet min/max skipping (the B-tree range-walk analogue); a
-point ``get`` reads only its key's day; a commit writes one new file per
-date from the driver with pyarrow (no Spark job, no read-modify-write);
-delete_range drops fully-covered partition directories without
-touching their data and rewrites only the two edge partitions; compact
-merges small files per partition. On a real deployment the same API maps
-onto Delta/Iceberg (MERGE, OPTIMIZE, CDF) — plain parquet keeps this
-repo dependency-free.
+A data file holds each key at most once: every writer folds repeats of a
+key before it publishes a file (``write_batch`` keeps a batch's later
+row, ``compact`` and ``delete_range``'s edge rewrite keep the highest
+``seq``). A key's revisions share its date, so a partition of one file
+is already its own live view, and last-write-wins is resolved at read
+time only for partitions of more than one file.
+
+Design for scale: a read lists the in-range partitions' data files on
+the driver and reads exactly those files with the declared schema — no
+schema-inference job, no listing of other days, no file the listing did
+not see — keeping the ts_ns bounds on the scan for parquet min/max
+skipping (the B-tree range-walk analogue); a point ``get`` reads only
+its key's day; a commit writes one new file per date from the driver
+with pyarrow (no Spark job, no read-modify-write); delete_range drops
+fully-covered partition directories without touching their data and
+rewrites only the two edge partitions; compact merges the files of
+each partition that holds more than one. On a real deployment the same
+API maps onto Delta/Iceberg (MERGE, OPTIMIZE, CDF) — plain parquet
+keeps this repo dependency-free.
 """
 
 from __future__ import annotations
@@ -89,6 +97,12 @@ def _changelog_has_stranded_dups(d: str, files: list[str]) -> bool:
 
 class SerieslyDB:
     """Filesystem-rooted database registry + per-database operations.
+
+    Storage invariant: no data file holds a key twice, and a key's
+    revisions share one ``date=`` partition. Reads therefore apply the
+    last-write-wins fold only when some partition they cover holds more
+    than one file, and :meth:`compact` leaves a one-file partition as it
+    is (no Spark job, no new file name, no new partition version).
 
     Every mutating commit also appends one tiny parquet segment to
     ``<db>/.changelog/``; the log is always on. It is a write-ahead
@@ -171,7 +185,10 @@ class SerieslyDB:
         write queue flush (1000 ops / 5 s, database.go:175-254): callers
         batch; each call is one commit. An empty batch is no commit: no
         file, no log segment. Documents must be ``str`` (JSON bodies);
-        anything else raises ``TypeError`` before a file is written.
+        anything else raises ``TypeError`` before a file is written. A
+        key repeated within the batch is stored once, with its later
+        row's doc (which the higher ``seq`` would win anyway); the
+        returned keys and the log's ``n_rows`` still count every row.
 
         The commit runs on the driver, with no Spark job: the rows are
         split by ``date=`` partition and every date's table is built
@@ -202,14 +219,18 @@ class SerieslyDB:
             ns = time.time_ns() if ts is None else py_parse_ts_ns(ts)
             keys.append(ns)
             by_day.setdefault(ns // _NS_PER_DAY, []).append(i)
-        tables = {
-            _ns_date(day * _NS_PER_DAY): pa.table({
+        tables = {}
+        for day, idx in by_day.items():
+            # No file holds a key twice: the last row of a repeated key
+            # wins, as its higher seq would at read time.
+            last = {keys[i]: i for i in idx}
+            if len(last) < len(idx):
+                idx = sorted(last.values())
+            tables[_ns_date(day * _NS_PER_DAY)] = pa.table({
                 "ts_ns": pa.array([keys[i] for i in idx], pa.int64()),
                 "seq": pa.array([seq + i for i in idx], pa.int64()),
                 "doc": pa.array([rows[i][1] for i in idx], pa.string()),
             })
-            for day, idx in by_day.items()
-        }
         for d, table in tables.items():
             part_dir = os.path.join(path, f"date={d}")
             os.makedirs(part_dir, exist_ok=True)
@@ -284,9 +305,11 @@ class SerieslyDB:
     def change_log(self, name: str) -> DataFrame:
         """Batch view of the commit log, in commit order: one row per
         mutating operation. ``n_rows`` is op-specific: docs appended
-        (write), raw rows removed (delete), live rows remaining
-        (compact). A database with no mutations yet returns an empty
-        frame."""
+        (write, every row posted, a key repeated within the batch
+        included), raw rows removed (delete: the in-range rows plus the
+        revisions folded away in the two edge partitions), live rows
+        remaining (compact). A database with no mutations yet returns an
+        empty frame."""
         path = self._path(name)
         if not os.path.isdir(path):
             raise KeyError(f"no such db: {name}")
@@ -315,37 +338,49 @@ class SerieslyDB:
 
     # -- Reads (S1-S3, S10/S11) --------------------------------------------
 
-    def _read_partitions(self, name: str, parts: list[str]) -> DataFrame:
+    def _scan(
+        self, name: str, listing: dict[str, list[tuple[str, int]]]
+    ) -> DataFrame:
         """Raw rows (``ts_ns, seq, doc`` plus the ``date`` partition
-        column) of the listed ``date=`` directories: the store's one
-        reader. The declared schema means no schema-inference job, and
-        naming the directories means Spark lists only those (on the
-        driver, up to 32 of them)."""
+        column) of exactly the files of a :meth:`_data_files` listing:
+        the store's one reader. The declared schema means no
+        schema-inference job, and naming the files means Spark reads what
+        the listing saw and nothing else (a file published after the
+        listing is not in this read). Spark checks up to 32 paths on the
+        driver; more take a listing job."""
         path = self._path(name)
         return (
             self.spark.read.schema(DOC_SCHEMA)
             .option("basePath", path)
-            .parquet(*[os.path.join(path, p) for p in parts])
+            .parquet(*[
+                os.path.join(path, f"date={d}", f)
+                for d, files in listing.items() for f, _ in files
+            ])
         )
 
-    def df(self, name: str, from_ts=None, to_ts=None) -> DataFrame:
-        """Live view of the database: one row per key (last write wins).
-        Range bounds are inclusive ns keys (P4). Pruning is a driver-side
-        list of the in-range ``date=`` directories; the ``ts_ns`` bounds
-        stay on the scan for row-group skipping. A range that touches no
-        partition is the empty frame; an unreadable file raises."""
-        lo = None if from_ts is None else py_parse_ts_ns(from_ts)
-        hi = None if to_ts is None else py_parse_ts_ns(to_ts)
+    def _live(
+        self, name: str, lo: int | None = None, hi: int | None = None,
+        dates: list[str] | None = None,
+    ) -> DataFrame:
+        """Live rows (``ts_ns, seq, doc, date``), one per key, of keys in
+        ``[lo, hi]`` (inclusive ns, ``None`` is open) of the ``dates``
+        partitions (default: all). The in-range partitions come from one
+        :meth:`_data_files` listing and :meth:`_scan` reads exactly its
+        files. A key lives in one partition and no file holds it twice,
+        so the last-write-wins fold runs only if some listed partition
+        holds more than one file. A range that touches no partition is
+        the empty frame."""
+        if dates is None:
+            dates = [p[len("date="):] for p in self._partitions(name)]
         lo_d = None if lo is None else _ns_date(lo)
         hi_d = None if hi is None else _ns_date(hi)
-        parts = [
-            p for p in self._partitions(name)
-            if (lo_d is None or p[len("date="):] >= lo_d)
-            and (hi_d is None or p[len("date="):] <= hi_d)
-        ]
-        if not parts:
-            return self.spark.createDataFrame([], DOC_SCHEMA)
-        raw = self._read_partitions(name, parts)
+        listing = self._data_files(name, [
+            d for d in dates
+            if (lo_d is None or d >= lo_d) and (hi_d is None or d <= hi_d)
+        ])
+        if not listing:
+            return self.spark.createDataFrame([], DOC_SCHEMA + ", date date")
+        raw = self._scan(name, listing)
         bounds = []
         if lo is not None:
             bounds.append(f"ts_ns >= {lo}")
@@ -353,18 +388,30 @@ class SerieslyDB:
             bounds.append(f"ts_ns <= {hi}")
         if bounds:
             raw = raw.where(" AND ".join(bounds))
-        return latest_by_key(raw.select("ts_ns", "seq", "doc"), ["ts_ns"], "seq")
+        if any(len(files) > 1 for files in listing.values()):
+            raw = latest_by_key(raw, ["ts_ns"], "seq")
+        return raw
+
+    def df(self, name: str, from_ts=None, to_ts=None) -> DataFrame:
+        """Live view of the database: one row per key (last write wins).
+        Range bounds are inclusive ns keys (P4). Pruning is a driver-side
+        listing of the in-range partitions' files; the ``ts_ns`` bounds
+        stay on the scan for row-group skipping. A range that touches no
+        partition is the empty frame; an unreadable file raises."""
+        lo = None if from_ts is None else py_parse_ts_ns(from_ts)
+        hi = None if to_ts is None else py_parse_ts_ns(to_ts)
+        return self._live(name, lo, hi).select("ts_ns", "seq", "doc")
 
     def get(self, name: str, ts) -> str | None:
         """Point read (S3): only the key's date partition is read, with
         the key pushed to the scan; one Spark job. The newest ``seq``
         among the key's revisions wins."""
         ns = py_parse_ts_ns(ts)
-        part = f"date={_ns_date(ns)}"
-        if part not in self._partitions(name):
+        listing = self._data_files(name, [_ns_date(ns)])
+        if not listing:
             return None
         rows = (
-            self._read_partitions(name, [part])
+            self._scan(name, listing)
             .where(f"ts_ns = {ns}")
             .select("seq", "doc")
             .collect()
@@ -455,10 +502,13 @@ class SerieslyDB:
         names (the commit log, Spark's markers) are not data, as Spark's
         readers skip them. A partition missing from disk (dropped by a
         rewrite), or a ``date=`` directory holding no data file (a commit
-        that crashed before publishing its file), is left out."""
+        that crashed before publishing its file), is left out. A missing
+        database raises ``KeyError``."""
         path = self._path(name)
         if dates is None:
             dates = [p[len("date="):] for p in self._partitions(name)]
+        elif not os.path.isdir(path):
+            raise KeyError(f"no such db: {name}")
         out = {}
         for d in dates:
             try:
@@ -499,9 +549,10 @@ class SerieslyDB:
     def delete_range(self, name: str, from_ts, to_ts, compact: bool = False) -> None:
         """Bulk range delete (S6). Partitions fully inside the range are
         dropped as directories (no data read); the two edge partitions are
-        rewritten without the deleted keys. The 10k-commit batching of the
-        reference (handlers.go:256) is irrelevant here — the rewrite is one
-        job per edge partition."""
+        rewritten without the deleted keys, each as one file with its
+        surviving keys folded by last-write-wins. The 10k-commit batching
+        of the reference (handlers.go:256) is irrelevant here — the
+        rewrite is one job per edge partition."""
         lo, hi = py_parse_ts_ns(from_ts), py_parse_ts_ns(to_ts)
         lo_d = _ns_date(lo)
         hi_d = _ns_date(hi)
@@ -509,8 +560,8 @@ class SerieslyDB:
         # Commit-log bookkeeping (raw rows removed) comes from parquet
         # FOOTER metadata, not a scan job: dropped directories contribute
         # their exact footer row counts; edge partitions contribute the
-        # before/after footer diff around the rewrite (the rewrite
-        # removes exactly the in-range rows, so the diff IS the count).
+        # before/after footer diff around the rewrite (the in-range rows
+        # plus the superseded revisions the rewrite folds away).
         # This is the "commit metadata, not a scan" story of the table
         # formats — and it removes one whole Spark job per delete.
         n_removed = 0
@@ -524,8 +575,11 @@ class SerieslyDB:
                 before = self._footer_rows(name, [d])
                 self._rewrite_partition(
                     name, d,
-                    lambda df: df.where(
-                        ~((F.col("ts_ns") >= lo) & (F.col("ts_ns") <= hi))
+                    lambda df: latest_by_key(
+                        df.where(
+                            ~((F.col("ts_ns") >= lo) & (F.col("ts_ns") <= hi))
+                        ),
+                        ["ts_ns"], "seq",
                     ),
                 )
                 after = self._footer_rows(name, [d])
@@ -556,9 +610,8 @@ class SerieslyDB:
         seen = {
             f_ for f_ in os.listdir(part_dir) if f_.endswith(".parquet")
         }
-        src_bytes = sum(
-            os.path.getsize(os.path.join(part_dir, f_)) for f_ in seen
-        )
+        listing = self._data_files(name, [date])
+        src_bytes = sum(b for files in listing.values() for _, b in files)
 
         def _check_no_raced_append() -> None:
             raced = {
@@ -600,11 +653,13 @@ class SerieslyDB:
                 )
             shutil.rmtree(trash)
 
-        cur = self._read_partitions(name, [f"date={date}"]).select(
-            "ts_ns", "seq", "doc"
+        # A directory with no data file (a commit that crashed before its
+        # rename) has nothing to read: it is only removed.
+        new = (
+            transform(self._scan(name, listing).select("ts_ns", "seq", "doc"))
+            if listing else None
         )
-        new = transform(cur)
-        if new.isEmpty():
+        if new is None or new.isEmpty():
             _check_no_raced_append()
             _remove_part_dir_atomically()
             return
@@ -653,12 +708,25 @@ class SerieslyDB:
         time-range-ordered files instead — at 100 TB a day can be far
         bigger than one sane parquet file.
 
+        Idempotent, like OPTIMIZE: a partition that is already one file
+        holds each key once, so it is left as it is (no Spark job, same
+        file, same partition version) unless ``target_file_bytes`` is set
+        and the file is larger than that. A second ``compact`` with no
+        commit in between rewrites nothing; it still folds the commit log
+        and records itself there.
+
         ``fold_changelog=False`` skips the commit-log fold — use it when
         a lagging :meth:`changes_log_stream` consumer may not have
         caught up to the current log tail yet (the fold rewrites the
         newest segment in place, which a file stream never re-reads)."""
+        listing = self._data_files(name)
         for part in self._partitions(name):
             d = part[len("date="):]
+            files = listing.get(d, [])
+            if len(files) == 1 and not (
+                target_file_bytes and files[0][1] > target_file_bytes
+            ):
+                continue
             self._rewrite_partition(
                 name,
                 d,
@@ -728,7 +796,7 @@ class SerieslyDB:
     def info(self, name: str) -> dict:
         """S9: doc_count (live keys), space_used, partition/file counts.
 
-        ``doc_count`` runs the LWW dedup (exact live keys — what the
+        ``doc_count`` counts the live view (exact live keys — what the
         reference reports from the couchstore header). At cluster scale
         prefer a table format whose snapshot carries row counts, or the
         continuous rollup's cnt partials (plans/rollup.py), and treat

@@ -40,7 +40,6 @@ from seriesly_spark.db import SerieslyDB
 from seriesly_spark.functions.bucketing import bucket_ms_sql
 from seriesly_spark.functions.coerce import to_num_sql
 from seriesly_spark.functions.jsonptr import extract_ptr_sql
-from seriesly_spark.sources.tables import latest_by_key
 
 _DEC = "decimal(38,18)"
 
@@ -75,8 +74,7 @@ class ContinuousRollup:
             return {}
 
     def _aggregate(self, dates: list[str]) -> DataFrame:
-        raw = self.dbs._read_partitions(self.name, [f"date={d}" for d in dates])
-        live = latest_by_key(raw, ["ts_ns"], "seq")
+        live = self.dbs._live(self.name, dates=dates)
         val = to_num_sql(extract_ptr_sql("doc", self.pointer))
         return (
             live.selectExpr(

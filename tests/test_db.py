@@ -149,6 +149,66 @@ class TestIngestAndRead:
         got = {r.ts_ns: json.loads(r.doc)["k"] for r in dbs.df("t").collect()}
         assert got == {k: json.loads(doc)["k"] for k, (_, doc) in zip(keys, rows)}
 
+    def test_batch_folds_a_repeated_key(self, dbs):
+        """No data file holds a key twice: the batch's later row is the
+        one stored, and the log still counts every row posted."""
+        import pyarrow.parquet as pq
+
+        dbs.create("t")
+        rows = [
+            ("2024-01-01T00:00:00Z", _doc(1)),
+            ("2024-01-01T01:00:00Z", _doc(2)),
+            ("2024-01-01T00:00:00Z", _doc(3)),
+        ]
+        keys = dbs.write_batch("t", rows)
+        assert len(keys) == 3 and keys[0] == keys[2]
+        part = os.path.join(dbs._path("t"), "date=2024-01-01")
+        (name,) = os.listdir(part)
+        stored = pq.read_table(os.path.join(part, name)).to_pylist()
+        assert sorted((r["ts_ns"], r["doc"]) for r in stored) == [
+            (keys[0], _doc(3)), (keys[1], _doc(2)),
+        ]
+        assert dbs.get("t", keys[0]) == _doc(3)
+        assert dbs.change_log("t").collect()[-1].n_rows == 3
+
+    def test_read_is_the_listed_files(self, dbs, monkeypatch):
+        """A read decides whether to fold from its listing, so it must
+        read exactly the listed files: a revision published right after
+        the listing is neither read nor able to double its key."""
+        dbs.create("t")
+        dbs.write_batch("t", [
+            ("2024-01-01T00:00:00Z", _doc(1)),
+            ("2024-01-01T01:00:00Z", _doc(2)),
+        ])
+        real = dbs._data_files
+
+        def listing_then_commit(*args, **kwargs):
+            out = real(*args, **kwargs)
+            monkeypatch.setattr(dbs, "_data_files", real)
+            dbs.write_batch("t", [("2024-01-01T00:00:00Z", _doc(9))])
+            return out
+
+        monkeypatch.setattr(dbs, "_data_files", listing_then_commit)
+        got = sorted((r.ts_ns, r.doc) for r in dbs.df("t").collect())
+        assert [doc for _, doc in got] == [_doc(1), _doc(2)]
+
+    def test_one_file_partitions_read_without_the_fold(self, dbs, spark_jobs):
+        """A store written by one batch holds one file a partition: the
+        read has no last-write-wins aggregate, and ``all_docs(limit)``
+        is one Spark job."""
+        dbs.create("t")
+        dbs.write_batch("t", [
+            (f"2024-01-0{d}T{h:02d}:00:00Z", _doc(d * 100 + h))
+            for d in (1, 2, 3) for h in range(0, 24, 3)
+        ])
+        plan = dbs.df("t")._jdf.queryExecution().optimizedPlan().toString()
+        assert "max_by" not in plan and "Aggregate" not in plan
+        rows, jobs = spark_jobs(lambda: dbs.all_docs("t", limit=100).collect())
+        assert jobs == 1
+        assert [json.loads(r.doc)["k"] for r in rows] == [
+            d * 100 + h for d in (1, 2, 3) for h in range(0, 24, 3)
+        ]
+
     def test_all_docs_order_and_limit(self, dbs):
         dbs.create("t")
         dbs.write_batch(
@@ -322,6 +382,48 @@ class TestMaintenance:
         assert left == [100, 112, 412]
         # fully-covered partitions are gone as directories
         assert dbs.info("t")["n_partitions"] == 2
+
+    def test_delete_edge_rewrite_folds_revisions(self, dbs):
+        """The edge rewrite leaves one file holding each key once, so a
+        revised key that survives the delete reads once, newest doc."""
+        dbs.create("t")
+        dbs.write_batch("t", [
+            ("2024-01-01T00:00:00Z", _doc(1)),
+            ("2024-01-01T06:00:00Z", _doc(2)),
+        ])
+        dbs.write("t", _doc(10), ts="2024-01-01T00:00:00Z")
+        assert dbs.info("t")["n_files"] == 2
+        dbs.delete_range("t", "2024-01-01T06:00:00Z", "2024-01-01T06:00:00Z")
+        assert dbs.info("t")["n_files"] == 1
+        assert [r.doc for r in dbs.df("t").collect()] == [_doc(10)]
+
+    def test_second_compact_is_a_no_op(self, dbs, spark_jobs, tmp_path):
+        """A partition already one file is left alone: a second compact
+        with no commit in between launches no Spark job and moves no
+        partition version, so cache entries keep answering. It still
+        folds the commit log and records itself there."""
+        from seriesly_spark.plans.cache import QueryCache, db_version
+
+        self._seed_days(dbs, [1, 2])
+        dbs.write("t", _doc(7), ts="2024-01-01T00:00:00Z")
+        dbs.compact("t")
+        versions, version = dbs._partition_versions("t"), db_version(dbs, "t")
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        q = SerieslyQuery(group_ms=86_400_000, fields=[("/k", "sum")], aliases=["s"])
+        want = qc.query("t", q).collect()
+        assert spark_jobs(lambda: dbs.compact("t")) == (None, 0)
+        assert dbs._partition_versions("t") == versions
+        assert db_version(dbs, "t") == version
+        assert qc.query("t", q).collect() == want
+        assert (qc.misses, qc.hits) == (1, 1)
+        log = dbs.change_log("t").collect()
+        assert [r.op for r in log][-2:] == ["compact", "compact"]
+        assert len(os.listdir(os.path.join(dbs._path("t"), ".changelog"))) == 2
+        # A target no file exceeds changes nothing; a smaller one splits.
+        dbs.compact("t", target_file_bytes=10**9)
+        assert dbs._partition_versions("t") == versions
+        dbs.compact("t", target_file_bytes=1)
+        assert dbs.info("t")["n_files"] == 4
 
     def test_compact_merges_and_reclaims(self, dbs):
         dbs.create("t")
@@ -564,6 +666,20 @@ class TestChangeLog:
         ops = [(r.op, r.n_rows) for r in dbs.change_log("cl").collect()]
         assert ops[-1] == ("delete", 2)  # both physical revisions removed
 
+    def test_delete_counts_revisions_folded_at_the_edge(self, dbs):
+        """The edge rewrite folds the surviving key's old revision, so
+        the delete's footer diff counts it with the in-range row."""
+        import pyarrow.parquet as pq
+
+        dbs.create("cl")
+        dbs.write_batch("cl", [(self.k(1), _doc(1)), (self.k(2), _doc(2))])
+        dbs.write_batch("cl", [(self.k(1), _doc(3))])
+        dbs.delete_range("cl", self.k(2), self.k(2))
+        assert dbs.change_log("cl").collect()[-1].n_rows == 2
+        ((d, [(name, _)]),) = dbs._data_files("cl").items()
+        path = os.path.join(dbs._path("cl"), f"date={d}", name)
+        assert pq.read_table(path).column("ts_ns").to_pylist() == [self.k(1)]
+
     def test_stream_surfaces_deletes_and_compaction(self, dbs, spark):
         import uuid as _uuid
 
@@ -581,6 +697,9 @@ class TestChangeLog:
             stream.processAllAvailable()
             n1 = spark.sql(f"SELECT count(*) n FROM {qname}").first().n
             dbs.delete_range("cl", self.k(0), self.k(0))
+            # Caught up before compact folds the log it tails (a stream
+            # lagging at the fold reads the folded rows again).
+            stream.processAllAvailable()
             dbs.compact("cl")
             stream.processAllAvailable()
             got = spark.sql(

@@ -121,6 +121,9 @@ class TestQueryCache:
         assert cr.refresh() == {"changed": 1, "removed": 0, "unchanged": 1}
 
     def test_compact_invalidates(self, dbs, tmp_path):
+        # A revision gives the day a second file, which compact rewrites
+        # (a one-file day it leaves alone: test_db's no-op compact).
+        dbs.write("t", json.dumps({"v": 1}), ts="2024-01-01T00:00:00Z")
         qc = QueryCache(dbs, str(tmp_path / "cache"))
         qc.query("t", self._q())
         dbs.compact("t")
