@@ -37,16 +37,20 @@ schema-inference job, no listing of other days, no file the listing did
 not see — keeping the ts_ns bounds on the scan for parquet min/max
 skipping (the B-tree range-walk analogue); a point ``get`` reads only
 its key's day; a commit writes one new file per date from the driver
-with pyarrow (no Spark job, no read-modify-write); delete_range drops
-fully-covered partition directories without touching their data and
-rewrites only the two edge partitions; compact merges the files of
-each partition that holds more than one. On a real deployment the same
-API maps onto Delta/Iceberg (MERGE, OPTIMIZE, CDF) — plain parquet
-keeps this repo dependency-free.
+with pyarrow (no Spark job, no read-modify-write); delete_range retires
+fully-covered partitions without reading their data and rewrites only
+the two edge partitions; compact merges the files of each partition
+that holds more than one. A rewrite publishes its new files beside the
+old ones and only then unlinks the files it read, as the reference
+writes a new couch file before it swaps out the old one
+(database.go:136-171). On a real deployment the same API maps onto
+Delta/Iceberg (MERGE, OPTIMIZE, CDF) — plain parquet keeps this repo
+dependency-free.
 """
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import hashlib
 import json
@@ -121,17 +125,14 @@ class SerieslyDB:
     same single-writer contract as the incremental dedup indexes and any
     table format without a lock service). The commit-log seq counter is
     collision-checked against the directory on every write (two handles
-    cannot silently overwrite each other's segment), and a data append
-    racing a ``compact``/``delete_range`` partition rewrite is never
-    silently dropped: the rewrite removes the old files via an ATOMIC
-    directory rename, so a raced append either lands in the renamed dir
-    (detected, restored to the partition, and raised — fail loudly,
-    retry the maintenance op) or re-creates the partition dir after the
-    rename (merged with the rewrite output — it survives). Detection is
-    best-effort only in the FALSE-POSITIVE direction: an append the
-    rewrite actually folded in can still raise as raced (the retry
-    folds it for real); the no-silent-loss guarantee itself has no
-    window.
+    cannot silently overwrite each other's segment). A data append that
+    races a ``compact``/``delete_range`` partition rewrite survives,
+    with no error: the rewrite reads and unlinks only the files of its
+    own listing, so a file committed after that listing is neither read
+    nor removed, and reads fold it with the rewrite's output. Reads that
+    run beside a rewrite are not isolated from it: a read whose listing
+    names a file the rewrite then unlinks can fail, or Spark can skip
+    that file and miss its rows (ROADMAP item 4).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -194,8 +195,7 @@ class SerieslyDB:
         split by ``date=`` partition and every date's table is built
         before any is published. Each table is then written to a hidden
         staging name inside its partition (``.part-<uuid>.parquet.tmp``:
-        the leading dot hides it from every reader and listing, and the
-        suffix keeps it out of the rewrite's raced-append check) and
+        the leading dot hides it from every reader and listing) and
         renamed onto ``part-<uuid>.parquet``. The log segment is appended
         last, so the log only ever names data that is already visible."""
         import pyarrow as pa
@@ -500,7 +500,7 @@ class SerieslyDB:
         rollup's refresh diff, :meth:`info` and the footer row counts;
         driver-side metadata, no Spark job. Hidden and ``_``-prefixed
         names (the commit log, Spark's markers) are not data, as Spark's
-        readers skip them. A partition missing from disk (dropped by a
+        readers skip them. A partition missing from disk (retired by a
         rewrite), or a ``date=`` directory holding no data file (a commit
         that crashed before publishing its file), is left out. A missing
         database raises ``KeyError``."""
@@ -511,17 +511,19 @@ class SerieslyDB:
             raise KeyError(f"no such db: {name}")
         out = {}
         for d in dates:
+            files = []
             try:
                 with os.scandir(os.path.join(path, f"date={d}")) as it:
-                    files = sorted(
-                        (e.name, e.stat().st_size) for e in it
-                        if e.name.endswith(".parquet")
-                        and not e.name.startswith((".", "_"))
-                    )
+                    for e in it:
+                        # A file a rewrite unlinks between the scan and
+                        # its stat is left out, not the whole partition.
+                        with contextlib.suppress(FileNotFoundError):
+                            if _is_data_file(e.name):
+                                files.append((e.name, e.stat().st_size))
             except FileNotFoundError:
                 continue
             if files:
-                out[d] = files
+                out[d] = sorted(files)
         return out
 
     def _partition_versions(self, name: str) -> dict[str, str]:
@@ -533,166 +535,132 @@ class SerieslyDB:
             for d, files in self._data_files(name).items()
         }
 
-    def _footer_rows(self, name: str, dates: list[str] | None = None) -> int:
-        """Exact row count of the listed data files (every partition, or
-        ``dates``) from parquet footer metadata — driver-side
-        milliseconds, no Spark job."""
+    def _footer_rows(
+        self, name: str, listing: dict[str, list[tuple[str, int]]]
+    ) -> int:
+        """Exact row count of the files of a :meth:`_data_files` listing,
+        from parquet footer metadata: driver-side milliseconds, no Spark
+        job."""
         import pyarrow.parquet as pq
 
         path = self._path(name)
         return sum(
             pq.read_metadata(os.path.join(path, f"date={d}", f)).num_rows
-            for d, files in self._data_files(name, dates).items()
+            for d, files in listing.items()
             for f, _ in files
         )
 
     def delete_range(self, name: str, from_ts, to_ts, compact: bool = False) -> None:
         """Bulk range delete (S6). Partitions fully inside the range are
-        dropped as directories (no data read); the two edge partitions are
-        rewritten without the deleted keys, each as one file with its
-        surviving keys folded by last-write-wins. The 10k-commit batching
-        of the reference (handlers.go:256) is irrelevant here — the
-        rewrite is one job per edge partition."""
+        retired without reading their data: their listed files are
+        unlinked, then the emptied directory. The two edge partitions are
+        rewritten in place by :meth:`_rewrite_partition` without the
+        deleted keys, each as one file with its surviving keys folded by
+        last-write-wins. A file committed into the range after this
+        call's listing survives. The 10k-commit batching of the reference
+        (handlers.go:256) is irrelevant here: the rewrite is one write
+        job per edge partition.
+
+        The commit log's ``n_rows`` (raw rows removed) comes from parquet
+        footers, not a scan job: a retired partition's rows, plus each
+        edge rewrite's rows read minus rows written (the in-range rows
+        and the superseded revisions the rewrite folds away)."""
         lo, hi = py_parse_ts_ns(from_ts), py_parse_ts_ns(to_ts)
         lo_d = _ns_date(lo)
         hi_d = _ns_date(hi)
-        path = self._path(name)
-        # Commit-log bookkeeping (raw rows removed) comes from parquet
-        # FOOTER metadata, not a scan job: dropped directories contribute
-        # their exact footer row counts; edge partitions contribute the
-        # before/after footer diff around the rewrite (the in-range rows
-        # plus the superseded revisions the rewrite folds away).
-        # This is the "commit metadata, not a scan" story of the table
-        # formats — and it removes one whole Spark job per delete.
         n_removed = 0
-        for part in self._partitions(name):
-            d = part[len("date="):]
-            part_dir = os.path.join(path, part)
+        for d, files in self._data_files(name).items():
             if lo_d < d < hi_d:
-                n_removed += self._footer_rows(name, [d])
-                shutil.rmtree(part_dir)
+                n_removed += self._footer_rows(name, {d: files})
+                self._retire(name, d, [f for f, _ in files])
             elif d == lo_d or d == hi_d:
-                before = self._footer_rows(name, [d])
-                self._rewrite_partition(
+                rows_in, rows_out = self._rewrite_partition(
                     name, d,
                     lambda df: latest_by_key(
-                        df.where(
-                            ~((F.col("ts_ns") >= lo) & (F.col("ts_ns") <= hi))
-                        ),
+                        df.where(f"NOT (ts_ns >= {lo} AND ts_ns <= {hi})"),
                         ["ts_ns"], "seq",
                     ),
                 )
-                after = self._footer_rows(name, [d])
-                n_removed += before - after
+                n_removed += rows_in - rows_out
         self._log_change(name, "delete", lo, hi, n_removed)
         if compact:
             self.compact(name)
 
     def _rewrite_partition(
         self, name: str, date: str, transform, target_bytes: int | None = None
-    ) -> None:
-        path = self._path(name)
-        part_dir = os.path.join(path, f"date={date}")
-        # Snapshot of the input file set, taken BEFORE the read lists the
-        # directory. The single-writer contract (class docstring) says no
-        # appends race this rewrite — but a violated contract must fail
-        # LOUDLY, not silently drop the raced append when the old files
-        # are removed without the rewrite having folded it in. The
-        # pre-removal re-list is the cheap (listdir-only) detector, and
-        # the removal itself is an ATOMIC os.rename of the partition dir
-        # to a trash name: an append that races the removal lands either
-        # in the renamed dir (detected post-rename, restored, raised) or
-        # in a fresh part_dir (merged with the rewrite output — it
-        # survives). Residual imprecision is only ever a FALSE POSITIVE:
-        # a file landing between this snapshot and Spark's lazy listing
-        # may be folded into the output yet still raise as raced; the
-        # retried rewrite then folds it for real.
-        seen = {
-            f_ for f_ in os.listdir(part_dir) if f_.endswith(".parquet")
-        }
+    ) -> tuple[int, int]:
+        """Replace the data files of partition ``date`` by ``transform``
+        of their rows, in place; returns (rows read, rows written).
+
+        The new files are published beside the old before any old one
+        goes, so a read at any point sees the old files, the new ones, or
+        both, folded by last-write-wins. For ``compact`` each of these is
+        the same live view. A ``delete_range`` edge of several input
+        files unlinks them one at a time, so a read in between can see
+        some deleted keys and not others. Only the files of the one
+        listing taken here are read and unlinked: a file committed after
+        it is left as it is. A crash at any step leaves every row the
+        transform keeps readable with its doc, and running the operation
+        again finishes it."""
+        import pyarrow.parquet as pq
+
+        part_dir = os.path.join(self._path(name), f"date={date}")
         listing = self._data_files(name, [date])
-        src_bytes = sum(b for files in listing.values() for _, b in files)
-
-        def _check_no_raced_append() -> None:
-            raced = {
-                f_
-                for f_ in os.listdir(part_dir)
-                if f_.endswith(".parquet")
-            } - seen
-            if raced:
-                raise RuntimeError(
-                    f"concurrent append(s) {sorted(raced)} landed in "
-                    f"{part_dir} during a rewrite — single-writer "
-                    "contract violated; partition left untouched, retry "
-                    "the maintenance op"
-                )
-
-        def _remove_part_dir_atomically() -> None:
-            # os.rename is atomic, so a raced append is never deleted:
-            # it is either inside the renamed dir (found below, restored
-            # to a fresh part_dir, and raised) or it re-created part_dir
-            # after the rename (left in place; the caller's makedirs +
-            # moves merge with it).
-            trash = os.path.join(self.root, f".trash-{uuid.uuid4().hex}")
-            os.rename(part_dir, trash)
-            raced = {
-                f_ for f_ in os.listdir(trash) if f_.endswith(".parquet")
-            } - seen
-            if raced:
-                os.makedirs(part_dir, exist_ok=True)
-                for f_ in os.listdir(trash):
-                    shutil.move(
-                        os.path.join(trash, f_), os.path.join(part_dir, f_)
-                    )
-                shutil.rmtree(trash, ignore_errors=True)
-                raise RuntimeError(
-                    f"concurrent append(s) {sorted(raced)} landed in "
-                    f"{part_dir} during a rewrite — single-writer "
-                    "contract violated; partition restored, retry the "
-                    "maintenance op"
-                )
-            shutil.rmtree(trash)
-
+        files = [f for f, _ in listing.get(date, [])]
+        rows_in = self._footer_rows(name, listing)
+        rows_out = 0
         # A directory with no data file (a commit that crashed before its
         # rename) has nothing to read: it is only removed.
-        new = (
-            transform(self._scan(name, listing).select("ts_ns", "seq", "doc"))
-            if listing else None
-        )
-        if new is None or new.isEmpty():
-            _check_no_raced_append()
-            _remove_part_dir_atomically()
+        if files:
+            new = transform(self._scan(name, listing).select("ts_ns", "seq", "doc"))
+            # Without a target, match the reference's single-file couch
+            # rewrite (database.go:136-171). With one, split huge
+            # partitions into ~target-sized, ts_ns-RANGE-partitioned files
+            # so every output file covers a disjoint time slice (parquet
+            # min/max skipping stays as sharp as the single-file layout).
+            # Source bytes bound output bytes (compaction only drops
+            # rows), so the estimate errs toward slightly smaller files.
+            n_out = 1
+            if target_bytes:
+                src_bytes = sum(b for _, b in listing[date])
+                n_out = max(1, -(-src_bytes // target_bytes))
+            out = (
+                new.coalesce(1)
+                if n_out == 1
+                else new.repartitionByRange(n_out, "ts_ns")
+            )
+            tmp = os.path.join(self.root, f".tmp-{uuid.uuid4().hex}")
+            try:
+                out.write.parquet(tmp)
+                # The footers say which outputs hold rows: an empty
+                # partition of the write is never published.
+                for f in sorted(os.listdir(tmp)):
+                    if not _is_data_file(f):
+                        continue
+                    n = pq.read_metadata(os.path.join(tmp, f)).num_rows
+                    if n:
+                        os.replace(os.path.join(tmp, f), os.path.join(part_dir, f))
+                        rows_out += n
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
+        self._retire(name, date, files)
+        return rows_in, rows_out
+
+    def _retire(self, name: str, date: str, files: list[str]) -> None:
+        """Unlink ``files`` of partition ``date``, then remove its
+        directory if no data file is left. What else such a directory
+        holds is not data (a crashed commit's staging file); ``rmdir``
+        leaves the directory to a data file published meanwhile."""
+        part_dir = os.path.join(self._path(name), f"date={date}")
+        for f in files:
+            os.remove(os.path.join(part_dir, f))
+        if self._data_files(name, [date]):
             return
-        # Without a target, match the reference's single-file couch rewrite
-        # (database.go:136-171). With one, split huge partitions into
-        # ~target-sized, ts_ns-RANGE-partitioned files so every output file
-        # covers a disjoint time slice (parquet min/max skipping stays as
-        # sharp as the single-file layout). Source bytes bound output bytes
-        # (compaction only drops rows), so the estimate errs toward
-        # slightly smaller files — the safe side.
-        n_out = 1
-        if target_bytes:
-            n_out = max(1, -(-src_bytes // target_bytes))
-        out = (
-            new.coalesce(1)
-            if n_out == 1
-            else new.repartitionByRange(n_out, "ts_ns")
-        )
-        tmp = os.path.join(self.root, f".tmp-{uuid.uuid4().hex}")
-        out.write.mode("overwrite").parquet(tmp)
-        try:
-            _check_no_raced_append()
-            _remove_part_dir_atomically()
-        except Exception:
-            # Don't leak the staged output when the race detector fires
-            # (or the removal fails) — the retry writes a fresh tmp.
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        os.makedirs(part_dir, exist_ok=True)
-        for f_ in os.listdir(tmp):
-            if f_.endswith(".parquet"):
-                shutil.move(os.path.join(tmp, f_), os.path.join(part_dir, f_))
-        shutil.rmtree(tmp, ignore_errors=True)
+        for f in os.listdir(part_dir):
+            if not _is_data_file(f):
+                os.remove(os.path.join(part_dir, f))
+        with contextlib.suppress(OSError):
+            os.rmdir(part_dir)
 
     def compact(
         self,
@@ -714,6 +682,14 @@ class SerieslyDB:
         and the file is larger than that. A second ``compact`` with no
         commit in between rewrites nothing; it still folds the commit log
         and records itself there.
+
+        Each partition is rewritten in place (:meth:`_rewrite_partition`):
+        one write job, the new file published beside the old ones, then
+        the files the rewrite read unlinked. A revision committed during
+        the rewrite survives as a file of its own, folded at read time
+        until the next ``compact``. A crash mid-rewrite leaves a
+        partition that reads the same live keys; compacting again
+        reaches one file per partition.
 
         ``fold_changelog=False`` skips the commit-log fold — use it when
         a lagging :meth:`changes_log_stream` consumer may not have
@@ -743,7 +719,10 @@ class SerieslyDB:
         # Post-compaction the physical rows ARE the live set (the LWW fold
         # just ran); the count comes straight from the freshly-written
         # parquet footers — no job.
-        self._log_change(name, "compact", None, None, self._footer_rows(name))
+        self._log_change(
+            name, "compact", None, None,
+            self._footer_rows(name, self._data_files(name)),
+        )
 
     def _fold_changelog(self, name: str) -> None:
         """Merge every commit-log segment into one file named with the
@@ -940,6 +919,13 @@ class SerieslyDB:
 
 
 _NS_PER_DAY = 86_400 * 10**9
+
+
+def _is_data_file(f: str) -> bool:
+    """A data file of a ``date=`` partition. Hidden and ``_``-prefixed
+    names (staging files, Spark's markers) are not data, as Spark's
+    readers skip them."""
+    return f.endswith(".parquet") and not f.startswith((".", "_"))
 
 
 def _ns_date(ns: int) -> str:

@@ -13,8 +13,11 @@ result, which is the same correctness contract without per-bucket
 bookkeeping. The commit log is not part of the version, so a commit that
 changes no data file (a ``delete_range`` over empty days) keeps the entries.
 
-An entry is one Arrow IPC file, written under a unique ``*.tmp`` name and
-``os.replace``d onto its key, so a reader sees a whole entry or none. A hit
+An entry is one Arrow IPC file, ``<shape>.<version>.arrow``, where the
+shape hashes the query spec and sum mode. It is written under a unique
+``*.tmp`` name and ``os.replace``d onto its name, so a reader sees a
+whole entry or none. Storing a shape's entry unlinks the shape's entries
+for other versions, so the cache holds at most one entry per shape. A hit
 reads it on the driver with pyarrow and returns ``createDataFrame`` of the
 table: a local relation whose ``collect()`` launches no Spark job. A miss
 computes the answer once with ``toArrow()``, stores it and returns the same
@@ -25,6 +28,8 @@ never holds more than that many rows for the cache.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import hashlib
 import os
 import tempfile
@@ -39,12 +44,9 @@ from seriesly_spark.plans.query import SerieslyQuery
 MAX_CACHED_ROWS = 100_000
 
 
-def _query_fingerprint(
-    name: str, q: SerieslyQuery, version: str, exact_sums: bool
-) -> str:
+def _query_shape(name: str, q: SerieslyQuery, exact_sums: bool) -> str:
     parts = [
         name,
-        version,
         str(q.group_ms),
         # Fields in order: output column i is field i's answer. Filters
         # are a conjunction, so their order does not change the answer.
@@ -108,8 +110,10 @@ class QueryCache:
         write/delete/compact -> recompute (miss falls through to
         compute-and-store, like the reference's GET-miss path,
         cache.go:54-155)."""
-        key = _query_fingerprint(name, q, db_version(self.dbs, name), exact_sums)
-        path = os.path.join(self.cache_dir, key + ".arrow")
+        shape = _query_shape(name, q, exact_sums)
+        path = os.path.join(
+            self.cache_dir, f"{shape}.{db_version(self.dbs, name)}.arrow"
+        )
         spark = self.dbs.spark
         try:
             table = _read_entry(path)
@@ -124,4 +128,10 @@ class QueryCache:
         if table.num_rows > MAX_CACHED_ROWS:
             return res
         _write_entry(path, table)
+        # The shape's entries for other versions can never hit again. A
+        # reader that already named one of them simply misses.
+        for old in glob.glob(os.path.join(self.cache_dir, f"{shape}.*.arrow")):
+            if old != path:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(old)
         return _local_df(spark, table)

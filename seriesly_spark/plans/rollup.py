@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -119,8 +120,18 @@ class ContinuousRollup:
                 os.path.join(self.rollup_dir, f"date={d}"), ignore_errors=True
             )
         os.makedirs(self.rollup_dir, exist_ok=True)
-        with open(self._manifest_path, "w") as fh:
-            json.dump(current, fh)
+        # Written whole under a hidden name, then renamed over the old
+        # manifest: a failed write leaves the previous manifest intact.
+        fd, tmp = tempfile.mkstemp(
+            prefix="_manifest.", suffix=".tmp", dir=self.rollup_dir
+        )
+        try:
+            with os.fdopen(fd, "w") as fh:
+                json.dump(current, fh)
+            os.replace(tmp, self._manifest_path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
         return {
             "changed": len(changed),
             "removed": len(removed),

@@ -22,7 +22,12 @@ Covered:
     each seq exactly once, and the dedupe shuffle is paid ONLY when the
     stranding is actually present;
   * two live handles on one root mint strictly-increasing, non-clobbering
-    commit seqs even with a frozen clock.
+    commit seqs even with a frozen clock;
+  * SerieslyDB partition rewrites (``compact``, ``delete_range``): an
+    append racing any step survives; a read at every step sees every
+    live key (``compact``) or the before/after view (``delete_range``);
+    a crash at every step reopens with every kept key intact, and
+    running the op again reaches one file per partition.
 """
 
 import os
@@ -37,6 +42,7 @@ from seriesly_spark.operators.dedup_index import (
     MinhashIndex,
     index_update_report,
 )
+from seriesly_spark.plans.query import py_parse_ts_ns
 
 
 class _InjectedCrash(RuntimeError):
@@ -653,36 +659,69 @@ class TestMultiHandleSeq:
         assert seqs == sorted(set(seqs)), "seqs not strictly increasing"
 
 
+def _hook_fs_steps(monkeypatch, root, on_step):
+    """Call ``on_step(op, path)`` before each filesystem step taken under
+    ``root`` outside the commit log: ``os.replace``/``os.remove``/
+    ``os.rename``/``os.rmdir`` and ``shutil.rmtree`` (``shutil.move``
+    renames). Calls made inside a step, or by ``on_step`` itself, are not
+    steps. Returns the list of steps taken, as ``(op, path)``."""
+    steps, inside, root = [], [False], os.path.join(root, "")
+
+    def hook(mod, op):
+        real = getattr(mod, op)
+
+        def wrapper(p, *a, **kw):
+            path = os.path.abspath(str(p))
+            if inside[0] or not path.startswith(root) or ".changelog" in path:
+                return real(p, *a, **kw)
+            inside[0] = True
+            try:
+                steps.append((op, path))
+                on_step(op, path)
+                return real(p, *a, **kw)
+            finally:
+                inside[0] = False
+
+        monkeypatch.setattr(mod, op, wrapper)
+
+    for op in ("replace", "remove", "rename", "rmdir"):
+        hook(os, op)
+    hook(shutil, "rmtree")
+    return steps
+
+
+def _two_file_day(dbs):
+    dbs.create("t")
+    dbs.write("t", '{"k": 1}', ts="2024-01-01T00:00:00Z")
+    dbs.write("t", '{"k": 2}', ts="2024-01-01T01:00:00Z")
+
+
+def _docs(dbs):
+    return sorted(r.doc for r in dbs.df("t").select("doc").collect())
+
+
+def _leftover_staging(dbs):
+    return [d for d in os.listdir(dbs.root) if d.startswith((".tmp-", ".trash-"))]
+
+
 class TestDataPlaneRace:
-    def test_raced_append_during_rewrite_fails_loudly(self, spark, tmp_path):
-        """A second handle appending into a partition while compact()'s
-        rewrite is in flight violates the single-writer contract; the
-        rewrite must detect it (pre-rmtree re-list), raise, and leave
-        BOTH the original files and the raced append readable — loud
-        and retryable, never silent row loss."""
+    """A second handle's append racing a partition rewrite survives, with
+    no error: the rewrite reads and unlinks only the files it listed."""
+
+    def test_raced_append_during_rewrite_survives(self, spark, tmp_path):
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
-        dbs.create("t")
-        dbs.write("t", '{"k": 1}', ts="2024-01-01T00:00:00Z")
-        dbs.write("t", '{"k": 2}', ts="2024-01-01T01:00:00Z")
+        _two_file_day(dbs)
         other = SerieslyDB(spark, str(tmp_path / "root"))
 
         def racing_transform(df):
-            # Fires between the rewrite's read and its tmp write — the
-            # window where the old code would rmtree the raced file.
+            # Fires after the rewrite's listing, before its write.
             other.write("t", '{"k": 99}', ts="2024-01-01T02:00:00Z")
             return df
 
-        with pytest.raises(RuntimeError, match="single-writer"):
-            dbs._rewrite_partition("t", "2024-01-01", racing_transform)
-        got = sorted(
-            r.asDict()["doc"] for r in dbs.df("t").select("doc").collect()
-        )
-        assert len(got) == 3  # 2 originals + the raced append, all alive
+        dbs._rewrite_partition("t", "2024-01-01", racing_transform)
+        assert _docs(dbs) == ['{"k": 1}', '{"k": 2}', '{"k": 99}']
 
     def test_raced_append_leaves_no_tmp_dir(self, spark, tmp_path):
-        """When the race detector fires AFTER the staged tmp write, the
-        tmp output directory is removed before the raise — repeated
-        detected races must not accumulate orphaned .tmp-* dirs."""
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
         dbs.create("t")
         dbs.write("t", '{"k": 1}', ts="2024-01-01T00:00:00Z")
@@ -692,97 +731,42 @@ class TestDataPlaneRace:
             other.write("t", '{"k": 99}', ts="2024-01-01T02:00:00Z")
             return df
 
-        with pytest.raises(RuntimeError, match="single-writer"):
-            dbs._rewrite_partition("t", "2024-01-01", racing_transform)
-        leftovers = [
-            d for d in os.listdir(dbs.root)
-            if d.startswith(".tmp-") or d.startswith(".trash-")
-        ]
-        assert leftovers == []
+        dbs._rewrite_partition("t", "2024-01-01", racing_transform)
+        assert _leftover_staging(dbs) == []
+        assert _docs(dbs) == ['{"k": 1}', '{"k": 99}']
 
-    def test_append_landing_in_removal_window_is_restored(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """The narrowest race: an append lands AFTER the pre-removal
-        re-list but BEFORE the atomic rename. The old rmtree-based code
-        silently deleted it; now the rename carries it into the trash
-        dir, the post-rename re-list detects it, and the partition is
-        restored with every row — including the raced one — intact."""
-        import seriesly_spark.db as dbmod
+    @pytest.mark.parametrize(
+        "op,nth",
+        [("replace", 0), ("rmtree", 0), ("remove", 0), ("remove", 1)],
+        ids=["replace", "rmtree", "remove-0", "remove-1"],
+    )
+    def test_raced_append_at_each_step(self, spark, tmp_path, monkeypatch, op, nth):
+        """The append lands just before the ``nth`` ``op`` of a compact
+        of a two-file partition: publishing the output, dropping the
+        staging directory, unlinking each input."""
+        root = str(tmp_path / "root")
+        dbs = SerieslyDB(spark, root)
+        _two_file_day(dbs)
+        other = SerieslyDB(spark, root)
+        seen = {"replace": 0, "rmtree": 0, "remove": 0}
+        fired = []
 
-        dbs = SerieslyDB(spark, str(tmp_path / "root"))
-        dbs.create("t")
-        dbs.write("t", '{"k": 1}', ts="2024-01-01T00:00:00Z")
-        dbs.write("t", '{"k": 2}', ts="2024-01-01T01:00:00Z")
-        other = SerieslyDB(spark, str(tmp_path / "root"))
-        part_dir = os.path.join(dbs._path("t"), "date=2024-01-01")
-        real = os.rename
-        fired = {"n": 0}
+        def race(step_op, path):
+            if step_op in seen:
+                if step_op == op and seen[op] == nth:
+                    other.write("t", '{"k": 99}', ts="2024-01-01T02:00:00Z")
+                    fired.append(path)
+                seen[step_op] += 1
 
-        def rename_with_race(s, d):
-            if os.path.abspath(str(s)) == os.path.abspath(part_dir):
-                if fired["n"] == 0:
-                    fired["n"] += 1
-                    other.write(
-                        "t", '{"k": 99}', ts="2024-01-01T02:00:00Z"
-                    )
-            return real(s, d)
-
-        monkeypatch.setattr(dbmod.os, "rename", rename_with_race)
-        with pytest.raises(RuntimeError, match="single-writer"):
-            dbs._rewrite_partition(
-                "t", "2024-01-01", lambda df: df
-            )
+        _hook_fs_steps(monkeypatch, root, race)
+        dbs.compact("t")
         monkeypatch.undo()
-        assert fired["n"] == 1
-        got = sorted(
-            r.asDict()["doc"] for r in dbs.df("t").select("doc").collect()
-        )
-        assert len(got) == 3, "raced append was silently dropped"
-        assert any('"k": 99' in g or '"k":99' in g for g in got)
-        leftovers = [
-            d for d in os.listdir(dbs.root)
-            if d.startswith(".tmp-") or d.startswith(".trash-")
-        ]
-        assert leftovers == []
-
-    def test_append_after_atomic_rename_merges_and_survives(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """An append landing AFTER the atomic rename re-creates the
-        partition dir; the rewrite's makedirs+move merges its output
-        with the raced file — the append survives WITHOUT a raise (it
-        was never at risk: the rename already isolated the old files)."""
-        import seriesly_spark.db as dbmod
-
-        dbs = SerieslyDB(spark, str(tmp_path / "root"))
-        dbs.create("t")
-        dbs.write("t", '{"k": 1}', ts="2024-01-01T00:00:00Z")
-        dbs.write("t", '{"k": 2}', ts="2024-01-01T01:00:00Z")
-        other = SerieslyDB(spark, str(tmp_path / "root"))
-        part_dir = os.path.join(dbs._path("t"), "date=2024-01-01")
-        real = os.rename
-        fired = {"n": 0}
-
-        def rename_then_race(s, d):
-            out = real(s, d)
-            if (
-                os.path.abspath(str(s)) == os.path.abspath(part_dir)
-                and fired["n"] == 0
-            ):
-                fired["n"] += 1
-                other.write("t", '{"k": 99}', ts="2024-01-01T02:00:00Z")
-            return out
-
-        monkeypatch.setattr(dbmod.os, "rename", rename_then_race)
-        dbs._rewrite_partition("t", "2024-01-01", lambda df: df)
-        monkeypatch.undo()
-        assert fired["n"] == 1
-        got = sorted(
-            r.asDict()["doc"] for r in dbs.df("t").select("doc").collect()
-        )
-        assert len(got) == 3, "post-rename append must merge and survive"
-        assert any('"k": 99' in g or '"k":99' in g for g in got)
+        assert len(fired) == 1
+        assert _docs(dbs) == ['{"k": 1}', '{"k": 2}', '{"k": 99}']
+        assert _leftover_staging(dbs) == []
+        dbs.compact("t")
+        assert len(dbs._data_files("t")["2024-01-01"]) == 1
+        assert _docs(dbs) == ['{"k": 1}', '{"k": 2}', '{"k": 99}']
 
     def test_clean_rewrite_still_succeeds(self, spark, tmp_path):
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
@@ -792,5 +776,119 @@ class TestDataPlaneRace:
         dbs.compact("t")
         part = os.path.join(dbs._path("t"), "date=2024-01-01")
         files = [f for f in os.listdir(part) if f.endswith(".parquet")]
-        assert len(files) == 1  # single-file couch rewrite, no false trip
+        assert len(files) == 1  # single-file couch rewrite
         assert dbs.df("t").count() == 3
+
+
+def _store(spark, root):
+    """Days 1-3, each two files: 8 keys, then a revision of keys 0-3 and
+    keys 8-9 (10 live keys, 14 rows a day). Returns the handle and the
+    live docs by key."""
+    dbs = SerieslyDB(spark, root)
+    dbs.create("t")
+    live = {}
+    for batch, ks in ((0, range(8)), (1, range(10))):
+        rows = []
+        for day in (1, 2, 3):
+            for k in ks:
+                if batch and 4 <= k < 8:
+                    continue
+                ts = f"2024-01-0{day}T{k:02d}:00:00Z"
+                rows.append((ts, '{"k": %d, "b": %d}' % (k, batch)))
+        for ts, doc in rows:
+            live[ts] = doc
+        dbs.write_batch("t", rows)
+    return dbs, {py_parse_ts_ns(ts): doc for ts, doc in live.items()}
+
+
+def _by_key(dbs):
+    return {r.ts_ns: r.doc for r in dbs.df("t").collect()}
+
+
+class TestPartitionRewriteSteps:
+    """``compact`` and ``delete_range`` rewrite a partition by publishing
+    the new files beside the old and then unlinking the old. Checked at
+    every filesystem step they take: a read in between, and a crash."""
+
+    DEL = ("2024-01-02T03:30:00Z", "2024-01-02T05:30:00Z")  # keys 4, 5
+
+    def test_read_at_every_compact_step_sees_every_key(
+        self, spark, tmp_path, monkeypatch
+    ):
+        root = str(tmp_path / "root")
+        dbs, live = _store(spark, root)
+        counts = []
+        steps = _hook_fs_steps(
+            monkeypatch, root, lambda *_: counts.append(dbs.df("t").count())
+        )
+        dbs.compact("t")
+        monkeypatch.undo()
+        assert len(steps) >= 6
+        assert counts == [len(live)] * len(steps), steps
+        assert _by_key(dbs) == live
+
+    def test_read_at_every_delete_step_is_before_or_after(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The edge partition is one file (compacted first): a two-file
+        edge unlinks its inputs one at a time, so a read between the two
+        unlinks can see some deleted keys and not others."""
+        root = str(tmp_path / "root")
+        dbs, live = _store(spark, root)
+        dbs.compact("t")
+        counts = []
+        steps = _hook_fs_steps(
+            monkeypatch, root, lambda *_: counts.append(dbs.df("t").count())
+        )
+        dbs.delete_range("t", *self.DEL)
+        monkeypatch.undo()
+        after = dbs.df("t").count()
+        assert after == len(live) - 2
+        assert len(steps) >= 3
+        assert set(counts) <= {len(live), after}, list(zip(counts, steps))
+
+    @pytest.mark.parametrize("op", ["compact", "delete_range"])
+    def test_crash_at_every_step_recovers(self, spark, tmp_path, monkeypatch, op):
+        """Crash ``op`` just before its n-th filesystem step, for every n
+        (nothing after the crash point runs), then reopen the store:
+        every key outside the deleted range reads its pre-op doc, and
+        running ``op`` again leaves one file per partition and the
+        post-op docs."""
+        # delete_range retires all of day 2 and rewrites edge days 1 and 3.
+        lo, hi = "2024-01-01T06:30:00Z", "2024-01-03T02:30:00Z"
+        run = {
+            "compact": lambda h: h.compact("t"),
+            "delete_range": lambda h: h.delete_range("t", lo, hi),
+        }[op]
+        dry = str(tmp_path / "dry")
+        dbs, live = _store(spark, dry)
+        if op == "delete_range":
+            gone = range(py_parse_ts_ns(lo), py_parse_ts_ns(hi) + 1)
+            live = {k: d for k, d in live.items() if k not in gone}
+        steps = _hook_fs_steps(monkeypatch, dry, lambda *_: None)
+        run(dbs)
+        monkeypatch.undo()
+        assert _by_key(dbs) == live
+        assert len(steps) >= 6
+        for n in range(len(steps)):
+            root = str(tmp_path / f"crash{n}")
+            dbs, _ = _store(spark, root)
+            taken = []
+
+            def crash(*_):
+                taken.append(1)
+                if len(taken) > n:
+                    raise _InjectedCrash(n)
+
+            _hook_fs_steps(monkeypatch, root, crash)
+            with pytest.raises(_InjectedCrash):
+                run(dbs)
+            monkeypatch.undo()
+            reopened = SerieslyDB(spark, root)
+            got = _by_key(reopened)
+            assert {k: got.get(k) for k in live} == live, f"crash at step {n}"
+            run(reopened)
+            assert _by_key(reopened) == live, f"crash at step {n}"
+            assert all(
+                len(files) == 1 for files in reopened._data_files("t").values()
+            ), f"crash at step {n}"

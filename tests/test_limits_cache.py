@@ -120,6 +120,24 @@ class TestQueryCache:
         assert [d for d in after if after[d] != before[d]] == ["2024-01-02"]
         assert cr.refresh() == {"changed": 1, "removed": 0, "unchanged": 1}
 
+    def test_commits_leave_one_entry_per_shape(self, dbs, tmp_path):
+        """The version is part of an entry's name, so every commit makes
+        the shape's entry unreachable; storing the new one unlinks it."""
+        cache = tmp_path / "cache"
+        qc = QueryCache(dbs, str(cache))
+        other = SerieslyQuery(
+            group_ms=86_400_000, fields=[("/v", "count")], aliases=["n"]
+        )
+        qc.query("t", other)
+        for i, s in enumerate((3.0, 13.0, 33.0)):
+            if i:
+                dbs.write("t", json.dumps({"v": 10 * i}), ts=f"2024-01-01T00:2{i}:00Z")
+            assert qc.query("t", self._q()).collect()[0].s == s
+            assert len(os.listdir(cache)) == 2
+        assert (qc.misses, qc.hits) == (4, 0)
+        assert qc.query("t", other).collect()[0].n == 7
+        assert len(os.listdir(cache)) == 2
+
     def test_compact_invalidates(self, dbs, tmp_path):
         # A revision gives the day a second file, which compact rewrites
         # (a one-file day it leaves alone: test_db's no-op compact).
