@@ -26,10 +26,10 @@ Storage layout — one directory per database, hive-partitioned by UTC date:
 
 A data file holds each key at most once: every writer folds repeats of a
 key before it publishes a file (``write_batch`` keeps a batch's later
-row, ``compact`` and ``delete_range``'s edge rewrite keep the highest
-``seq``). A key's revisions share its date, so a partition of one file
-is already its own live view, and last-write-wins is resolved at read
-time only for partitions of more than one file.
+row; the one partition rewrite, behind ``compact`` and ``delete_range``,
+keeps the highest ``seq``). A key's revisions share its date, so a
+partition of one file is already its own live view, and last-write-wins
+is resolved at read time only for partitions of more than one file.
 
 Design for scale: a read lists the in-range partitions' data files on
 the driver and reads exactly those files with the declared schema — no
@@ -39,10 +39,10 @@ skipping (the B-tree range-walk analogue); a point ``get`` reads only
 its key's day; a commit writes one new file per date from the driver
 with pyarrow (no Spark job, no read-modify-write); delete_range retires
 fully-covered partitions without reading their data and rewrites only
-the two edge partitions; compact merges the files of each partition
-that holds more than one. A rewrite publishes its new files beside the
-old ones and only then unlinks the files it read, as the reference
-writes a new couch file before it swaps out the old one
+the two edge partitions; compact rewrites each partition that holds more
+than one file. Both rewrite a partition as one folded file, published
+beside the old ones before the files it read are unlinked, as the
+reference writes a new couch file before it swaps out the old one
 (database.go:136-171). On a real deployment the same API maps onto
 Delta/Iceberg (MERGE, OPTIMIZE, CDF) — plain parquet keeps this repo
 dependency-free.
@@ -105,8 +105,11 @@ class SerieslyDB:
     Storage invariant: no data file holds a key twice, and a key's
     revisions share one ``date=`` partition. Reads therefore apply the
     last-write-wins fold only when some partition they cover holds more
-    than one file, and :meth:`compact` leaves a one-file partition as it
-    is (no Spark job, no new file name, no new partition version).
+    than one file. The one partition rewrite (:meth:`_rewrite_partition`)
+    always writes one folded file, so :meth:`compact` leaves a one-file
+    partition as it is (no Spark job, no new file name, no new partition
+    version). A row's ``seq`` comes from the same guarded counter as the
+    commit log's, so the newest write of a key always wins.
 
     Every mutating commit also appends one tiny parquet segment to
     ``<db>/.changelog/``; the log is always on. It is a write-ahead
@@ -206,7 +209,6 @@ class SerieslyDB:
             raise KeyError(f"no such db: {name}")
         if not rows:
             return []
-        seq = time.time_ns()
         keys: list[int] = []
         # UTC day number -> row indices. _ns_date takes about 5 µs a
         # call: run once a row, it would double a 1000-doc commit.
@@ -219,6 +221,11 @@ class SerieslyDB:
             ns = time.time_ns() if ts is None else py_parse_ts_ns(ts)
             keys.append(ns)
             by_day.setdefault(ns // _NS_PER_DAY, []).append(i)
+        # Row i takes seq first + i of the commit's reserved run, so a key
+        # written again always gets a higher seq, even if the clock
+        # stepped back; the log segment is named by the run's last seq.
+        last_seq = self._next_seq(name, len(rows))
+        first = last_seq - len(rows) + 1
         tables = {}
         for day, idx in by_day.items():
             # No file holds a key twice: the last row of a repeated key
@@ -228,7 +235,7 @@ class SerieslyDB:
                 idx = sorted(last.values())
             tables[_ns_date(day * _NS_PER_DAY)] = pa.table({
                 "ts_ns": pa.array([keys[i] for i in idx], pa.int64()),
-                "seq": pa.array([seq + i for i in idx], pa.int64()),
+                "seq": pa.array([first + i for i in idx], pa.int64()),
                 "doc": pa.array([rows[i][1] for i in idx], pa.string()),
             })
         for d, table in tables.items():
@@ -242,31 +249,25 @@ class SerieslyDB:
                 table, staged, compression="snappy", use_dictionary=False
             )
             os.replace(staged, os.path.join(part_dir, final))
-        self._log_change(name, "write", min(keys), max(keys), len(keys))
+        self._log_change(name, last_seq, "write", min(keys), max(keys), len(keys))
         return keys
 
     # -- Commit log ---------------------------------------------------------
 
-    def _log_change(
-        self, name: str, op: str, ts_lo: int | None, ts_hi: int | None,
-        n_rows: int,
-    ) -> None:
-        """Append one commit-log segment (driver-side pyarrow write: the
-        log row is metadata, not data — one job per mutation would dwarf
-        the mutation itself). File names embed the monotone seq, so the
-        log reads back in commit order with a plain sort."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+    def _next_seq(self, name: str, n: int = 1) -> int:
+        """Reserve ``n`` consecutive seqs for one commit of ``name`` and
+        return the last of them, which names the commit's log segment.
+        Every seq reserved is above every seq already reserved or logged,
+        so data rows and log segments share one order."""
         d = os.path.join(self._path(name), _CHANGELOG_DIR)
         os.makedirs(d, exist_ok=True)
         # Monotonic guard: time_ns alone can collide (two mutations in
         # one ns) or step backwards (clock adjustment); the log's file
         # names ARE its commit order, so seq must strictly increase.
-        # File names embed the seq, so max(existing)+1 floors the new
-        # seq — but the directory is listed only on the handle's FIRST
-        # touch of this db (O(log) per commit otherwise); after that the
-        # cached last seq counts forward.
+        # File names embed the run's last seq, so max(existing)+1 floors
+        # the new run — but the directory is listed only on the handle's
+        # FIRST touch of this db (O(log) per commit otherwise); after
+        # that the cached last seq counts forward.
         def _list_floor() -> int:
             return max(
                 (
@@ -280,7 +281,7 @@ class SerieslyDB:
         last = self._last_seq.get(name)
         if last is None:
             last = _list_floor()
-        seq = max(time.time_ns(), last + 1)
+        seq = max(time.time_ns(), last + 1) + n - 1
         # Collision guard for the multi-handle case: file name IS the
         # seq, so a second live handle whose cached floor is stale could
         # mint a seq some other handle already wrote — and the plain
@@ -289,8 +290,23 @@ class SerieslyDB:
         # seq is in the listing) cross-handle monotonicity, at the cost
         # of one directory listing only in the already-raced case.
         while os.path.exists(os.path.join(d, f"{seq:020d}.parquet")):
-            seq = max(time.time_ns(), _list_floor() + 1)
+            seq = max(time.time_ns(), _list_floor() + 1) + n - 1
         self._last_seq[name] = seq
+        return seq
+
+    def _log_change(
+        self, name: str, seq: int, op: str, ts_lo: int | None,
+        ts_hi: int | None, n_rows: int,
+    ) -> None:
+        """Append one commit-log segment, named by ``seq`` from
+        :meth:`_next_seq` (driver-side pyarrow write: the log row is
+        metadata, not data — one job per mutation would dwarf the
+        mutation itself). File names embed the monotone seq, so the log
+        reads back in commit order with a plain sort."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        d = os.path.join(self._path(name), _CHANGELOG_DIR)
         table = pa.table(
             {
                 "seq": pa.array([seq], pa.int64()),
@@ -550,16 +566,16 @@ class SerieslyDB:
             for f, _ in files
         )
 
-    def delete_range(self, name: str, from_ts, to_ts, compact: bool = False) -> None:
+    def delete_range(self, name: str, from_ts, to_ts) -> None:
         """Bulk range delete (S6). Partitions fully inside the range are
         retired without reading their data: their listed files are
-        unlinked, then the emptied directory. The two edge partitions are
-        rewritten in place by :meth:`_rewrite_partition` without the
-        deleted keys, each as one file with its surviving keys folded by
-        last-write-wins. A file committed into the range after this
-        call's listing survives. The 10k-commit batching of the reference
-        (handlers.go:256) is irrelevant here: the rewrite is one write
-        job per edge partition.
+        unlinked, then the emptied directory. Each of the two edge
+        partitions is rewritten in place by :meth:`_rewrite_partition`
+        without the deleted keys: one file holding each surviving key
+        once. A file committed into the range after this call's listing
+        survives. The 10k-commit batching of the reference
+        (handlers.go:256) is irrelevant here: the rewrite is one Spark
+        write (2 jobs) per edge partition.
 
         The commit log's ``n_rows`` (raw rows removed) comes from parquet
         footers, not a scan job: a retired partition's rows, plus each
@@ -574,37 +590,36 @@ class SerieslyDB:
                 n_removed += self._footer_rows(name, {d: files})
                 self._retire(name, d, [f for f, _ in files])
             elif d == lo_d or d == hi_d:
-                rows_in, rows_out = self._rewrite_partition(
-                    name, d,
-                    lambda df: latest_by_key(
-                        df.where(f"NOT (ts_ns >= {lo} AND ts_ns <= {hi})"),
-                        ["ts_ns"], "seq",
-                    ),
-                )
+                rows_in, rows_out = self._rewrite_partition(name, d, (lo, hi))
                 n_removed += rows_in - rows_out
-        self._log_change(name, "delete", lo, hi, n_removed)
-        if compact:
-            self.compact(name)
+        self._log_change(name, self._next_seq(name), "delete", lo, hi, n_removed)
 
     def _rewrite_partition(
-        self, name: str, date: str, transform, target_bytes: int | None = None
+        self, name: str, date: str, drop: tuple[int, int] | None = None
     ) -> tuple[int, int]:
-        """Replace the data files of partition ``date`` by ``transform``
-        of their rows, in place; returns (rows read, rows written).
+        """Rewrite the data files of partition ``date`` in place as one
+        file that holds each of their keys once, with its highest ``seq``
+        (last write wins), less the keys in ``drop`` (an inclusive ns
+        range); returns (rows read, rows written). The one rewrite of the
+        store, behind :meth:`compact` and :meth:`delete_range`, as the
+        reference compacts into one new couch file (database.go:136-171).
 
-        The new files are published beside the old before any old one
-        goes, so a read at any point sees the old files, the new ones, or
-        both, folded by last-write-wins. For ``compact`` each of these is
-        the same live view. A ``delete_range`` edge of several input
-        files unlinks them one at a time, so a read in between can see
-        some deleted keys and not others. Only the files of the one
-        listing taken here are read and unlinked: a file committed after
-        it is left as it is. A crash at any step leaves every row the
-        transform keeps readable with its doc, and running the operation
-        again finishes it."""
+        The new file is staged in the database's hidden ``.tmp-<uuid>``
+        directory and published beside the old files before any old one
+        goes, so a read at any point sees the old files, the new one, or
+        both, folded by last-write-wins. Without ``drop`` each of these
+        is the same live view. A ``drop`` rewrite of several input files
+        unlinks them one at a time, so a read in between can see some
+        dropped keys and not others. Only the files of the one listing
+        taken here are read and unlinked: a file committed after it is
+        left as it is. A crash at any step leaves every kept row readable
+        with its doc, and running the operation again finishes it; the
+        next :meth:`compact` removes the staging directory a crash
+        left."""
         import pyarrow.parquet as pq
 
-        part_dir = os.path.join(self._path(name), f"date={date}")
+        path = self._path(name)
+        part_dir = os.path.join(path, f"date={date}")
         listing = self._data_files(name, [date])
         files = [f for f, _ in listing.get(date, [])]
         rows_in = self._footer_rows(name, listing)
@@ -612,28 +627,14 @@ class SerieslyDB:
         # A directory with no data file (a commit that crashed before its
         # rename) has nothing to read: it is only removed.
         if files:
-            new = transform(self._scan(name, listing).select("ts_ns", "seq", "doc"))
-            # Without a target, match the reference's single-file couch
-            # rewrite (database.go:136-171). With one, split huge
-            # partitions into ~target-sized, ts_ns-RANGE-partitioned files
-            # so every output file covers a disjoint time slice (parquet
-            # min/max skipping stays as sharp as the single-file layout).
-            # Source bytes bound output bytes (compaction only drops
-            # rows), so the estimate errs toward slightly smaller files.
-            n_out = 1
-            if target_bytes:
-                src_bytes = sum(b for _, b in listing[date])
-                n_out = max(1, -(-src_bytes // target_bytes))
-            out = (
-                new.coalesce(1)
-                if n_out == 1
-                else new.repartitionByRange(n_out, "ts_ns")
-            )
-            tmp = os.path.join(self.root, f".tmp-{uuid.uuid4().hex}")
+            rows = self._scan(name, listing).select("ts_ns", "seq", "doc")
+            if drop is not None:
+                rows = rows.where(f"NOT (ts_ns >= {drop[0]} AND ts_ns <= {drop[1]})")
+            tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}")
             try:
-                out.write.parquet(tmp)
-                # The footers say which outputs hold rows: an empty
-                # partition of the write is never published.
+                latest_by_key(rows, ["ts_ns"], "seq").coalesce(1).write.parquet(tmp)
+                # The footer says whether the output holds rows: an empty
+                # one (every key dropped) is never published.
                 for f in sorted(os.listdir(tmp)):
                     if not _is_data_file(f):
                         continue
@@ -662,53 +663,43 @@ class SerieslyDB:
         with contextlib.suppress(OSError):
             os.rmdir(part_dir)
 
-    def compact(
-        self,
-        name: str,
-        target_file_bytes: int | None = None,
-        fold_changelog: bool = True,
-    ) -> None:
-        """Merge each partition's files and fold superseded versions of a
-        key into the survivor (S7: couch-file rewrite ≙ OPTIMIZE; also
-        reclaims overwritten docs the way couchstore compaction drops old
-        revisions). Default: one file per partition (reference parity).
-        ``target_file_bytes`` splits huge partitions into ~target-sized,
-        time-range-ordered files instead — at 100 TB a day can be far
-        bigger than one sane parquet file.
+    def compact(self, name: str, fold_changelog: bool = True) -> None:
+        """Rewrite each partition of more than one file as one file that
+        holds each key once, its newest revision (S7: couch-file rewrite
+        ≙ OPTIMIZE; also reclaims overwritten docs the way couchstore
+        compaction drops old revisions).
 
-        Idempotent, like OPTIMIZE: a partition that is already one file
+        Idempotent, like OPTIMIZE: a partition of exactly one data file
         holds each key once, so it is left as it is (no Spark job, same
-        file, same partition version) unless ``target_file_bytes`` is set
-        and the file is larger than that. A second ``compact`` with no
+        file, same partition version). A second ``compact`` with no
         commit in between rewrites nothing; it still folds the commit log
         and records itself there.
 
         Each partition is rewritten in place (:meth:`_rewrite_partition`):
-        one write job, the new file published beside the old ones, then
+        two Spark jobs, the new file published beside the old ones, then
         the files the rewrite read unlinked. A revision committed during
         the rewrite survives as a file of its own, folded at read time
         until the next ``compact``. A crash mid-rewrite leaves a
-        partition that reads the same live keys; compacting again
-        reaches one file per partition.
+        partition that reads the same live keys, and may leave its
+        staging directory; compacting again removes every such
+        directory of this database first and reaches one file per
+        partition.
 
         ``fold_changelog=False`` skips the commit-log fold — use it when
         a lagging :meth:`changes_log_stream` consumer may not have
         caught up to the current log tail yet (the fold rewrites the
         newest segment in place, which a file stream never re-reads)."""
         listing = self._data_files(name)
+        # Only a rewrite of this database stages here, and it has one
+        # writer handle: a staging directory seen now is a crashed one.
+        path = self._path(name)
+        for d in os.listdir(path):
+            if d.startswith(".tmp-"):
+                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
         for part in self._partitions(name):
             d = part[len("date="):]
-            files = listing.get(d, [])
-            if len(files) == 1 and not (
-                target_file_bytes and files[0][1] > target_file_bytes
-            ):
-                continue
-            self._rewrite_partition(
-                name,
-                d,
-                lambda df: latest_by_key(df, ["ts_ns"], "seq"),
-                target_bytes=target_file_bytes,
-            )
+            if len(listing.get(d, [])) != 1:
+                self._rewrite_partition(name, d)
         # Fold the accumulated one-file-per-commit log segments into a
         # single consolidated segment BEFORE recording this compaction
         # (which then lands as a fresh segment). The log grows one tiny
@@ -720,7 +711,7 @@ class SerieslyDB:
         # just ran); the count comes straight from the freshly-written
         # parquet footers — no job.
         self._log_change(
-            name, "compact", None, None,
+            name, self._next_seq(name), "compact", None, None,
             self._footer_rows(name, self._data_files(name)),
         )
 

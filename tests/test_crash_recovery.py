@@ -658,6 +658,41 @@ class TestMultiHandleSeq:
         assert len(seqs) == len(writers), "a handle overwrote a segment"
         assert seqs == sorted(set(seqs)), "seqs not strictly increasing"
 
+    def test_rows_take_log_seqs_when_the_clock_steps_back(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A row's seq comes from the log's guarded counter: a key
+        written again after the clock stepped back is still the newest
+        revision, for ``get`` and for ``compact``, and a reopened handle
+        counts on above every row seq the last commit stamped."""
+        import seriesly_spark.db as dbmod
+
+        root = str(tmp_path / "root")
+        dbs = SerieslyDB(spark, root)
+        dbs.create("t")
+        clock = [1_700_000_000_000_000_000]
+        monkeypatch.setattr(
+            dbmod, "time", types.SimpleNamespace(time_ns=lambda: clock[0])
+        )
+        k = "2024-01-01T00:00:00Z"
+        dbs.write("t", '{"v": 1}', ts=k)
+        clock[0] -= 10**9
+        dbs.write("t", '{"v": 2}', ts=k)
+        assert dbs.get("t", k) == '{"v": 2}'
+        dbs.compact("t")
+        assert dbs.get("t", k) == '{"v": 2}'
+        # The batch's last row holds its highest seq; a reopened handle,
+        # with the clock where the batch left it, must write above it.
+        k2 = "2024-01-02T00:00:00Z"
+        dbs.write_batch("t", [("2024-01-02T01:00:00Z", "{}"), (k2, '{"v": 3}')])
+        reopened = SerieslyDB(spark, root)
+        reopened.write("t", '{"v": 4}', ts=k2)
+        monkeypatch.undo()
+        assert reopened.get("t", k2) == '{"v": 4}'
+        stored = reopened._scan("t", reopened._data_files("t")).collect()
+        logged = reopened.change_log("t").collect()
+        assert max(r.seq for r in stored) <= max(r.seq for r in logged)
+
 
 def _hook_fs_steps(monkeypatch, root, on_step):
     """Call ``on_step(op, path)`` before each filesystem step taken under
@@ -701,37 +736,50 @@ def _docs(dbs):
 
 
 def _leftover_staging(dbs):
-    return [d for d in os.listdir(dbs.root) if d.startswith((".tmp-", ".trash-"))]
+    return [
+        d
+        for parent in (dbs.root, dbs._path("t"))
+        for d in os.listdir(parent)
+        if d.startswith((".tmp-", ".trash-"))
+    ]
+
+
+def _race_scan(monkeypatch, dbs, other):
+    """Make ``dbs``'s next ``_scan``, which a rewrite runs after its
+    listing and before its write, first commit a revision through
+    ``other``."""
+    real = dbs._scan
+
+    def racing_scan(name, listing):
+        other.write("t", '{"k": 99}', ts="2024-01-01T02:00:00Z")
+        return real(name, listing)
+
+    monkeypatch.setattr(dbs, "_scan", racing_scan)
 
 
 class TestDataPlaneRace:
     """A second handle's append racing a partition rewrite survives, with
     no error: the rewrite reads and unlinks only the files it listed."""
 
-    def test_raced_append_during_rewrite_survives(self, spark, tmp_path):
+    def test_raced_append_during_rewrite_survives(
+        self, spark, tmp_path, monkeypatch
+    ):
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
         _two_file_day(dbs)
         other = SerieslyDB(spark, str(tmp_path / "root"))
-
-        def racing_transform(df):
-            # Fires after the rewrite's listing, before its write.
-            other.write("t", '{"k": 99}', ts="2024-01-01T02:00:00Z")
-            return df
-
-        dbs._rewrite_partition("t", "2024-01-01", racing_transform)
+        _race_scan(monkeypatch, dbs, other)
+        dbs._rewrite_partition("t", "2024-01-01")
+        monkeypatch.undo()
         assert _docs(dbs) == ['{"k": 1}', '{"k": 2}', '{"k": 99}']
 
-    def test_raced_append_leaves_no_tmp_dir(self, spark, tmp_path):
+    def test_raced_append_leaves_no_tmp_dir(self, spark, tmp_path, monkeypatch):
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
         dbs.create("t")
         dbs.write("t", '{"k": 1}', ts="2024-01-01T00:00:00Z")
         other = SerieslyDB(spark, str(tmp_path / "root"))
-
-        def racing_transform(df):
-            other.write("t", '{"k": 99}', ts="2024-01-01T02:00:00Z")
-            return df
-
-        dbs._rewrite_partition("t", "2024-01-01", racing_transform)
+        _race_scan(monkeypatch, dbs, other)
+        dbs._rewrite_partition("t", "2024-01-01")
+        monkeypatch.undo()
         assert _leftover_staging(dbs) == []
         assert _docs(dbs) == ['{"k": 1}', '{"k": 99}']
 
@@ -853,7 +901,8 @@ class TestPartitionRewriteSteps:
         (nothing after the crash point runs), then reopen the store:
         every key outside the deleted range reads its pre-op doc, and
         running ``op`` again leaves one file per partition and the
-        post-op docs."""
+        post-op docs. No staging directory outlives the re-run (and, for
+        ``delete_range``, the ``compact`` after it)."""
         # delete_range retires all of day 2 and rewrites edge days 1 and 3.
         lo, hi = "2024-01-01T06:30:00Z", "2024-01-03T02:30:00Z"
         run = {
@@ -892,3 +941,6 @@ class TestPartitionRewriteSteps:
             assert all(
                 len(files) == 1 for files in reopened._data_files("t").values()
             ), f"crash at step {n}"
+            if op == "delete_range":
+                reopened.compact("t")
+            assert _leftover_staging(reopened) == [], f"crash at step {n}"

@@ -419,11 +419,22 @@ class TestMaintenance:
         log = dbs.change_log("t").collect()
         assert [r.op for r in log][-2:] == ["compact", "compact"]
         assert len(os.listdir(os.path.join(dbs._path("t"), ".changelog"))) == 2
-        # A target no file exceeds changes nothing; a smaller one splits.
-        dbs.compact("t", target_file_bytes=10**9)
-        assert dbs._partition_versions("t") == versions
-        dbs.compact("t", target_file_bytes=1)
-        assert dbs.info("t")["n_files"] == 4
+
+    def test_rewrite_takes_two_jobs_a_partition(self, dbs, spark_jobs):
+        """The one partition rewrite costs 2 Spark jobs: ``compact`` of N
+        multi-file partitions takes 2N, and ``delete_range`` with one
+        multi-file edge takes 2."""
+        self._seed_days(dbs, [1, 2, 3])
+        dbs.write_batch(
+            "t", [(f"2024-01-0{d}T06:00:00Z", _doc(d)) for d in (1, 2, 3)]
+        )
+        assert spark_jobs(lambda: dbs.compact("t")) == (None, 6)
+        assert [len(f) for f in dbs._data_files("t").values()] == [1, 1, 1]
+        dbs.write("t", _doc(9), ts="2024-01-02T18:00:00Z")
+        edge = "2024-01-02T12:00:00Z"
+        assert spark_jobs(lambda: dbs.delete_range("t", edge, edge)) == (None, 2)
+        assert [len(f) for f in dbs._data_files("t").values()] == [1, 1, 1]
+        assert dbs.df("t").count() == 9
 
     def test_compact_merges_and_reclaims(self, dbs):
         dbs.create("t")
@@ -596,32 +607,6 @@ class TestQueryPath:
 
 
 class TestCompactTargetSize:
-    def test_target_splits_partition_into_ranged_files(self, spark, tmp_path):
-        from seriesly_spark.db import SerieslyDB
-
-        dbs = SerieslyDB(spark, str(tmp_path))
-        dbs.create("t")
-        day = 86_400_000_000_000
-        docs = [(day + i * 1_000_000_000, '{"k": %d}' % i) for i in range(200)]
-        # several small files
-        for i in range(0, 200, 50):
-            dbs.write_batch("t", docs[i : i + 50])
-        before = dbs.info("t")
-        dbs.compact("t", target_file_bytes=2000)
-        after = dbs.info("t")
-        assert after["doc_count"] == before["doc_count"] == 200
-        assert after["n_files"] > 1  # split, not coalesced to one
-        # files cover disjoint, ordered ts ranges (range partitioning)
-        import pyarrow.parquet as pq
-        import glob, os
-        ranges = []
-        for f in glob.glob(os.path.join(str(tmp_path), "t", "date=*", "*.parquet")):
-            t = pq.read_table(f, columns=["ts_ns"])["ts_ns"].to_pylist()
-            ranges.append((min(t), max(t)))
-        ranges.sort()
-        for (lo1, hi1), (lo2, _) in zip(ranges, ranges[1:]):
-            assert hi1 < lo2
-
     def test_default_stays_single_file(self, spark, tmp_path):
         from seriesly_spark.db import SerieslyDB
 
