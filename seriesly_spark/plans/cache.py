@@ -5,7 +5,7 @@ The reference keys cached per-bucket results on
 ``db # bucket # fnv64(doc-ids + ptrs + reducers + filters)`` (reference
 cache.go:157-172) — i.e. the cache entry is valid exactly while the bucket's
 document set is unchanged. Here the whole result is memoized keyed on
-(query spec, sum mode, database version), where the database version is a
+(query spec, sum mode) and stamped with the database version it answers, a
 hash of the per-partition fingerprints of the data-file listing
 (``SerieslyDB._data_files``): any append, delete or compaction that
 changes a data file changes the version and invalidates every cached
@@ -13,23 +13,27 @@ result, which is the same correctness contract without per-bucket
 bookkeeping. The commit log is not part of the version, so a commit that
 changes no data file (a ``delete_range`` over empty days) keeps the entries.
 
-An entry is one Arrow IPC file, ``<shape>.<version>.arrow``, where the
-shape hashes the query spec and sum mode. It is written under a unique
+Both this cache and the continuous rollup (``plans/rollup.py``) keep
+their entries by one rule, :func:`write_entry` and :func:`read_entry`:
+each key is one Arrow IPC file, ``<key>.arrow``, whose schema metadata
+stamps the version the entry answers. It is written under a unique
 ``*.tmp`` name and ``os.replace``d onto its name, so a reader sees a
-whole entry or none. Storing a shape's entry unlinks the shape's entries
-for other versions, so the cache holds at most one entry per shape. A hit
-reads it on the driver with pyarrow and returns ``createDataFrame`` of the
-table: a local relation whose ``collect()`` launches no Spark job. A miss
-computes the answer once with ``toArrow()``, stores it and returns the same
-kind of local DataFrame. An answer of more than ``MAX_CACHED_ROWS`` rows is
-not cached; the miss returns the lazy query plan instead, so the driver
-never holds more than that many rows for the cache.
+whole entry or none, and a key's new entry retires its old one. A
+reader checks the stamp from the schema in the file footer before it
+reads any record batch: a stale or missing entry is a miss.
+
+Here the key hashes the query spec and sum mode, and the stamp is the
+database version. A hit reads the entry on the driver with pyarrow and
+returns ``createDataFrame`` of the table: a local relation whose
+``collect()`` launches no Spark job. A miss computes the answer once with
+``toArrow()``, stores it and returns the same kind of local DataFrame.
+An answer of more than ``MAX_CACHED_ROWS`` rows is not cached; the miss
+returns the lazy query plan instead, so the driver never holds more than
+that many rows for the cache.
 """
 
 from __future__ import annotations
 
-import contextlib
-import glob
 import hashlib
 import os
 import tempfile
@@ -38,7 +42,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from seriesly_spark.db import SerieslyDB
-from seriesly_spark.plans.query import SerieslyQuery
+from seriesly_spark.plans.query import SerieslyQuery, py_parse_ts_ns
 
 # Largest answer (in rows: one per bucket) a cache entry holds.
 MAX_CACHED_ROWS = 100_000
@@ -52,8 +56,11 @@ def _query_shape(name: str, q: SerieslyQuery, exact_sums: bool) -> str:
         # are a conjunction, so their order does not change the answer.
         repr(q.fields),
         repr(sorted(q.filters)),
-        repr(q.from_ts),
-        repr(q.to_ts),
+        # One instant, however it is written; None is an open bound.
+        *(
+            repr(None if ts is None else py_parse_ts_ns(ts))
+            for ts in (q.from_ts, q.to_ts)
+        ),
         repr(q.aliases),
         repr(exact_sums),
     ]
@@ -70,12 +77,40 @@ def db_version(dbs: SerieslyDB, name: str) -> str:
     return h.hexdigest()[:16]
 
 
-def _read_entry(path: str) -> pa.Table:
-    with pa.OSFile(path, "rb") as f:
-        return pa.ipc.open_file(f).read_all()
+# Schema-metadata key of the version an entry answers.
+_VERSION = b"seriesly.version"
 
 
-def _write_entry(path: str, table: pa.Table) -> None:
+def entry_path(cache_dir: str, key: str) -> str:
+    return os.path.join(cache_dir, f"{key}.arrow")
+
+
+def entry_keys(cache_dir: str) -> list[str]:
+    """The keys of the entries in ``cache_dir``, stale ones too."""
+    return [
+        n[: -len(".arrow")] for n in os.listdir(cache_dir) if n.endswith(".arrow")
+    ]
+
+
+def read_entry(
+    path: str, version: str | None = None
+) -> pa.ipc.RecordBatchFileReader | None:
+    """The entry at ``path`` if it is stamped ``version`` (any stamp when
+    None), else None. Opening it reads only the footer; ``read_all()``
+    on the result reads the table."""
+    try:
+        entry = pa.ipc.open_file(pa.memory_map(path))
+    except FileNotFoundError:
+        return None
+    stamp = (entry.schema.metadata or {}).get(_VERSION)
+    if version is not None and stamp != version.encode():
+        return None
+    return entry
+
+
+def write_entry(path: str, table: pa.Table, version: str) -> None:
+    """Store ``table`` at ``path`` stamped ``version``, atomically."""
+    table = table.replace_schema_metadata({_VERSION: version})
     fd, tmp = tempfile.mkstemp(suffix=".tmp", dir=os.path.dirname(path))
     os.close(fd)
     try:
@@ -110,28 +145,17 @@ class QueryCache:
         write/delete/compact -> recompute (miss falls through to
         compute-and-store, like the reference's GET-miss path,
         cache.go:54-155)."""
-        shape = _query_shape(name, q, exact_sums)
-        path = os.path.join(
-            self.cache_dir, f"{shape}.{db_version(self.dbs, name)}.arrow"
-        )
+        path = entry_path(self.cache_dir, _query_shape(name, q, exact_sums))
+        version = db_version(self.dbs, name)
         spark = self.dbs.spark
-        try:
-            table = _read_entry(path)
-        except FileNotFoundError:
-            pass
-        else:
+        entry = read_entry(path, version)
+        if entry is not None:
             self.hits += 1
-            return _local_df(spark, table)
+            return _local_df(spark, entry.read_all())
         self.misses += 1
         res = self.dbs.query(name, q, exact_sums=exact_sums)
         table = res.limit(MAX_CACHED_ROWS + 1).toArrow()
         if table.num_rows > MAX_CACHED_ROWS:
             return res
-        _write_entry(path, table)
-        # The shape's entries for other versions can never hit again. A
-        # reader that already named one of them simply misses.
-        for old in glob.glob(os.path.join(self.cache_dir, f"{shape}.*.arrow")):
-            if old != path:
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(old)
+        write_entry(path, table, version)
         return _local_df(spark, table)

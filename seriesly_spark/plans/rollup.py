@@ -9,15 +9,18 @@ the hypertable "continuous aggregate" pattern expressed Spark-first:
 
   * the db is hive-partitioned by ``date`` (db.py layout), so each date
     is an independently refreshable unit;
-  * ``refresh()`` takes every date partition's fingerprint from the
-    store's one data-file listing (``SerieslyDB._partition_versions``:
-    sorted names + sizes, FILE METADATA only — no data read), diffs them
-    against the manifest stored with the rollup, and recomputes the
-    aggregate ONLY for dates whose fingerprint changed (writes, deletes,
-    compaction);
-  * recomputed dates dynamically overwrite just their partitions of the
-    rollup table; dates that disappeared from the db (range delete) drop
-    from the rollup; everything else is untouched.
+  * the rollup keeps one cache entry per date (``plans/cache.py``'s one
+    entry rule: ``<date>.arrow``, stamped with the version it answers),
+    and the stamp is the date partition's fingerprint from the store's
+    one data-file listing (``SerieslyDB._partition_versions``: sorted
+    names + sizes, FILE METADATA only — no data read). The stamps of the
+    entries on disk are the rollup's whole state; no other file records
+    which dates are current;
+  * ``refresh()`` recomputes, in one Spark plan, ONLY the dates whose
+    entry is missing or stale (writes, deletes, compaction), splits the
+    answer per date on the driver and replaces those entries; entries of
+    dates that disappeared from the db (range delete) are unlinked;
+    everything else is untouched.
 
 The rollup stores per (date, bucket) rows: doc count and the
 decimal-accumulated sum of a JSON-pointer value — the partial-aggregate
@@ -29,11 +32,11 @@ partition: per-partition last-write-wins equals global last-write-wins.
 
 from __future__ import annotations
 
-import json
+import contextlib
 import os
-import shutil
-import tempfile
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,6 +44,7 @@ from seriesly_spark.db import SerieslyDB
 from seriesly_spark.functions.bucketing import bucket_ms_sql
 from seriesly_spark.functions.coerce import to_num_sql
 from seriesly_spark.functions.jsonptr import extract_ptr_sql
+from seriesly_spark.plans.cache import entry_keys, entry_path, read_entry, write_entry
 
 _DEC = "decimal(38,18)"
 
@@ -62,17 +66,7 @@ class ContinuousRollup:
         self.rollup_dir = rollup_dir
         self.group_ms = group_ms
         self.pointer = pointer
-
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.rollup_dir, "_manifest.json")
-
-    def _load_manifest(self) -> dict[str, str]:
-        try:
-            with open(self._manifest_path) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {}
+        os.makedirs(rollup_dir, exist_ok=True)
 
     def _aggregate(self, dates: list[str]) -> DataFrame:
         live = self.dbs._live(self.name, dates=dates)
@@ -96,42 +90,24 @@ class ContinuousRollup:
         the driver-checkable evidence that cold history is not rescanned.
         """
         current = self.dbs._partition_versions(self.name)
-        seen = self._load_manifest()
-        changed = [d for d, fp in current.items() if seen.get(d) != fp]
-        removed = [d for d in seen if d not in current]
+        changed = [
+            d for d, fp in current.items()
+            if read_entry(entry_path(self.rollup_dir, d), fp) is None
+        ]
+        removed = [d for d in entry_keys(self.rollup_dir) if d not in current]
         if changed:
-            spark = self.dbs.spark
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    self._aggregate(changed)
-                    .repartition("date")
-                    .write.partitionBy("date")
-                    .mode("overwrite")
-                    .parquet(self.rollup_dir)
-                )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
+            table = self._aggregate(changed).toArrow()
+            dates = table.column("date").cast(pa.string())
+            table = table.drop_columns("date")
+            for d in changed:
+                write_entry(
+                    entry_path(self.rollup_dir, d),
+                    table.filter(pc.equal(dates, d)),
+                    current[d],
                 )
         for d in removed:
-            shutil.rmtree(
-                os.path.join(self.rollup_dir, f"date={d}"), ignore_errors=True
-            )
-        os.makedirs(self.rollup_dir, exist_ok=True)
-        # Written whole under a hidden name, then renamed over the old
-        # manifest: a failed write leaves the previous manifest intact.
-        fd, tmp = tempfile.mkstemp(
-            prefix="_manifest.", suffix=".tmp", dir=self.rollup_dir
-        )
-        try:
-            with os.fdopen(fd, "w") as fh:
-                json.dump(current, fh)
-            os.replace(tmp, self._manifest_path)
-        except BaseException:
-            os.unlink(tmp)
-            raise
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(entry_path(self.rollup_dir, d))
         return {
             "changed": len(changed),
             "removed": len(removed),
@@ -141,9 +117,17 @@ class ContinuousRollup:
     def read(self) -> DataFrame:
         """The maintained rollup (bucket_ms, cnt, sum_v), one row per
         bucket — re-aggregate this for any coarser grain."""
-        df = self.dbs.spark.read.parquet(self.rollup_dir)
+        spark = self.dbs.spark
+        entries = [
+            read_entry(entry_path(self.rollup_dir, d))
+            for d in entry_keys(self.rollup_dir)
+        ]
+        tables = [e.read_all() for e in entries if e is not None]
+        if not tables:
+            return spark.createDataFrame([], "bucket_ms long, cnt long, sum_v double")
         return (
-            df.groupBy("bucket_ms")
+            spark.createDataFrame(pa.concat_tables(tables))
+            .groupBy("bucket_ms")
             .agg(
                 F.sum("cnt").alias("cnt"),
                 F.sum(F.col("sum_v").cast(_DEC)).cast("double").alias("sum_v"),

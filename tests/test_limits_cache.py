@@ -3,6 +3,7 @@
 import json
 import os
 import time
+from datetime import datetime, timezone
 
 import pyarrow as pa
 import pytest
@@ -121,8 +122,9 @@ class TestQueryCache:
         assert cr.refresh() == {"changed": 1, "removed": 0, "unchanged": 1}
 
     def test_commits_leave_one_entry_per_shape(self, dbs, tmp_path):
-        """The version is part of an entry's name, so every commit makes
-        the shape's entry unreachable; storing the new one unlinks it."""
+        """An entry is named by its shape alone and stamped with the
+        version, so every commit makes the shape's entry stale; storing
+        the new one replaces it."""
         cache = tmp_path / "cache"
         qc = QueryCache(dbs, str(cache))
         other = SerieslyQuery(
@@ -174,6 +176,26 @@ class TestQueryCache:
             answers.append(want)
         assert answers[0] != answers[1]
         assert (qc.misses, qc.hits) == (2, 0)
+
+    def test_one_range_in_two_forms_is_one_key(self, dbs, tmp_path):
+        # An RFC3339 string, an ns int and a datetime naming one instant
+        # ask one question.
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        forms = [
+            ("2024-01-01T00:05:00Z", "2024-01-01T02:30:00Z"),
+            (1_704_067_500 * 10**9, datetime(2024, 1, 1, 2, 30, tzinfo=timezone.utc)),
+        ]
+        answers = [
+            qc.query(
+                "t", SerieslyQuery(group_ms=3_600_000, fields=[("/v", "sum")],
+                                   aliases=["s"], from_ts=lo, to_ts=hi)
+            ).collect()
+            for lo, hi in forms
+        ]
+        assert answers[0] == answers[1]
+        assert sorted((r.bucket_ms, r.s) for r in answers[0])[0][1] == 2.0
+        assert [r.s for r in answers[0]] == [2.0, 11.0, 9.5]
+        assert (qc.misses, qc.hits) == (1, 1)
 
     PANELS = {
         "plain": dict(fields=[("/v", "sum"), ("/v", "avg"), ("/v", "count"), ("/v", "min")]),
