@@ -2,21 +2,33 @@
 """Compact-versus-read race probe for ``SerieslyDB``.
 
 A store of 120 keys over 5 days is written once. One writer thread then
-loops: a batch of new revisions of every key, then ``compact``. The main
-thread loops ``df().count()`` against it. The live key count never
-changes, so a read either returns 120, raises (an error), or returns
-another number (a wrong count, with no error).
+loops: a batch of new revisions of every key, then ``compact``. Three
+reader threads loop against it, each with one kind of read:
+
+* ``count``: ``df().count()``. The live key count never changes, so it
+  is wrong unless it is 120.
+* ``get``: ``get`` of one fixed key. It is wrong unless it returns a
+  revision at least as new as the last batch committed before the read
+  started, and no newer than the batch being written when it ended.
+* ``change_log``: ``change_log()``. It is wrong unless it holds each seq
+  once, in order, and at least every commit (batch or compact) finished
+  before the read started, and no more than were started by its end.
+
+A read either returns such an answer, raises (an error), or returns
+another one (a wrong answer, with no error).
 
 Usage: python scripts/race_compact_read.py SECONDS
 
-Prints one line: reads, errors, wrong counts, the wrong values seen, and
-the number of compactions the writer finished.
+Prints one line per reader: reads, errors, wrong answers and the wrong
+values seen (at most five), then the number of compactions the writer
+finished.
 """
 from __future__ import annotations
 
 import collections
 import json
 import os
+import shutil
 import sys
 import tempfile
 import threading
@@ -40,9 +52,20 @@ def main() -> None:
     dbs = SerieslyDB(spark, root)
     dbs.create("t")
     keys = [f"2024-01-0{d + 1}T{h:02d}:00:00Z" for d in range(DAYS) for h in range(PER_DAY)]
+    fixed = keys[len(keys) // 2]
+    # Revisions committed / being written, and commits finished / started.
+    revs = {"done": 0, "started": 0}
+    commits = {"done": 0, "started": 0}
+
+    def commit(fn) -> None:
+        commits["started"] += 1
+        fn()
+        commits["done"] += 1
 
     def revise(rev: int) -> None:
-        dbs.write_batch("t", [(k, json.dumps({"rev": rev})) for k in keys])
+        revs["started"] = rev
+        commit(lambda: dbs.write_batch("t", [(k, json.dumps({"rev": rev})) for k in keys]))
+        revs["done"] = rev
 
     revise(0)
     stop = threading.Event()
@@ -52,35 +75,64 @@ def main() -> None:
         rev = 1
         while not stop.is_set():
             revise(rev)
-            dbs.compact("t")
+            commit(lambda: dbs.compact("t"))
             compactions[0] += 1
             rev += 1
 
-    t = threading.Thread(target=writer)
-    t.start()
-    reads = errors = 0
-    wrong: collections.Counter = collections.Counter()
-    deadline = time.monotonic() + seconds
-    try:
-        while time.monotonic() < deadline:
-            reads += 1
+    def count() -> object:
+        n = dbs.df("t").count()
+        return None if n == len(keys) else n
+
+    def get() -> object:
+        lo = revs["done"]
+        doc = dbs.get("t", fixed)
+        hi = revs["started"]
+        rev = None if doc is None else json.loads(doc)["rev"]
+        return None if rev is not None and lo <= rev <= hi else (lo, rev, hi)
+
+    def change_log() -> object:
+        lo = commits["done"]
+        seqs = [r.seq for r in dbs.change_log("t").collect()]
+        hi = commits["started"]
+        ok = seqs == sorted(set(seqs)) and lo <= len(seqs) <= hi
+        return None if ok else (lo, len(seqs), len(set(seqs)), hi)
+
+    readers = {"count": count, "get": get, "change_log": change_log}
+    stats = {name: [0, 0, collections.Counter()] for name in readers}
+
+    def loop(name: str) -> None:
+        st = stats[name]
+        while not stop.is_set():
+            st[0] += 1
             try:
-                n = dbs.df("t").count()
+                wrong = readers[name]()
             except Exception:
-                errors += 1
+                st[1] += 1
                 continue
-            if n != len(keys):
-                wrong[n] += 1
+            if wrong is not None:
+                st[2][wrong] += 1
+
+    threads = [threading.Thread(target=writer)] + [
+        threading.Thread(target=loop, args=(name,)) for name in readers
+    ]
+    for t in threads:
+        t.start()
+    try:
+        time.sleep(seconds)
     finally:
         stop.set()
-        t.join()
-    print(
-        f"seconds {seconds:g} reads {reads} errors {errors} "
-        f"wrong {sum(wrong.values())} wrong_values {dict(sorted(wrong.items()))} "
-        f"compactions {compactions[0]}",
-        flush=True,
-    )
+        for t in threads:
+            t.join()
+    for name, (reads, errors, wrong) in stats.items():
+        shown = dict(wrong.most_common(5))
+        print(
+            f"{name}: reads {reads} errors {errors} "
+            f"wrong {sum(wrong.values())} wrong_values {shown}",
+            flush=True,
+        )
+    print(f"seconds {seconds:g} compactions {compactions[0]}", flush=True)
     spark.stop()
+    shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":

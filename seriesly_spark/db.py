@@ -36,14 +36,19 @@ the driver and reads exactly those files with the declared schema — no
 schema-inference job, no listing of other days, no file the listing did
 not see — keeping the ts_ns bounds on the scan for parquet min/max
 skipping (the B-tree range-walk analogue); a point ``get`` reads only
-its key's day; a commit writes one new file per date from the driver
-with pyarrow (no Spark job, no read-modify-write); delete_range retires
-fully-covered partitions without reading their data and rewrites only
-the two edge partitions; compact rewrites each partition that holds more
-than one file. Both rewrite a partition as one folded file, published
+its key's day, on the driver with pyarrow (no Spark job); a commit
+writes one new file per date from the driver with pyarrow (no Spark
+job, no read-modify-write); delete_range retires fully-covered
+partitions without reading their data and rewrites only the two edge
+partitions; compact rewrites each partition that holds more than one
+file. Both rewrite a partition as one folded file, published
 beside the old ones before the files it read are unlinked, as the
 reference writes a new couch file before it swaps out the old one
-(database.go:136-171). On a real deployment the same API maps onto
+(database.go:136-171). Every file the driver writes (a commit's data
+files, a commit-log segment, the log's fold, a ``QueryCache`` or rollup
+entry) goes through one publish step, :func:`publish`: it is staged
+under a hidden unique name and renamed onto its own, so it appears
+whole or not at all. On a real deployment the same API maps onto
 Delta/Iceberg (MERGE, OPTIMIZE, CDF) — plain parquet keeps this repo
 dependency-free.
 """
@@ -59,7 +64,11 @@ import shutil
 import time
 import uuid
 from datetime import timedelta
+from typing import Callable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,32 +80,49 @@ DOC_SCHEMA = "ts_ns long, seq long, doc string"
 CHANGELOG_SCHEMA = (
     "seq long, op string, ts_lo_ns long, ts_hi_ns long, n_rows long"
 )
+# The same columns, as the driver writes and reads them with pyarrow.
+_LOG_SCHEMA = pa.schema([
+    ("seq", pa.int64()), ("op", pa.string()), ("ts_lo_ns", pa.int64()),
+    ("ts_hi_ns", pa.int64()), ("n_rows", pa.int64()),
+])
 _CHANGELOG_DIR = ".changelog"
 
 
-def _changelog_has_stranded_dups(d: str, files: list[str]) -> bool:
-    """True iff an interrupted :meth:`SerieslyDB._fold_changelog` left
-    duplicate seqs in the log directory. Per-commit segments hold ONE
-    row; the fold's consolidated file (named with the max folded seq)
-    holds every seq <= its own name. So duplicates exist exactly when a
-    multi-row file has a sibling with a smaller name — that sibling was
-    folded in, but its removal never ran. Detection is driver-side
-    parquet-footer reads over a metadata-sized directory."""
-    import pyarrow.parquet as pq
+def publish(path: str, write: Callable[[str], object]) -> None:
+    """Make the file at ``path`` appear whole or not at all: ``write``
+    writes a hidden, uniquely named staging file in the same directory
+    (``.<name>.<uuid>.tmp``), which is then renamed onto ``path``. A
+    failed write removes the staging file. One that a crash leaves is
+    hidden from every reader and listing; in a database,
+    :meth:`SerieslyDB.compact` removes it."""
+    d, f = os.path.split(path)
+    tmp = os.path.join(d, f".{f}.{uuid.uuid4().hex}.tmp")
+    try:
+        write(tmp)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
 
-    for f in files[1:]:  # files sorted by name == seq order
+
+def _read_listed(
+    list_paths: Callable[[], list[str]], **read
+) -> tuple[list[str], pa.Table | None]:
+    """The paths ``list_paths()`` names and their rows, read on the
+    driver with ``pq.read_table(paths, **read)`` (None when it names
+    none). A partition rewrite or a log fold publishes its new file
+    before it unlinks the files it read, so a listed file that is gone
+    when it is read means that such a step has run: the read lists
+    again and retries, and sees the state after that step."""
+    while True:
+        paths = list_paths()
+        if not paths:
+            return paths, None
         try:
-            if pq.read_metadata(os.path.join(d, f)).num_rows > 1:
-                return True
+            return paths, pq.read_table(paths, **read)
         except FileNotFoundError:
-            # A concurrent compact() fold removed this segment between
-            # the directory listing and the footer read. A vanished file
-            # is by definition a folded single-row per-commit segment
-            # (the fold only ever deletes those), so it cannot be the
-            # multi-row consolidated file we are probing for — skip it
-            # rather than surface a crash on a pure read path.
             continue
-    return False
 
 
 class SerieslyDB:
@@ -122,7 +148,9 @@ class SerieslyDB:
     observe. One maintenance step does rewrite the log: :meth:`compact`
     folds the accumulated segments into one consolidated file (opt out
     with ``compact(name, fold_changelog=False)``); see
-    :meth:`changes_log_stream` for what that means to a live stream.
+    :meth:`changes_log_stream` for what that means to a live stream. On
+    the driver the log has one reader, :meth:`_read_log`, behind
+    :meth:`change_log` and the fold.
 
     Concurrency contract: ONE WRITER HANDLE per database at a time (the
     same single-writer contract as the incremental dedup indexes and any
@@ -132,10 +160,14 @@ class SerieslyDB:
     races a ``compact``/``delete_range`` partition rewrite survives,
     with no error: the rewrite reads and unlinks only the files of its
     own listing, so a file committed after that listing is neither read
-    nor removed, and reads fold it with the rewrite's output. Reads that
-    run beside a rewrite are not isolated from it: a read whose listing
-    names a file the rewrite then unlinks can fail, or Spark can skip
-    that file and miss its rows (ROADMAP item 4).
+    nor removed, and reads fold it with the rewrite's output. The
+    driver-side reads, :meth:`get` and :meth:`change_log`, are exact
+    beside a rewrite or a log fold: each publishes its new file before
+    it unlinks the files it read, so a read that finds a listed file
+    gone lists again (:func:`_read_listed`). The Spark reads (:meth:`df`, :meth:`query`,
+    :meth:`all_docs`, :meth:`info`) are not isolated from a rewrite: a
+    read whose listing names a file the rewrite then unlinks can fail,
+    or Spark can skip that file and miss its rows (ROADMAP item 4).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -196,14 +228,10 @@ class SerieslyDB:
 
         The commit runs on the driver, with no Spark job: the rows are
         split by ``date=`` partition and every date's table is built
-        before any is published. Each table is then written to a hidden
-        staging name inside its partition (``.part-<uuid>.parquet.tmp``:
-        the leading dot hides it from every reader and listing) and
-        renamed onto ``part-<uuid>.parquet``. The log segment is appended
-        last, so the log only ever names data that is already visible."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+        before any is published. Each table is then published
+        (:func:`publish`) as ``part-<uuid>.parquet`` in its partition. The
+        log segment is appended last, so the log only ever names data
+        that is already visible."""
         path = self._path(name)
         if not os.path.isdir(path):
             raise KeyError(f"no such db: {name}")
@@ -241,14 +269,14 @@ class SerieslyDB:
         for d, table in tables.items():
             part_dir = os.path.join(path, f"date={d}")
             os.makedirs(part_dir, exist_ok=True)
-            final = f"part-{uuid.uuid4().hex}.parquet"
-            staged = os.path.join(part_dir, f".{final}.tmp")
             # PLAIN, as Spark's writer falls back to for near-unique keys
             # and docs: dictionary pages only grow such a file.
-            pq.write_table(
-                table, staged, compression="snappy", use_dictionary=False
+            publish(
+                os.path.join(part_dir, f"part-{uuid.uuid4().hex}.parquet"),
+                lambda p, t=table: pq.write_table(
+                    t, p, compression="snappy", use_dictionary=False
+                ),
             )
-            os.replace(staged, os.path.join(part_dir, final))
         self._log_change(name, last_seq, "write", min(keys), max(keys), len(keys))
         return keys
 
@@ -269,14 +297,7 @@ class SerieslyDB:
         # FIRST touch of this db (O(log) per commit otherwise); after
         # that the cached last seq counts forward.
         def _list_floor() -> int:
-            return max(
-                (
-                    int(f.split(".")[0])
-                    for f in os.listdir(d)
-                    if f.endswith(".parquet")
-                ),
-                default=0,
-            )
+            return max((int(f.split(".")[0]) for f in _segments(d)), default=0)
 
         last = self._last_seq.get(name)
         if last is None:
@@ -301,22 +322,36 @@ class SerieslyDB:
         """Append one commit-log segment, named by ``seq`` from
         :meth:`_next_seq` (driver-side pyarrow write: the log row is
         metadata, not data — one job per mutation would dwarf the
-        mutation itself). File names embed the monotone seq, so the log
-        reads back in commit order with a plain sort."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        d = os.path.join(self._path(name), _CHANGELOG_DIR)
+        mutation itself). It is published whole (:func:`publish`), so a
+        crash mid-write leaves no torn segment. File names embed the
+        monotone seq, so the log reads back in commit order with a plain
+        sort."""
         table = pa.table(
-            {
-                "seq": pa.array([seq], pa.int64()),
-                "op": pa.array([op], pa.string()),
-                "ts_lo_ns": pa.array([ts_lo], pa.int64()),
-                "ts_hi_ns": pa.array([ts_hi], pa.int64()),
-                "n_rows": pa.array([n_rows], pa.int64()),
-            }
+            [[seq], [op], [ts_lo], [ts_hi], [n_rows]], schema=_LOG_SCHEMA
         )
-        pq.write_table(table, os.path.join(d, f"{seq:020d}.parquet"))
+        d = os.path.join(self._path(name), _CHANGELOG_DIR)
+        publish(
+            os.path.join(d, f"{seq:020d}.parquet"),
+            lambda p: pq.write_table(table, p),
+        )
+
+    def _read_log(self, name: str) -> tuple[list[str], pa.Table]:
+        """The commit log's one reader: the segment files it read and
+        their rows, one per ``seq``, in ``seq`` order. Driver-side
+        pyarrow over a metadata-sized directory. A row that an
+        interrupted fold left in both the consolidated file and an old
+        segment is read once, and a fold that removes a listed segment
+        before it is read makes the read list again (:func:`_read_listed`)."""
+        d = os.path.join(self._path(name), _CHANGELOG_DIR)
+        paths, log = _read_listed(
+            lambda: [os.path.join(d, f) for f in _segments(d)],
+            schema=_LOG_SCHEMA,
+        )
+        if log is None:
+            return [], _LOG_SCHEMA.empty_table()
+        log = log.sort_by("seq")
+        seqs = log.column("seq").to_numpy()
+        return paths, log.filter(np.append(True, seqs[1:] != seqs[:-1]))
 
     def change_log(self, name: str) -> DataFrame:
         """Batch view of the commit log, in commit order: one row per
@@ -325,32 +360,14 @@ class SerieslyDB:
         included), raw rows removed (delete: the in-range rows plus the
         revisions folded away in the two edge partitions), live rows
         remaining (compact). A database with no mutations yet returns an
-        empty frame."""
-        path = self._path(name)
-        if not os.path.isdir(path):
+        empty frame.
+
+        The log is read on the driver (:meth:`_read_log`) and returned as
+        a local DataFrame: no Spark job, and each ``seq`` once, also
+        after a fold that crashed before it removed the old segments."""
+        if not os.path.isdir(self._path(name)):
             raise KeyError(f"no such db: {name}")
-        d = os.path.join(path, _CHANGELOG_DIR)
-        files = (
-            sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-            if os.path.isdir(d)
-            else []
-        )
-        if not files:
-            return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
-        out = self.spark.read.schema(CHANGELOG_SCHEMA).parquet(d)
-        # seq is the commit identity; a fold interrupted between its
-        # atomic replace and the segment removals leaves rows present in
-        # both the consolidated file and an old segment. That stranding
-        # is DETECTABLE from driver-side footer metadata (ms, no job):
-        # live segments hold one row each and a consolidated file holds
-        # every seq <= its name, so duplicates exist iff some multi-row
-        # file has an older-named sibling. Paying a dropDuplicates
-        # shuffle on every read to cover a crash window that almost
-        # never happens would be the wrong default (it was the one plan
-        # regression of round 7: s17_change_log +19%).
-        if _changelog_has_stranded_dups(d, files):
-            out = out.dropDuplicates(["seq"])
-        return out.orderBy("seq")
+        return self.spark.createDataFrame(self._read_log(name)[1])
 
     # -- Reads (S1-S3, S10/S11) --------------------------------------------
 
@@ -419,20 +436,26 @@ class SerieslyDB:
         return self._live(name, lo, hi).select("ts_ns", "seq", "doc")
 
     def get(self, name: str, ts) -> str | None:
-        """Point read (S3): only the key's date partition is read, with
-        the key pushed to the scan; one Spark job. The newest ``seq``
-        among the key's revisions wins."""
+        """Point read (S3) on the driver, with no Spark job: pyarrow reads
+        the files of the key's date partition with the filter
+        ``ts_ns == key`` (row groups whose ``ts_ns`` bounds miss the key
+        are skipped), and the newest ``seq`` among the key's revisions
+        wins. Exact beside a ``compact`` or ``delete_range``: a file
+        that a rewrite unlinks after the listing makes the read list
+        again (:func:`_read_listed`), where Spark would skip it."""
         ns = py_parse_ts_ns(ts)
-        listing = self._data_files(name, [_ns_date(ns)])
-        if not listing:
-            return None
-        rows = (
-            self._scan(name, listing)
-            .where(f"ts_ns = {ns}")
-            .select("seq", "doc")
-            .collect()
+        d = _ns_date(ns)
+        part_dir = os.path.join(self._path(name), f"date={d}")
+        _, found = _read_listed(
+            lambda: [
+                os.path.join(part_dir, f)
+                for f, _ in self._data_files(name, [d]).get(d, [])
+            ],
+            columns=["seq", "doc"],
+            filters=[("ts_ns", "=", ns)],
         )
-        return max(rows, key=lambda r: r.seq).doc if rows else None
+        rows = [] if found is None else found.to_pylist()
+        return max(rows, key=lambda r: r["seq"])["doc"] if rows else None
 
     def all_docs(
         self, name: str, from_ts=None, to_ts=None, limit: int | None = None
@@ -527,17 +550,24 @@ class SerieslyDB:
             raise KeyError(f"no such db: {name}")
         out = {}
         for d in dates:
-            files = []
-            try:
-                with os.scandir(os.path.join(path, f"date={d}")) as it:
-                    for e in it:
-                        # A file a rewrite unlinks between the scan and
-                        # its stat is left out, not the whole partition.
-                        with contextlib.suppress(FileNotFoundError):
-                            if _is_data_file(e.name):
-                                files.append((e.name, e.stat().st_size))
-            except FileNotFoundError:
-                continue
+            part_dir = os.path.join(path, f"date={d}")
+            while True:
+                try:
+                    with os.scandir(part_dir) as it:
+                        files = [
+                            (e.name, e.stat().st_size)
+                            for e in it if _is_data_file(e.name)
+                        ]
+                    break
+                except FileNotFoundError:
+                    # The partition is gone, or a rewrite unlinked a
+                    # file between the scan and its stat. Leaving that
+                    # file out could leave out the whole partition (the
+                    # rewrite's output was published after the scan), so
+                    # the partition is scanned again.
+                    if not os.path.isdir(part_dir):
+                        files = []
+                        break
             if files:
                 out[d] = sorted(files)
         return out
@@ -557,8 +587,6 @@ class SerieslyDB:
         """Exact row count of the files of a :meth:`_data_files` listing,
         from parquet footer metadata: driver-side milliseconds, no Spark
         job."""
-        import pyarrow.parquet as pq
-
         path = self._path(name)
         return sum(
             pq.read_metadata(os.path.join(path, f"date={d}", f)).num_rows
@@ -572,10 +600,14 @@ class SerieslyDB:
         unlinked, then the emptied directory. Each of the two edge
         partitions is rewritten in place by :meth:`_rewrite_partition`
         without the deleted keys: one file holding each surviving key
-        once. A file committed into the range after this call's listing
+        once. An edge of more than one file is first rewritten as one
+        file without a drop, so the drop unlinks a single input and a
+        concurrent read of the edge sees it before or after the delete.
+        A file committed into the range after this call's listing
         survives. The 10k-commit batching of the reference
         (handlers.go:256) is irrelevant here: the rewrite is one Spark
-        write (2 jobs) per edge partition.
+        write (2 jobs) per edge partition, two for an edge of several
+        files.
 
         The commit log's ``n_rows`` (raw rows removed) comes from parquet
         footers, not a scan job: a retired partition's rows, plus each
@@ -590,8 +622,13 @@ class SerieslyDB:
                 n_removed += self._footer_rows(name, {d: files})
                 self._retire(name, d, [f for f, _ in files])
             elif d == lo_d or d == hi_d:
-                rows_in, rows_out = self._rewrite_partition(name, d, (lo, hi))
-                n_removed += rows_in - rows_out
+                # An edge of several files is folded into one first: the
+                # drop then unlinks one input, so a read sees all of the
+                # deleted keys or none of them.
+                drops = [None, (lo, hi)] if len(files) > 1 else [(lo, hi)]
+                for drop in drops:
+                    rows_in, rows_out = self._rewrite_partition(name, d, drop)
+                    n_removed += rows_in - rows_out
         self._log_change(name, self._next_seq(name), "delete", lo, hi, n_removed)
 
     def _rewrite_partition(
@@ -609,15 +646,14 @@ class SerieslyDB:
         goes, so a read at any point sees the old files, the new one, or
         both, folded by last-write-wins. Without ``drop`` each of these
         is the same live view. A ``drop`` rewrite of several input files
-        unlinks them one at a time, so a read in between can see some
-        dropped keys and not others. Only the files of the one listing
+        would unlink them one at a time, so a read in between could see
+        some dropped keys and not others; :meth:`delete_range` therefore
+        folds such a partition into one file first. Only the files of the one listing
         taken here are read and unlinked: a file committed after it is
         left as it is. A crash at any step leaves every kept row readable
         with its doc, and running the operation again finishes it; the
         next :meth:`compact` removes the staging directory a crash
         left."""
-        import pyarrow.parquet as pq
-
         path = self._path(name)
         part_dir = os.path.join(path, f"date={date}")
         listing = self._data_files(name, [date])
@@ -649,17 +685,12 @@ class SerieslyDB:
 
     def _retire(self, name: str, date: str, files: list[str]) -> None:
         """Unlink ``files`` of partition ``date``, then remove its
-        directory if no data file is left. What else such a directory
-        holds is not data (a crashed commit's staging file); ``rmdir``
-        leaves the directory to a data file published meanwhile."""
+        directory if it is empty. ``rmdir`` leaves the directory to a
+        data file published meanwhile, and to a crashed commit's staging
+        file, which the next :meth:`compact` removes first."""
         part_dir = os.path.join(self._path(name), f"date={date}")
         for f in files:
             os.remove(os.path.join(part_dir, f))
-        if self._data_files(name, [date]):
-            return
-        for f in os.listdir(part_dir):
-            if not _is_data_file(f):
-                os.remove(os.path.join(part_dir, f))
         with contextlib.suppress(OSError):
             os.rmdir(part_dir)
 
@@ -683,19 +714,26 @@ class SerieslyDB:
         partition that reads the same live keys, and may leave its
         staging directory; compacting again removes every such
         directory of this database first and reaches one file per
-        partition.
+        partition. It also removes every hidden ``*.tmp`` staging file
+        a crashed commit, log append or log fold left in a ``date=``
+        directory or in the commit log.
 
         ``fold_changelog=False`` skips the commit-log fold — use it when
         a lagging :meth:`changes_log_stream` consumer may not have
         caught up to the current log tail yet (the fold rewrites the
         newest segment in place, which a file stream never re-reads)."""
         listing = self._data_files(name)
-        # Only a rewrite of this database stages here, and it has one
-        # writer handle: a staging directory seen now is a crashed one.
+        # This database has one writer handle, and it is here: a staging
+        # directory (a rewrite's) or staging file (a commit's, a log
+        # segment's or a fold's) seen now is a crashed one.
         path = self._path(name)
         for d in os.listdir(path):
             if d.startswith(".tmp-"):
                 shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+            elif d.startswith("date=") or d == _CHANGELOG_DIR:
+                for f in os.listdir(os.path.join(path, d)):
+                    if f.startswith(".") and f.endswith(".tmp"):
+                        os.remove(os.path.join(path, d, f))
         for part in self._partitions(name):
             d = part[len("date="):]
             if len(listing.get(d, [])) != 1:
@@ -720,8 +758,13 @@ class SerieslyDB:
         max folded seq (so first-touch seq recovery still reads the
         floor from file names, and the batch ``change_log`` view is
         byte-identical — rows carry their seq; order comes from the
-        sort, not the file split). Driver-side pyarrow, like the writes:
-        the whole log is metadata-sized.
+        sort, not the file split). The merged table is what
+        :meth:`_read_log` returns; it is published over the newest
+        segment's path (:func:`publish`) before the other segments it
+        read are removed. A crash before the publish leaves the log as
+        it was; a crash among the removals leaves rows in both the new
+        file and an old segment, which the reader and the next fold read
+        once.
 
         Streaming caveat (same in-place-maintenance story as the data
         partitions): the consolidated file REUSES the newest segment's
@@ -731,37 +774,12 @@ class SerieslyDB:
         once. A stream LAGGING behind the fold point can miss folded
         segments; fold during maintenance windows, as with any
         file-source compaction."""
-        d = os.path.join(self._path(name), _CHANGELOG_DIR)
-        if not os.path.isdir(d):
+        paths, log = self._read_log(name)
+        if len(paths) <= 1:
             return
-        files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-        if len(files) <= 1:
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        merged = pa.concat_tables(
-            [pq.read_table(os.path.join(d, f)) for f in files]
-        ).sort_by("seq")
-        # A crash between the replace and the removals leaves old
-        # segments whose rows the consolidated file ALSO holds — rows
-        # carry their seq, so readers dedupe; dedupe here too so a
-        # re-fold after such a crash stays idempotent.
-        seqs = merged.column("seq").to_pylist()
-        keep = [i for i, s in enumerate(seqs) if i == 0 or s != seqs[i - 1]]
-        if len(keep) != len(seqs):
-            merged = merged.take(keep)
-        tmp = os.path.join(d, "_fold.tmp")
-        pq.write_table(merged, tmp)
-        # Crash-safety order: install the consolidated file FIRST (the
-        # atomic os.replace), THEN remove the folded segments. A crash
-        # in between duplicates rows (recoverable — see above); the old
-        # remove-first order lost the whole history if the replace
-        # never ran (merged rows stranded in _fold.tmp, which no
-        # reader picks up).
-        os.replace(tmp, os.path.join(d, files[-1]))
-        for f in files[:-1]:
-            os.remove(os.path.join(d, f))
+        publish(paths[-1], lambda p: pq.write_table(log, p))
+        for p in paths[:-1]:
+            os.remove(p)
 
     def info(self, name: str) -> dict:
         """S9: doc_count (live keys), space_used, partition/file counts.
@@ -913,10 +931,16 @@ _NS_PER_DAY = 86_400 * 10**9
 
 
 def _is_data_file(f: str) -> bool:
-    """A data file of a ``date=`` partition. Hidden and ``_``-prefixed
-    names (staging files, Spark's markers) are not data, as Spark's
-    readers skip them."""
+    """A published parquet file: a data file of a ``date=`` partition, or
+    a commit-log segment. Hidden and ``_``-prefixed names (staging files,
+    Spark's markers) are not, as Spark's readers skip them."""
     return f.endswith(".parquet") and not f.startswith((".", "_"))
+
+
+def _segments(d: str) -> list[str]:
+    """The commit-log segments in log directory ``d``, in seq order (a
+    segment is named by its zero-padded last seq)."""
+    return sorted(filter(_is_data_file, os.listdir(d))) if os.path.isdir(d) else []
 
 
 def _ns_date(ns: int) -> str:

@@ -16,8 +16,8 @@ changes no data file (a ``delete_range`` over empty days) keeps the entries.
 Both this cache and the continuous rollup (``plans/rollup.py``) keep
 their entries by one rule, :func:`write_entry` and :func:`read_entry`:
 each key is one Arrow IPC file, ``<key>.arrow``, whose schema metadata
-stamps the version the entry answers. It is written under a unique
-``*.tmp`` name and ``os.replace``d onto its name, so a reader sees a
+stamps the version the entry answers. It is written under a hidden,
+unique staging name and renamed onto its name, so a reader sees a
 whole entry or none, and a key's new entry retires its old one. A
 reader checks the stamp from the schema in the file footer before it
 reads any record batch: a stale or missing entry is a miss.
@@ -29,23 +29,30 @@ returns ``createDataFrame`` of the table: a local relation whose
 ``toArrow()``, stores it and returns the same kind of local DataFrame.
 An answer of more than ``MAX_CACHED_ROWS`` rows is not cached; the miss
 returns the lazy query plan instead, so the driver never holds more than
-that many rows for the cache.
+that many rows for the cache. A store that leaves more than
+``MAX_CACHED_ENTRIES`` entries in the directory unlinks the
+oldest-written ones, never the entry it just wrote: an entry whose
+shape is not asked again (a sliding panel's old range) would otherwise
+stay on disk for good.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
-import tempfile
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from seriesly_spark.db import SerieslyDB
+from seriesly_spark.db import SerieslyDB, publish
 from seriesly_spark.plans.query import SerieslyQuery, py_parse_ts_ns
 
 # Largest answer (in rows: one per bucket) a cache entry holds.
 MAX_CACHED_ROWS = 100_000
+# Most entries a QueryCache directory keeps: a store past it unlinks the
+# oldest-written ones.
+MAX_CACHED_ENTRIES = 256
 
 
 def _query_shape(name: str, q: SerieslyQuery, exact_sums: bool) -> str:
@@ -109,17 +116,15 @@ def read_entry(
 
 
 def write_entry(path: str, table: pa.Table, version: str) -> None:
-    """Store ``table`` at ``path`` stamped ``version``, atomically."""
+    """Store ``table`` at ``path`` stamped ``version``, published whole
+    (:func:`seriesly_spark.db.publish`)."""
     table = table.replace_schema_metadata({_VERSION: version})
-    fd, tmp = tempfile.mkstemp(suffix=".tmp", dir=os.path.dirname(path))
-    os.close(fd)
-    try:
+
+    def write(tmp: str) -> None:
         with pa.ipc.new_file(tmp, table.schema) as w:
             w.write_table(table)
-        os.replace(tmp, path)
-    except BaseException:
-        os.unlink(tmp)
-        raise
+
+    publish(path, write)
 
 
 def _local_df(spark: SparkSession, table: pa.Table) -> DataFrame:
@@ -158,4 +163,21 @@ class QueryCache:
         if table.num_rows > MAX_CACHED_ROWS:
             return res
         write_entry(path, table, version)
+        self._evict(keep=path)
         return _local_df(spark, table)
+
+    def _evict(self, keep: str) -> None:
+        """Unlink the oldest-written entries, never ``keep``, until at
+        most ``MAX_CACHED_ENTRIES`` are left."""
+        keys = entry_keys(self.cache_dir)
+        if len(keys) <= MAX_CACHED_ENTRIES:
+            return
+        written = []
+        for k in keys:
+            path = entry_path(self.cache_dir, k)
+            if path != keep:
+                with contextlib.suppress(FileNotFoundError):
+                    written.append((os.stat(path).st_mtime_ns, path))
+        for _, path in sorted(written)[: len(keys) - MAX_CACHED_ENTRIES]:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(path)

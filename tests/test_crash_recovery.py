@@ -18,25 +18,31 @@ Covered:
     the unconditional ``data.compact-old`` marker;
   * DedupIndex legacy-layout migration (including the both-layouts
     duplicated-digest case) and MinhashIndex's loud rejection;
-  * SerieslyDB mid-fold changelog crash: batch ``change_log`` delivers
-    each seq exactly once, and the dedupe shuffle is paid ONLY when the
-    stranding is actually present;
+  * SerieslyDB commit log: batch ``change_log`` delivers each seq
+    exactly once after a mid-fold crash and beside a fold, with no Spark
+    job; a crash mid-way through a segment write leaves no torn segment;
   * two live handles on one root mint strictly-increasing, non-clobbering
     commit seqs even with a frozen clock;
   * SerieslyDB partition rewrites (``compact``, ``delete_range``): an
     append racing any step survives; a read at every step sees every
     live key (``compact``) or the before/after view (``delete_range``);
     a crash at every step reopens with every kept key intact, and
-    running the op again reaches one file per partition.
+    running the op again reaches one file per partition; ``compact``
+    removes every staging file a crashed commit left;
+  * ``get`` beside a ``compact`` that unlinks the files it listed reads
+    the key's newest doc.
 """
 
+import contextlib
 import os
 import shutil
 import types
 
+import pyarrow.parquet as pq
 import pytest
 
-from seriesly_spark.db import SerieslyDB, _changelog_has_stranded_dups
+import seriesly_spark.db as dbmod
+from seriesly_spark.db import SerieslyDB
 from seriesly_spark.operators.dedup_index import (
     DedupIndex,
     MinhashIndex,
@@ -365,12 +371,21 @@ class TestLegacyLayouts:
             MinhashIndex(spark, path)
 
 
+def _log_rows(d):
+    """Rows in the commit-log segment files of ``d``, counted from their
+    parquet footers (a seq stranded by a crashed fold counts twice)."""
+    return sum(
+        pq.read_metadata(os.path.join(d, f)).num_rows
+        for f in os.listdir(d)
+        if f.endswith(".parquet")
+    )
+
+
 class TestChangelogFoldCrash:
     def test_mid_fold_crash_delivers_each_seq_once(self, spark, tmp_path):
         """A fold interrupted between its atomic replace and the segment
         removals leaves rows in BOTH the consolidated file and an old
-        segment; the batch view must still deliver each seq once — and
-        must pay the dedupe only when that stranding exists."""
+        segment; the batch view must still deliver each seq once."""
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
         dbs.create("t")
         for i in range(4):
@@ -378,7 +393,7 @@ class TestChangelogFoldCrash:
         d = os.path.join(dbs._path("t"), ".changelog")
         files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
         assert len(files) == 4
-        assert not _changelog_has_stranded_dups(d, files)
+        assert _log_rows(d) == 4
         seqs_before = [r.seq for r in dbs.change_log("t").collect()]
         # Keep a copy of a segment the fold will remove, fold (via
         # compact), then put the copy back — the exact mid-fold state.
@@ -386,8 +401,9 @@ class TestChangelogFoldCrash:
         shutil.copyfile(os.path.join(d, files[0]), saved)
         dbs.compact("t")
         shutil.copyfile(saved, os.path.join(d, files[0]))
-        files_now = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-        assert _changelog_has_stranded_dups(d, files_now)
+        # The consolidated file holds all 4 writes (the compact commit is
+        # its own segment), and the restored segment holds one of them.
+        assert _log_rows(d) == 4 + 1 + 1
         log = dbs.change_log("t").collect()
         seqs = [r.seq for r in log]
         assert len(seqs) == len(set(seqs)), "duplicate seq delivered"
@@ -397,11 +413,108 @@ class TestChangelogFoldCrash:
         assert [r.op for r in log] == ["write"] * 4 + ["compact"]
         # A re-fold after the crash is idempotent: duplicates collapse.
         dbs._fold_changelog("t")
-        files_refolded = sorted(
-            f for f in os.listdir(d) if f.endswith(".parquet")
-        )
-        assert not _changelog_has_stranded_dups(d, files_refolded)
+        assert _log_rows(d) == 5
         assert [r.seq for r in dbs.change_log("t").collect()] == seqs
+
+    def test_crash_mid_segment_write_leaves_no_torn_segment(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A commit whose log append dies half-way through writing its
+        segment (and runs nothing after that) leaves the log readable:
+        ``change_log``, ``compact`` and a new ``changes_log_stream`` all
+        work and hold every other commit, and no segment is torn."""
+        dbs = SerieslyDB(spark, str(tmp_path / "root"))
+        dbs.create("t")
+        for i in range(2):
+            dbs.write("t", '{"k": %d}' % i, ts=f"2024-01-0{i + 1}T00:00:00Z")
+        d = os.path.join(dbs._path("t"), ".changelog")
+        real_write, real_replace, real_remove = pq.write_table, os.replace, os.remove
+        crashed = []
+
+        def torn_write(table, where, *a, **kw):
+            if os.path.dirname(str(where)) != d:
+                return real_write(table, where, *a, **kw)
+            real_write(table, where, *a, **kw)
+            with open(where, "r+b") as fh:
+                fh.truncate(os.path.getsize(where) // 2)
+            crashed.append(where)
+            raise _InjectedCrash(where)
+
+        def dead(real):
+            def step(p, *a, **kw):
+                if crashed and os.path.dirname(str(p)) == d:
+                    raise _InjectedCrash(p)
+                return real(p, *a, **kw)
+
+            return step
+
+        monkeypatch.setattr(pq, "write_table", torn_write)
+        monkeypatch.setattr(os, "replace", dead(real_replace))
+        monkeypatch.setattr(os, "remove", dead(real_remove))
+        with pytest.raises(_InjectedCrash):
+            dbs.write("t", '{"k": 2}', ts="2024-01-03T00:00:00Z")
+        monkeypatch.undo()
+        assert crashed
+        reopened = SerieslyDB(spark, str(tmp_path / "root"))
+        assert [r.op for r in reopened.change_log("t").collect()] == ["write"] * 2
+        reopened.compact("t")
+        log = reopened.change_log("t").collect()
+        assert [r.op for r in log] == ["write", "write", "compact"]
+        for f in os.listdir(d):
+            assert f.endswith(".parquet") and not f.startswith("."), f
+            pq.read_table(os.path.join(d, f))
+        q = (
+            reopened.changes_log_stream("t")
+            .writeStream.format("memory")
+            .queryName("t_log_after_torn")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            streamed = sorted(r.seq for r in spark.table("t_log_after_torn").collect())
+        finally:
+            q.stop()
+        assert streamed == [r.seq for r in log]
+
+    def test_fold_between_listing_and_read_returns_each_seq_once(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A second handle folds the log after ``change_log`` listed the
+        segments and before it read them: the read lists again and
+        returns every seq once."""
+        root = str(tmp_path / "root")
+        dbs = SerieslyDB(spark, root)
+        dbs.create("t")
+        for i in range(3):
+            dbs.write("t", '{"k": %d}' % i, ts=f"2024-01-0{i + 1}T00:00:00Z")
+        expected = [r.seq for r in dbs.change_log("t").collect()]
+        other = SerieslyDB(spark, root)
+        real, listed = dbmod._segments, []
+
+        def listing_then_fold(d):
+            out = real(d)
+            if not listed:
+                listed.append(out)
+                other._fold_changelog("t")
+            return out
+
+        monkeypatch.setattr(dbmod, "_segments", listing_then_fold)
+        log = dbs.change_log("t").collect()
+        monkeypatch.undo()
+        assert len(listed[0]) == 3
+        assert len(os.listdir(os.path.join(dbs._path("t"), ".changelog"))) == 1
+        assert [r.seq for r in log] == expected
+        assert [r.op for r in log] == ["write"] * 3
+
+    def test_change_log_runs_no_spark_job(self, spark, tmp_path, spark_jobs):
+        dbs = SerieslyDB(spark, str(tmp_path / "root"))
+        dbs.create("t")
+        for i in range(3):
+            dbs.write("t", '{"k": %d}' % i, ts=f"2024-01-0{i + 1}T00:00:00Z")
+        dbs.compact("t")
+        log, jobs = spark_jobs(lambda: dbs.change_log("t").collect())
+        assert jobs == 0
+        assert [r.op for r in log] == ["write"] * 3 + ["compact"]
 
     def test_clean_log_skips_dedupe_shuffle(self, spark, tmp_path):
         """The round-7 regression guard: an un-stranded log's batch plan
@@ -594,7 +707,7 @@ class TestChangelogFoldCrash:
         files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
         # consolidated file + BOTH old segments still present
         assert len(files) == 3
-        assert _changelog_has_stranded_dups(d, files)
+        assert _log_rows(d) == 3 + 2
         delivered: list[int] = []
         q = (
             dbs.changes_log_stream("t")
@@ -736,11 +849,20 @@ def _docs(dbs):
 
 
 def _leftover_staging(dbs):
+    """Staging left in the store: rewrite directories, and the hidden
+    ``*.tmp`` files of commits, log appends and log folds."""
+    path = dbs._path("t")
+    dirs = [dbs.root, path] + [
+        os.path.join(path, d)
+        for d in os.listdir(path)
+        if d.startswith("date=") or d == ".changelog"
+    ]
     return [
-        d
-        for parent in (dbs.root, dbs._path("t"))
-        for d in os.listdir(parent)
-        if d.startswith((".tmp-", ".trash-"))
+        f
+        for parent in dirs
+        for f in os.listdir(parent)
+        if f.startswith((".tmp-", ".trash-"))
+        or (f.startswith(".") and f.endswith(".tmp"))
     ]
 
 
@@ -816,6 +938,65 @@ class TestDataPlaneRace:
         assert len(dbs._data_files("t")["2024-01-01"]) == 1
         assert _docs(dbs) == ['{"k": 1}', '{"k": 2}', '{"k": 99}']
 
+    def test_get_beside_compact_reads_the_newest_doc(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A second handle compacts the key's partition after ``get``
+        listed its files and before it read them: every listed file is
+        gone, and ``get`` lists again and reads the folded file."""
+        root = str(tmp_path / "root")
+        dbs = SerieslyDB(spark, root)
+        _two_file_day(dbs)
+        k = "2024-01-01T00:00:00Z"
+        dbs.write("t", '{"k": 3}', ts=k)
+        other = SerieslyDB(spark, root)
+        real, listed = dbs._data_files, []
+
+        def listing_then_compact(name, dates=None):
+            out = real(name, dates)
+            if not listed:
+                listed.append(out)
+                other.compact("t")
+            return out
+
+        monkeypatch.setattr(dbs, "_data_files", listing_then_compact)
+        got = dbs.get("t", k)
+        monkeypatch.undo()
+        assert len(listed[0]["2024-01-01"]) == 3
+        assert len(dbs._data_files("t")["2024-01-01"]) == 1
+        assert got == '{"k": 3}'
+
+    def test_get_beside_compact_mid_listing_reads_the_newest_doc(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The compact runs after the listing scanned the partition's
+        directory and before it stat'ed the files: each stat fails, and
+        the compact's output came after the scan. The listing scans
+        again rather than drop the files, which would drop the day."""
+        root = str(tmp_path / "root")
+        dbs = SerieslyDB(spark, root)
+        _two_file_day(dbs)
+        k = "2024-01-01T00:00:00Z"
+        dbs.write("t", '{"k": 3}', ts=k)
+        other = SerieslyDB(spark, root)
+        part = os.path.join(dbs._path("t"), "date=2024-01-01")
+        real, scanned = os.scandir, []
+
+        def scan_then_compact(p):
+            if scanned or not isinstance(p, str) or os.path.abspath(p) != part:
+                return real(p)
+            with real(p) as it:
+                entries = list(it)
+            scanned.append([e.name for e in entries])
+            other.compact("t")
+            return contextlib.nullcontext(iter(entries))
+
+        monkeypatch.setattr(dbmod.os, "scandir", scan_then_compact)
+        got = dbs.get("t", k)
+        monkeypatch.undo()
+        assert len(scanned[0]) == 3
+        assert got == '{"k": 3}'
+
     def test_clean_rewrite_still_succeeds(self, spark, tmp_path):
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
         dbs.create("t")
@@ -859,6 +1040,8 @@ class TestPartitionRewriteSteps:
     every filesystem step they take: a read in between, and a crash."""
 
     DEL = ("2024-01-02T03:30:00Z", "2024-01-02T05:30:00Z")  # keys 4, 5
+    # Key 7 is only in the day's first file, key 8 only in its second.
+    DEL_SPLIT = ("2024-01-02T06:30:00Z", "2024-01-02T08:30:00Z")
 
     def test_read_at_every_compact_step_sees_every_key(
         self, spark, tmp_path, monkeypatch
@@ -878,22 +1061,50 @@ class TestPartitionRewriteSteps:
     def test_read_at_every_delete_step_is_before_or_after(
         self, spark, tmp_path, monkeypatch
     ):
-        """The edge partition is one file (compacted first): a two-file
-        edge unlinks its inputs one at a time, so a read between the two
-        unlinks can see some deleted keys and not others."""
+        """Once with the edge partition compacted to one file first, and
+        once with its two files, each holding one of the deleted keys:
+        ``delete_range`` folds a two-file edge into one file before the
+        drop, so the drop unlinks one input and no read between two
+        unlinks sees one deleted key and not the other."""
+        for compacted, rng in ((True, self.DEL), (False, self.DEL_SPLIT)):
+            root = str(tmp_path / f"root-{compacted}")
+            dbs, live = _store(spark, root)
+            if compacted:
+                dbs.compact("t")
+            counts = []
+            steps = _hook_fs_steps(
+                monkeypatch, root, lambda *_: counts.append(dbs.df("t").count())
+            )
+            dbs.delete_range("t", *rng)
+            monkeypatch.undo()
+            after = dbs.df("t").count()
+            assert after == len(live) - 2
+            assert len(steps) >= 3
+            assert set(counts) <= {len(live), after}, list(zip(counts, steps))
+
+    def test_commit_crash_before_rename_is_swept_by_compact(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A commit that dies before it renames its staged file onto its
+        name (and runs nothing after that) leaves a hidden ``*.tmp`` in a
+        partition that still holds data. ``compact`` removes it; the
+        rows it held were never committed."""
         root = str(tmp_path / "root")
         dbs, live = _store(spark, root)
-        dbs.compact("t")
-        counts = []
-        steps = _hook_fs_steps(
-            monkeypatch, root, lambda *_: counts.append(dbs.df("t").count())
-        )
-        dbs.delete_range("t", *self.DEL)
+
+        def crash(op, path):
+            raise _InjectedCrash(path)
+
+        _hook_fs_steps(monkeypatch, root, crash)
+        with pytest.raises(_InjectedCrash):
+            dbs.write("t", '{"k": 99}', ts="2024-01-01T23:00:00Z")
         monkeypatch.undo()
-        after = dbs.df("t").count()
-        assert after == len(live) - 2
-        assert len(steps) >= 3
-        assert set(counts) <= {len(live), after}, list(zip(counts, steps))
+        reopened = SerieslyDB(spark, root)
+        assert len(_leftover_staging(reopened)) == 1
+        assert _by_key(reopened) == live
+        reopened.compact("t")
+        assert _leftover_staging(reopened) == []
+        assert _by_key(reopened) == live
 
     @pytest.mark.parametrize("op", ["compact", "delete_range"])
     def test_crash_at_every_step_recovers(self, spark, tmp_path, monkeypatch, op):

@@ -259,11 +259,11 @@ class TestIngestAndRead:
         # get reads only its key's day, which is intact.
         assert json.loads(dbs.get("t", "2024-01-02T06:00:00Z")) == {"k": 2}
 
-    def test_get_reads_one_partition_in_one_job(self, dbs, spark_jobs):
+    def test_get_reads_one_partition_with_no_spark_job(self, dbs, spark_jobs):
         self._two_days(dbs)
         doc, jobs = spark_jobs(lambda: dbs.get("t", "2024-01-02T06:00:00Z"))
         assert json.loads(doc) == {"k": 2}
-        assert jobs == 1
+        assert jobs == 0
         assert spark_jobs(lambda: dbs.get("t", "2024-01-03T06:00:00Z")) == (None, 0)
 
     def test_key_just_before_midnight(self, dbs):
@@ -423,7 +423,8 @@ class TestMaintenance:
     def test_rewrite_takes_two_jobs_a_partition(self, dbs, spark_jobs):
         """The one partition rewrite costs 2 Spark jobs: ``compact`` of N
         multi-file partitions takes 2N, and ``delete_range`` with one
-        multi-file edge takes 2."""
+        multi-file edge takes 4: the edge is folded into one file, then
+        rewritten without the range."""
         self._seed_days(dbs, [1, 2, 3])
         dbs.write_batch(
             "t", [(f"2024-01-0{d}T06:00:00Z", _doc(d)) for d in (1, 2, 3)]
@@ -432,7 +433,7 @@ class TestMaintenance:
         assert [len(f) for f in dbs._data_files("t").values()] == [1, 1, 1]
         dbs.write("t", _doc(9), ts="2024-01-02T18:00:00Z")
         edge = "2024-01-02T12:00:00Z"
-        assert spark_jobs(lambda: dbs.delete_range("t", edge, edge)) == (None, 2)
+        assert spark_jobs(lambda: dbs.delete_range("t", edge, edge)) == (None, 4)
         assert [len(f) for f in dbs._data_files("t").values()] == [1, 1, 1]
         assert dbs.df("t").count() == 9
 

@@ -140,6 +140,31 @@ class TestQueryCache:
         assert qc.query("t", other).collect()[0].n == 7
         assert len(os.listdir(cache)) == 2
 
+    def test_directory_is_bounded(self, dbs, tmp_path, monkeypatch):
+        """A sliding panel asks a new range on every slide; each old
+        range's entry is dead. Past ``MAX_CACHED_ENTRIES`` a store
+        unlinks the oldest-written entries, never the one just written."""
+        monkeypatch.setattr(cache_mod, "MAX_CACHED_ENTRIES", 2)
+        cache = tmp_path / "cache"
+        qc = QueryCache(dbs, str(cache))
+
+        def slide(h):
+            return SerieslyQuery(
+                group_ms=3_600_000, fields=[("/v", "sum")], aliases=["s"],
+                from_ts="2024-01-01T00:00:00Z", to_ts=f"2024-01-01T03:00:0{h}Z",
+            )
+
+        for h in range(2 + 3):
+            assert qc.query("t", slide(h)).collect()[0].s == 3.0
+            assert len(os.listdir(cache)) <= 2
+        assert (qc.misses, qc.hits) == (5, 0)
+        assert qc.query("t", slide(4)).collect()[0].s == 3.0
+        assert qc.query("t", slide(3)).collect()[0].s == 3.0
+        assert (qc.misses, qc.hits) == (5, 2)
+        qc.query("t", slide(0))
+        assert (qc.misses, qc.hits) == (6, 2)
+        assert len(os.listdir(cache)) == 2
+
     def test_compact_invalidates(self, dbs, tmp_path):
         # A revision gives the day a second file, which compact rewrites
         # (a one-file day it leaves alone: test_db's no-op compact).
