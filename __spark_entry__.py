@@ -2553,20 +2553,26 @@ def q_c01_cache_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
             fields=[("/k", "count"), ("/k", "sum")],
             aliases=["cnt", "sum_k"],
         )
-        r1 = sorted(map(tuple, cache.query("g", q, exact_sums=True).collect()))
-        r2 = sorted(map(tuple, cache.query("g", q, exact_sums=True).collect()))
+        # A bounded answer comes back as a pyarrow.Table: compare rows.
+        def rows(table):
+            return sorted(tuple(r.values()) for r in table.to_pylist())
+
+        r1 = rows(cache.query("g", q, exact_sums=True))
+        r2 = rows(cache.query("g", q, exact_sums=True))
         identical = r1 == r2
         new_key = max(ns for ns, _ in pairs) + 1_000_000  # +1 ms: fresh key
         dbs.write("g", '{"k": 1}', ts=new_key)
         r3 = cache.query("g", q, exact_sums=True)
-        return r3.select(
+        # The table lives on the driver: the frame does not read the
+        # scratch dir removed below.
+        return spark.createDataFrame(r3).select(
             "bucket_ms",
             "cnt",
             F.round("sum_k", 6).alias("sum_k"),
             F.lit(cache.hits).cast("long").alias("hits"),
             F.lit(cache.misses).cast("long").alias("misses"),
             F.lit(identical).alias("hit_identical"),
-        ).localCheckpoint()  # materialize before the scratch dir is removed
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

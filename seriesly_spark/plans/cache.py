@@ -23,14 +23,16 @@ reader checks the stamp from the schema in the file footer before it
 reads any record batch: a stale or missing entry is a miss.
 
 Here the key hashes the query spec and sum mode, and the stamp is the
-database version. A hit reads the entry on the driver with pyarrow and
-returns ``createDataFrame`` of the table: a local relation whose
-``collect()`` launches no Spark job. A miss computes the answer once with
-``toArrow()``, stores it and returns the same kind of local DataFrame.
-An answer of more than ``MAX_CACHED_ROWS`` rows is not cached; the miss
-returns the lazy query plan instead, so the driver never holds more than
-that many rows for the cache. A store that leaves more than
-``MAX_CACHED_ENTRIES`` entries in the directory unlinks the
+database version. A bounded answer is a ``pyarrow.Table``, which
+``plans/emit.py`` renders straight to wire text. A hit returns the
+stored table, read on the driver with pyarrow and without its version
+stamp: no ``createDataFrame``, no py4j call and no Spark job. A miss
+takes the answer once with ``limit(MAX_CACHED_ROWS + 1).toArrow()``,
+stores it and returns that same table, so a hit and the miss that
+filled it return equal tables. An answer of more than ``MAX_CACHED_ROWS``
+rows is not cached; the miss returns the lazy query plan instead, so the
+driver never holds more than that many rows for the cache. A store that
+leaves more than ``MAX_CACHED_ENTRIES`` entries in the directory unlinks the
 oldest-written ones, never the entry it just wrote: an entry whose
 shape is not asked again (a sliding panel's old range) would otherwise
 stay on disk for good.
@@ -43,7 +45,7 @@ import hashlib
 import os
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from seriesly_spark.db import SerieslyDB, publish
 from seriesly_spark.plans.query import SerieslyQuery, py_parse_ts_ns
@@ -127,15 +129,6 @@ def write_entry(path: str, table: pa.Table, version: str) -> None:
     publish(path, write)
 
 
-def _local_df(spark: SparkSession, table: pa.Table) -> DataFrame:
-    # An empty answer, from toArrow() or read back from IPC, can have no
-    # chunks, and PySpark 4.1's createDataFrame fails on a nested (list)
-    # column without chunks.
-    if table.num_rows == 0:
-        table = table.schema.empty_table()
-    return spark.createDataFrame(table)
-
-
 class QueryCache:
     def __init__(self, dbs: SerieslyDB, cache_dir: str):
         self.dbs = dbs
@@ -144,19 +137,21 @@ class QueryCache:
         self.hits = 0
         self.misses = 0
 
-    def query(self, name: str, q: SerieslyQuery, exact_sums: bool = False) -> DataFrame:
+    def query(
+        self, name: str, q: SerieslyQuery, exact_sums: bool = False
+    ) -> pa.Table | DataFrame:
         """Memoized ``SerieslyDB.query``: identical query + unchanged
-        database -> served from the cache entry (no Spark job); any
+        database -> the cache entry's table (no Spark job); any
         write/delete/compact -> recompute (miss falls through to
         compute-and-store, like the reference's GET-miss path,
-        cache.go:54-155)."""
+        cache.go:54-155). An answer over ``MAX_CACHED_ROWS`` rows comes
+        back as the lazy plan."""
         path = entry_path(self.cache_dir, _query_shape(name, q, exact_sums))
         version = db_version(self.dbs, name)
-        spark = self.dbs.spark
         entry = read_entry(path, version)
         if entry is not None:
             self.hits += 1
-            return _local_df(spark, entry.read_all())
+            return entry.read_all().replace_schema_metadata(None)
         self.misses += 1
         res = self.dbs.query(name, q, exact_sums=exact_sums)
         table = res.limit(MAX_CACHED_ROWS + 1).toArrow()
@@ -164,7 +159,7 @@ class QueryCache:
             return res
         write_entry(path, table, version)
         self._evict(keep=path)
-        return _local_df(spark, table)
+        return table
 
     def _evict(self, keep: str) -> None:
         """Unlink the oldest-written entries, never ``keep``, until at

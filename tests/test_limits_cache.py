@@ -7,6 +7,7 @@ from datetime import datetime, timezone
 
 import pyarrow as pa
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from seriesly_spark.db import SerieslyDB
@@ -43,6 +44,11 @@ class TestTimeout:
         assert not isinstance(ei.value, QueryTimeout)
 
 
+def _rows(df):
+    """A plan's collected rows as the dicts a table's ``to_pylist()`` gives."""
+    return [r.asDict() for r in df.collect()]
+
+
 class TestQueryCache:
     @pytest.fixture()
     def dbs(self, spark, tmp_path):
@@ -67,19 +73,19 @@ class TestQueryCache:
 
     def test_hit_after_miss(self, dbs, tmp_path):
         qc = QueryCache(dbs, str(tmp_path / "cache"))
-        r1 = qc.query("t", self._q()).collect()
-        r2 = qc.query("t", self._q()).collect()
+        r1 = qc.query("t", self._q()).to_pylist()
+        r2 = qc.query("t", self._q()).to_pylist()
         assert (qc.misses, qc.hits) == (1, 1)
         assert r1 == r2
-        assert r1[0].s == 3.0
+        assert r1[0]["s"] == 3.0
 
     def test_write_invalidates(self, dbs, tmp_path):
         qc = QueryCache(dbs, str(tmp_path / "cache"))
         v0 = db_version(dbs, "t")
-        assert qc.query("t", self._q()).collect()[0].s == 3.0
+        assert qc.query("t", self._q()).to_pylist()[0]["s"] == 3.0
         dbs.write("t", json.dumps({"v": 10}), ts="2024-01-01T00:20:00Z")
         assert db_version(dbs, "t") != v0
-        assert qc.query("t", self._q()).collect()[0].s == 13.0
+        assert qc.query("t", self._q()).to_pylist()[0]["s"] == 13.0
         assert (qc.misses, qc.hits) == (2, 0)
 
     def test_different_query_different_entry(self, dbs, tmp_path):
@@ -88,7 +94,7 @@ class TestQueryCache:
         q2 = SerieslyQuery(
             group_ms=3_600_000, fields=[("/v", "count")], aliases=["n"]
         )
-        assert qc.query("t", q2).collect()[0].n == 2
+        assert qc.query("t", q2).to_pylist()[0]["n"] == 2
         assert (qc.misses, qc.hits) == (2, 0)
 
     def test_field_order_is_part_of_the_key(self, dbs, tmp_path):
@@ -97,16 +103,16 @@ class TestQueryCache:
         qc = QueryCache(dbs, str(tmp_path / "cache"))
         for fields in ([("/v", "sum"), ("/v", "max")], [("/v", "max"), ("/v", "sum")]):
             q = SerieslyQuery(group_ms=3_600_000, fields=fields, aliases=["f0", "f1"])
-            assert qc.query("t", q).collect() == dbs.query("t", q).collect()
+            assert qc.query("t", q).to_pylist() == _rows(dbs.query("t", q))
         assert (qc.misses, qc.hits) == (2, 0)
 
     def test_commit_without_data_change_keeps_entries(self, dbs, tmp_path):
         # A delete over days that hold no partition commits a log segment
         # but changes no data file, so the entry still answers.
         qc = QueryCache(dbs, str(tmp_path / "cache"))
-        want = qc.query("t", self._q()).collect()
+        want = qc.query("t", self._q())
         dbs.delete_range("t", "2023-06-01", "2023-06-03")
-        assert qc.query("t", self._q()).collect() == want
+        assert qc.query("t", self._q()).equals(want, check_metadata=True)
         assert (qc.misses, qc.hits) == (1, 1)
 
     def test_one_day_append_changes_one_partition_version(self, dbs, tmp_path):
@@ -134,10 +140,10 @@ class TestQueryCache:
         for i, s in enumerate((3.0, 13.0, 33.0)):
             if i:
                 dbs.write("t", json.dumps({"v": 10 * i}), ts=f"2024-01-01T00:2{i}:00Z")
-            assert qc.query("t", self._q()).collect()[0].s == s
+            assert qc.query("t", self._q()).to_pylist()[0]["s"] == s
             assert len(os.listdir(cache)) == 2
         assert (qc.misses, qc.hits) == (4, 0)
-        assert qc.query("t", other).collect()[0].n == 7
+        assert qc.query("t", other).to_pylist()[0]["n"] == 7
         assert len(os.listdir(cache)) == 2
 
     def test_directory_is_bounded(self, dbs, tmp_path, monkeypatch):
@@ -155,11 +161,11 @@ class TestQueryCache:
             )
 
         for h in range(2 + 3):
-            assert qc.query("t", slide(h)).collect()[0].s == 3.0
+            assert qc.query("t", slide(h)).to_pylist()[0]["s"] == 3.0
             assert len(os.listdir(cache)) <= 2
         assert (qc.misses, qc.hits) == (5, 0)
-        assert qc.query("t", slide(4)).collect()[0].s == 3.0
-        assert qc.query("t", slide(3)).collect()[0].s == 3.0
+        assert qc.query("t", slide(4)).to_pylist()[0]["s"] == 3.0
+        assert qc.query("t", slide(3)).to_pylist()[0]["s"] == 3.0
         assert (qc.misses, qc.hits) == (5, 2)
         qc.query("t", slide(0))
         assert (qc.misses, qc.hits) == (6, 2)
@@ -196,8 +202,8 @@ class TestQueryCache:
         q = SerieslyQuery(group_ms=3_600_000, fields=[field], aliases=["x"])
         answers = []
         for kwargs in (first, second):
-            want = d.query("t", q, **kwargs).collect()
-            assert qc.query("t", q, **kwargs).collect() == want
+            want = _rows(d.query("t", q, **kwargs))
+            assert qc.query("t", q, **kwargs).to_pylist() == want
             answers.append(want)
         assert answers[0] != answers[1]
         assert (qc.misses, qc.hits) == (2, 0)
@@ -214,12 +220,12 @@ class TestQueryCache:
             qc.query(
                 "t", SerieslyQuery(group_ms=3_600_000, fields=[("/v", "sum")],
                                    aliases=["s"], from_ts=lo, to_ts=hi)
-            ).collect()
+            ).to_pylist()
             for lo, hi in forms
         ]
         assert answers[0] == answers[1]
-        assert sorted((r.bucket_ms, r.s) for r in answers[0])[0][1] == 2.0
-        assert [r.s for r in answers[0]] == [2.0, 11.0, 9.5]
+        assert sorted((r["bucket_ms"], r["s"]) for r in answers[0])[0][1] == 2.0
+        assert [r["s"] for r in answers[0]] == [2.0, 11.0, 9.5]
         assert (qc.misses, qc.hits) == (1, 1)
 
     PANELS = {
@@ -233,7 +239,7 @@ class TestQueryCache:
     }
 
     @pytest.mark.parametrize("panel", sorted(PANELS))
-    def test_hit_is_jobless_and_equals_fill(self, dbs, tmp_path, panel, spark_jobs):
+    def test_hit_is_jobless_and_equals_fill(self, dbs, tmp_path, panel, spark_jobs, monkeypatch):
         spec = self.PANELS[panel]
         q = SerieslyQuery(
             group_ms=3_600_000,
@@ -244,18 +250,38 @@ class TestQueryCache:
         miss = qc.query("t", q)
         fill = to_seriesly_json(miss, q.aliases)
 
+        def no_jvm_call(*a, **k):
+            raise AssertionError("a cache hit called into the JVM")
+
+        client = dbs.spark.sparkContext._gateway._gateway_client
+        send, calls = client.send_command, []
+
+        def counting(command, *a, **k):
+            if not command.startswith("m\nd\n"):  # not a proxy-GC delete
+                calls.append(command)
+            return send(command, *a, **k)
+
         def serve():
-            df = qc.query("t", q)
-            return df, to_seriesly_json(df, q.aliases)
+            # A hit renders its stored table with no py4j call at all.
+            with monkeypatch.context() as m:
+                m.setattr(dbs.spark, "createDataFrame", no_jvm_call)
+                m.setattr(DataFrame, "collect", no_jvm_call)
+                m.setattr(client, "send_command", counting)
+                table = qc.query("t", q)
+                return table, to_seriesly_json(table, q.aliases)
 
         (hit, text), jobs = spark_jobs(serve)
         assert jobs == 0
+        assert calls == []
         assert (qc.misses, qc.hits) == (1, 1)
         # Rate sums differ in the last bits between separate uncached
         # runs, so the hit is compared with the miss that filled it.
         assert text == fill
         assert (text == "{}") == (panel == "empty")
-        assert miss.dtypes == hit.dtypes == dbs.query("t", q).dtypes
+        assert hit.equals(miss, check_metadata=True)
+        assert miss.schema.equals(
+            dbs.query("t", q).limit(0).toArrow().schema, check_metadata=True
+        )
 
     def test_failed_write_leaves_no_entry(self, dbs, tmp_path, monkeypatch):
         real_new_file = pa.ipc.new_file
@@ -283,7 +309,7 @@ class TestQueryCache:
             qc.query("t", self._q())
         assert os.listdir(cache) == []
         monkeypatch.undo()
-        assert qc.query("t", self._q()).collect()[0].s == 3.0
+        assert qc.query("t", self._q()).to_pylist()[0]["s"] == 3.0
         assert (qc.misses, qc.hits) == (2, 0)
 
     def test_answer_over_row_cap_is_not_cached(self, dbs, tmp_path, monkeypatch):
