@@ -2,7 +2,7 @@
 """Compact-versus-read race probe for ``SerieslyDB``.
 
 A store of 120 keys over 5 days is written once. One writer thread then
-loops: a batch of new revisions of every key, then ``compact``. Three
+loops: a batch of new revisions of every key, then ``compact``. Four
 reader threads loop against it, each with one kind of read:
 
 * ``count``: ``df().count()``. The live key count never changes, so it
@@ -13,6 +13,12 @@ reader threads loop against it, each with one kind of read:
 * ``change_log``: ``change_log()``. It is wrong unless it holds each seq
   once, in order, and at least every commit (batch or compact) finished
   before the read started, and no more than were started by its end.
+* ``cache_count``: a per-day count panel through ``QueryCache``. It is
+  wrong unless every day counts 24 keys. Each day is one cache unit; a
+  reused unit is a stored entry whose stamp was current. The line also
+  counts the units reused and those of them whose stored answer was
+  wrong: a wrong answer from a fresh compute is the count reader's race,
+  but a reused unit must never be wrong.
 
 A read either returns such an answer, raises (an error), or returns
 another one (a wrong answer, with no error).
@@ -20,7 +26,8 @@ another one (a wrong answer, with no error).
 Usage: python scripts/race_compact_read.py SECONDS
 
 Prints one line per reader: reads, errors, wrong answers and the wrong
-values seen (at most five), then the number of compactions the writer
+values seen (at most five), then the units the cache reader reused and
+how many of those were wrong, then the number of compactions the writer
 finished.
 """
 from __future__ import annotations
@@ -35,10 +42,13 @@ import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from seriesly_spark import SerieslyDB  # noqa: E402
+from seriesly_spark import SerieslyDB, SerieslyQuery  # noqa: E402
+from seriesly_spark.plans import cache as cache_mod  # noqa: E402
 from seriesly_spark.session import get_spark  # noqa: E402
 
 DAYS, PER_DAY = 5, 24
+DAY_MS = 86_400_000
+DAY0_MS = 1_704_067_200_000  # 2024-01-01
 
 
 def main() -> None:
@@ -97,7 +107,30 @@ def main() -> None:
         ok = seqs == sorted(set(seqs)) and lo <= len(seqs) <= hi
         return None if ok else (lo, len(seqs), len(set(seqs)), hi)
 
-    readers = {"count": count, "get": get, "change_log": change_log}
+    qc = cache_mod.QueryCache(dbs, os.path.join(root, ".query-cache"))
+    panel = SerieslyQuery(group_ms=DAY_MS, fields=[("/rev", "count")], aliases=["n"])
+    want = [{"bucket_ms": DAY0_MS + d * DAY_MS, "n": PER_DAY} for d in range(DAYS)]
+    reused = {"units": 0, "wrong": 0}
+    reuse = qc._reuse
+
+    def checked_reuse(unit):
+        # The cache asks this for each unit's table: one that comes back
+        # is from an entry whose stamp is current, and is reused as it is.
+        table = reuse(unit)
+        if table is not None:
+            rows = table.to_pylist()
+            reused["units"] += 1
+            reused["wrong"] += not (len(rows) == 1 and rows[0] in want)
+        return table
+
+    qc._reuse = checked_reuse
+
+    def cache_count() -> object:
+        rows = qc.query("t", panel).to_pylist()
+        return None if rows == want else tuple((r["bucket_ms"], r["n"]) for r in rows)
+
+    readers = {"count": count, "get": get, "change_log": change_log,
+               "cache_count": cache_count}
     stats = {name: [0, 0, collections.Counter()] for name in readers}
 
     def loop(name: str) -> None:
@@ -130,6 +163,10 @@ def main() -> None:
             f"wrong {sum(wrong.values())} wrong_values {shown}",
             flush=True,
         )
+    print(
+        f"cache_count: units reused {reused['units']} wrong {reused['wrong']}",
+        flush=True,
+    )
     print(f"seconds {seconds:g} compactions {compactions[0]}", flush=True)
     spark.stop()
     shutil.rmtree(root, ignore_errors=True)

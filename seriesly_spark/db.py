@@ -521,13 +521,21 @@ class SerieslyDB:
 
     # -- Maintenance (S6/S7/S9) --------------------------------------------
 
-    def _partitions(self, name: str) -> list[str]:
+    def _partitions(
+        self, name: str, first: str | None = None, last: str | None = None
+    ) -> list[str]:
+        """The ``date=`` partition directories, sorted; only those of the
+        dates ``first`` to ``last`` (ISO dates, inclusive; None is open)
+        when given."""
         path = self._path(name)
         if not os.path.isdir(path):
             raise KeyError(f"no such db: {name}")
         return sorted(
             d for d in os.listdir(path)
-            if d.startswith("date=") and os.path.isdir(os.path.join(path, d))
+            if d.startswith("date=")
+            and (first is None or d[len("date="):] >= first)
+            and (last is None or d[len("date="):] <= last)
+            and os.path.isdir(os.path.join(path, d))
         )
 
     def _data_files(
@@ -572,13 +580,17 @@ class SerieslyDB:
                 out[d] = sorted(files)
         return out
 
-    def _partition_versions(self, name: str) -> dict[str, str]:
-        """date -> fingerprint of the partition's file listing. A commit
+    def _partition_versions(
+        self, name: str, first: str | None = None, last: str | None = None
+    ) -> dict[str, str]:
+        """date -> fingerprint of the partition's file listing, for the
+        dates ``first`` to ``last`` (as :meth:`_partitions`). A commit
         changes the fingerprint of exactly the partitions it writes,
         rewrites or drops; the commit log is not part of it."""
+        dates = [p[len("date="):] for p in self._partitions(name, first, last)]
         return {
             d: hashlib.md5(json.dumps(files).encode()).hexdigest()
-            for d, files in self._data_files(name).items()
+            for d, files in self._data_files(name, dates).items()
         }
 
     def _footer_rows(
@@ -915,10 +927,15 @@ class SerieslyDB:
     # -- Query (the §3.1 analytical path) -----------------------------------
 
     def query(
-        self, name: str, q: SerieslyQuery, exact_sums: bool = False
+        self, name: str, q: SerieslyQuery, exact_sums: bool = False,
+        dates: list[str] | None = None,
     ) -> DataFrame:
-        """The `GET /db/_query` equivalent over the live LWW view."""
-        src = self.df(name, q.from_ts, q.to_ts)
+        """The `GET /db/_query` equivalent over the live LWW view, of the
+        ``dates`` partitions only when given (``QueryCache`` computes
+        just the dates it lacks)."""
+        lo = None if q.from_ts is None else py_parse_ts_ns(q.from_ts)
+        hi = None if q.to_ts is None else py_parse_ts_ns(q.to_ts)
+        src = self._live(name, lo, hi, dates)
         # The view already holds only the range's keys: the compiler need
         # not filter it a second time.
         unbounded = dataclasses.replace(q, from_ts=None, to_ts=None)

@@ -1,17 +1,54 @@
 """Query-result memoization (C1) — the reference's memcached bucket cache,
-re-expressed storage-side.
+re-expressed storage-side, one date partition at a time.
 
 The reference keys cached per-bucket results on
 ``db # bucket # fnv64(doc-ids + ptrs + reducers + filters)`` (reference
 cache.go:157-172) — i.e. the cache entry is valid exactly while the bucket's
-document set is unchanged. Here the whole result is memoized keyed on
-(query spec, sum mode) and stamped with the database version it answers, a
-hash of the per-partition fingerprints of the data-file listing
-(``SerieslyDB._data_files``): any append, delete or compaction that
-changes a data file changes the version and invalidates every cached
-result, which is the same correctness contract without per-bucket
-bookkeeping. The commit log is not part of the version, so a commit that
-changes no data file (a ``delete_range`` over empty days) keeps the entries.
+document set is unchanged, and a panel that slides one bucket recomputes
+one bucket. Here the unit of reuse is the store's own unit of change, the
+``date=`` partition. An entry answers one *unit* of a query *shape* (the
+query without its range: group, fields, filters, aliases, sum mode) and
+is stamped with the fingerprint of the partition it covers
+(``SerieslyDB._partition_versions``, a hash of the partition's data-file
+listing). A commit, delete or compaction moves the fingerprints of exactly
+the dates it touches, so it makes stale exactly their entries. The commit
+log is not part of a fingerprint: a commit that changes no data file (a
+``delete_range`` over empty days) keeps the entries.
+
+The unit rule. When ``group_ms`` divides a day and no field is a rate
+reducer, a bucket never straddles a date (buckets are aligned to the
+epoch, and so to every midnight), and every plain and list reducer, and
+every filter, sees only the documents of its own bucket. The answer over
+a range is then the concatenation of the answers over the range's dates,
+with no merge algebra: each date present in the range is one unit.
+
+* An interior date is the whole date.
+* An edge date whose clip of the range starts and ends on bucket
+  boundaries is the whole date too: the whole-date entry, cut to the
+  range's buckets, is exact, because the cut drops only whole buckets
+  that lie outside the range.
+* An unaligned edge is its own unit, keyed on its clip.
+
+Anything else is one whole-range unit keyed on the range: a rate shape
+(a rate pair crosses into the next bucket, so the next date), a
+``group_ms`` that does not divide a day, or a range that touches no
+partition. Its stamp hashes the fingerprints of the dates in the range,
+not of the whole database.
+
+A query reads the fingerprints of the dates in its range once
+(:func:`db_version`), before any compute, so an entry is never stamped
+newer than the data it was computed from. It computes every missing or
+stale unit in one Spark plan over just their dates
+(``SerieslyDB.query(..., dates=)``), splits that plan's ``toArrow()``
+table per unit on the driver, stores each unit, and returns the
+concatenated, range-cut table. A query whose units are all current runs
+no Spark job and makes no py4j call: it reads its entries on the driver
+with pyarrow. A ``QueryCache`` keeps the table of each entry it wrote or
+read while the entry's file is unchanged (one ``stat`` a unit), so a
+panel over many dates does not open a file per date on every hit.
+``hits`` and ``misses`` count whole queries: a hit reused every unit,
+and a query that computed any unit, even one of many, is a miss.
+``units_reused`` and ``units_computed`` count units.
 
 Both this cache and the continuous rollup (``plans/rollup.py``) keep
 their entries by one rule, :func:`write_entry` and :func:`read_entry`:
@@ -22,68 +59,123 @@ whole entry or none, and a key's new entry retires its old one. A
 reader checks the stamp from the schema in the file footer before it
 reads any record batch: a stale or missing entry is a miss.
 
-Here the key hashes the query spec and sum mode, and the stamp is the
-database version. A bounded answer is a ``pyarrow.Table``, which
-``plans/emit.py`` renders straight to wire text. A hit returns the
-stored table, read on the driver with pyarrow and without its version
-stamp: no ``createDataFrame``, no py4j call and no Spark job. A miss
-takes the answer once with ``limit(MAX_CACHED_ROWS + 1).toArrow()``,
-stores it and returns that same table, so a hit and the miss that
-filled it return equal tables. An answer of more than ``MAX_CACHED_ROWS``
-rows is not cached; the miss returns the lazy query plan instead, so the
-driver never holds more than that many rows for the cache. A store that
-leaves more than ``MAX_CACHED_ENTRIES`` entries in the directory unlinks the
-oldest-written ones, never the entry it just wrote: an entry whose
-shape is not asked again (a sliding panel's old range) would otherwise
-stay on disk for good.
+A bounded answer is a ``pyarrow.Table``, which ``plans/emit.py`` renders
+straight to wire text; a hit and the miss that filled it return equal
+tables. The units a miss computes are taken once with
+``limit(MAX_CACHED_ROWS + 1).toArrow()``. If that is more than
+``MAX_CACHED_ROWS`` rows nothing is stored, and the miss returns the lazy
+plan of the whole query instead, so the driver never holds more than
+that many rows for the cache. A store that leaves more than
+``MAX_CACHED_ENTRIES`` entries in the directory unlinks the oldest-written
+ones, never one of the query's own units: an entry whose unit is not
+asked again (a sliding panel's old unaligned edge) would otherwise stay
+on disk for good.
 """
 
 from __future__ import annotations
 
 import contextlib
+import dataclasses
+import datetime
 import hashlib
 import os
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-from seriesly_spark.db import SerieslyDB, publish
+from seriesly_spark.db import SerieslyDB, _ns_date, publish
+from seriesly_spark.operators.reducers import REDUCERS
 from seriesly_spark.plans.query import SerieslyQuery, py_parse_ts_ns
 
-# Largest answer (in rows: one per bucket) a cache entry holds.
+# Largest answer (in rows: one per bucket) that one miss stores.
 MAX_CACHED_ROWS = 100_000
 # Most entries a QueryCache directory keeps: a store past it unlinks the
 # oldest-written ones.
 MAX_CACHED_ENTRIES = 256
 
+_NS_PER_MS = 1_000_000
+_DAY_MS = 86_400_000
+_DAY_NS = _DAY_MS * _NS_PER_MS
+_EPOCH_DAY = datetime.date(1970, 1, 1).toordinal()
 
-def _query_shape(name: str, q: SerieslyQuery, exact_sums: bool) -> str:
-    parts = [
-        name,
+
+def _query_shape(dbs: SerieslyDB, name: str, q: SerieslyQuery, exact_sums: bool) -> str:
+    """The query without its range: what all of its units share."""
+    return "\x01".join([
+        dbs._path(name),
         str(q.group_ms),
         # Fields in order: output column i is field i's answer. Filters
         # are a conjunction, so their order does not change the answer.
         repr(q.fields),
         repr(sorted(q.filters)),
-        # One instant, however it is written; None is an open bound.
-        *(
-            repr(None if ts is None else py_parse_ts_ns(ts))
-            for ts in (q.from_ts, q.to_ts)
-        ),
         repr(q.aliases),
         repr(exact_sums),
-    ]
-    return hashlib.sha256("\x01".join(parts).encode()).hexdigest()[:32]
+    ])
 
 
-def db_version(dbs: SerieslyDB, name: str) -> str:
-    """Cheap change detector: a hash of the database's path and its
-    per-partition data-file fingerprints (appends add files;
-    delete/compact remove or replace them)."""
-    h = hashlib.sha256(dbs._path(name).encode())
-    for d, fp in sorted(dbs._partition_versions(name).items()):
-        h.update(f"\x00{d}={fp}".encode())
-    return h.hexdigest()[:16]
+def db_version(
+    dbs: SerieslyDB, name: str, first: str | None = None, last: str | None = None
+) -> dict[str, str]:
+    """What entry stamps are checked against: date -> fingerprint of that
+    partition's data-file listing, for the dates ``first`` to ``last``
+    (ISO dates, inclusive; None is open). Appends add files; delete and
+    compact remove or replace them; each moves only the dates it
+    touches."""
+    return dbs._partition_versions(name, first, last)
+
+
+@dataclasses.dataclass(frozen=True)
+class _Unit:
+    path: str  # its entry
+    stamp: str  # the fingerprint its entry must carry
+    lo: int | None  # the inclusive ns range it answers; None is open
+    hi: int | None
+    date: str | None  # its partition; None for a whole-range unit
+
+
+def _units(
+    cache_dir: str, shape: str, q: SerieslyQuery, lo: int | None, hi: int | None,
+    versions: dict[str, str],
+) -> list[_Unit]:
+    """The units of query ``q`` over ns keys ``[lo, hi]``, in date order
+    (the module docstring's rule), stamped from ``versions``: the
+    fingerprints of the dates in that range."""
+    dates = sorted(versions)
+
+    def unit(a: int | None, b: int | None, stamp: str, date: str | None) -> _Unit:
+        key = hashlib.sha256(f"{shape}\x01{a!r}\x01{b!r}".encode()).hexdigest()[:32]
+        return _Unit(entry_path(cache_dir, key), stamp, a, b, date)
+
+    rate = any(r in REDUCERS and REDUCERS[r].kind == "rate" for _, r in q.fields)
+    if rate or q.group_ms <= 0 or _DAY_MS % q.group_ms or not dates:
+        stamp = hashlib.sha256(repr([(d, versions[d]) for d in dates]).encode())
+        return [unit(lo, hi, stamp.hexdigest()[:32], None)]
+    g = q.group_ms * _NS_PER_MS
+    units = []
+    for d in dates:
+        d0 = (datetime.date.fromisoformat(d).toordinal() - _EPOCH_DAY) * _DAY_NS
+        d1 = d0 + _DAY_NS - 1
+        a = d0 if lo is None else max(lo, d0)
+        b = d1 if hi is None else min(hi, d1)
+        if a % g == 0 and (b + 1) % g == 0:
+            a, b = d0, d1  # whole buckets: the whole date, cut on use
+        units.append(unit(a, b, versions[d], d))
+    return units
+
+
+def _cut(table: pa.Table, group_ms: int, lo: int | None, hi: int | None) -> pa.Table:
+    """The rows of ``table`` whose bucket holds some ns key in
+    ``[lo, hi]`` (None is open)."""
+    g = group_ms * _NS_PER_MS
+    col, keep = table.column("bucket_ms"), []
+    if lo is not None:
+        keep.append(pc.greater_equal(col, lo // g * group_ms))
+    if hi is not None:
+        keep.append(pc.less_equal(col, hi // g * group_ms))
+    if not keep:
+        return table
+    return table.filter(keep[0] if len(keep) == 1 else pc.and_(*keep))
 
 
 # Schema-metadata key of the version an entry answers.
@@ -117,6 +209,11 @@ def read_entry(
     return entry
 
 
+def _file_identity(path: str) -> tuple[int, int, int]:
+    st = os.stat(path)
+    return st.st_ino, st.st_mtime_ns, st.st_size
+
+
 def write_entry(path: str, table: pa.Table, version: str) -> None:
     """Store ``table`` at ``path`` stamped ``version``, published whole
     (:func:`seriesly_spark.db.publish`)."""
@@ -134,45 +231,126 @@ class QueryCache:
         self.dbs = dbs
         self.cache_dir = cache_dir
         os.makedirs(cache_dir, exist_ok=True)
+        # Whole queries: a hit ran no Spark job; a query that computed
+        # any of its units is a miss.
         self.hits = 0
         self.misses = 0
+        # Units, over all queries: read from a current entry, or computed.
+        self.units_reused = 0
+        self.units_computed = 0
+        # Entry path -> (file identity, stamp, table) of the entries this
+        # cache wrote or read, at most MAX_CACHED_ENTRIES of them.
+        self._tables: dict[str, tuple[tuple[int, int, int], str, pa.Table]] = {}
 
     def query(
         self, name: str, q: SerieslyQuery, exact_sums: bool = False
     ) -> pa.Table | DataFrame:
-        """Memoized ``SerieslyDB.query``: identical query + unchanged
-        database -> the cache entry's table (no Spark job); any
-        write/delete/compact -> recompute (miss falls through to
-        compute-and-store, like the reference's GET-miss path,
-        cache.go:54-155). An answer over ``MAX_CACHED_ROWS`` rows comes
-        back as the lazy plan."""
-        path = entry_path(self.cache_dir, _query_shape(name, q, exact_sums))
-        version = db_version(self.dbs, name)
-        entry = read_entry(path, version)
-        if entry is not None:
+        """Memoized ``SerieslyDB.query``: every unit of the query current
+        -> the entries' table (no Spark job); any unit missing or stale
+        (a write, delete or compact of its date) -> those units are
+        recomputed in one plan and stored (the reference's GET-miss
+        path, cache.go:54-155). An answer whose computed units hold more
+        than ``MAX_CACHED_ROWS`` rows comes back as the query's lazy
+        plan."""
+        shape = _query_shape(self.dbs, name, q, exact_sums)
+        lo = None if q.from_ts is None else py_parse_ts_ns(q.from_ts)
+        hi = None if q.to_ts is None else py_parse_ts_ns(q.to_ts)
+        versions = db_version(
+            self.dbs, name,
+            None if lo is None else _ns_date(lo), None if hi is None else _ns_date(hi),
+        )
+        units = _units(self.cache_dir, shape, q, lo, hi, versions)
+        tables: dict[_Unit, pa.Table] = {}
+        for u in units:
+            table = self._reuse(u)
+            if table is not None:
+                tables[u] = table
+        missing = [u for u in units if u not in tables]
+        self.units_reused += len(tables)
+        self.units_computed += len(missing)
+        if not missing:
             self.hits += 1
-            return entry.read_all().replace_schema_metadata(None)
-        self.misses += 1
-        res = self.dbs.query(name, q, exact_sums=exact_sums)
-        table = res.limit(MAX_CACHED_ROWS + 1).toArrow()
-        if table.num_rows > MAX_CACHED_ROWS:
-            return res
-        write_entry(path, table, version)
-        self._evict(keep=path)
-        return table
+        else:
+            self.misses += 1
+            fresh = self._compute(name, q, exact_sums, missing, lo, hi)
+            if fresh is None:
+                return self.dbs.query(name, q, exact_sums=exact_sums)
+            tables.update(fresh)
+            self._evict(keep={u.path for u in units})
+        answer = pa.concat_tables([tables[u] for u in units])
+        return _cut(answer, q.group_ms, lo, hi)
 
-    def _evict(self, keep: str) -> None:
-        """Unlink the oldest-written entries, never ``keep``, until at
-        most ``MAX_CACHED_ENTRIES`` are left."""
+    def _reuse(self, u: _Unit) -> pa.Table | None:
+        """The table of ``u``'s entry if it is stamped ``u.stamp``, else
+        None. A table this cache wrote or read is kept while the entry's
+        name still holds the same file (inode, mtime and size): a new
+        entry is renamed onto the name and an evicted one unlinked, and
+        either shows in a ``stat``. So a hit reads no entry file twice,
+        and an entry is still a miss once it is gone from the directory."""
+        try:
+            ident = _file_identity(u.path)
+        except FileNotFoundError:
+            self._tables.pop(u.path, None)
+            return None
+        kept = self._tables.get(u.path)
+        if kept is None or kept[0] != ident:
+            entry = read_entry(u.path, u.stamp)
+            if entry is None:
+                return None
+            kept = (ident, u.stamp, entry.read_all().replace_schema_metadata(None))
+            self._keep(u.path, kept)
+        return kept[2] if kept[1] == u.stamp else None
+
+    def _keep(self, path: str, kept: tuple) -> None:
+        self._tables.pop(path, None)
+        self._tables[path] = kept
+        if len(self._tables) > MAX_CACHED_ENTRIES:
+            del self._tables[next(iter(self._tables))]
+
+    def _compute(
+        self, name: str, q: SerieslyQuery, exact_sums: bool, missing: list[_Unit],
+        lo: int | None, hi: int | None,
+    ) -> dict[_Unit, pa.Table] | None:
+        """Answer the ``missing`` units of ``q`` (over ns keys ``[lo,
+        hi]``) in one Spark plan and store each; None when that answer
+        is over ``MAX_CACHED_ROWS`` rows. Date units are computed over
+        just their dates, with a range bound only where the first or
+        last of them is an edge clip: each unit is its date's part of
+        that range."""
+        dates = None
+        if missing[0].date is not None:
+            dates = [u.date for u in missing]
+            q = dataclasses.replace(
+                q,
+                from_ts=q.from_ts if missing[0].lo == lo else None,
+                to_ts=q.to_ts if missing[-1].hi == hi else None,
+            )
+        table = (
+            self.dbs.query(name, q, exact_sums=exact_sums, dates=dates)
+            .limit(MAX_CACHED_ROWS + 1).toArrow()
+        )
+        if table.num_rows > MAX_CACHED_ROWS:
+            return None
+        fresh = {}
+        for u in missing:
+            fresh[u] = table if u.date is None else _cut(table, q.group_ms, u.lo, u.hi)
+            write_entry(u.path, fresh[u], u.stamp)
+            self._keep(u.path, (_file_identity(u.path), u.stamp, fresh[u]))
+        return fresh
+
+    def _evict(self, keep: set[str]) -> None:
+        """Unlink the oldest-written entries, none in ``keep``, until at
+        most ``MAX_CACHED_ENTRIES`` are left (or only ``keep``)."""
         keys = entry_keys(self.cache_dir)
         if len(keys) <= MAX_CACHED_ENTRIES:
             return
         written = []
         for k in keys:
             path = entry_path(self.cache_dir, k)
-            if path != keep:
+            if path not in keep:
                 with contextlib.suppress(FileNotFoundError):
                     written.append((os.stat(path).st_mtime_ns, path))
         for _, path in sorted(written)[: len(keys) - MAX_CACHED_ENTRIES]:
+            self._tables.pop(path, None)
             with contextlib.suppress(FileNotFoundError):
                 os.remove(path)

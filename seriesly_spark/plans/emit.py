@@ -10,10 +10,11 @@ reproducible).
 An answer is a ``pyarrow.Table`` (what ``QueryCache.query`` returns for a
 bounded answer) or a DataFrame plan. There is one renderer, and it reads
 Arrow: the ``bucket_ms`` column zipped with the alias columns. A plan is
-taken to the driver with ``limit(MAX_CACHED_ROWS + 1).toArrow()``: over
-the query's ``orderBy`` that is a ``TakeOrderedAndProject``, which needs
-no range-partition sampling job for a global sort. Only an answer over
-that cap is taken again whole, with ``toArrow()``.
+taken to the driver once, whole, with a ``toArrow()`` under a row limit
+no answer reaches: over the query's ``orderBy`` that is a
+``TakeOrderedAndProject`` (2 Spark jobs for a one-file store), which
+needs no range-partition sampling job for a global sort (4 jobs). An
+answer that ``QueryCache`` found over its row cap is taken the same way.
 
 ``iter_seriesly_rows`` yields the same entries one at a time: from a table
 batch by batch, with no Spark job, and from a plan with ``toLocalIterator``
@@ -50,15 +51,19 @@ def _entries(
         yield str(bucket_ms), [_jsonable(v) for v in vals]
 
 
+# A row limit no answer reaches. Over a sorted plan, ``limit(_ALL_ROWS)``
+# still plans as a TakeOrderedAndProject (Spark falls back to the global
+# sort only from ``spark.sql.execution.topKSortFallbackThreshold``,
+# 2^31 - 16 by default), and from 2^30 on each top-k copies and sorts its
+# rows instead of sizing a buffer by the limit (Guava's
+# ``Ordering.leastOf``, which Spark's ``Utils.takeOrdered`` calls).
+_ALL_ROWS = 2**30
+
+
 def _table(answer: pa.Table | DataFrame) -> pa.Table:
     if isinstance(answer, pa.Table):
         return answer
-    # Imported here, not at the top: the cache module imports the store,
-    # whose import loads this package.
-    from seriesly_spark.plans.cache import MAX_CACHED_ROWS
-
-    table = answer.limit(MAX_CACHED_ROWS + 1).toArrow()
-    return answer.toArrow() if table.num_rows > MAX_CACHED_ROWS else table
+    return answer.limit(_ALL_ROWS).toArrow()
 
 
 def iter_seriesly_rows(

@@ -2,6 +2,7 @@
 
 import json
 import os
+import random
 import time
 from datetime import datetime, timezone
 
@@ -47,6 +48,35 @@ class TestTimeout:
 def _rows(df):
     """A plan's collected rows as the dicts a table's ``to_pylist()`` gives."""
     return [r.asDict() for r in df.collect()]
+
+
+def _serve_without_jvm(dbs, qc, q, spark_jobs, monkeypatch):
+    """``qc.query`` of ``q`` and its wire text, with any DataFrame
+    ``createDataFrame``/``collect`` failing: returns ``((table, text),
+    spark jobs, py4j calls)``."""
+
+    def no_jvm_call(*a, **k):
+        raise AssertionError("a cache hit called into the JVM")
+
+    client = dbs.spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(command, *a, **k):
+        if not command.startswith("m\nd\n"):  # not a proxy-GC delete
+            calls.append(command)
+        return send(command, *a, **k)
+
+    def serve():
+        # A hit renders its stored table with no py4j call at all.
+        with monkeypatch.context() as m:
+            m.setattr(dbs.spark, "createDataFrame", no_jvm_call)
+            m.setattr(DataFrame, "collect", no_jvm_call)
+            m.setattr(client, "send_command", counting)
+            table = qc.query("t", q)
+            return table, to_seriesly_json(table, q.aliases)
+
+    out, jobs = spark_jobs(serve)
+    return out, jobs, calls
 
 
 class TestQueryCache:
@@ -128,9 +158,10 @@ class TestQueryCache:
         assert cr.refresh() == {"changed": 1, "removed": 0, "unchanged": 1}
 
     def test_commits_leave_one_entry_per_shape(self, dbs, tmp_path):
-        """An entry is named by its shape alone and stamped with the
-        version, so every commit makes the shape's entry stale; storing
-        the new one replaces it."""
+        """An entry is named by its shape and unit (here the one date,
+        whole) and stamped with the date's fingerprint, so every commit
+        to the date makes the unit's entry stale; storing the new one
+        replaces it."""
         cache = tmp_path / "cache"
         qc = QueryCache(dbs, str(cache))
         other = SerieslyQuery(
@@ -147,9 +178,10 @@ class TestQueryCache:
         assert len(os.listdir(cache)) == 2
 
     def test_directory_is_bounded(self, dbs, tmp_path, monkeypatch):
-        """A sliding panel asks a new range on every slide; each old
-        range's entry is dead. Past ``MAX_CACHED_ENTRIES`` a store
-        unlinks the oldest-written entries, never the one just written."""
+        """A sliding panel whose end is not on a bucket boundary asks a
+        new unaligned edge unit on every slide; each old edge's entry is
+        dead. Past ``MAX_CACHED_ENTRIES`` a store unlinks the
+        oldest-written entries, never one of the query's own units."""
         monkeypatch.setattr(cache_mod, "MAX_CACHED_ENTRIES", 2)
         cache = tmp_path / "cache"
         qc = QueryCache(dbs, str(cache))
@@ -249,28 +281,7 @@ class TestQueryCache:
         qc = QueryCache(dbs, str(tmp_path / "cache"))
         miss = qc.query("t", q)
         fill = to_seriesly_json(miss, q.aliases)
-
-        def no_jvm_call(*a, **k):
-            raise AssertionError("a cache hit called into the JVM")
-
-        client = dbs.spark.sparkContext._gateway._gateway_client
-        send, calls = client.send_command, []
-
-        def counting(command, *a, **k):
-            if not command.startswith("m\nd\n"):  # not a proxy-GC delete
-                calls.append(command)
-            return send(command, *a, **k)
-
-        def serve():
-            # A hit renders its stored table with no py4j call at all.
-            with monkeypatch.context() as m:
-                m.setattr(dbs.spark, "createDataFrame", no_jvm_call)
-                m.setattr(DataFrame, "collect", no_jvm_call)
-                m.setattr(client, "send_command", counting)
-                table = qc.query("t", q)
-                return table, to_seriesly_json(table, q.aliases)
-
-        (hit, text), jobs = spark_jobs(serve)
+        (hit, text), jobs, calls = _serve_without_jvm(dbs, qc, q, spark_jobs, monkeypatch)
         assert jobs == 0
         assert calls == []
         assert (qc.misses, qc.hits) == (1, 1)
@@ -312,6 +323,24 @@ class TestQueryCache:
         assert qc.query("t", self._q()).to_pylist()[0]["s"] == 3.0
         assert (qc.misses, qc.hits) == (2, 0)
 
+    def test_answer_over_row_cap_is_taken_once_more(self, spark, tmp_path, spark_jobs, monkeypatch):
+        """An answer over the cap: the cache's bounded take of its units
+        finds it over, and the renderer takes the whole plan once, with
+        no second bounded take and no global sort."""
+        d = SerieslyDB(spark, str(tmp_path / "dbroot"))
+        d.create("t")
+        d.write_batch("t", [(f"2024-01-0{day}T{h:02d}:00:00Z", json.dumps({"v": h}))
+                            for day in range(1, 6) for h in range(24)])
+        monkeypatch.setattr(cache_mod, "MAX_CACHED_ROWS", 50)
+        qc = QueryCache(d, str(tmp_path / "cache"))
+        q = SerieslyQuery(group_ms=3_600_000, fields=[("/v", "sum")], aliases=["s"])
+        cached, cached_jobs = spark_jobs(lambda: to_seriesly_json(qc.query("t", q), q.aliases))
+        plain, plain_jobs = spark_jobs(lambda: to_seriesly_json(d.query("t", q), q.aliases))
+        assert cached == plain
+        assert len(json.loads(cached)) == 120
+        assert (cached_jobs, plain_jobs) == (4, 2)
+        assert os.listdir(tmp_path / "cache") == []
+
     def test_answer_over_row_cap_is_not_cached(self, dbs, tmp_path, monkeypatch):
         monkeypatch.setattr(cache_mod, "MAX_CACHED_ROWS", 2)
         cache = tmp_path / "cache"
@@ -322,3 +351,187 @@ class TestQueryCache:
             assert qc.query("t", self._q()).collect() == want
         assert os.listdir(cache) == []
         assert (qc.misses, qc.hits) == (2, 0)
+
+
+MIN_MS, HOUR_MS, DAY_MS = 60_000, 3_600_000, 86_400_000
+NS = 1_000_000  # per ms
+DAY0 = 1_704_067_200 * 10**9  # 2024-01-01T00:00:00Z
+
+
+def _approx(v):
+    if isinstance(v, float):
+        return pytest.approx(v)
+    if isinstance(v, list):
+        return [_approx(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _approx(x) for k, x in v.items()}
+    return v
+
+
+class TestDateUnits:
+    """A cache entry answers one date of a query shape: the answers it
+    builds equal the uncached plan's, and a query reuses the dates it has
+    already answered."""
+
+    @pytest.fixture()
+    def dbs(self, spark, tmp_path):
+        """Four days of documents at random ns instants."""
+        rng = random.Random(14)
+        d = SerieslyDB(spark, str(tmp_path / "dbroot"))
+        d.create("t")
+        d.write_batch("t", [self._doc(rng, DAY0 + rng.randrange(4 * DAY_MS * NS))
+                            for _ in range(240)])
+        return d
+
+    @staticmethod
+    def _doc(rng, ns):
+        doc = {"v": round(rng.uniform(-50, 50), 3), "h": rng.choice(["a", "b", None])}
+        if rng.random() < 0.3:
+            doc["o"] = {rng.choice("xyz"): 1, rng.choice("pq"): 2}
+        return ns, json.dumps(doc)
+
+    SHAPES = [
+        dict(fields=[("/v", "sum"), ("/v", "avg"), ("/v", "count"), ("/v", "min"),
+                     ("/h", "distinct"), ("/h", "identity"), ("/o", "obj_keys")]),
+        dict(fields=[("/v", "sumsq"), ("/v", "max"), ("/h", "any"), ("/o", "obj_keys")],
+             filters=[("/h", "a")]),
+        dict(fields=[("/v", "c"), ("/v", "c_avg"), ("/v", "sum")], filters=[("/h", "b")]),
+    ]
+
+    @staticmethod
+    def _ranges(rng, group_ms):
+        """A bucket-aligned range across dates, an unaligned one across
+        dates, an unaligned one inside a date and a half-open one."""
+        g = group_ms * NS
+        a = (DAY0 + rng.randrange(3 * DAY_MS * NS)) // g * g
+        aligned = (a, a + rng.randrange(1, 2 * DAY_MS // group_ms + 2) * g - 1)
+        a = DAY0 - HOUR_MS * NS + rng.randrange(4 * DAY_MS * NS)
+        unaligned = (a, a + rng.randrange(2 * DAY_MS * NS))
+        a = DAY0 + rng.randrange(4) * DAY_MS * NS + rng.randrange(DAY_MS * NS // 2)
+        inside = (a, a + rng.randrange(DAY_MS * NS // 2))
+        half = (DAY0 + rng.randrange(4 * DAY_MS * NS), None)
+        return [aligned, unaligned, inside, half]
+
+    @pytest.mark.parametrize(
+        "group_ms", [5 * MIN_MS, HOUR_MS, DAY_MS, 5 * HOUR_MS + 7],
+        ids=["5min", "1h", "1d", "5h7ms"],
+    )
+    def test_units_answer_as_the_uncached_plan(self, dbs, tmp_path, group_ms):
+        rng = random.Random(group_ms)
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        ranges = self._ranges(rng, group_ms)
+        partly_reused = 0
+        # Plain sums, then a commit to one date, then exact sums.
+        for exact, commit in ((False, False), (False, True), (True, False)):
+            if commit:
+                # New keys in one date, and a revision of one of its keys.
+                day = DAY0 + rng.randrange(4) * DAY_MS * NS
+                dbs.write_batch("t", [self._doc(rng, day + rng.randrange(DAY_MS * NS))
+                                      for _ in range(5)])
+                key = dbs.df("t", day, day + DAY_MS * NS - 1).first().ts_ns
+                dbs.write_batch("t", [self._doc(rng, key)])
+            for spec in self.SHAPES:
+                for lo, hi in ranges:
+                    q = SerieslyQuery(
+                        group_ms=group_ms, from_ts=lo, to_ts=hi,
+                        aliases=[f"f{i}" for i in range(len(spec["fields"]))], **spec,
+                    )
+                    before = (qc.units_reused, qc.units_computed)
+                    got = qc.query("t", q, exact_sums=exact)
+                    partly_reused += qc.units_reused > before[0] and qc.units_computed > before[1]
+                    want = dbs.query("t", q, exact_sums=exact).toArrow()
+                    assert got.schema.equals(want.schema, check_metadata=True)
+                    assert got.to_pylist() == (
+                        want.to_pylist() if exact else _approx(want.to_pylist())
+                    ), (lo, hi, spec, exact)
+        # A query after the commit reused some dates and computed others,
+        # where a day is whole buckets; a 5h7ms bucket makes every query
+        # one whole-range unit.
+        assert (partly_reused > 0) == (DAY_MS % group_ms == 0)
+
+    def _panel(self, end):
+        """The last 6 hours before ``end`` in 5-minute buckets, filtered."""
+        return SerieslyQuery(
+            group_ms=5 * MIN_MS, from_ts=end - 6 * HOUR_MS * NS, to_ts=end - 1,
+            fields=[("/v", "avg"), ("/h", "distinct"), ("/o", "obj_keys")],
+            filters=[("/h", "a")], aliases=["f0", "f1", "f2"],
+        )
+
+    def test_slide_inside_answered_dates_is_jobless(self, dbs, tmp_path, spark_jobs, monkeypatch):
+        """A 6 h window that moves one bucket inside the dates it already
+        answered runs no Spark job and makes no py4j call."""
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        end = DAY0 + DAY_MS * NS + 3 * HOUR_MS * NS  # 03:00 of day 2
+        qc.query("t", self._panel(end))
+        assert (qc.units_computed, qc.units_reused) == (2, 0)
+        slid = self._panel(end + 5 * MIN_MS * NS)
+        (table, text), jobs, calls = _serve_without_jvm(dbs, qc, slid, spark_jobs, monkeypatch)
+        assert jobs == 0
+        assert calls == []
+        assert (qc.misses, qc.hits) == (1, 1)
+        assert (qc.units_computed, qc.units_reused) == (2, 2)
+        want = dbs.query("t", slid).toArrow()
+        assert table.to_pylist() == _approx(want.to_pylist())
+        assert text == to_seriesly_json(table, slid.aliases)
+        assert json.loads(text)
+
+    def test_commit_recomputes_only_its_date(self, dbs, tmp_path):
+        """After a commit to the newest date, a range over three dates
+        computes that date's unit and reuses the other two."""
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        q = SerieslyQuery(
+            group_ms=HOUR_MS, fields=[("/v", "sum"), ("/v", "count")], aliases=["s", "n"],
+            from_ts=DAY0 + DAY_MS * NS + 5 * HOUR_MS * NS + 123, to_ts=DAY0 + 4 * DAY_MS * NS - 1,
+        )
+        qc.query("t", q)
+        assert (qc.units_computed, qc.units_reused) == (3, 0)
+        dbs.write("t", json.dumps({"v": 1e6}), ts=DAY0 + 3 * DAY_MS * NS + 7)
+        got = qc.query("t", q)
+        assert (qc.units_computed, qc.units_reused) == (4, 2)
+        assert (qc.misses, qc.hits) == (2, 0)
+        assert got.to_pylist() == _approx(dbs.query("t", q).toArrow().to_pylist())
+        assert max(r["s"] for r in got.to_pylist()) > 1e5
+
+    def _three_dates(self):
+        return SerieslyQuery(
+            group_ms=HOUR_MS, fields=[("/v", "sum"), ("/h", "distinct")], aliases=["s", "d"],
+            from_ts=DAY0 + DAY_MS * NS, to_ts=DAY0 + 4 * DAY_MS * NS - 1,
+        )
+
+    def test_hit_reads_no_entry_file_again(self, dbs, tmp_path, monkeypatch):
+        """The tables a cache wrote are its hits' tables while their
+        files are unchanged: a hit opens no entry file."""
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        q = self._three_dates()
+        miss = qc.query("t", q)
+
+        def no_read(*a, **k):
+            raise AssertionError("a hit read an entry file")
+
+        monkeypatch.setattr(cache_mod, "read_entry", no_read)
+        assert qc.query("t", q).equals(miss, check_metadata=True)
+        assert (qc.misses, qc.hits) == (1, 1)
+        assert (qc.units_computed, qc.units_reused) == (3, 3)
+
+    def test_entries_follow_the_directory(self, dbs, tmp_path):
+        """Another cache on the same directory replaces an entry: this
+        one reads the new file. An entry unlinked from the directory is a
+        miss, whatever this cache kept of it."""
+        cache = str(tmp_path / "cache")
+        qc, other = QueryCache(dbs, cache), QueryCache(dbs, cache)
+        q = self._three_dates()
+        qc.query("t", q)
+        dbs.write("t", json.dumps({"v": 1e6, "h": "new"}), ts=DAY0 + 3 * DAY_MS * NS + 7)
+        other.query("t", q)
+        assert (other.units_computed, other.units_reused) == (1, 2)
+        got = qc.query("t", q)
+        assert (qc.misses, qc.hits) == (1, 1)
+        assert (qc.units_computed, qc.units_reused) == (3, 3)
+        want = dbs.query("t", q).toArrow().to_pylist()
+        assert got.to_pylist() == _approx(want)
+        assert any(r["s"] > 1e5 and "new" in r["d"] for r in got.to_pylist())
+        for name in os.listdir(cache):
+            os.remove(os.path.join(cache, name))
+        assert qc.query("t", q).to_pylist() == _approx(want)
+        assert (qc.misses, qc.hits) == (2, 1)
+        assert (qc.units_computed, qc.units_reused) == (6, 3)
