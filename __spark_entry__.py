@@ -262,7 +262,6 @@ from seriesly_spark.sources.bucketed import (
     write_bucketed,
 )
 from seriesly_spark.plans.cache import QueryCache
-from seriesly_spark.plans.rollup import ContinuousRollup
 from seriesly_spark.plans.limits import QueryTimeout, run_with_timeout
 from seriesly_spark.plans.query import SerieslyQuery, seriesly_query
 from seriesly_spark.sources.tables import latest_by_key, load_table, parse_json_quarantine
@@ -2486,15 +2485,17 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incrementally maintained continuous aggregate (plans/rollup.py) —
-    the upgrade over the reference's all-or-nothing result cache
-    (cache.go:54-155): seed 120 events across several dates, refresh
-    (all partitions computed), overwrite the newest key (LWW), refresh
-    again — the second refresh must rescan exactly ONE date partition,
-    with the rest served from the stored rollup; the maintained rollup
-    must equal a from-scratch recompute. Seeds are strided by event_id so
-    they span the full multi-day range (the first-N events all land on
-    one date, which would make 'incremental' vacuous)."""
+    """Incrementally maintained continuous aggregate: a count+sum query
+    shape with no range through ``QueryCache`` (plans/cache.py), one
+    whole-date unit per date — the upgrade over the reference's
+    all-or-nothing result cache (cache.go:54-155). Seed 120 events across
+    several dates, query (every date computed), overwrite the newest key
+    (LWW), query again — the second query must recompute exactly ONE
+    date, with the rest reused from their entries; the maintained answer
+    must equal a from-scratch fill in a fresh cache directory. Seeds are
+    strided by event_id so they span the full multi-day range (the
+    first-N events all land on one date, which would make 'incremental'
+    vacuous)."""
     ev = _events(spark, sf_dir).where(F.col("event_id") % 83 == 0)
     seed = (
         ev.orderBy("ts", "event_id")
@@ -2503,27 +2504,28 @@ def q_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     pairs = [(r.us * 1000, r.props) for r in seed]
+    q = SerieslyQuery(
+        group_ms=DAY_MS, fields=[("_id", "count"), ("/k", "sum")],
+        aliases=["cnt", "sum_v"],
+    )
     dbs, root = _scratch_db(spark)
     try:
         dbs.create("m")
         dbs.write_batch("m", pairs)
-        cr = ContinuousRollup(
-            dbs, "m", os.path.join(root, "ru"), DAY_MS, "/k"
-        )
-        r1 = cr.refresh()
+        qc = QueryCache(dbs, os.path.join(root, "ru"))
+        qc.query("m", q, exact_sums=True)
+        r1_changed = qc.units_computed
         max_key = max(ns for ns, _ in pairs)
         dbs.write_batch("m", [(max_key, '{"k": 7}')])
-        r2 = cr.refresh()
-        maintained = {tuple(r) for r in cr.read().collect()}
-        fresh = ContinuousRollup(
-            dbs, "m", os.path.join(root, "ru_full"), DAY_MS, "/k"
-        )
-        fresh.refresh()
-        scratch = {tuple(r) for r in fresh.read().collect()}
-        matches = maintained == scratch
+        maintained = qc.query("m", q, exact_sums=True).to_pylist()
+        r2_changed = qc.units_computed - r1_changed
+        r2_unchanged = qc.units_reused
+        fresh = QueryCache(dbs, os.path.join(root, "ru_full"))
+        matches = maintained == fresh.query("m", q, exact_sums=True).to_pylist()
         rows = [
-            (bm, c, sv, r1["changed"], r2["changed"], r2["unchanged"], matches)
-            for (bm, c, sv) in sorted(maintained)
+            (r["bucket_ms"], r["cnt"], r["sum_v"], r1_changed, r2_changed,
+             r2_unchanged, matches)
+            for r in maintained
         ]
         out = spark.createDataFrame(
             rows,

@@ -45,8 +45,8 @@ file. Both rewrite a partition as one folded file, published
 beside the old ones before the files it read are unlinked, as the
 reference writes a new couch file before it swaps out the old one
 (database.go:136-171). Every file the driver writes (a commit's data
-files, a commit-log segment, the log's fold, a ``QueryCache`` or rollup
-entry) goes through one publish step, :func:`publish`: it is staged
+files, a commit-log segment, the log's fold, a ``QueryCache`` entry)
+goes through one publish step, :func:`publish`: it is staged
 under a hidden unique name and renamed onto its own, so it appears
 whole or not at all. On a real deployment the same API maps onto
 Delta/Iceberg (MERGE, OPTIMIZE, CDF) — plain parquet keeps this repo
@@ -543,8 +543,8 @@ class SerieslyDB:
     ) -> dict[str, list[tuple[str, int]]]:
         """What the database holds: date -> the sorted ``(file, bytes)`` of
         its ``date=`` partition's parquet files, for every partition or
-        for ``dates``. The one file listing behind the cache version, the
-        rollup's refresh diff, :meth:`info` and the footer row counts;
+        for ``dates``. The one file listing behind the cache's date stamps,
+        :meth:`info` and the footer row counts;
         driver-side metadata, no Spark job. Hidden and ``_``-prefixed
         names (the commit log, Spark's markers) are not data, as Spark's
         readers skip them. A partition missing from disk (retired by a
@@ -798,8 +798,9 @@ class SerieslyDB:
 
         ``doc_count`` counts the live view (exact live keys — what the
         reference reports from the couchstore header). At cluster scale
-        prefer a table format whose snapshot carries row counts, or the
-        continuous rollup's cnt partials (plans/rollup.py), and treat
+        prefer a table format whose snapshot carries row counts, or a
+        per-date ``count`` of ``_id`` through ``QueryCache`` (its units
+        are recomputed only for the dates a commit touches), and treat
         this as the slow exact path."""
         listing = self._data_files(name)
         return {

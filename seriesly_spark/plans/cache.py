@@ -50,14 +50,26 @@ panel over many dates does not open a file per date on every hit.
 and a query that computed any unit, even one of many, is a miss.
 ``units_reused`` and ``units_computed`` count units.
 
-Both this cache and the continuous rollup (``plans/rollup.py``) keep
-their entries by one rule, :func:`write_entry` and :func:`read_entry`:
-each key is one Arrow IPC file, ``<key>.arrow``, whose schema metadata
-stamps the version the entry answers. It is written under a hidden,
-unique staging name and renamed onto its name, so a reader sees a
-whole entry or none, and a key's new entry retires its old one. A
-reader checks the stamp from the schema in the file footer before it
-reads any record batch: a stale or missing entry is a miss.
+A continuous aggregate is one use of this cache: a ``count`` of ``_id``
+and a ``sum`` of a pointer, with ``exact_sums``, over no range
+(``q_continuous_rollup`` in ``__spark_entry__.py``). Each date is one
+whole-date unit, so a commit, delete or compact recomputes only its
+dates, and an unchanged store is answered with no Spark job. ``sum_v``
+is 0.0 in a bucket with no numeric value (the ``sum`` reducer's
+empty-input value), and ``cnt`` counts every document. A date that a
+``delete_range`` retires has no fingerprint, so its entry is never read
+again; :meth:`QueryCache._evict` unlinks it in time. A ``group_ms``
+that does not divide a day is one whole-range unit (exact, but
+recomputed on any commit), and a fill of over ``MAX_CACHED_ROWS``
+buckets is not stored.
+
+Each entry is one Arrow IPC file, ``<key>.arrow``, whose schema
+metadata stamps the version the entry answers (:func:`write_entry`,
+:func:`read_entry`). It is written under a hidden, unique staging name
+and renamed onto its name, so a reader sees a whole entry or none, and
+a key's new entry retires its old one. A reader checks the stamp from
+the schema in the file footer before it reads any record batch: a
+stale or missing entry is a miss.
 
 A bounded answer is a ``pyarrow.Table``, which ``plans/emit.py`` renders
 straight to wire text; a hit and the miss that filled it return equal
@@ -193,18 +205,15 @@ def entry_keys(cache_dir: str) -> list[str]:
     ]
 
 
-def read_entry(
-    path: str, version: str | None = None
-) -> pa.ipc.RecordBatchFileReader | None:
-    """The entry at ``path`` if it is stamped ``version`` (any stamp when
-    None), else None. Opening it reads only the footer; ``read_all()``
-    on the result reads the table."""
+def read_entry(path: str, version: str) -> pa.ipc.RecordBatchFileReader | None:
+    """The entry at ``path`` if it is stamped ``version``, else None.
+    Opening it reads only the footer; ``read_all()`` on the result reads
+    the table."""
     try:
         entry = pa.ipc.open_file(pa.memory_map(path))
     except FileNotFoundError:
         return None
-    stamp = (entry.schema.metadata or {}).get(_VERSION)
-    if version is not None and stamp != version.encode():
+    if (entry.schema.metadata or {}).get(_VERSION) != version.encode():
         return None
     return entry
 

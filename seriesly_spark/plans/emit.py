@@ -43,12 +43,25 @@ def _entry(row: Row, aliases: list[str]) -> tuple[str, list]:
     return str(row["bucket_ms"]), [_jsonable(row[a]) for a in aliases]
 
 
+def _holds_floats(t: pa.DataType) -> bool:
+    if pa.types.is_list(t):
+        return _holds_floats(t.value_type)
+    return pa.types.is_floating(t)
+
+
+def _values(col: pa.Array | pa.ChunkedArray) -> list:
+    """The column as Python values, NaN/Inf -> null in a column that can
+    hold floats; any other column is taken as ``to_pylist()`` gives it."""
+    values = col.to_pylist()
+    return [_jsonable(v) for v in values] if _holds_floats(col.type) else values
+
+
 def _entries(
     batch: pa.Table | pa.RecordBatch, aliases: list[str]
 ) -> Iterator[tuple[str, list]]:
-    cols = [batch.column(c).to_pylist() for c in ("bucket_ms", *aliases)]
-    for bucket_ms, *vals in zip(*cols):
-        yield str(bucket_ms), [_jsonable(v) for v in vals]
+    cols = [_values(batch.column(c)) for c in aliases]
+    for bucket_ms, *vals in zip(batch.column("bucket_ms").to_pylist(), *cols):
+        yield str(bucket_ms), vals
 
 
 # A row limit no answer reaches. Over a sorted plan, ``limit(_ALL_ROWS)``

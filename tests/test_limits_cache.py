@@ -17,7 +17,6 @@ from seriesly_spark.plans.cache import QueryCache, db_version
 from seriesly_spark.plans.emit import to_seriesly_json
 from seriesly_spark.plans.limits import QueryTimeout, run_with_timeout
 from seriesly_spark.plans.query import SerieslyQuery
-from seriesly_spark.plans.rollup import ContinuousRollup
 
 
 class TestTimeout:
@@ -146,16 +145,22 @@ class TestQueryCache:
         assert (qc.misses, qc.hits) == (1, 1)
 
     def test_one_day_append_changes_one_partition_version(self, dbs, tmp_path):
-        # The cache version and the rollup refresh read the same listing.
+        # The cache's date stamps are the partition versions: a one-day
+        # append moves one of them and recomputes one date unit.
         dbs.write("t", json.dumps({"v": 3}), ts="2024-01-02T00:00:00Z")
-        cr = ContinuousRollup(dbs, "t", str(tmp_path / "rollup"), 3_600_000, "/v")
-        cr.refresh()
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        q = SerieslyQuery(
+            group_ms=3_600_000, fields=[("_id", "count"), ("/v", "sum")],
+            aliases=["cnt", "sum_v"],
+        )
+        qc.query("t", q, exact_sums=True)
         before = dbs._partition_versions("t")
         dbs.write("t", json.dumps({"v": 5}), ts="2024-01-02T05:00:00Z")
         after = dbs._partition_versions("t")
         assert sorted(before) == sorted(after) == ["2024-01-01", "2024-01-02"]
         assert [d for d in after if after[d] != before[d]] == ["2024-01-02"]
-        assert cr.refresh() == {"changed": 1, "removed": 0, "unchanged": 1}
+        qc.query("t", q, exact_sums=True)
+        assert (qc.units_computed, qc.units_reused) == (2 + 1, 1)
 
     def test_commits_leave_one_entry_per_shape(self, dbs, tmp_path):
         """An entry is named by its shape and unit (here the one date,

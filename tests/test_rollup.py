@@ -1,17 +1,42 @@
-"""Continuous aggregate: incremental refresh must rescan only changed
-date partitions and stay equal to a from-scratch recompute through
-writes, LWW overwrites, and range deletes."""
+"""Continuous aggregate: a count+sum query shape with no range through
+``QueryCache``. Each date is one whole-date unit, so a commit, delete or
+compact recomputes only its dates, and the maintained answer stays
+equal to an uncached query through writes, LWW overwrites, and range
+deletes."""
 
 import os
 
+import pyarrow as pa
 import pytest
 
 from seriesly_spark.db import SerieslyDB
-from seriesly_spark.plans.cache import entry_keys, entry_path, read_entry
-from seriesly_spark.plans.rollup import ContinuousRollup
+from seriesly_spark.plans.cache import QueryCache
+from seriesly_spark.plans.query import SerieslyQuery
 
 DAY_NS = 86_400_000_000_000
 DAY_MS = 86_400_000
+HOUR_MS = 3_600_000
+
+
+def _rollup(group_ms):
+    return SerieslyQuery(
+        group_ms=group_ms, fields=[("_id", "count"), ("/k", "sum")],
+        aliases=["cnt", "sum_v"],
+    )
+
+
+def _uncached(dbs, q):
+    return dbs.query("m", q, exact_sums=True).toArrow()
+
+
+def _run(qc, q=_rollup(DAY_MS)):
+    """The rollup's rows through ``qc``, checked against the uncached
+    query, with the units this query computed and reused."""
+    computed, reused = qc.units_computed, qc.units_reused
+    table = qc.query("m", q, exact_sums=True)
+    assert table.equals(_uncached(qc.dbs, q))
+    rows = [tuple(r.values()) for r in table.to_pylist()]
+    return rows, qc.units_computed - computed, qc.units_reused - reused
 
 
 class TestContinuousRollup:
@@ -23,41 +48,32 @@ class TestContinuousRollup:
             [(1 * DAY_NS + i * 1_000_000_000, '{"k": %d}' % i) for i in range(10)]
             + [(2 * DAY_NS + i * 1_000_000_000, '{"k": %d}' % (100 + i)) for i in range(5)],
         )
-        cr = ContinuousRollup(dbs, "m", str(tmp_path / "ru"), DAY_MS, "/k")
+        ru = QueryCache(dbs, str(tmp_path / "ru"))
 
-        assert cr.refresh() == {"changed": 2, "removed": 0, "unchanged": 0}
-        assert sorted(map(tuple, cr.read().collect())) == [
-            (1 * DAY_MS, 10, 45.0),
-            (2 * DAY_MS, 5, 510.0),
-        ]
+        assert _run(ru) == ([(1 * DAY_MS, 10, 45.0), (2 * DAY_MS, 5, 510.0)], 2, 0)
 
-        # hot-day append touches one partition
+        # hot-day append recomputes one date
         dbs.write_batch("m", [(2 * DAY_NS + 50_000_000_000, '{"k": 1000}')])
-        assert cr.refresh() == {"changed": 1, "removed": 0, "unchanged": 1}
-        assert (2 * DAY_MS, 6, 1510.0) in set(map(tuple, cr.read().collect()))
+        assert _run(ru) == ([(1 * DAY_MS, 10, 45.0), (2 * DAY_MS, 6, 1510.0)], 1, 1)
 
         # LWW overwrite of an old key re-aggregates only its day
         dbs.write_batch("m", [(1 * DAY_NS, '{"k": 999}')])
-        assert cr.refresh() == {"changed": 1, "removed": 0, "unchanged": 1}
-        assert (1 * DAY_MS, 10, 1044.0) in set(map(tuple, cr.read().collect()))
+        assert _run(ru) == ([(1 * DAY_MS, 10, 1044.0), (2 * DAY_MS, 6, 1510.0)], 1, 1)
 
-        # range delete drops the partition from db AND rollup
+        # range delete retires the partition: its date has no unit left
         dbs.delete_range("m", 1 * DAY_NS, 1 * DAY_NS + 9_500_000_000)
-        assert cr.refresh() == {"changed": 0, "removed": 1, "unchanged": 1}
-        assert sorted(map(tuple, cr.read().collect())) == [(2 * DAY_MS, 6, 1510.0)]
+        assert _run(ru) == ([(2 * DAY_MS, 6, 1510.0)], 0, 1)
 
         # idempotent: nothing changed, nothing rescanned
-        assert cr.refresh() == {"changed": 0, "removed": 0, "unchanged": 1}
+        assert _run(ru) == ([(2 * DAY_MS, 6, 1510.0)], 0, 1)
 
     def test_failed_entry_write_leaves_the_other_entries(
         self, spark, tmp_path, monkeypatch
     ):
-        """A refresh whose entry writer fails partway (a crash, a full
+        """A query whose entry writer fails partway (a crash, a full
         disk) leaves no torn file; every entry it did not reach still
-        reads, and the next refresh recomputes exactly the dates whose
+        reads, and the next query recomputes exactly the dates whose
         entry is missing or stale."""
-        import pyarrow as pa
-
         dbs = SerieslyDB(spark, str(tmp_path / "dbs"))
         dbs.create("m")
         dbs.write_batch(
@@ -65,8 +81,8 @@ class TestContinuousRollup:
             [(d * DAY_NS + i, '{"k": %d}' % i) for d in (1, 2, 3) for i in range(3)],
         )
         ru = tmp_path / "ru"
-        cr = ContinuousRollup(dbs, "m", str(ru), DAY_MS, "/k")
-        assert cr.refresh() == {"changed": 3, "removed": 0, "unchanged": 0}
+        qc = QueryCache(dbs, str(ru))
+        assert _run(qc)[1:] == (3, 0)
         dbs.write_batch("m", [(d * DAY_NS + 9, '{"k": 10}') for d in (2, 3, 4)])
         real_new_file, calls = pa.ipc.new_file, []
 
@@ -80,31 +96,30 @@ class TestContinuousRollup:
 
         monkeypatch.setattr(pa.ipc, "new_file", torn_second)
         with pytest.raises(OSError, match="disk full"):
-            cr.refresh()
+            qc.query("m", _rollup(DAY_MS), exact_sums=True)
         monkeypatch.undo()
         assert not [f for f in os.listdir(ru) if f.endswith(".tmp")]
-        versions = dbs._partition_versions("m")
-        current = [
-            d for d, fp in versions.items()
-            if read_entry(entry_path(str(ru), d), fp) is not None
-        ]
-        assert len(current) == 2 and len(versions) == 4
-        assert all(read_entry(entry_path(str(ru), d)) for d in entry_keys(str(ru)))
+        # The three first entries, one of them replaced; the new date's
+        # entry was never written. Each is whole.
+        entries = [f for f in os.listdir(ru) if f.endswith(".arrow")]
+        assert len(entries) == 3
+        for f in entries:
+            pa.ipc.open_file(str(ru / f)).read_all()
 
-        recomputed, real_aggregate = [], cr._aggregate
+        recomputed, real_query = [], dbs.query
 
-        def recording(dates):
-            recomputed.extend(dates)
-            return real_aggregate(dates)
+        def recording(name, q, exact_sums=False, dates=None):
+            recomputed.append(dates)
+            return real_query(name, q, exact_sums=exact_sums, dates=dates)
 
-        monkeypatch.setattr(cr, "_aggregate", recording)
-        assert cr.refresh() == {"changed": 2, "removed": 0, "unchanged": 2}
-        assert sorted(recomputed) == sorted(set(versions) - set(current))
-        fresh = ContinuousRollup(dbs, "m", str(tmp_path / "fresh"), DAY_MS, "/k")
-        fresh.refresh()
-        assert sorted(map(tuple, cr.read().collect())) == sorted(
-            map(tuple, fresh.read().collect())
-        ) == [
+        monkeypatch.setattr(dbs, "query", recording)
+        rows, computed, reused = _run(qc)
+        monkeypatch.undo()
+        # 1970-01-02 was untouched and 1970-01-03 written before the
+        # failure; 1970-01-04 is stale and 1970-01-05 missing.
+        assert recomputed[0] == ["1970-01-04", "1970-01-05"]
+        assert (computed, reused) == (2, 2)
+        assert rows == _run(QueryCache(dbs, str(tmp_path / "fresh")))[0] == [
             (1 * DAY_MS, 3, 3.0),
             (2 * DAY_MS, 4, 13.0),
             (3 * DAY_MS, 4, 13.0),
@@ -115,23 +130,24 @@ class TestContinuousRollup:
     def test_read_of_a_rollup_without_dates_is_empty(self, spark, tmp_path, emptied):
         dbs = SerieslyDB(spark, str(tmp_path / "dbs"))
         dbs.create("m")
-        cr = ContinuousRollup(dbs, "m", str(tmp_path / "ru"), DAY_MS, "/k")
+        ru = QueryCache(dbs, str(tmp_path / "ru"))
         if emptied:
             dbs.write_batch("m", [(d * DAY_NS, '{"k": 1}') for d in (1, 2, 3)])
-            assert cr.refresh()["changed"] == 3
+            assert _run(ru)[1:] == (3, 0)
             dbs.delete_range("m", DAY_NS, 4 * DAY_NS - 1)
-        assert cr.refresh() == {"changed": 0, "removed": 3 * emptied, "unchanged": 0}
-        df = cr.read()
-        assert df.collect() == []
-        assert df.dtypes == [
-            ("bucket_ms", "bigint"), ("cnt", "bigint"), ("sum_v", "double")
-        ]
+        table = ru.query("m", _rollup(DAY_MS), exact_sums=True)
+        assert table.num_rows == 0
+        assert table.schema.names == ["bucket_ms", "cnt", "sum_v"]
+        assert table.schema.types == [pa.int64(), pa.int64(), pa.float64()]
+        # A store with no dates is one whole-range unit, reused while it
+        # stays empty.
+        assert _run(ru) == ([], 0, 1)
 
     def test_refresh_and_read_job_counts(self, spark, tmp_path, spark_jobs):
-        """23 dates of 200 docs in hourly buckets: a refresh with nothing
-        changed launches no Spark job, and a one-date refresh and a
-        ``read()`` stay within the 4 and 3 jobs the partitioned-parquet
-        rollup took (they take 3 and 2)."""
+        """23 dates of 200 docs in hourly buckets: a query of the
+        unchanged store launches no Spark job, and a one-date change
+        stays within 3 (the rollup's refresh took 3 and its read 2
+        more)."""
         dbs = SerieslyDB(spark, str(tmp_path / "dbs"))
         dbs.create("m")
         dbs.write_batch(
@@ -142,15 +158,33 @@ class TestContinuousRollup:
                 for i in range(200)
             ],
         )
-        cr = ContinuousRollup(dbs, "m", str(tmp_path / "ru"), 3_600_000, "/k")
-        assert cr.refresh()["changed"] == 23
-        assert spark_jobs(cr.refresh) == (
-            {"changed": 0, "removed": 0, "unchanged": 23}, 0
-        )
+        qc, q = QueryCache(dbs, str(tmp_path / "ru")), _rollup(HOUR_MS)
+        qc.query("m", q, exact_sums=True)
+        assert qc.units_computed == 23
+        table, jobs = spark_jobs(lambda: qc.query("m", q, exact_sums=True))
+        assert (table.num_rows, jobs) == (23 * 24, 0)
+        assert (qc.units_computed, qc.units_reused) == (23, 23)
         dbs.write_batch("m", [(5 * DAY_NS + 7, '{"k": 1}')])
-        stats, jobs = spark_jobs(cr.refresh)
-        assert stats == {"changed": 1, "removed": 0, "unchanged": 22}
-        assert jobs <= 4
-        rows, jobs = spark_jobs(lambda: cr.read().collect())
-        assert len(rows) == 23 * 24
+        table, jobs = spark_jobs(lambda: qc.query("m", q, exact_sums=True))
+        assert (qc.units_computed, qc.units_reused) == (24, 45)
         assert jobs <= 3
+        assert table.num_rows == 23 * 24
+        assert table.equals(_uncached(dbs, q))
+
+    @pytest.mark.parametrize("group_ms", [DAY_MS, HOUR_MS], ids=["1d", "1h"])
+    def test_count_and_sum_of_missing_and_non_numeric_values(
+        self, spark, tmp_path, group_ms
+    ):
+        """``cnt`` counts every document, one without the pointer too;
+        a bucket whose only value is not a number sums to 0.0, the
+        ``sum`` reducer's empty-input value, not NULL."""
+        dbs = SerieslyDB(spark, str(tmp_path / "dbs"))
+        dbs.create("m")
+        dbs.write_batch("m", [
+            (1 * DAY_NS, '{"k": 2}'),
+            (1 * DAY_NS + 1, '{"other": 5}'),
+            (2 * DAY_NS, '{"k": "abc"}'),
+        ])
+        rows, computed, _ = _run(QueryCache(dbs, str(tmp_path / "ru")), _rollup(group_ms))
+        assert rows == [(1 * DAY_MS, 2, 2.0), (2 * DAY_MS, 1, 0.0)]
+        assert computed == 2
