@@ -20,9 +20,24 @@ Reference parity map (SURVEY §2.1):
     handlers.go:455-457 — free via a file-stream source here)
   * info                     ≙ S9  (doc_count/space_used, handlers.go:431-451)
 
-Storage layout — one directory per database, hive-partitioned by UTC date:
+Storage layout — one directory per database: the data files, hive-partitioned
+by UTC date, and the commit log that says which of them the database holds:
 
     <root>/<db>/date=YYYY-MM-DD/part-*.parquet   (ts_ns LONG, seq LONG, doc STRING)
+    <root>/<db>/.changelog/<seq>.parquet         (one segment per commit)
+
+The commit log is the one record of what a database holds, in the style
+of Delta's ``_delta_log``. Each segment records one commit: its public
+row (``seq, op, ts_lo_ns, ts_hi_ns, n_rows``) and the data files the
+commit adds (path under the database, rows, bytes) and removes. A handle
+replays the log into a snapshot (date -> files, and the last seq) and
+keeps it: a read lists ``.changelog`` and replays only the segments
+published since, and the handle's own commits update the snapshot in
+memory. Every read, ``get``, ``info`` and the ``QueryCache`` stamps
+resolve the files of one snapshot; no read walks a ``date=`` directory.
+A data file that no commit names is not part of the database: a file
+dropped into a ``date=`` directory by hand is not read, and ``compact``
+removes it.
 
 A data file holds each key at most once: every writer folds repeats of a
 key before it publishes a file (``write_batch`` keeps a batch's later
@@ -31,19 +46,28 @@ keeps the highest ``seq``). A key's revisions share its date, so a
 partition of one file is already its own live view, and last-write-wins
 is resolved at read time only for partitions of more than one file.
 
-Design for scale: a read lists the in-range partitions' data files on
-the driver and reads exactly those files with the declared schema — no
-schema-inference job, no listing of other days, no file the listing did
-not see — keeping the ts_ns bounds on the scan for parquet min/max
-skipping (the B-tree range-walk analogue); a point ``get`` reads only
-its key's day, on the driver with pyarrow (no Spark job); a commit
-writes one new file per date from the driver with pyarrow (no Spark
-job, no read-modify-write); delete_range retires fully-covered
-partitions without reading their data and rewrites only the two edge
-partitions; compact rewrites each partition that holds more than one
-file. Both rewrite a partition as one folded file, published
-beside the old ones before the files it read are unlinked, as the
-reference writes a new couch file before it swaps out the old one
+The commit point. Every public mutation is one commit: it publishes its
+new data files first, then the log segment that names them, and only
+then unlinks the files that segment removes. A crash before the segment
+rolls the mutation back (its published files are named by no commit, so
+no read sees them, and the next ``compact`` removes them); a crash after
+it rolls forward (the removed files are no longer read, and ``compact``
+removes what is left of them). A multi-partition ``delete_range`` or
+``compact`` switches every partition at once for any read that resolves
+after the commit.
+
+Design for scale: a read names exactly the snapshot's files of the
+in-range partitions and reads them with the declared schema — no
+schema-inference job, no listing of other days — keeping the ts_ns
+bounds on the scan for parquet min/max skipping (the B-tree range-walk
+analogue); a point ``get`` reads only its key's day, on the driver with
+pyarrow (no Spark job); a commit writes one new file per date from the
+driver with pyarrow (no Spark job, no read-modify-write); delete_range
+retires fully-covered partitions without reading their data and
+rewrites only the two edge partitions; compact rewrites each partition
+that holds more than one file. Both rewrite a partition as one folded
+file, published beside the old ones before their commit retires them,
+as the reference writes a new couch file before it swaps out the old one
 (database.go:136-171). Every file the driver writes (a commit's data
 files, a commit-log segment, the log's fold, a ``QueryCache`` entry)
 goes through one publish step, :func:`publish`: it is staged
@@ -57,10 +81,9 @@ from __future__ import annotations
 
 import contextlib
 import dataclasses
-import hashlib
-import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from datetime import timedelta
@@ -80,12 +103,55 @@ DOC_SCHEMA = "ts_ns long, seq long, doc string"
 CHANGELOG_SCHEMA = (
     "seq long, op string, ts_lo_ns long, ts_hi_ns long, n_rows long"
 )
-# The same columns, as the driver writes and reads them with pyarrow.
+# A segment's columns, as the driver writes and reads them with pyarrow:
+# the five public ones, then the data files the commit adds (path under
+# the database, rows, bytes) and the paths it removes. The public views
+# read the five with the declared schema; parquet drops the rest.
 _LOG_SCHEMA = pa.schema([
     ("seq", pa.int64()), ("op", pa.string()), ("ts_lo_ns", pa.int64()),
     ("ts_hi_ns", pa.int64()), ("n_rows", pa.int64()),
+    ("add", pa.list_(pa.struct([
+        ("path", pa.string()), ("rows", pa.int64()), ("bytes", pa.int64()),
+    ]))),
+    ("remove", pa.list_(pa.string())),
 ])
+# Built once: an empty table of the nested schema takes about 0.1 ms,
+# which every read that finds no new segment would pay.
+_EMPTY_LOG = _LOG_SCHEMA.empty_table()
 _CHANGELOG_DIR = ".changelog"
+
+
+@dataclasses.dataclass(frozen=True)
+class _Snapshot:
+    """A database as of its commit ``seq``: ``live`` maps the path under
+    the database (``date=<d>/<file>``) of each data file it holds to that
+    file's (bytes, rows), and ``files`` holds the same files as
+    :meth:`SerieslyDB._data_files` returns them, date -> the sorted
+    ``(file, bytes)`` of the date. Never changed in place."""
+
+    seq: int = 0
+    live: dict = dataclasses.field(default_factory=dict)
+    files: dict = dataclasses.field(default_factory=dict)
+
+    def then(self, commits: list[dict]) -> _Snapshot:
+        """This snapshot after the commit-log rows ``commits`` (in seq
+        order) whose seq is above its own: each removes its ``remove``
+        paths and adds its ``add`` files."""
+        live, seq = dict(self.live), self.seq
+        for c in commits:
+            if c["seq"] > seq:
+                seq = c["seq"]
+                for p in c["remove"]:
+                    live.pop(p, None)
+                for a in c["add"]:
+                    live[a["path"]] = (a["bytes"], a["rows"])
+        if seq == self.seq:
+            return self
+        files: dict[str, list[tuple[str, int]]] = {}
+        for p in sorted(live):
+            d, f = p.split("/")
+            files.setdefault(d[len("date="):], []).append((f, live[p][0]))
+        return _Snapshot(seq, live, files)
 
 
 def publish(path: str, write: Callable[[str], object]) -> None:
@@ -131,54 +197,55 @@ class SerieslyDB:
     Storage invariant: no data file holds a key twice, and a key's
     revisions share one ``date=`` partition. Reads therefore apply the
     last-write-wins fold only when some partition they cover holds more
-    than one file. The one partition rewrite (:meth:`_rewrite_partition`)
-    always writes one folded file, so :meth:`compact` leaves a one-file
+    than one file. The one partition rewrite (:meth:`_rewrite`) always
+    writes one folded file, so :meth:`compact` leaves a one-file
     partition as it is (no Spark job, no new file name, no new partition
     version). A row's ``seq`` comes from the same guarded counter as the
     commit log's, so the newest write of a key always wins.
 
-    Every mutating commit also appends one tiny parquet segment to
-    ``<db>/.changelog/``; the log is always on. It is a write-ahead
-    commit log in the style of lakehouse table formats (Delta's _delta_log
-    analogue, metadata-sized). The dot-prefixed directory is invisible to
-    Spark's data readers, and to :meth:`_data_files`, the one listing of
-    what the database holds. Mutations only ever ADD segments, so streaming
-    it surfaces deletes and compaction as first-class change rows — the
-    piece the plain append-only docs feed (:meth:`changes`) cannot
-    observe. One maintenance step does rewrite the log: :meth:`compact`
-    folds the accumulated segments into one consolidated file (opt out
-    with ``compact(name, fold_changelog=False)``); see
+    The commit log (``<db>/.changelog/``, always on) is the database's
+    manifest: every mutation appends one tiny parquet segment naming
+    the files it adds and removes, and :meth:`_data_files` returns the
+    snapshot this handle replayed from it (:meth:`_snapshot`). The
+    dot-prefixed directory is invisible to Spark's data readers.
+    Mutations only ever ADD segments, so streaming the log surfaces
+    deletes and compaction as first-class change rows — the piece the
+    plain append-only docs feed (:meth:`changes`) cannot observe. One
+    maintenance step does rewrite the log: :meth:`compact` folds the
+    accumulated segments into one file, which keeps every commit's row
+    and files and so is the checkpoint a reopen replays (opt out with
+    ``compact(name, fold_changelog=False)``); see
     :meth:`changes_log_stream` for what that means to a live stream. On
-    the driver the log has one reader, :meth:`_read_log`, behind
-    :meth:`change_log` and the fold.
+    the driver the log has one reader, :meth:`_read_log`, behind the
+    snapshot, :meth:`change_log` and the fold.
 
     Concurrency contract: ONE WRITER HANDLE per database at a time (the
     same single-writer contract as the incremental dedup indexes and any
-    table format without a lock service). The commit-log seq counter is
-    collision-checked against the directory on every write (two handles
-    cannot silently overwrite each other's segment). A data append that
-    races a ``compact``/``delete_range`` partition rewrite survives,
-    with no error: the rewrite reads and unlinks only the files of its
-    own listing, so a file committed after that listing is neither read
-    nor removed, and reads fold it with the rewrite's output. The
+    table format without a lock service). A commit's seqs are reserved
+    above the last seq of the handle's refreshed snapshot, and a
+    segment name already taken is never overwritten, so a second
+    handle's commits stay in one order with this one's. A data append
+    that races a ``compact``/``delete_range`` partition rewrite
+    survives, with no error: the rewrite's commit removes only the files
+    of its own snapshot. Readers on any handle or thread see whole
+    commits: a read resolves one snapshot, so a mutation switches all
+    of its files at once for a read that resolves after its commit. The
     driver-side reads, :meth:`get` and :meth:`change_log`, are exact
-    beside a rewrite or a log fold: each publishes its new file before
-    it unlinks the files it read, so a read that finds a listed file
-    gone lists again (:func:`_read_listed`). The Spark reads (:meth:`df`, :meth:`query`,
-    :meth:`all_docs`, :meth:`info`) are not isolated from a rewrite: a
-    read whose listing names a file the rewrite then unlinks can fail,
-    or Spark can skip that file and miss its rows (ROADMAP item 4).
+    beside a rewrite or a log fold: a file unlinked after the read
+    resolved makes it resolve again (:func:`_read_listed`). The Spark
+    reads (:meth:`df`, :meth:`query`, :meth:`all_docs`, :meth:`info`)
+    are not: a scan that resolved before a commit can miss the rows of a
+    file that the commit unlinks under it (ROADMAP item 4's grace
+    window).
     """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # Per-db last commit seq. The changelog directory listing is the
-        # durable source of truth, but listing it on EVERY mutation makes
-        # commit cost grow with log length; a handle lists once on first
-        # touch and counts forward from memory after that. A fresh handle
-        # (reopen) re-lists, so monotonicity survives restarts.
-        self._last_seq: dict[str, int] = {}
+        # Per database: the snapshot this handle last replayed the log
+        # into, replaced whole under the lock.
+        self._snapshots: dict[str, _Snapshot] = {}
+        self._lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
 
     # -- DDL (S8) -----------------------------------------------------------
@@ -195,10 +262,8 @@ class SerieslyDB:
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._path(name), ignore_errors=True)
-        # A re-created db starts a fresh log; the stale cached seq must
-        # not leak into it (it would be far in the future, not wrong,
-        # but the listing-on-first-touch is the honest source of truth).
-        self._last_seq.pop(name, None)
+        # A re-created db starts a fresh log, and an empty snapshot.
+        self._snapshots.pop(name, None)
 
     def list(self) -> list[str]:
         return sorted(
@@ -229,9 +294,10 @@ class SerieslyDB:
         The commit runs on the driver, with no Spark job: the rows are
         split by ``date=`` partition and every date's table is built
         before any is published. Each table is then published
-        (:func:`publish`) as ``part-<uuid>.parquet`` in its partition. The
-        log segment is appended last, so the log only ever names data
-        that is already visible."""
+        (:func:`publish`) as ``part-<uuid>.parquet`` in its partition,
+        and the log segment that names them last (:meth:`_commit`): it
+        is the commit point, so a crash before it leaves no row of the
+        batch in the database."""
         path = self._path(name)
         if not os.path.isdir(path):
             raise KeyError(f"no such db: {name}")
@@ -266,18 +332,20 @@ class SerieslyDB:
                 "seq": pa.array([first + i for i in idx], pa.int64()),
                 "doc": pa.array([rows[i][1] for i in idx], pa.string()),
             })
+        add = []
         for d, table in tables.items():
-            part_dir = os.path.join(path, f"date={d}")
-            os.makedirs(part_dir, exist_ok=True)
+            part = f"date={d}/part-{uuid.uuid4().hex}.parquet"
+            os.makedirs(os.path.join(path, f"date={d}"), exist_ok=True)
             # PLAIN, as Spark's writer falls back to for near-unique keys
             # and docs: dictionary pages only grow such a file.
             publish(
-                os.path.join(part_dir, f"part-{uuid.uuid4().hex}.parquet"),
+                os.path.join(path, part),
                 lambda p, t=table: pq.write_table(
                     t, p, compression="snappy", use_dictionary=False
                 ),
             )
-        self._log_change(name, last_seq, "write", min(keys), max(keys), len(keys))
+            add.append(_entry(path, part, table.num_rows))
+        self._commit(name, last_seq, "write", min(keys), max(keys), len(keys), add)
         return keys
 
     # -- Commit log ---------------------------------------------------------
@@ -285,70 +353,93 @@ class SerieslyDB:
     def _next_seq(self, name: str, n: int = 1) -> int:
         """Reserve ``n`` consecutive seqs for one commit of ``name`` and
         return the last of them, which names the commit's log segment.
-        Every seq reserved is above every seq already reserved or logged,
-        so data rows and log segments share one order."""
+        The run is above the last seq of the refreshed snapshot, so above
+        every commit any handle published before this call: data rows
+        and log segments share one order."""
         d = os.path.join(self._path(name), _CHANGELOG_DIR)
-        os.makedirs(d, exist_ok=True)
-        # Monotonic guard: time_ns alone can collide (two mutations in
-        # one ns) or step backwards (clock adjustment); the log's file
-        # names ARE its commit order, so seq must strictly increase.
-        # File names embed the run's last seq, so max(existing)+1 floors
-        # the new run — but the directory is listed only on the handle's
-        # FIRST touch of this db (O(log) per commit otherwise); after
-        # that the cached last seq counts forward.
-        def _list_floor() -> int:
-            return max((int(f.split(".")[0]) for f in _segments(d)), default=0)
+        while True:
+            # time_ns alone can collide (two commits in one ns) or step
+            # back (clock adjustment); the log's file names ARE its
+            # commit order, so seq must strictly increase.
+            seq = max(time.time_ns(), self._snapshot(name).seq + 1) + n - 1
+            # Collision guard: a second handle that published since the
+            # refresh may hold this name; its segment is never
+            # overwritten, and the next refresh floors above it.
+            if not os.path.exists(os.path.join(d, f"{seq:020d}.parquet")):
+                return seq
 
-        last = self._last_seq.get(name)
-        if last is None:
-            last = _list_floor()
-        seq = max(time.time_ns(), last + 1) + n - 1
-        # Collision guard for the multi-handle case: file name IS the
-        # seq, so a second live handle whose cached floor is stale could
-        # mint a seq some other handle already wrote — and the plain
-        # write would OVERWRITE that handle's segment. Re-listing on
-        # collision restores both uniqueness and (because every written
-        # seq is in the listing) cross-handle monotonicity, at the cost
-        # of one directory listing only in the already-raced case.
-        while os.path.exists(os.path.join(d, f"{seq:020d}.parquet")):
-            seq = max(time.time_ns(), _list_floor() + 1) + n - 1
-        self._last_seq[name] = seq
-        return seq
-
-    def _log_change(
+    def _commit(
         self, name: str, seq: int, op: str, ts_lo: int | None,
-        ts_hi: int | None, n_rows: int,
+        ts_hi: int | None, n_rows: int, add: list[dict] = (),
+        remove: list[str] = (),
     ) -> None:
-        """Append one commit-log segment, named by ``seq`` from
-        :meth:`_next_seq` (driver-side pyarrow write: the log row is
-        metadata, not data — one job per mutation would dwarf the
-        mutation itself). It is published whole (:func:`publish`), so a
-        crash mid-write leaves no torn segment. File names embed the
-        monotone seq, so the log reads back in commit order with a plain
-        sort."""
-        table = pa.table(
-            [[seq], [op], [ts_lo], [ts_hi], [n_rows]], schema=_LOG_SCHEMA
-        )
-        d = os.path.join(self._path(name), _CHANGELOG_DIR)
+        """Commit one mutation: publish its log segment, named by ``seq``
+        from :meth:`_next_seq` (driver-side pyarrow: the log row is
+        metadata, not data). The segment names the data files the
+        mutation published (``add``: ``path`` under the database, ``rows``
+        and ``bytes``) and the paths it retires (``remove``); being
+        published whole (:func:`publish`), it is the commit point. The
+        handle's snapshot takes the commit in memory, and only then are
+        the removed files unlinked, and a partition left with no file
+        loses its directory."""
+        path = self._path(name)
+        row = {
+            "seq": seq, "op": op, "ts_lo_ns": ts_lo, "ts_hi_ns": ts_hi,
+            "n_rows": n_rows, "add": list(add), "remove": sorted(remove),
+        }
+        table = pa.Table.from_pylist([row], schema=_LOG_SCHEMA)
         publish(
-            os.path.join(d, f"{seq:020d}.parquet"),
+            os.path.join(path, _CHANGELOG_DIR, f"{seq:020d}.parquet"),
             lambda p: pq.write_table(table, p),
         )
+        files = self._advance(name, [row]).files
+        for p in row["remove"]:
+            os.remove(os.path.join(path, p))
+        for d in {p.split("/")[0] for p in remove}:
+            if d[len("date="):] not in files:
+                with contextlib.suppress(OSError):  # a crashed commit's file
+                    os.rmdir(os.path.join(path, d))
 
-    def _read_log(self, name: str) -> tuple[list[str], pa.Table]:
-        """The commit log's one reader: the segment files it read and
-        their rows, one per ``seq``, in ``seq`` order. Driver-side
-        pyarrow over a metadata-sized directory. A row that an
-        interrupted fold left in both the consolidated file and an old
-        segment is read once, and a fold that removes a listed segment
-        before it is read makes the read list again (:func:`_read_listed`)."""
-        d = os.path.join(self._path(name), _CHANGELOG_DIR)
-        paths, log = _read_listed(
-            lambda: [os.path.join(d, f) for f in _segments(d)],
-            schema=_LOG_SCHEMA,
-        )
+    def _advance(self, name: str, commits: list[dict]) -> _Snapshot:
+        """Apply the log rows ``commits`` to this handle's snapshot of
+        ``name`` (rows it already holds are skipped) and keep the
+        result."""
+        with self._lock:
+            snap = self._snapshots.get(name, _Snapshot()).then(commits)
+            self._snapshots[name] = snap
+        return snap
+
+    def _snapshot(self, name: str) -> _Snapshot:
+        """What ``name`` holds now: this handle's snapshot after it
+        replays the segments published since it last looked. With no new
+        segment this is one listing of the commit log and no read. A
+        missing database raises ``KeyError``."""
+        snap = self._snapshots.get(name, _Snapshot())
+        _, log = self._read_log(name, after=snap.seq)
+        return self._advance(name, log.to_pylist()) if log.num_rows else snap
+
+    def _read_log(self, name: str, after: int = 0) -> tuple[list[str], pa.Table]:
+        """The commit log's one reader: the segment files named above seq
+        ``after`` (a segment is named by the last seq it holds; all of
+        them by default) and their rows, one per ``seq``, in ``seq``
+        order. Driver-side pyarrow over a metadata-sized directory. A
+        row that an interrupted fold left in both the consolidated file
+        and an old segment is read once, and a fold that removes a
+        listed segment before it is read makes the read list again
+        (:func:`_read_listed`). A missing database raises ``KeyError``."""
+        path = self._path(name)
+        d, floor = os.path.join(path, _CHANGELOG_DIR), f"{after:020d}.parquet"
+        try:
+            paths, log = _read_listed(
+                lambda: [os.path.join(d, f) for f in _segments(d) if f > floor],
+                schema=_LOG_SCHEMA,
+            )
+        except FileNotFoundError:  # no log directory
+            if not os.path.isdir(path):
+                raise KeyError(f"no such db: {name}") from None
+            paths, log = [], None
         if log is None:
-            return [], _LOG_SCHEMA.empty_table()
+            return [], _EMPTY_LOG
         log = log.sort_by("seq")
         seqs = log.column("seq").to_numpy()
         return paths, log.filter(np.append(True, seqs[1:] != seqs[:-1]))
@@ -363,11 +454,11 @@ class SerieslyDB:
         empty frame.
 
         The log is read on the driver (:meth:`_read_log`) and returned as
-        a local DataFrame: no Spark job, and each ``seq`` once, also
-        after a fold that crashed before it removed the old segments."""
-        if not os.path.isdir(self._path(name)):
-            raise KeyError(f"no such db: {name}")
-        return self.spark.createDataFrame(self._read_log(name)[1])
+        a local DataFrame of the five public columns: no Spark job, and
+        each ``seq`` once, also after a fold that crashed before it
+        removed the old segments."""
+        log = self._read_log(name)[1]
+        return self.spark.createDataFrame(log.select(log.schema.names[:5]))
 
     # -- Reads (S1-S3, S10/S11) --------------------------------------------
 
@@ -393,24 +484,24 @@ class SerieslyDB:
 
     def _live(
         self, name: str, lo: int | None = None, hi: int | None = None,
-        dates: list[str] | None = None,
+        files: dict[str, list[tuple[str, int]]] | None = None,
     ) -> DataFrame:
         """Live rows (``ts_ns, seq, doc, date``), one per key, of keys in
-        ``[lo, hi]`` (inclusive ns, ``None`` is open) of the ``dates``
-        partitions (default: all). The in-range partitions come from one
-        :meth:`_data_files` listing and :meth:`_scan` reads exactly its
-        files. A key lives in one partition and no file holds it twice,
-        so the last-write-wins fold runs only if some listed partition
-        holds more than one file. A range that touches no partition is
-        the empty frame."""
-        if dates is None:
-            dates = [p[len("date="):] for p in self._partitions(name)]
+        ``[lo, hi]`` (inclusive ns, ``None`` is open) of the ``files`` of
+        a :meth:`_data_files` listing (default: the database's snapshot
+        now). :meth:`_scan` reads exactly the in-range partitions' files.
+        A key lives in one partition and no file holds it twice, so the
+        last-write-wins fold runs only if some listed partition holds
+        more than one file. A range that touches no partition is the
+        empty frame."""
+        if files is None:
+            files = self._data_files(name)
         lo_d = None if lo is None else _ns_date(lo)
         hi_d = None if hi is None else _ns_date(hi)
-        listing = self._data_files(name, [
-            d for d in dates
+        listing = {
+            d: fs for d, fs in files.items()
             if (lo_d is None or d >= lo_d) and (hi_d is None or d <= hi_d)
-        ])
+        }
         if not listing:
             return self.spark.createDataFrame([], DOC_SCHEMA + ", date date")
         raw = self._scan(name, listing)
@@ -427,8 +518,8 @@ class SerieslyDB:
 
     def df(self, name: str, from_ts=None, to_ts=None) -> DataFrame:
         """Live view of the database: one row per key (last write wins).
-        Range bounds are inclusive ns keys (P4). Pruning is a driver-side
-        listing of the in-range partitions' files; the ``ts_ns`` bounds
+        Range bounds are inclusive ns keys (P4). Pruning picks the
+        in-range partitions' files from the snapshot; the ``ts_ns`` bounds
         stay on the scan for row-group skipping. A range that touches no
         partition is the empty frame; an unreadable file raises."""
         lo = None if from_ts is None else py_parse_ts_ns(from_ts)
@@ -441,8 +532,9 @@ class SerieslyDB:
         ``ts_ns == key`` (row groups whose ``ts_ns`` bounds miss the key
         are skipped), and the newest ``seq`` among the key's revisions
         wins. Exact beside a ``compact`` or ``delete_range``: a file
-        that a rewrite unlinks after the listing makes the read list
-        again (:func:`_read_listed`), where Spark would skip it."""
+        that a commit unlinks after the read resolved its snapshot makes
+        it resolve again (:func:`_read_listed`), where Spark would skip
+        it."""
         ns = py_parse_ts_ns(ts)
         d = _ns_date(ns)
         part_dir = os.path.join(self._path(name), f"date={d}")
@@ -521,190 +613,85 @@ class SerieslyDB:
 
     # -- Maintenance (S6/S7/S9) --------------------------------------------
 
-    def _partitions(
-        self, name: str, first: str | None = None, last: str | None = None
-    ) -> list[str]:
-        """The ``date=`` partition directories, sorted; only those of the
-        dates ``first`` to ``last`` (ISO dates, inclusive; None is open)
-        when given."""
-        path = self._path(name)
-        if not os.path.isdir(path):
-            raise KeyError(f"no such db: {name}")
-        return sorted(
-            d for d in os.listdir(path)
-            if d.startswith("date=")
-            and (first is None or d[len("date="):] >= first)
-            and (last is None or d[len("date="):] <= last)
-            and os.path.isdir(os.path.join(path, d))
-        )
-
     def _data_files(
         self, name: str, dates: list[str] | None = None
     ) -> dict[str, list[tuple[str, int]]]:
         """What the database holds: date -> the sorted ``(file, bytes)`` of
-        its ``date=`` partition's parquet files, for every partition or
-        for ``dates``. The one file listing behind the cache's date stamps,
-        :meth:`info` and the footer row counts;
-        driver-side metadata, no Spark job. Hidden and ``_``-prefixed
-        names (the commit log, Spark's markers) are not data, as Spark's
-        readers skip them. A partition missing from disk (retired by a
-        rewrite), or a ``date=`` directory holding no data file (a commit
-        that crashed before publishing its file), is left out. A missing
-        database raises ``KeyError``."""
-        path = self._path(name)
+        the data files of its ``date=`` partition, for every partition or
+        for ``dates``, as of the snapshot this handle holds after it
+        replays any new log segment (:meth:`_snapshot`). The one listing
+        behind every read, ``get``, :meth:`info` and the cache's date
+        stamps; driver-side metadata, no Spark job, and no ``date=``
+        directory listed. A missing database raises ``KeyError``."""
+        files = self._snapshot(name).files
         if dates is None:
-            dates = [p[len("date="):] for p in self._partitions(name)]
-        elif not os.path.isdir(path):
-            raise KeyError(f"no such db: {name}")
-        out = {}
-        for d in dates:
-            part_dir = os.path.join(path, f"date={d}")
-            while True:
-                try:
-                    with os.scandir(part_dir) as it:
-                        files = [
-                            (e.name, e.stat().st_size)
-                            for e in it if _is_data_file(e.name)
-                        ]
-                    break
-                except FileNotFoundError:
-                    # The partition is gone, or a rewrite unlinked a
-                    # file between the scan and its stat. Leaving that
-                    # file out could leave out the whole partition (the
-                    # rewrite's output was published after the scan), so
-                    # the partition is scanned again.
-                    if not os.path.isdir(part_dir):
-                        files = []
-                        break
-            if files:
-                out[d] = sorted(files)
-        return out
-
-    def _partition_versions(
-        self, name: str, first: str | None = None, last: str | None = None
-    ) -> dict[str, str]:
-        """date -> fingerprint of the partition's file listing, for the
-        dates ``first`` to ``last`` (as :meth:`_partitions`). A commit
-        changes the fingerprint of exactly the partitions it writes,
-        rewrites or drops; the commit log is not part of it."""
-        dates = [p[len("date="):] for p in self._partitions(name, first, last)]
-        return {
-            d: hashlib.md5(json.dumps(files).encode()).hexdigest()
-            for d, files in self._data_files(name, dates).items()
-        }
-
-    def _footer_rows(
-        self, name: str, listing: dict[str, list[tuple[str, int]]]
-    ) -> int:
-        """Exact row count of the files of a :meth:`_data_files` listing,
-        from parquet footer metadata: driver-side milliseconds, no Spark
-        job."""
-        path = self._path(name)
-        return sum(
-            pq.read_metadata(os.path.join(path, f"date={d}", f)).num_rows
-            for d, files in listing.items()
-            for f, _ in files
-        )
+            return dict(files)
+        return {d: files[d] for d in dates if d in files}
 
     def delete_range(self, name: str, from_ts, to_ts) -> None:
-        """Bulk range delete (S6). Partitions fully inside the range are
-        retired without reading their data: their listed files are
-        unlinked, then the emptied directory. Each of the two edge
-        partitions is rewritten in place by :meth:`_rewrite_partition`
-        without the deleted keys: one file holding each surviving key
-        once. An edge of more than one file is first rewritten as one
-        file without a drop, so the drop unlinks a single input and a
-        concurrent read of the edge sees it before or after the delete.
-        A file committed into the range after this call's listing
-        survives. The 10k-commit batching of the reference
-        (handlers.go:256) is irrelevant here: the rewrite is one Spark
-        write (2 jobs) per edge partition, two for an edge of several
-        files.
+        """Bulk range delete (S6), one commit. Partitions fully inside the
+        range are retired without reading their data. Each of the two
+        edge partitions is rewritten by :meth:`_rewrite` without the
+        deleted keys: one file holding each surviving key once. The one
+        log segment then retires every file of the covered partitions and
+        adds the edges' new files, so a read sees the whole delete or
+        none of it; the retired files are unlinked after it. A file
+        committed into the range after this call's snapshot survives.
+        The 10k-commit batching of the reference (handlers.go:256) is
+        irrelevant here: the rewrite is one Spark write (2 jobs) per edge
+        partition.
 
-        The commit log's ``n_rows`` (raw rows removed) comes from parquet
-        footers, not a scan job: a retired partition's rows, plus each
-        edge rewrite's rows read minus rows written (the in-range rows
-        and the superseded revisions the rewrite folds away)."""
+        The commit log's ``n_rows`` (raw rows removed) comes from the
+        row counts the log holds, not a scan job: the rows of every
+        retired file less the rows of the edges' new files (the
+        in-range rows and the superseded revisions the rewrite folds
+        away)."""
         lo, hi = py_parse_ts_ns(from_ts), py_parse_ts_ns(to_ts)
-        lo_d = _ns_date(lo)
-        hi_d = _ns_date(hi)
-        n_removed = 0
-        for d, files in self._data_files(name).items():
-            if lo_d < d < hi_d:
-                n_removed += self._footer_rows(name, {d: files})
-                self._retire(name, d, [f for f, _ in files])
-            elif d == lo_d or d == hi_d:
-                # An edge of several files is folded into one first: the
-                # drop then unlinks one input, so a read sees all of the
-                # deleted keys or none of them.
-                drops = [None, (lo, hi)] if len(files) > 1 else [(lo, hi)]
-                for drop in drops:
-                    rows_in, rows_out = self._rewrite_partition(name, d, drop)
-                    n_removed += rows_in - rows_out
-        self._log_change(name, self._next_seq(name), "delete", lo, hi, n_removed)
+        lo_d, hi_d = _ns_date(lo), _ns_date(hi)
+        snap = self._snapshot(name)
+        add, remove = [], []
+        for d, files in snap.files.items():
+            if lo_d <= d <= hi_d:
+                remove += [f"date={d}/{f}" for f, _ in files]
+                if d in (lo_d, hi_d):
+                    add += self._rewrite(name, d, files, (lo, hi))
+        n_removed = sum(snap.live[p][1] for p in remove) - sum(a["rows"] for a in add)
+        self._commit(name, self._next_seq(name), "delete", lo, hi, n_removed, add, remove)
 
-    def _rewrite_partition(
-        self, name: str, date: str, drop: tuple[int, int] | None = None
-    ) -> tuple[int, int]:
-        """Rewrite the data files of partition ``date`` in place as one
-        file that holds each of their keys once, with its highest ``seq``
-        (last write wins), less the keys in ``drop`` (an inclusive ns
-        range); returns (rows read, rows written). The one rewrite of the
-        store, behind :meth:`compact` and :meth:`delete_range`, as the
-        reference compacts into one new couch file (database.go:136-171).
-
-        The new file is staged in the database's hidden ``.tmp-<uuid>``
-        directory and published beside the old files before any old one
-        goes, so a read at any point sees the old files, the new one, or
-        both, folded by last-write-wins. Without ``drop`` each of these
-        is the same live view. A ``drop`` rewrite of several input files
-        would unlink them one at a time, so a read in between could see
-        some dropped keys and not others; :meth:`delete_range` therefore
-        folds such a partition into one file first. Only the files of the one listing
-        taken here are read and unlinked: a file committed after it is
-        left as it is. A crash at any step leaves every kept row readable
-        with its doc, and running the operation again finishes it; the
-        next :meth:`compact` removes the staging directory a crash
-        left."""
+    def _rewrite(
+        self, name: str, date: str, files: list[tuple[str, int]],
+        drop: tuple[int, int] | None = None,
+    ) -> list[dict]:
+        """Write partition ``date``'s ``files`` (a :meth:`_data_files`
+        entry) as one new file that holds each of their keys once, with
+        its highest ``seq`` (last write wins), less the keys in ``drop``
+        (an inclusive ns range), and publish it beside them. Returns the
+        log entry of the new file (``path``, ``rows``, ``bytes``), or
+        none when no row is left. The one rewrite of the store, behind
+        :meth:`compact` and :meth:`delete_range`, as the reference
+        compacts into one new couch file (database.go:136-171): 2 Spark
+        jobs. No read sees the new file until the caller's commit names
+        it; Spark stages it in the database's hidden ``.tmp-<uuid>``
+        directory, which the next :meth:`compact` removes if a crash
+        leaves it."""
         path = self._path(name)
-        part_dir = os.path.join(path, f"date={date}")
-        listing = self._data_files(name, [date])
-        files = [f for f, _ in listing.get(date, [])]
-        rows_in = self._footer_rows(name, listing)
-        rows_out = 0
-        # A directory with no data file (a commit that crashed before its
-        # rename) has nothing to read: it is only removed.
-        if files:
-            rows = self._scan(name, listing).select("ts_ns", "seq", "doc")
-            if drop is not None:
-                rows = rows.where(f"NOT (ts_ns >= {drop[0]} AND ts_ns <= {drop[1]})")
-            tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}")
-            try:
-                latest_by_key(rows, ["ts_ns"], "seq").coalesce(1).write.parquet(tmp)
+        rows = self._scan(name, {date: files}).select("ts_ns", "seq", "doc")
+        if drop is not None:
+            rows = rows.where(f"NOT (ts_ns >= {drop[0]} AND ts_ns <= {drop[1]})")
+        tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}")
+        try:
+            latest_by_key(rows, ["ts_ns"], "seq").coalesce(1).write.parquet(tmp)
+            for f in sorted(filter(_is_data_file, os.listdir(tmp))):
                 # The footer says whether the output holds rows: an empty
                 # one (every key dropped) is never published.
-                for f in sorted(os.listdir(tmp)):
-                    if not _is_data_file(f):
-                        continue
-                    n = pq.read_metadata(os.path.join(tmp, f)).num_rows
-                    if n:
-                        os.replace(os.path.join(tmp, f), os.path.join(part_dir, f))
-                        rows_out += n
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-        self._retire(name, date, files)
-        return rows_in, rows_out
-
-    def _retire(self, name: str, date: str, files: list[str]) -> None:
-        """Unlink ``files`` of partition ``date``, then remove its
-        directory if it is empty. ``rmdir`` leaves the directory to a
-        data file published meanwhile, and to a crashed commit's staging
-        file, which the next :meth:`compact` removes first."""
-        part_dir = os.path.join(self._path(name), f"date={date}")
-        for f in files:
-            os.remove(os.path.join(part_dir, f))
-        with contextlib.suppress(OSError):
-            os.rmdir(part_dir)
+                n = pq.read_metadata(os.path.join(tmp, f)).num_rows
+                if n:
+                    part = f"date={date}/{f}"
+                    os.replace(os.path.join(tmp, f), os.path.join(path, part))
+                    return [_entry(path, part, n)]
+            return []
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
 
     def compact(self, name: str, fold_changelog: bool = True) -> None:
         """Rewrite each partition of more than one file as one file that
@@ -718,59 +705,74 @@ class SerieslyDB:
         commit in between rewrites nothing; it still folds the commit log
         and records itself there.
 
-        Each partition is rewritten in place (:meth:`_rewrite_partition`):
-        two Spark jobs, the new file published beside the old ones, then
-        the files the rewrite read unlinked. A revision committed during
+        Each partition is rewritten by :meth:`_rewrite` (two Spark jobs,
+        the new file published beside the old ones), and one log segment
+        then switches every rewritten partition to its new file at once;
+        the old files are unlinked after it. A revision committed during
         the rewrite survives as a file of its own, folded at read time
-        until the next ``compact``. A crash mid-rewrite leaves a
-        partition that reads the same live keys, and may leave its
-        staging directory; compacting again removes every such
-        directory of this database first and reaches one file per
-        partition. It also removes every hidden ``*.tmp`` staging file
-        a crashed commit, log append or log fold left in a ``date=``
-        directory or in the commit log.
+        until the next ``compact``. This database has one writer handle,
+        and it is here, so compact first removes every file under the
+        database that the snapshot does not name: a crashed commit's
+        data file or staging file, a crashed rewrite's ``.tmp-*``
+        directory or retired files, a crashed log append's or fold's
+        staging file, and a file dropped into a ``date=`` directory by
+        hand.
 
         ``fold_changelog=False`` skips the commit-log fold — use it when
         a lagging :meth:`changes_log_stream` consumer may not have
         caught up to the current log tail yet (the fold rewrites the
         newest segment in place, which a file stream never re-reads)."""
-        listing = self._data_files(name)
-        # This database has one writer handle, and it is here: a staging
-        # directory (a rewrite's) or staging file (a commit's, a log
-        # segment's or a fold's) seen now is a crashed one.
-        path = self._path(name)
-        for d in os.listdir(path):
-            if d.startswith(".tmp-"):
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            elif d.startswith("date=") or d == _CHANGELOG_DIR:
-                for f in os.listdir(os.path.join(path, d)):
-                    if f.startswith(".") and f.endswith(".tmp"):
-                        os.remove(os.path.join(path, d, f))
-        for part in self._partitions(name):
-            d = part[len("date="):]
-            if len(listing.get(d, [])) != 1:
-                self._rewrite_partition(name, d)
+        snap = self._snapshot(name)
+        self._sweep(name, snap)
+        add, remove = [], []
+        for d, files in snap.files.items():
+            if len(files) > 1:
+                remove += [f"date={d}/{f}" for f, _ in files]
+                add += self._rewrite(name, d, files)
         # Fold the accumulated one-file-per-commit log segments into a
         # single consolidated segment BEFORE recording this compaction
         # (which then lands as a fresh segment). The log grows one tiny
-        # file per mutation; without folding, both change_log reads and
-        # the first-touch seq listing degrade with mutation count.
+        # file per mutation; without folding, every replay of a fresh
+        # handle and every change_log read degrade with mutation count.
         if fold_changelog:
             self._fold_changelog(name)
-        # Post-compaction the physical rows ARE the live set (the LWW fold
-        # just ran); the count comes straight from the freshly-written
-        # parquet footers — no job.
-        self._log_change(
-            name, self._next_seq(name), "compact", None, None,
-            self._footer_rows(name, self._data_files(name)),
+        # After the rewrites every partition holds each key once: its rows
+        # ARE the live set.
+        n_live = (
+            sum(rows for _, rows in snap.live.values())
+            - sum(snap.live[p][1] for p in remove) + sum(a["rows"] for a in add)
         )
+        self._commit(name, self._next_seq(name), "compact", None, None, n_live, add, remove)
+
+    def _sweep(self, name: str, snap: _Snapshot) -> None:
+        """Remove every file under database ``name`` that ``snap`` does
+        not name: in ``date=`` directories every file but the snapshot's
+        (and the directory, when the snapshot names none), in the commit
+        log every file but a segment, and every ``.tmp-*`` directory."""
+        path = self._path(name)
+        for d in os.listdir(path):
+            sub = os.path.join(path, d)
+            if d.startswith(".tmp-"):
+                shutil.rmtree(sub, ignore_errors=True)
+                continue
+            if d == _CHANGELOG_DIR:
+                keep = set(_segments(sub))
+            elif d.startswith("date="):
+                keep = {f for f, _ in snap.files.get(d[len("date="):], [])}
+            else:
+                continue
+            for f in set(os.listdir(sub)) - keep:
+                os.remove(os.path.join(sub, f))
+            if not keep and d != _CHANGELOG_DIR:
+                os.rmdir(sub)
 
     def _fold_changelog(self, name: str) -> None:
         """Merge every commit-log segment into one file named with the
-        max folded seq (so first-touch seq recovery still reads the
-        floor from file names, and the batch ``change_log`` view is
-        byte-identical — rows carry their seq; order comes from the
-        sort, not the file split). The merged table is what
+        max folded seq (so a handle that has replayed that seq skips it,
+        and the batch ``change_log`` view is byte-identical — rows carry
+        their seq; order comes from the sort, not the file split). It
+        keeps every commit's row with the files it added and removed, so
+        it is the checkpoint a reopened handle replays. The merged table is what
         :meth:`_read_log` returns; it is published over the newest
         segment's path (:func:`publish`) before the other segments it
         read are removed. A crash before the publish leaves the log as
@@ -829,7 +831,11 @@ class SerieslyDB:
         tests/test_db.py::test_changes_feed_is_append_only. For deletes
         and compaction as FIRST-CLASS change rows, stream the commit log
         instead (:meth:`changes_log_stream` — the log-backed feed this
-        docstring used to defer to a table format)."""
+        docstring used to defer to a table format). The feed lists the
+        ``date=`` directories itself, not the commit log, so it delivers
+        a commit's files before the commit lands, and the file of a
+        commit that crashed before its segment until :meth:`compact`
+        removes it."""
         return (
             self.spark.readStream.schema(DOC_SCHEMA + ", date date")
             .option("basePath", self._path(name))
@@ -892,7 +898,7 @@ class SerieslyDB:
         ``dedup_within`` (e.g. ``"7 days"``) switches to
         ``dropDuplicatesWithinWatermark`` keyed on the commit's
         event time (``seq`` IS a nanosecond epoch timestamp — see
-        ``_log_change``), capping state to commits younger than the
+        ``_commit``), capping state to commits younger than the
         horizon. The trade: a duplicate re-delivered MORE than
         ``dedup_within`` after the original commit (a consumer
         restarting onto the consolidated file long after a fold) passes
@@ -929,14 +935,15 @@ class SerieslyDB:
 
     def query(
         self, name: str, q: SerieslyQuery, exact_sums: bool = False,
-        dates: list[str] | None = None,
+        files: dict[str, list[tuple[str, int]]] | None = None,
     ) -> DataFrame:
         """The `GET /db/_query` equivalent over the live LWW view, of the
-        ``dates`` partitions only when given (``QueryCache`` computes
-        just the dates it lacks)."""
+        ``files`` of a :meth:`_data_files` listing when given
+        (``QueryCache`` computes the dates it lacks from the snapshot it
+        stamped them from)."""
         lo = None if q.from_ts is None else py_parse_ts_ns(q.from_ts)
         hi = None if q.to_ts is None else py_parse_ts_ns(q.to_ts)
-        src = self._live(name, lo, hi, dates)
+        src = self._live(name, lo, hi, files)
         # The view already holds only the range's keys: the compiler need
         # not filter it a second time.
         unbounded = dataclasses.replace(q, from_ts=None, to_ts=None)
@@ -955,10 +962,17 @@ def _is_data_file(f: str) -> bool:
     return f.endswith(".parquet") and not f.startswith((".", "_"))
 
 
+def _entry(path: str, part: str, rows: int) -> dict:
+    """The commit-log entry of the published data file ``part`` (its
+    path under the database at ``path``) of ``rows`` rows."""
+    return {"path": part, "rows": rows, "bytes": os.path.getsize(os.path.join(path, part))}
+
+
 def _segments(d: str) -> list[str]:
     """The commit-log segments in log directory ``d``, in seq order (a
-    segment is named by its zero-padded last seq)."""
-    return sorted(filter(_is_data_file, os.listdir(d))) if os.path.isdir(d) else []
+    segment is named by its zero-padded last seq). A missing directory
+    raises ``FileNotFoundError``."""
+    return sorted(filter(_is_data_file, os.listdir(d)))
 
 
 def _ns_date(ns: int) -> str:

@@ -8,12 +8,12 @@ document set is unchanged, and a panel that slides one bucket recomputes
 one bucket. Here the unit of reuse is the store's own unit of change, the
 ``date=`` partition. An entry answers one *unit* of a query *shape* (the
 query without its range: group, fields, filters, aliases, sum mode) and
-is stamped with the fingerprint of the partition it covers
-(``SerieslyDB._partition_versions``, a hash of the partition's data-file
-listing). A commit, delete or compaction moves the fingerprints of exactly
-the dates it touches, so it makes stale exactly their entries. The commit
-log is not part of a fingerprint: a commit that changes no data file (a
-``delete_range`` over empty days) keeps the entries.
+is stamped with the fingerprint of the partition it covers (a hash of the
+partition's data files in the database's snapshot,
+``SerieslyDB._data_files``). A commit, delete or compaction moves the
+fingerprints of exactly the dates it touches, so it makes stale exactly
+their entries. A commit that changes no data file (a ``delete_range``
+over empty days) keeps the entries.
 
 The unit rule. When ``group_ms`` divides a day and no field is a rate
 reducer, a bucket never straddles a date (buckets are aligned to the
@@ -35,13 +35,14 @@ Anything else is one whole-range unit keyed on the range: a rate shape
 partition. Its stamp hashes the fingerprints of the dates in the range,
 not of the whole database.
 
-A query reads the fingerprints of the dates in its range once
-(:func:`db_version`), before any compute, so an entry is never stamped
-newer than the data it was computed from. It computes every missing or
-stale unit in one Spark plan over just their dates
-(``SerieslyDB.query(..., dates=)``), splits that plan's ``toArrow()``
-table per unit on the driver, stores each unit, and returns the
-concatenated, range-cut table. A query whose units are all current runs
+A query resolves one snapshot of the dates in its range
+(:func:`db_version`), before any compute. It stamps its units from that
+snapshot's files and computes every missing or stale unit from the same
+files, in one Spark plan over just their dates
+(``SerieslyDB.query(..., files=)``), so an entry is stamped with exactly
+the files it was computed from, even when a commit lands in between. It
+splits that plan's ``toArrow()`` table per unit on the driver, stores
+each unit, and returns the concatenated, range-cut table. A query whose units are all current runs
 no Spark job and makes no py4j call: it reads its entries on the driver
 with pyarrow. A ``QueryCache`` keeps the table of each entry it wrote or
 read while the entry's file is unchanged (one ``stat`` a unit), so a
@@ -90,6 +91,7 @@ import contextlib
 import dataclasses
 import datetime
 import hashlib
+import json
 import os
 
 import pyarrow as pa
@@ -128,13 +130,21 @@ def _query_shape(dbs: SerieslyDB, name: str, q: SerieslyQuery, exact_sums: bool)
 
 def db_version(
     dbs: SerieslyDB, name: str, first: str | None = None, last: str | None = None
-) -> dict[str, str]:
-    """What entry stamps are checked against: date -> fingerprint of that
-    partition's data-file listing, for the dates ``first`` to ``last``
-    (ISO dates, inclusive; None is open). Appends add files; delete and
-    compact remove or replace them; each moves only the dates it
-    touches."""
-    return dbs._partition_versions(name, first, last)
+) -> dict[str, list[tuple[str, int]]]:
+    """What entry stamps are derived from and missing units computed from:
+    the data files of the dates ``first`` to ``last`` (ISO dates,
+    inclusive; None is open) in one snapshot of the database, date -> its
+    ``(file, bytes)``. Appends add files; delete and compact remove or
+    replace them; each changes only the dates it touches."""
+    return {
+        d: files for d, files in dbs._data_files(name).items()
+        if (first is None or d >= first) and (last is None or d <= last)
+    }
+
+
+def _fingerprint(files: list[tuple[str, int]]) -> str:
+    """The stamp of a date's entries: a hash of the date's files."""
+    return hashlib.md5(json.dumps(files).encode()).hexdigest()
 
 
 @dataclasses.dataclass(frozen=True)
@@ -148,12 +158,12 @@ class _Unit:
 
 def _units(
     cache_dir: str, shape: str, q: SerieslyQuery, lo: int | None, hi: int | None,
-    versions: dict[str, str],
+    listing: dict[str, list[tuple[str, int]]],
 ) -> list[_Unit]:
     """The units of query ``q`` over ns keys ``[lo, hi]``, in date order
-    (the module docstring's rule), stamped from ``versions``: the
-    fingerprints of the dates in that range."""
-    dates = sorted(versions)
+    (the module docstring's rule), stamped from ``listing``: the
+    :func:`db_version` snapshot of the dates in that range."""
+    dates = sorted(listing)
 
     def unit(a: int | None, b: int | None, stamp: str, date: str | None) -> _Unit:
         key = hashlib.sha256(f"{shape}\x01{a!r}\x01{b!r}".encode()).hexdigest()[:32]
@@ -161,7 +171,7 @@ def _units(
 
     rate = any(r in REDUCERS and REDUCERS[r].kind == "rate" for _, r in q.fields)
     if rate or q.group_ms <= 0 or _DAY_MS % q.group_ms or not dates:
-        stamp = hashlib.sha256(repr([(d, versions[d]) for d in dates]).encode())
+        stamp = hashlib.sha256(repr([(d, _fingerprint(listing[d])) for d in dates]).encode())
         return [unit(lo, hi, stamp.hexdigest()[:32], None)]
     g = q.group_ms * _NS_PER_MS
     units = []
@@ -172,7 +182,7 @@ def _units(
         b = d1 if hi is None else min(hi, d1)
         if a % g == 0 and (b + 1) % g == 0:
             a, b = d0, d1  # whole buckets: the whole date, cut on use
-        units.append(unit(a, b, versions[d], d))
+        units.append(unit(a, b, _fingerprint(listing[d]), d))
     return units
 
 
@@ -264,11 +274,11 @@ class QueryCache:
         shape = _query_shape(self.dbs, name, q, exact_sums)
         lo = None if q.from_ts is None else py_parse_ts_ns(q.from_ts)
         hi = None if q.to_ts is None else py_parse_ts_ns(q.to_ts)
-        versions = db_version(
+        listing = db_version(
             self.dbs, name,
             None if lo is None else _ns_date(lo), None if hi is None else _ns_date(hi),
         )
-        units = _units(self.cache_dir, shape, q, lo, hi, versions)
+        units = _units(self.cache_dir, shape, q, lo, hi, listing)
         tables: dict[_Unit, pa.Table] = {}
         for u in units:
             table = self._reuse(u)
@@ -281,9 +291,9 @@ class QueryCache:
             self.hits += 1
         else:
             self.misses += 1
-            fresh = self._compute(name, q, exact_sums, missing, lo, hi)
+            fresh = self._compute(name, q, exact_sums, missing, lo, hi, listing)
             if fresh is None:
-                return self.dbs.query(name, q, exact_sums=exact_sums)
+                return self.dbs.query(name, q, exact_sums=exact_sums, files=listing)
             tables.update(fresh)
             self._evict(keep={u.path for u in units})
         answer = pa.concat_tables([tables[u] for u in units])
@@ -318,24 +328,24 @@ class QueryCache:
 
     def _compute(
         self, name: str, q: SerieslyQuery, exact_sums: bool, missing: list[_Unit],
-        lo: int | None, hi: int | None,
+        lo: int | None, hi: int | None, listing: dict[str, list[tuple[str, int]]],
     ) -> dict[_Unit, pa.Table] | None:
         """Answer the ``missing`` units of ``q`` (over ns keys ``[lo,
-        hi]``) in one Spark plan and store each; None when that answer
-        is over ``MAX_CACHED_ROWS`` rows. Date units are computed over
-        just their dates, with a range bound only where the first or
-        last of them is an edge clip: each unit is its date's part of
+        hi]``) from the files of ``listing``, the snapshot they were
+        stamped from, in one Spark plan and store each; None when that
+        answer is over ``MAX_CACHED_ROWS`` rows. Date units are computed
+        over just their dates, with a range bound only where the first
+        or last of them is an edge clip: each unit is its date's part of
         that range."""
-        dates = None
         if missing[0].date is not None:
-            dates = [u.date for u in missing]
+            listing = {u.date: listing[u.date] for u in missing}
             q = dataclasses.replace(
                 q,
                 from_ts=q.from_ts if missing[0].lo == lo else None,
                 to_ts=q.to_ts if missing[-1].hi == hi else None,
             )
         table = (
-            self.dbs.query(name, q, exact_sums=exact_sums, dates=dates)
+            self.dbs.query(name, q, exact_sums=exact_sums, files=listing)
             .limit(MAX_CACHED_ROWS + 1).toArrow()
         )
         if table.num_rows > MAX_CACHED_ROWS:

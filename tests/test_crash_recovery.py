@@ -30,12 +30,15 @@ Covered:
     running the op again reaches one file per partition; ``compact``
     removes every staging file a crashed commit left;
   * ``get`` beside a ``compact`` that unlinks the files it listed reads
-    the key's newest doc.
+    the key's newest doc;
+  * a delete that retires a multi-file day switches it in one commit,
+    and a commit that crashes before its log segment is rolled back.
 """
 
-import contextlib
 import os
 import shutil
+import sys
+import threading
 import types
 
 import pyarrow.parquet as pq
@@ -771,6 +774,34 @@ class TestMultiHandleSeq:
         assert len(seqs) == len(writers), "a handle overwrote a segment"
         assert seqs == sorted(set(seqs)), "seqs not strictly increasing"
 
+    def test_second_handle_reserves_above_a_commit_it_has_not_read(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """With a FROZEN clock, handle B commits and reads, handle A
+        commits 3 rows, then B commits 2. B takes its seq floor from its
+        refreshed snapshot, so its run starts above A's last seq and its
+        revision of a key A also wrote is the newest."""
+        root = str(tmp_path / "root")
+        a, b = SerieslyDB(spark, root), SerieslyDB(spark, root)
+        a.create("t")
+        monkeypatch.setattr(
+            dbmod, "time",
+            types.SimpleNamespace(time_ns=lambda: 1_700_000_000_000_000_000),
+        )
+        k = "2024-01-01T00:00:00Z"
+        b.write("t", '{"by": "b0"}', ts="2024-01-02T00:00:00Z")
+        assert b.get("t", k) is None
+        a.write_batch("t", [
+            ("2024-01-01T01:00:00Z", "{}"), ("2024-01-01T02:00:00Z", "{}"),
+            (k, '{"by": "a"}'),
+        ])
+        b.write_batch("t", [(k, '{"by": "b"}'), ("2024-01-01T03:00:00Z", "{}")])
+        monkeypatch.undo()
+        log = a.change_log("t").collect()
+        assert [r.n_rows for r in log] == [1, 3, 2]
+        assert log[2].seq - 2 + 1 > log[1].seq, "B's run overlaps A's"
+        assert a.get("t", k) == b.get("t", k) == '{"by": "b"}'
+
     def test_rows_take_log_seqs_when_the_clock_steps_back(
         self, spark, tmp_path, monkeypatch
     ):
@@ -805,6 +836,41 @@ class TestMultiHandleSeq:
         stored = reopened._scan("t", reopened._data_files("t")).collect()
         logged = reopened.change_log("t").collect()
         assert max(r.seq for r in stored) <= max(r.seq for r in logged)
+
+
+class TestSnapshotThreads:
+    def test_concurrent_replays_never_lose_a_commit(self, spark, tmp_path):
+        """Eight reader threads resolve one handle's snapshot while its
+        own commits and a second handle's land, with a tiny switch
+        interval: every reader sees the file count only grow, and the
+        handle ends with every commit, as a fresh handle replays it."""
+        root = str(tmp_path / "root")
+        dbs, other = SerieslyDB(spark, root), SerieslyDB(spark, root)
+        dbs.create("t")
+        n, stop, seen = 40, threading.Event(), [[] for _ in range(8)]
+
+        def read(counts):
+            while not stop.is_set():
+                counts.append(sum(map(len, dbs._data_files("t").values())))
+
+        readers = [threading.Thread(target=read, args=(c,)) for c in seen]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in readers:
+                t.start()
+            for i in range(n):
+                (dbs, other)[i % 2].write("t", "{}", ts=f"2024-01-01T00:{i:02d}:00Z")
+        finally:
+            stop.set()
+            sys.setswitchinterval(interval)
+            for t in readers:
+                t.join(timeout=60)
+        assert not any(t.is_alive() for t in readers)
+        assert all(c == sorted(c) for c in seen)
+        fresh = SerieslyDB(spark, root)
+        assert dbs._data_files("t") == fresh._data_files("t")
+        assert len(dbs._data_files("t")["2024-01-01"]) == n
 
 
 def _hook_fs_steps(monkeypatch, root, on_step):
@@ -881,7 +947,8 @@ def _race_scan(monkeypatch, dbs, other):
 
 class TestDataPlaneRace:
     """A second handle's append racing a partition rewrite survives, with
-    no error: the rewrite reads and unlinks only the files it listed."""
+    no error: the rewrite's commit retires only the files of its own
+    snapshot."""
 
     def test_raced_append_during_rewrite_survives(
         self, spark, tmp_path, monkeypatch
@@ -890,7 +957,7 @@ class TestDataPlaneRace:
         _two_file_day(dbs)
         other = SerieslyDB(spark, str(tmp_path / "root"))
         _race_scan(monkeypatch, dbs, other)
-        dbs._rewrite_partition("t", "2024-01-01")
+        dbs.compact("t")
         monkeypatch.undo()
         assert _docs(dbs) == ['{"k": 1}', '{"k": 2}', '{"k": 99}']
 
@@ -900,7 +967,8 @@ class TestDataPlaneRace:
         dbs.write("t", '{"k": 1}', ts="2024-01-01T00:00:00Z")
         other = SerieslyDB(spark, str(tmp_path / "root"))
         _race_scan(monkeypatch, dbs, other)
-        dbs._rewrite_partition("t", "2024-01-01")
+        # A delete of an empty instant rewrites its one-file edge day.
+        dbs.delete_range("t", "2024-01-01T05:00:00Z", "2024-01-01T05:00:00Z")
         monkeypatch.undo()
         assert _leftover_staging(dbs) == []
         assert _docs(dbs) == ['{"k": 1}', '{"k": 99}']
@@ -969,32 +1037,31 @@ class TestDataPlaneRace:
     def test_get_beside_compact_mid_listing_reads_the_newest_doc(
         self, spark, tmp_path, monkeypatch
     ):
-        """The compact runs after the listing scanned the partition's
-        directory and before it stat'ed the files: each stat fails, and
-        the compact's output came after the scan. The listing scans
-        again rather than drop the files, which would drop the day."""
+        """The compact runs after ``get`` listed the commit log and
+        before it resolved its snapshot: the listing shows no new
+        segment, so ``get`` names the files the compact then unlinked.
+        It finds them gone and resolves again, from a listing that holds
+        the compact's commit, rather than read a partial day."""
         root = str(tmp_path / "root")
         dbs = SerieslyDB(spark, root)
         _two_file_day(dbs)
         k = "2024-01-01T00:00:00Z"
         dbs.write("t", '{"k": 3}', ts=k)
         other = SerieslyDB(spark, root)
-        part = os.path.join(dbs._path("t"), "date=2024-01-01")
-        real, scanned = os.scandir, []
+        real, listed = dbmod._segments, []
 
-        def scan_then_compact(p):
-            if scanned or not isinstance(p, str) or os.path.abspath(p) != part:
-                return real(p)
-            with real(p) as it:
-                entries = list(it)
-            scanned.append([e.name for e in entries])
-            other.compact("t")
-            return contextlib.nullcontext(iter(entries))
+        def listing_then_compact(d):
+            out = real(d)
+            if not listed:
+                listed.append(out)
+                other.compact("t")
+            return out
 
-        monkeypatch.setattr(dbmod.os, "scandir", scan_then_compact)
+        monkeypatch.setattr(dbmod, "_segments", listing_then_compact)
         got = dbs.get("t", k)
         monkeypatch.undo()
-        assert len(scanned[0]) == 3
+        assert len(listed[0]) == 3
+        assert len(dbs._data_files("t")["2024-01-01"]) == 1
         assert got == '{"k": 3}'
 
     def test_clean_rewrite_still_succeeds(self, spark, tmp_path):
@@ -1081,6 +1148,58 @@ class TestPartitionRewriteSteps:
             assert after == len(live) - 2
             assert len(steps) >= 3
             assert set(counts) <= {len(live), after}, list(zip(counts, steps))
+
+    def test_read_at_every_retire_step_is_before_or_after(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """All of day 2 (two files) and key 0 of day 3 are deleted in one
+        commit: a read before every filesystem step, each unlink
+        included, counts all 30 keys or the 19 left, never a part of
+        day 2."""
+        root = str(tmp_path / "root")
+        dbs, live = _store(spark, root)
+        counts = []
+        steps = _hook_fs_steps(
+            monkeypatch, root, lambda *_: counts.append(dbs.df("t").count())
+        )
+        dbs.delete_range("t", "2024-01-02T00:00:00Z", "2024-01-03T00:00:00Z")
+        monkeypatch.undo()
+        assert set(counts) == {30, 19}, list(zip(counts, steps))
+        assert len(live) == 30 and dbs.df("t").count() == 19
+        assert [op for op, _ in steps].count("remove") == 4
+
+    def test_crash_before_segment_rolls_the_commit_back(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A commit that dies after it published its data files and
+        before it published its log segment never happened: ``df``,
+        ``get`` and ``change_log`` all lack it, on the same handle and
+        on a reopened one, and the next ``compact`` removes its files."""
+        root = str(tmp_path / "root")
+        dbs, live = _store(spark, root)
+        log = os.path.join(dbs._path("t"), ".changelog")
+        real = os.replace
+
+        def crash_on_segment(src, dst, *a, **kw):
+            if os.path.dirname(os.path.abspath(str(dst))) == log:
+                raise _InjectedCrash(dst)
+            return real(src, dst, *a, **kw)
+
+        monkeypatch.setattr(os, "replace", crash_on_segment)
+        k = "2024-01-01T23:00:00Z"
+        with pytest.raises(_InjectedCrash):
+            dbs.write_batch("t", [(k, '{"k": 99}'), ("2024-01-05T00:00:00Z", "{}")])
+        monkeypatch.undo()
+        day1 = os.path.join(dbs._path("t"), "date=2024-01-01")
+        day5 = os.path.join(dbs._path("t"), "date=2024-01-05")
+        assert len(os.listdir(day1)) == 3 and len(os.listdir(day5)) == 1
+        for h in (dbs, SerieslyDB(spark, root)):
+            assert _by_key(h) == live
+            assert h.get("t", k) is None
+            assert [r.op for r in h.change_log("t").collect()] == ["write"] * 2
+        dbs.compact("t")
+        assert len(os.listdir(day1)) == 1 and not os.path.exists(day5)
+        assert _by_key(dbs) == live
 
     def test_commit_crash_before_rename_is_swept_by_compact(
         self, spark, tmp_path, monkeypatch

@@ -80,7 +80,7 @@ class TestIngestAndRead:
         before = set(os.listdir(log))
         assert spark_jobs(lambda: dbs.write_batch("t", [])) == ([], 0)
         assert set(os.listdir(log)) == before
-        assert dbs._partitions("t") == []
+        assert dbs._data_files("t") == {}
 
     def test_non_str_docs_are_rejected(self, dbs):
         """Only JSON bodies are stored: a None doc would read back as a
@@ -98,7 +98,7 @@ class TestIngestAndRead:
         with pytest.raises(TypeError):
             dbs.write("t", 7, ts="2024-01-01T00:00:00Z")
         assert set(os.listdir(log)) == before
-        assert dbs._partitions("t") == []
+        assert dbs._data_files("t") == {}
 
     def test_commit_is_one_driver_file_per_date(self, dbs, spark_jobs):
         """A commit is driver-side I/O: no Spark job, one visible
@@ -120,7 +120,7 @@ class TestIngestAndRead:
         keys, jobs = spark_jobs(lambda: dbs.write_batch("t", rows))
         assert jobs == 0
         assert len(set(os.listdir(log)) - before) == 1
-        assert dbs._partitions("t") == [f"date=2024-01-0{d}" for d in (1, 2, 3)]
+        assert list(dbs._data_files("t")) == [f"2024-01-0{d}" for d in (1, 2, 3)]
         for d in (1, 2, 3):
             part = os.path.join(path, f"date=2024-01-0{d}")
             (name,) = os.listdir(part)
@@ -191,6 +191,47 @@ class TestIngestAndRead:
         monkeypatch.setattr(dbs, "_data_files", listing_then_commit)
         got = sorted((r.ts_ns, r.doc) for r in dbs.df("t").collect())
         assert [doc for _, doc in got] == [_doc(1), _doc(2)]
+
+    def test_reads_replay_only_new_segments(self, dbs, spark, monkeypatch):
+        """A handle replays the commit log once and keeps the snapshot:
+        reads after another handle's commit read that commit's segment
+        alone, and reads after no new commit, or after the handle's own,
+        read no segment."""
+        import pyarrow.parquet as pq
+
+        from seriesly_spark.plans.cache import db_version
+
+        dbs.create("t")
+        other = SerieslyDB(spark, dbs.root)
+        log = os.path.join(dbs._path("t"), ".changelog")
+        real, read = pq.read_table, []
+
+        def counting(source, *a, **kw):
+            paths = source if isinstance(source, list) else [source]
+            read.extend(os.path.basename(p) for p in map(str, paths) if log in p)
+            return real(source, *a, **kw)
+
+        monkeypatch.setattr(pq, "read_table", counting)
+
+        def reads():
+            read.clear()
+            dbs.df("t").collect()
+            dbs.get("t", "2024-01-01T00:00:00Z")
+            dbs.info("t")
+            db_version(dbs, "t")
+            return list(read)
+
+        def newest():
+            return sorted(os.listdir(log))[-1]
+
+        other.write_batch("t", [("2024-01-01T00:00:00Z", _doc(1))])
+        assert reads() == [newest()]
+        assert reads() == []
+        other.write("t", _doc(2), ts="2024-01-02T00:00:00Z")
+        assert reads() == [newest()]
+        dbs.write("t", _doc(3), ts="2024-01-03T00:00:00Z")
+        assert reads() == []
+        assert dbs.info("t")["doc_count"] == 3
 
     def test_one_file_partitions_read_without_the_fold(self, dbs, spark_jobs):
         """A store written by one batch holds one file a partition: the
@@ -407,12 +448,11 @@ class TestMaintenance:
         self._seed_days(dbs, [1, 2])
         dbs.write("t", _doc(7), ts="2024-01-01T00:00:00Z")
         dbs.compact("t")
-        versions, version = dbs._partition_versions("t"), db_version(dbs, "t")
+        version = db_version(dbs, "t")
         qc = QueryCache(dbs, str(tmp_path / "cache"))
         q = SerieslyQuery(group_ms=86_400_000, fields=[("/k", "sum")], aliases=["s"])
         want = qc.query("t", q)
         assert spark_jobs(lambda: dbs.compact("t")) == (None, 0)
-        assert dbs._partition_versions("t") == versions
         assert db_version(dbs, "t") == version
         assert qc.query("t", q).equals(want)
         assert (qc.misses, qc.hits) == (1, 1)
@@ -423,8 +463,8 @@ class TestMaintenance:
     def test_rewrite_takes_two_jobs_a_partition(self, dbs, spark_jobs):
         """The one partition rewrite costs 2 Spark jobs: ``compact`` of N
         multi-file partitions takes 2N, and ``delete_range`` with one
-        multi-file edge takes 4: the edge is folded into one file, then
-        rewritten without the range."""
+        multi-file edge takes 2: its one commit switches the edge's files
+        at once, so the edge is rewritten without the range in one step."""
         self._seed_days(dbs, [1, 2, 3])
         dbs.write_batch(
             "t", [(f"2024-01-0{d}T06:00:00Z", _doc(d)) for d in (1, 2, 3)]
@@ -433,7 +473,7 @@ class TestMaintenance:
         assert [len(f) for f in dbs._data_files("t").values()] == [1, 1, 1]
         dbs.write("t", _doc(9), ts="2024-01-02T18:00:00Z")
         edge = "2024-01-02T12:00:00Z"
-        assert spark_jobs(lambda: dbs.delete_range("t", edge, edge)) == (None, 4)
+        assert spark_jobs(lambda: dbs.delete_range("t", edge, edge)) == (None, 2)
         assert [len(f) for f in dbs._data_files("t").values()] == [1, 1, 1]
         assert dbs.df("t").count() == 9
 
@@ -453,6 +493,8 @@ class TestMaintenance:
         and publishing its file leaves a directory holding only a hidden
         staging file. No read or listing may count it, and the next
         compact sweeps it."""
+        from seriesly_spark.plans.cache import db_version
+
         self._seed_days(dbs, [1])
         stray = os.path.join(dbs._path("t"), "date=2024-01-05")
         os.makedirs(stray)
@@ -465,7 +507,7 @@ class TestMaintenance:
         assert [r[1] for r in dbs.query("t", q).collect()] == [2]
         info = dbs.info("t")
         assert (info["n_partitions"], info["n_files"]) == (1, 1)
-        assert list(dbs._partition_versions("t")) == ["2024-01-01"]
+        assert list(db_version(dbs, "t")) == ["2024-01-01"]
         stream = (
             dbs.changes("t")
             .writeStream.format("memory")

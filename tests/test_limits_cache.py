@@ -144,6 +144,30 @@ class TestQueryCache:
         assert qc.query("t", self._q()).equals(want, check_metadata=True)
         assert (qc.misses, qc.hits) == (1, 1)
 
+    def test_commit_between_stamp_and_compute_is_computed_as_stamped(
+        self, dbs, tmp_path, monkeypatch
+    ):
+        """A commit that lands after the query resolved its stamps and
+        before it computed: the units are computed from the files they
+        are stamped with, so the answer and the stored entry are the
+        state before the commit, and the next query recomputes it."""
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        before = _rows(dbs.query("t", self._q()))
+        real = cache_mod.db_version
+
+        def stamp_then_commit(*a, **k):
+            out = real(*a, **k)
+            monkeypatch.setattr(cache_mod, "db_version", real)
+            dbs.write("t", json.dumps({"v": 100}), ts="2024-01-01T00:30:00Z")
+            return out
+
+        monkeypatch.setattr(cache_mod, "db_version", stamp_then_commit)
+        assert qc.query("t", self._q()).to_pylist() == before
+        after = _rows(dbs.query("t", self._q()))
+        assert after[0]["s"] == before[0]["s"] + 100
+        assert qc.query("t", self._q()).to_pylist() == after
+        assert (qc.misses, qc.hits) == (2, 0)
+
     def test_one_day_append_changes_one_partition_version(self, dbs, tmp_path):
         # The cache's date stamps are the partition versions: a one-day
         # append moves one of them and recomputes one date unit.
@@ -154,9 +178,9 @@ class TestQueryCache:
             aliases=["cnt", "sum_v"],
         )
         qc.query("t", q, exact_sums=True)
-        before = dbs._partition_versions("t")
+        before = db_version(dbs, "t")
         dbs.write("t", json.dumps({"v": 5}), ts="2024-01-02T05:00:00Z")
-        after = dbs._partition_versions("t")
+        after = db_version(dbs, "t")
         assert sorted(before) == sorted(after) == ["2024-01-01", "2024-01-02"]
         assert [d for d in after if after[d] != before[d]] == ["2024-01-02"]
         qc.query("t", q, exact_sums=True)

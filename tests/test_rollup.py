@@ -108,16 +108,16 @@ class TestContinuousRollup:
 
         recomputed, real_query = [], dbs.query
 
-        def recording(name, q, exact_sums=False, dates=None):
-            recomputed.append(dates)
-            return real_query(name, q, exact_sums=exact_sums, dates=dates)
+        def recording(name, q, exact_sums=False, files=None):
+            recomputed.append(files)
+            return real_query(name, q, exact_sums=exact_sums, files=files)
 
         monkeypatch.setattr(dbs, "query", recording)
         rows, computed, reused = _run(qc)
         monkeypatch.undo()
         # 1970-01-02 was untouched and 1970-01-03 written before the
         # failure; 1970-01-04 is stale and 1970-01-05 missing.
-        assert recomputed[0] == ["1970-01-04", "1970-01-05"]
+        assert list(recomputed[0]) == ["1970-01-04", "1970-01-05"]
         assert (computed, reused) == (2, 2)
         assert rows == _run(QueryCache(dbs, str(tmp_path / "fresh")))[0] == [
             (1 * DAY_MS, 3, 3.0),
