@@ -31,13 +31,15 @@ of Delta's ``_delta_log``. Each segment records one commit: its public
 row (``seq, op, ts_lo_ns, ts_hi_ns, n_rows``) and the data files the
 commit adds (path under the database, rows, bytes) and removes. A handle
 replays the log into a snapshot (date -> files, and the last seq) and
-keeps it: a read lists ``.changelog`` and replays only the segments
-published since, and the handle's own commits update the snapshot in
-memory. Every read, ``get``, ``info`` and the ``QueryCache`` stamps
-resolve the files of one snapshot; no read walks a ``date=`` directory.
-A data file that no commit names is not part of the database: a file
-dropped into a ``date=`` directory by hand is not read, and ``compact``
-removes it.
+keeps it: a read lists ``.changelog`` and reads only the segments it has
+not read (by name and file: commits may publish out of seq order, and a
+fold republishes under a segment's name), and the handle's own commits
+update the snapshot in memory. Every read, ``get``, ``info`` and the
+``QueryCache`` stamps resolve the files of one snapshot; no read walks a
+``date=`` directory. A data file that no commit names is not part of the
+database: a file dropped into a ``date=`` directory by hand is not read,
+and ``compact`` removes it. A database whose log was written before
+segments named their files does not read (``ValueError``).
 
 A data file holds each key at most once: every writer folds repeats of a
 key before it publishes a file (``write_batch`` keeps a batch's later
@@ -47,8 +49,9 @@ partition of one file is already its own live view, and last-write-wins
 is resolved at read time only for partitions of more than one file.
 
 The commit point. Every public mutation is one commit: it publishes its
-new data files first, then the log segment that names them, and only
-then unlinks the files that segment removes. A crash before the segment
+new data files first, then the log segment that names them (under a
+name no file has, so a segment is never overwritten), and only then
+unlinks the files that segment removes. A crash before the segment
 rolls the mutation back (its published files are named by no commit, so
 no read sees them, and the next ``compact`` removes them); a crash after
 it rolls forward (the removed files are no longer read, and ``compact``
@@ -81,6 +84,7 @@ from __future__ import annotations
 
 import contextlib
 import dataclasses
+import fcntl
 import os
 import shutil
 import threading
@@ -123,49 +127,58 @@ _CHANGELOG_DIR = ".changelog"
 
 @dataclasses.dataclass(frozen=True)
 class _Snapshot:
-    """A database as of its commit ``seq``: ``live`` maps the path under
-    the database (``date=<d>/<file>``) of each data file it holds to that
-    file's (bytes, rows), and ``files`` holds the same files as
-    :meth:`SerieslyDB._data_files` returns them, date -> the sorted
-    ``(file, bytes)`` of the date. Never changed in place."""
+    """A database as of the commits applied to it: ``files`` maps each
+    date to its data files, ``{file: (bytes, rows)}``, ``seq`` is the
+    highest seq applied, and ``log`` holds the log segments they were
+    read from, as :func:`_segments` lists them. Never changed in place:
+    a commit makes a new snapshot, which shares the maps of the dates it
+    does not touch."""
 
     seq: int = 0
-    live: dict = dataclasses.field(default_factory=dict)
     files: dict = dataclasses.field(default_factory=dict)
+    log: frozenset = frozenset()
 
-    def then(self, commits: list[dict]) -> _Snapshot:
-        """This snapshot after the commit-log rows ``commits`` (in seq
-        order) whose seq is above its own: each removes its ``remove``
-        paths and adds its ``add`` files."""
-        live, seq = dict(self.live), self.seq
+    def then(self, commits: list[dict], log: frozenset) -> _Snapshot:
+        """This snapshot after the commit-log rows ``commits``, in seq
+        order, read from the segments ``log``: each commit removes its
+        ``remove`` paths and adds its ``add`` files."""
+        files, seq, copied = dict(self.files), self.seq, set()
         for c in commits:
-            if c["seq"] > seq:
-                seq = c["seq"]
-                for p in c["remove"]:
-                    live.pop(p, None)
-                for a in c["add"]:
-                    live[a["path"]] = (a["bytes"], a["rows"])
-        if seq == self.seq:
-            return self
-        files: dict[str, list[tuple[str, int]]] = {}
-        for p in sorted(live):
-            d, f = p.split("/")
-            files.setdefault(d[len("date="):], []).append((f, live[p][0]))
-        return _Snapshot(seq, live, files)
+            seq = max(seq, c["seq"])
+            changes = [(p, None) for p in c["remove"]]
+            changes += [(a["path"], (a["bytes"], a["rows"])) for a in c["add"]]
+            for p, entry in changes:
+                d, f = p[len("date="):].split("/")
+                if d not in copied:
+                    copied.add(d)
+                    files[d] = dict(files.get(d, {}))
+                if entry is None:
+                    files[d].pop(f, None)
+                else:
+                    files[d][f] = entry
+        return _Snapshot(seq, {d: fs for d, fs in files.items() if fs}, log)
 
 
-def publish(path: str, write: Callable[[str], object]) -> None:
+_EMPTY_SNAPSHOT = _Snapshot()
+
+
+def publish(path: str, write: Callable[[str], object], exclusive: bool = False) -> None:
     """Make the file at ``path`` appear whole or not at all: ``write``
     writes a hidden, uniquely named staging file in the same directory
-    (``.<name>.<uuid>.tmp``), which is then renamed onto ``path``. A
-    failed write removes the staging file. One that a crash leaves is
-    hidden from every reader and listing; in a database,
-    :meth:`SerieslyDB.compact` removes it."""
+    (``.<name>.<uuid>.tmp``), which is then renamed onto ``path`` or,
+    if ``exclusive``, linked to it, which raises ``FileExistsError``
+    rather than replace a file of that name. A failed write removes the
+    staging file. One that a crash leaves is hidden from every reader
+    and listing; in a database, :meth:`SerieslyDB.compact` removes it."""
     d, f = os.path.split(path)
     tmp = os.path.join(d, f".{f}.{uuid.uuid4().hex}.tmp")
     try:
         write(tmp)
-        os.replace(tmp, path)
+        if exclusive:
+            os.link(tmp, path)
+            os.remove(tmp)
+        else:
+            os.replace(tmp, path)
     except BaseException:
         with contextlib.suppress(FileNotFoundError):
             os.remove(tmp)
@@ -180,15 +193,19 @@ def _read_listed(
     none). A partition rewrite or a log fold publishes its new file
     before it unlinks the files it read, so a listed file that is gone
     when it is read means that such a step has run: the read lists
-    again and retries, and sees the state after that step."""
-    while True:
-        paths = list_paths()
-        if not paths:
-            return paths, None
+    again and retries, and sees the state after that step. A listing
+    that comes back unchanged means no such step explains the missing
+    file, and its ``FileNotFoundError`` is raised."""
+    paths = list_paths()
+    while paths:
         try:
             return paths, pq.read_table(paths, **read)
         except FileNotFoundError:
-            continue
+            again = list_paths()
+            if again == paths:
+                raise
+            paths = again
+    return paths, None
 
 
 class SerieslyDB:
@@ -221,22 +238,31 @@ class SerieslyDB:
 
     Concurrency contract: ONE WRITER HANDLE per database at a time (the
     same single-writer contract as the incremental dedup indexes and any
-    table format without a lock service). A commit's seqs are reserved
-    above the last seq of the handle's refreshed snapshot, and a
-    segment name already taken is never overwritten, so a second
-    handle's commits stay in one order with this one's. A data append
-    that races a ``compact``/``delete_range`` partition rewrite
-    survives, with no error: the rewrite's commit removes only the files
-    of its own snapshot. Readers on any handle or thread see whole
-    commits: a read resolves one snapshot, so a mutation switches all
-    of its files at once for a read that resolves after its commit. The
-    driver-side reads, :meth:`get` and :meth:`change_log`, are exact
-    beside a rewrite or a log fold: a file unlinked after the read
-    resolved makes it resolve again (:func:`_read_listed`). The Spark
-    reads (:meth:`df`, :meth:`query`, :meth:`all_docs`, :meth:`info`)
-    are not: a scan that resolved before a commit can miss the rows of a
-    file that the commit unlinks under it (ROADMAP item 4's grace
-    window).
+    table format without a lock service); what follows holds beside a
+    second handle or thread too. A commit's seqs are reserved above the
+    last seq of the handle's refreshed snapshot, so above every commit
+    any handle published before. Commits need not publish in seq order
+    (a seq is reserved before the commit's data files are written), so
+    a replay reads every segment it has not read, by name and file, and
+    no seq floor skips a commit published late. A segment is published only under a name no file
+    has: two commits that reserved one seq (a frozen clock) cannot both
+    land, and the second fails with ``FileExistsError`` and is rolled
+    back. A data append that races a ``compact``/``delete_range``
+    partition rewrite survives, with no error: the rewrite's commit
+    removes only the files of its own snapshot. Every mutation holds the
+    database's advisory lock (``flock`` of its ``.changelog`` directory)
+    shared from its first published file to its segment, and the sweep
+    of :meth:`compact` holds it exclusively, so the sweep never removes
+    the files of a commit that can still land. Readers on any handle or
+    thread see whole commits: a read resolves one snapshot, so a
+    mutation switches all of its files at once for a read that resolves
+    after its commit. The driver-side reads, :meth:`get` and
+    :meth:`change_log`, are exact beside a rewrite or a log fold: a file
+    unlinked after the read resolved makes it resolve again
+    (:func:`_read_listed`). The Spark reads (:meth:`df`, :meth:`query`,
+    :meth:`all_docs`, :meth:`info`) are not: a scan that resolved before
+    a commit can miss the rows of a file that the commit unlinks under
+    it (ROADMAP item 4's grace window).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -333,19 +359,20 @@ class SerieslyDB:
                 "doc": pa.array([rows[i][1] for i in idx], pa.string()),
             })
         add = []
-        for d, table in tables.items():
-            part = f"date={d}/part-{uuid.uuid4().hex}.parquet"
-            os.makedirs(os.path.join(path, f"date={d}"), exist_ok=True)
-            # PLAIN, as Spark's writer falls back to for near-unique keys
-            # and docs: dictionary pages only grow such a file.
-            publish(
-                os.path.join(path, part),
-                lambda p, t=table: pq.write_table(
-                    t, p, compression="snappy", use_dictionary=False
-                ),
-            )
-            add.append(_entry(path, part, table.num_rows))
-        self._commit(name, last_seq, "write", min(keys), max(keys), len(keys), add)
+        with self._log_lock(name):
+            for d, table in tables.items():
+                part = f"date={d}/part-{uuid.uuid4().hex}.parquet"
+                os.makedirs(os.path.join(path, f"date={d}"), exist_ok=True)
+                # PLAIN, as Spark's writer falls back to for near-unique
+                # keys and docs: dictionary pages only grow such a file.
+                publish(
+                    os.path.join(path, part),
+                    lambda p, t=table: pq.write_table(
+                        t, p, compression="snappy", use_dictionary=False
+                    ),
+                )
+                add.append(_entry(path, part, table.num_rows))
+            self._commit(name, last_seq, "write", min(keys), max(keys), len(keys), add)
         return keys
 
     # -- Commit log ---------------------------------------------------------
@@ -363,10 +390,25 @@ class SerieslyDB:
             # commit order, so seq must strictly increase.
             seq = max(time.time_ns(), self._snapshot(name).seq + 1) + n - 1
             # Collision guard: a second handle that published since the
-            # refresh may hold this name; its segment is never
-            # overwritten, and the next refresh floors above it.
+            # refresh may hold this name; the next refresh floors above
+            # it. One that publishes it later makes this commit fail
+            # (_commit publishes its segment exclusive).
             if not os.path.exists(os.path.join(d, f"{seq:020d}.parquet")):
                 return seq
+
+    @contextlib.contextmanager
+    def _log_lock(self, name: str, op: int = fcntl.LOCK_SH):
+        """Hold the advisory lock of database ``name`` (``flock`` ``op``
+        of its commit-log directory) for the ``with`` block; with
+        ``LOCK_NB``, a conflicting holder raises ``BlockingIOError``. A
+        mutation holds it shared from its first published file to its
+        segment; :meth:`_sweep` holds it exclusively."""
+        fd = os.open(os.path.join(self._path(name), _CHANGELOG_DIR), os.O_RDONLY)
+        try:
+            fcntl.flock(fd, op)
+            yield
+        finally:
+            os.close(fd)  # which releases the lock
 
     def _commit(
         self, name: str, seq: int, op: str, ts_lo: int | None,
@@ -378,7 +420,8 @@ class SerieslyDB:
         metadata, not data). The segment names the data files the
         mutation published (``add``: ``path`` under the database, ``rows``
         and ``bytes``) and the paths it retires (``remove``); being
-        published whole (:func:`publish`), it is the commit point. The
+        published whole, and only under a name no file has
+        (:func:`publish`, ``exclusive``), it is the commit point. The
         handle's snapshot takes the commit in memory, and only then are
         the removed files unlinked, and a partition left with no file
         loses its directory."""
@@ -388,61 +431,75 @@ class SerieslyDB:
             "n_rows": n_rows, "add": list(add), "remove": sorted(remove),
         }
         table = pa.Table.from_pylist([row], schema=_LOG_SCHEMA)
-        publish(
-            os.path.join(path, _CHANGELOG_DIR, f"{seq:020d}.parquet"),
-            lambda p: pq.write_table(table, p),
-        )
-        files = self._advance(name, [row]).files
+        seg, staged = f"{seq:020d}.parquet", []
+
+        def write(p: str) -> None:
+            pq.write_table(table, p)
+            # The link shares the staged file's inode and mtime, so this
+            # is how _segments lists the published segment.
+            st = os.stat(p)
+            staged.append((seg, st.st_ino, st.st_mtime_ns))
+
+        publish(os.path.join(path, _CHANGELOG_DIR, seg), write, exclusive=True)
+        with self._lock:
+            snap = self._snapshots.get(name, _EMPTY_SNAPSHOT)
+            snap = self._snapshots[name] = snap.then([row], snap.log | set(staged))
         for p in row["remove"]:
             os.remove(os.path.join(path, p))
         for d in {p.split("/")[0] for p in remove}:
-            if d[len("date="):] not in files:
-                with contextlib.suppress(OSError):  # a crashed commit's file
+            if d[len("date="):] not in snap.files:
+                with contextlib.suppress(OSError):  # a file published since
                     os.rmdir(os.path.join(path, d))
 
-    def _advance(self, name: str, commits: list[dict]) -> _Snapshot:
-        """Apply the log rows ``commits`` to this handle's snapshot of
-        ``name`` (rows it already holds are skipped) and keep the
-        result."""
-        with self._lock:
-            snap = self._snapshots.get(name, _Snapshot()).then(commits)
-            self._snapshots[name] = snap
-        return snap
-
     def _snapshot(self, name: str) -> _Snapshot:
-        """What ``name`` holds now: this handle's snapshot after it
-        replays the segments published since it last looked. With no new
-        segment this is one listing of the commit log and no read. A
+        """What ``name`` holds now: this handle's snapshot after it reads
+        the log segments it has not read and applies their commits. With
+        no new segment this is one listing of the commit log and no read.
+        A segment read before that is gone or changed means a fold ran:
+        the whole log is then replayed (:meth:`_read_log`). A log written
+        before segments recorded data files raises ``ValueError``; a
         missing database raises ``KeyError``."""
-        snap = self._snapshots.get(name, _Snapshot())
-        _, log = self._read_log(name, after=snap.seq)
-        return self._advance(name, log.to_pylist()) if log.num_rows else snap
+        while True:
+            snap = self._snapshots.get(name, _EMPTY_SNAPSHOT)
+            listing, log = self._read_log(name, snap.log)
+            if not log.num_rows:
+                return snap
+            if log.column("add").null_count:  # written before segments named files
+                raise ValueError(f"database {name!r}: commit log predates file records")
+            base = snap if snap.log <= set(listing) else _EMPTY_SNAPSHOT
+            new = base.then(log.to_pylist(), frozenset(listing))
+            with self._lock:  # unless a commit of this handle came first
+                if self._snapshots.get(name, _EMPTY_SNAPSHOT) is snap:
+                    self._snapshots[name] = new
+                    return new
 
-    def _read_log(self, name: str, after: int = 0) -> tuple[list[str], pa.Table]:
-        """The commit log's one reader: the segment files named above seq
-        ``after`` (a segment is named by the last seq it holds; all of
-        them by default) and their rows, one per ``seq``, in ``seq``
-        order. Driver-side pyarrow over a metadata-sized directory. A
-        row that an interrupted fold left in both the consolidated file
-        and an old segment is read once, and a fold that removes a
-        listed segment before it is read makes the read list again
+    def _read_log(
+        self, name: str, skip: frozenset = frozenset()
+    ) -> tuple[list[tuple[str, int, int]], pa.Table]:
+        """The commit log's one reader: the listing of its segments
+        (:func:`_segments`), and the rows of the listed segments not in
+        ``skip``, one per ``seq``, in ``seq`` order: of all of them when
+        ``skip`` is empty (the default) or holds a segment not listed.
+        Driver-side pyarrow over a metadata-sized directory. A row that
+        an interrupted fold left in both the consolidated file and an old
+        segment is read once, and a fold that removes a listed segment
+        before it is read makes the read list again
         (:func:`_read_listed`). A missing database raises ``KeyError``."""
-        path = self._path(name)
-        d, floor = os.path.join(path, _CHANGELOG_DIR), f"{after:020d}.parquet"
-        try:
-            paths, log = _read_listed(
-                lambda: [os.path.join(d, f) for f in _segments(d) if f > floor],
-                schema=_LOG_SCHEMA,
-            )
-        except FileNotFoundError:  # no log directory
-            if not os.path.isdir(path):
-                raise KeyError(f"no such db: {name}") from None
-            paths, log = [], None
+        d, listing = os.path.join(self._path(name), _CHANGELOG_DIR), []
+        if not os.path.isdir(d):
+            raise KeyError(f"no such db: {name}")
+
+        def unread() -> list[str]:
+            listing[:] = _segments(d)
+            read = skip if skip <= set(listing) else ()
+            return [os.path.join(d, s[0]) for s in listing if s not in read]
+
+        _, log = _read_listed(unread, schema=_LOG_SCHEMA)
         if log is None:
-            return [], _EMPTY_LOG
+            return listing, _EMPTY_LOG
         log = log.sort_by("seq")
         seqs = log.column("seq").to_numpy()
-        return paths, log.filter(np.append(True, seqs[1:] != seqs[:-1]))
+        return listing, log.filter(np.append(True, seqs[1:] != seqs[:-1]))
 
     def change_log(self, name: str) -> DataFrame:
         """Batch view of the commit log, in commit order: one row per
@@ -624,9 +681,10 @@ class SerieslyDB:
         stamps; driver-side metadata, no Spark job, and no ``date=``
         directory listed. A missing database raises ``KeyError``."""
         files = self._snapshot(name).files
-        if dates is None:
-            return dict(files)
-        return {d: files[d] for d in dates if d in files}
+        return {
+            d: _pairs(files[d])
+            for d in (sorted(files) if dates is None else dates) if d in files
+        }
 
     def delete_range(self, name: str, from_ts, to_ts) -> None:
         """Bulk range delete (S6), one commit. Partitions fully inside the
@@ -649,14 +707,16 @@ class SerieslyDB:
         lo, hi = py_parse_ts_ns(from_ts), py_parse_ts_ns(to_ts)
         lo_d, hi_d = _ns_date(lo), _ns_date(hi)
         snap = self._snapshot(name)
-        add, remove = [], []
-        for d, files in snap.files.items():
-            if lo_d <= d <= hi_d:
-                remove += [f"date={d}/{f}" for f, _ in files]
-                if d in (lo_d, hi_d):
-                    add += self._rewrite(name, d, files, (lo, hi))
-        n_removed = sum(snap.live[p][1] for p in remove) - sum(a["rows"] for a in add)
-        self._commit(name, self._next_seq(name), "delete", lo, hi, n_removed, add, remove)
+        add, remove, n_removed = [], [], 0
+        with self._log_lock(name):
+            for d, files in snap.files.items():
+                if lo_d <= d <= hi_d:
+                    remove += [f"date={d}/{f}" for f in files]
+                    n_removed += sum(rows for _, rows in files.values())
+                    if d in (lo_d, hi_d):
+                        add += self._rewrite(name, d, _pairs(files), (lo, hi))
+            n_removed -= sum(a["rows"] for a in add)
+            self._commit(name, self._next_seq(name), "delete", lo, hi, n_removed, add, remove)
 
     def _rewrite(
         self, name: str, date: str, files: list[tuple[str, int]],
@@ -710,75 +770,87 @@ class SerieslyDB:
         then switches every rewritten partition to its new file at once;
         the old files are unlinked after it. A revision committed during
         the rewrite survives as a file of its own, folded at read time
-        until the next ``compact``. This database has one writer handle,
-        and it is here, so compact first removes every file under the
-        database that the snapshot does not name: a crashed commit's
-        data file or staging file, a crashed rewrite's ``.tmp-*``
-        directory or retired files, a crashed log append's or fold's
-        staging file, and a file dropped into a ``date=`` directory by
-        hand.
+        until the next ``compact``. Compact first removes every file
+        under the database that no commit names (:meth:`_sweep`): a
+        crashed commit's data file or staging file, a crashed rewrite's
+        ``.tmp-*`` directory or retired files, a crashed log append's or
+        fold's staging file, and a file dropped into a ``date=``
+        directory by hand. A commit in flight on another handle or
+        thread keeps its files: the sweep waits for no commit, and is
+        skipped while one holds the database's lock.
 
         ``fold_changelog=False`` skips the commit-log fold — use it when
         a lagging :meth:`changes_log_stream` consumer may not have
         caught up to the current log tail yet (the fold rewrites the
         newest segment in place, which a file stream never re-reads)."""
+        self._sweep(name)
         snap = self._snapshot(name)
-        self._sweep(name, snap)
         add, remove = [], []
-        for d, files in snap.files.items():
-            if len(files) > 1:
-                remove += [f"date={d}/{f}" for f, _ in files]
-                add += self._rewrite(name, d, files)
-        # Fold the accumulated one-file-per-commit log segments into a
-        # single consolidated segment BEFORE recording this compaction
-        # (which then lands as a fresh segment). The log grows one tiny
-        # file per mutation; without folding, every replay of a fresh
-        # handle and every change_log read degrade with mutation count.
-        if fold_changelog:
-            self._fold_changelog(name)
-        # After the rewrites every partition holds each key once: its rows
-        # ARE the live set.
-        n_live = (
-            sum(rows for _, rows in snap.live.values())
-            - sum(snap.live[p][1] for p in remove) + sum(a["rows"] for a in add)
-        )
-        self._commit(name, self._next_seq(name), "compact", None, None, n_live, add, remove)
+        with self._log_lock(name):
+            for d, files in snap.files.items():
+                if len(files) > 1:
+                    remove += [f"date={d}/{f}" for f in files]
+                    add += self._rewrite(name, d, _pairs(files))
+            # Fold the accumulated one-file-per-commit log segments into a
+            # single consolidated segment BEFORE recording this compaction
+            # (which then lands as a fresh segment). The log grows one tiny
+            # file per mutation; without folding, every replay of a fresh
+            # handle and every change_log read degrade with mutation count.
+            if fold_changelog:
+                self._fold_changelog(name)
+            # After the rewrites every partition holds each key once: its
+            # rows ARE the live set.
+            n_live = sum(a["rows"] for a in add) + sum(
+                rows for files in snap.files.values() if len(files) == 1
+                for _, rows in files.values()
+            )
+            self._commit(name, self._next_seq(name), "compact", None, None, n_live, add, remove)
 
-    def _sweep(self, name: str, snap: _Snapshot) -> None:
-        """Remove every file under database ``name`` that ``snap`` does
-        not name: in ``date=`` directories every file but the snapshot's
+    def _sweep(self, name: str) -> None:
+        """Remove every file under database ``name`` that no commit
+        names: in ``date=`` directories every file but the snapshot's
         (and the directory, when the snapshot names none), in the commit
-        log every file but a segment, and every ``.tmp-*`` directory."""
+        log every file but a segment, and every ``.tmp-*`` directory. It
+        holds the database's lock exclusively (:meth:`_log_lock`), so no
+        commit is between its first published file and its segment, and
+        a file that the snapshot it then resolves does not name belongs
+        to no commit that can still land. While a commit holds the lock,
+        the sweep is left to the next ``compact``."""
         path = self._path(name)
-        for d in os.listdir(path):
-            sub = os.path.join(path, d)
-            if d.startswith(".tmp-"):
-                shutil.rmtree(sub, ignore_errors=True)
-                continue
-            if d == _CHANGELOG_DIR:
-                keep = set(_segments(sub))
-            elif d.startswith("date="):
-                keep = {f for f, _ in snap.files.get(d[len("date="):], [])}
-            else:
-                continue
-            for f in set(os.listdir(sub)) - keep:
-                os.remove(os.path.join(sub, f))
-            if not keep and d != _CHANGELOG_DIR:
-                os.rmdir(sub)
+        lock = self._log_lock(name, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        with contextlib.suppress(BlockingIOError), lock:
+            files = self._snapshot(name).files
+            for d in os.listdir(path):
+                sub = os.path.join(path, d)
+                if d.startswith(".tmp-"):
+                    shutil.rmtree(sub, ignore_errors=True)
+                    continue
+                if d == _CHANGELOG_DIR:
+                    keep = {s[0] for s in _segments(sub)}
+                elif d.startswith("date="):
+                    keep = set(files.get(d[len("date="):], ()))
+                else:
+                    continue
+                for f in set(os.listdir(sub)) - keep:
+                    os.remove(os.path.join(sub, f))
+                if not keep and d != _CHANGELOG_DIR:
+                    with contextlib.suppress(OSError):
+                        os.rmdir(sub)
 
     def _fold_changelog(self, name: str) -> None:
         """Merge every commit-log segment into one file named with the
-        max folded seq (so a handle that has replayed that seq skips it,
-        and the batch ``change_log`` view is byte-identical — rows carry
-        their seq; order comes from the sort, not the file split). It
-        keeps every commit's row with the files it added and removed, so
-        it is the checkpoint a reopened handle replays. The merged table is what
-        :meth:`_read_log` returns; it is published over the newest
-        segment's path (:func:`publish`) before the other segments it
-        read are removed. A crash before the publish leaves the log as
-        it was; a crash among the removals leaves rows in both the new
-        file and an old segment, which the reader and the next fold read
-        once.
+        max folded seq (so the batch ``change_log`` view is
+        byte-identical — rows carry their seq; order comes from the sort,
+        not the file split). It keeps every commit's row with the files
+        it added and removed, so it is the checkpoint a reopened handle
+        replays; a handle that had read segments the fold replaces
+        replays the new file whole (:meth:`_snapshot`). The merged table
+        is what :meth:`_read_log` returns; it is published over the
+        newest segment's path (:func:`publish`) before the other
+        segments it read are removed. A crash before the publish leaves
+        the log as it was; a crash among the removals leaves rows in
+        both the new file and an old segment, which the reader and the
+        next fold read once.
 
         Streaming caveat (same in-place-maintenance story as the data
         partitions): the consolidated file REUSES the newest segment's
@@ -788,12 +860,13 @@ class SerieslyDB:
         once. A stream LAGGING behind the fold point can miss folded
         segments; fold during maintenance windows, as with any
         file-source compaction."""
-        paths, log = self._read_log(name)
-        if len(paths) <= 1:
+        listing, log = self._read_log(name)
+        if len(listing) <= 1:
             return
-        publish(paths[-1], lambda p: pq.write_table(log, p))
-        for p in paths[:-1]:
-            os.remove(p)
+        d = os.path.join(self._path(name), _CHANGELOG_DIR)
+        publish(os.path.join(d, listing[-1][0]), lambda p: pq.write_table(log, p))
+        for f, *_ in listing[:-1]:
+            os.remove(os.path.join(d, f))
 
     def info(self, name: str) -> dict:
         """S9: doc_count (live keys), space_used, partition/file counts.
@@ -968,11 +1041,24 @@ def _entry(path: str, part: str, rows: int) -> dict:
     return {"path": part, "rows": rows, "bytes": os.path.getsize(os.path.join(path, part))}
 
 
-def _segments(d: str) -> list[str]:
+def _pairs(files: dict) -> list[tuple[str, int]]:
+    """A snapshot date's ``{file: (bytes, rows)}`` as
+    :meth:`SerieslyDB._data_files` returns it: sorted ``(file, bytes)``."""
+    return sorted((f, b) for f, (b, _) in files.items())
+
+
+def _segments(d: str) -> list[tuple[str, int, int]]:
     """The commit-log segments in log directory ``d``, in seq order (a
-    segment is named by its zero-padded last seq). A missing directory
-    raises ``FileNotFoundError``."""
-    return sorted(filter(_is_data_file, os.listdir(d)))
+    segment is named by its zero-padded last seq), as ``(name, inode,
+    mtime_ns)``: a file that a fold publishes over a segment's name
+    lists apart from it. A segment removed while listed is left out; a
+    missing directory raises ``FileNotFoundError``."""
+    out = []
+    for f in sorted(filter(_is_data_file, os.listdir(d))):
+        with contextlib.suppress(FileNotFoundError):
+            st = os.stat(os.path.join(d, f))
+            out.append((f, st.st_ino, st.st_mtime_ns))
+    return out
 
 
 def _ns_date(ns: int) -> str:

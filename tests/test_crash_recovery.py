@@ -32,7 +32,12 @@ Covered:
   * ``get`` beside a ``compact`` that unlinks the files it listed reads
     the key's newest doc;
   * a delete that retires a multi-file day switches it in one commit,
-    and a commit that crashes before its log segment is rolled back.
+    and a commit that crashes before its log segment is rolled back;
+  * a commit published after a higher seq is replayed, also across a
+    fold; two commits of one seq cannot both land; ``compact`` keeps the
+    files of an append in flight; a database whose log predates file
+    records fails with an error that names it; the docs feed delivers a
+    rolled-back commit until ``compact``.
 """
 
 import os
@@ -747,6 +752,19 @@ class TestChangelogFoldCrash:
         assert sorted(deduped) == log_seqs
 
 
+def _before_commit(monkeypatch, h, action):
+    """Make handle ``h``'s next commit run ``action()`` after it has
+    published its data files and before it publishes its log segment."""
+    real = h._commit
+
+    def commit(*a, **kw):
+        monkeypatch.setattr(h, "_commit", real)
+        action()
+        return real(*a, **kw)
+
+    monkeypatch.setattr(h, "_commit", commit)
+
+
 class TestMultiHandleSeq:
     def test_two_handles_never_clobber_and_stay_monotone(
         self, spark, tmp_path, monkeypatch
@@ -836,6 +854,67 @@ class TestMultiHandleSeq:
         stored = reopened._scan("t", reopened._data_files("t")).collect()
         logged = reopened.change_log("t").collect()
         assert max(r.seq for r in stored) <= max(r.seq for r in logged)
+
+    def test_commit_published_after_a_higher_seq_is_replayed(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A's commit reserves its seq, then B commits a higher one and
+        C replays it, and only then A's segment lands: C still reads A's
+        rows. Once more with a fold in between, which publishes A's
+        commit under the name of B's segment that C has already read."""
+        root = str(tmp_path / "root")
+        a, b, c = (SerieslyDB(spark, root) for _ in range(3))
+        a.create("t")
+        for fold in (False, True):
+            day = f"2024-01-0{1 + fold}"
+
+            def race():
+                b.write("t", '{"by": "b"}', ts=f"{day}T01:00:00Z")
+                assert c.get("t", f"{day}T01:00:00Z") == '{"by": "b"}'
+
+            _before_commit(monkeypatch, a, race)
+            a.write("t", '{"by": "a"}', ts=f"{day}T00:00:00Z")
+            monkeypatch.undo()
+            seqs = {r.doc: r.seq for r in a.df("t", day, f"{day}T23:00:00Z").collect()}
+            assert seqs['{"by": "a"}'] < seqs['{"by": "b"}']
+            if fold:
+                SerieslyDB(spark, root)._fold_changelog("t")
+            assert c.get("t", f"{day}T00:00:00Z") == '{"by": "a"}'
+        fresh = SerieslyDB(spark, root)
+        assert c._data_files("t") == fresh._data_files("t")
+        c.compact("t")
+        assert sorted(r.doc for r in fresh.df("t").collect()) == [
+            '{"by": "a"}', '{"by": "a"}', '{"by": "b"}', '{"by": "b"}'
+        ]
+
+    def test_two_commits_of_one_seq_cannot_both_land(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """With a FROZEN clock, A and B reserve one seq before either
+        publishes. B's segment lands; A's publish finds the name taken
+        and fails rather than overwrite it, and A's commit is rolled
+        back."""
+        root = str(tmp_path / "root")
+        a, b = SerieslyDB(spark, root), SerieslyDB(spark, root)
+        a.create("t")
+        monkeypatch.setattr(
+            dbmod, "time",
+            types.SimpleNamespace(time_ns=lambda: 1_700_000_000_000_000_000),
+        )
+        _before_commit(
+            monkeypatch, a,
+            lambda: b.write("t", '{"by": "b"}', ts="2024-01-01T01:00:00Z"),
+        )
+        with pytest.raises(FileExistsError):
+            a.write("t", '{"by": "a"}', ts="2024-01-01T00:00:00Z")
+        monkeypatch.undo()
+        for h in (a, b, SerieslyDB(spark, root)):
+            assert [r.n_rows for r in h.change_log("t").collect()] == [1]
+            assert [r.doc for r in h.df("t").collect()] == ['{"by": "b"}']
+        part = os.path.join(a._path("t"), "date=2024-01-01")
+        assert len(os.listdir(part)) == 2
+        a.compact("t")
+        assert len(os.listdir(part)) == 1
 
 
 class TestSnapshotThreads:
@@ -1064,6 +1143,39 @@ class TestDataPlaneRace:
         assert len(dbs._data_files("t")["2024-01-01"]) == 1
         assert got == '{"k": 3}'
 
+    def test_compact_keeps_the_files_of_an_append_in_flight(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A compact runs after a second handle's append published its
+        data file and before it published its segment: the append holds
+        the database's lock, so the compact's sweep leaves its file, and
+        the append lands and reads. The next compact folds it in."""
+        root = str(tmp_path / "root")
+        dbs = SerieslyDB(spark, root)
+        _two_file_day(dbs)
+        other = SerieslyDB(spark, root)
+        _before_commit(monkeypatch, other, lambda: dbs.compact("t"))
+        k = "2024-01-01T02:00:00Z"
+        other.write("t", '{"k": 99}', ts=k)
+        monkeypatch.undo()
+        for h in (dbs, other, SerieslyDB(spark, root)):
+            assert h.get("t", k) == '{"k": 99}'
+            assert _docs(h) == ['{"k": 1}', '{"k": 2}', '{"k": 99}']
+        dbs.compact("t")
+        assert len(os.listdir(os.path.join(dbs._path("t"), "date=2024-01-01"))) == 1
+        assert _docs(SerieslyDB(spark, root)) == ['{"k": 1}', '{"k": 2}', '{"k": 99}']
+
+    def test_file_named_but_missing_raises(self, spark, tmp_path):
+        """A data file that the snapshot names and that no commit
+        removed, gone by hand: ``get`` raises rather than list again
+        without end."""
+        dbs = SerieslyDB(spark, str(tmp_path / "root"))
+        _two_file_day(dbs)
+        ((f, _), _) = dbs._data_files("t")["2024-01-01"]
+        os.remove(os.path.join(dbs._path("t"), "date=2024-01-01", f))
+        with pytest.raises(FileNotFoundError):
+            dbs.get("t", "2024-01-01T00:00:00Z")
+
     def test_clean_rewrite_still_succeeds(self, spark, tmp_path):
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
         dbs.create("t")
@@ -1178,14 +1290,15 @@ class TestPartitionRewriteSteps:
         root = str(tmp_path / "root")
         dbs, live = _store(spark, root)
         log = os.path.join(dbs._path("t"), ".changelog")
-        real = os.replace
+        real = os.link
 
         def crash_on_segment(src, dst, *a, **kw):
             if os.path.dirname(os.path.abspath(str(dst))) == log:
                 raise _InjectedCrash(dst)
             return real(src, dst, *a, **kw)
 
-        monkeypatch.setattr(os, "replace", crash_on_segment)
+        # A segment is published by a link onto its name.
+        monkeypatch.setattr(os, "link", crash_on_segment)
         k = "2024-01-01T23:00:00Z"
         with pytest.raises(_InjectedCrash):
             dbs.write_batch("t", [(k, '{"k": 99}'), ("2024-01-05T00:00:00Z", "{}")])
@@ -1274,3 +1387,91 @@ class TestPartitionRewriteSteps:
             if op == "delete_range":
                 reopened.compact("t")
             assert _leftover_staging(reopened) == [], f"crash at step {n}"
+
+
+class TestPreManifestLog:
+    """A database written before log segments recorded data files: its
+    segments hold only the five public columns."""
+
+    def _old_store(self, root):
+        import pyarrow as pa
+
+        path = os.path.join(root, "t")
+        log = os.path.join(path, ".changelog")
+        os.makedirs(log)
+        k0, k1 = py_parse_ts_ns("2024-01-01T00:00:00Z"), py_parse_ts_ns("2024-01-02T00:00:00Z")
+        commits = [  # (seq, rows of its one data file)
+            (101, [(k0, 101, '{"v": 0}')]),
+            (203, [(k0, 202, '{"v": 1}'), (k1, 203, '{"v": 2}')]),
+        ]
+        for seq, rows in commits:
+            for ts, row_seq, doc in rows:
+                d = os.path.join(path, f"date={'2024-01-01' if ts == k0 else '2024-01-02'}")
+                os.makedirs(d, exist_ok=True)
+                pq.write_table(
+                    pa.table({"ts_ns": [ts], "seq": [row_seq], "doc": [doc]}),
+                    os.path.join(d, f"part-{row_seq}.parquet"),
+                )
+            pq.write_table(
+                pa.table({
+                    "seq": [seq], "op": ["write"], "ts_lo_ns": [rows[0][0]],
+                    "ts_hi_ns": [rows[-1][0]], "n_rows": [len(rows)],
+                }),
+                os.path.join(log, f"{seq:020d}.parquet"),
+            )
+        return log
+
+    def test_old_store_fails_clearly(self, spark, tmp_path):
+        """Its commit log still reads, and every read that needs the
+        files raises an error that names the database, rather than a
+        ``TypeError`` from the replay."""
+        root = str(tmp_path / "root")
+        self._old_store(root)
+        dbs = SerieslyDB(spark, root)
+        assert [r.seq for r in dbs.change_log("t").collect()] == [101, 203]
+        for read in (
+            lambda: dbs.df("t"), lambda: dbs.get("t", "2024-01-01T00:00:00Z"),
+            lambda: dbs.write("t", "{}"), lambda: dbs.compact("t"),
+        ):
+            with pytest.raises(ValueError, match="'t'.*predates"):
+                read()
+        assert len(os.listdir(os.path.join(dbs._path("t"), ".changelog"))) == 2
+
+
+class TestDocsFeedOfARolledBackCommit:
+    def test_feed_delivers_a_rolled_back_commit_until_compact(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The append-only docs feed lists the ``date=`` directories, not
+        the commit log: it delivers the rows of a commit that crashed
+        before its segment, which every other read rolls back, until a
+        ``compact`` removes the file (ROADMAP: a feed of committed files
+        only)."""
+        root = str(tmp_path / "root")
+        dbs = SerieslyDB(spark, root)
+        dbs.create("t")
+        dbs.write("t", '{"k": 1}', ts="2024-01-01T00:00:00Z")
+        log, real = os.path.join(dbs._path("t"), ".changelog"), os.link
+
+        def crash_on_segment(src, dst, *a, **kw):
+            if os.path.dirname(os.path.abspath(str(dst))) == log:
+                raise _InjectedCrash(dst)
+            return real(src, dst, *a, **kw)
+
+        monkeypatch.setattr(os, "link", crash_on_segment)
+        with pytest.raises(_InjectedCrash):
+            dbs.write("t", '{"k": 2}', ts="2024-01-01T01:00:00Z")
+        monkeypatch.undo()
+        assert _docs(dbs) == ['{"k": 1}']
+
+        def feed(query):
+            q = dbs.changes("t").writeStream.format("memory").queryName(query).start()
+            try:
+                q.processAllAvailable()
+                return sorted(r.doc for r in spark.table(query).collect())
+            finally:
+                q.stop()
+
+        assert feed("t_feed_rolled_back") == ['{"k": 1}', '{"k": 2}']
+        dbs.compact("t")
+        assert feed("t_feed_after_compact") == ['{"k": 1}']
