@@ -41,12 +41,13 @@ database: a file dropped into a ``date=`` directory by hand is not read,
 and ``compact`` removes it. A database whose log was written before
 segments named their files does not read (``ValueError``).
 
-A data file holds each key at most once: every writer folds repeats of a
-key before it publishes a file (``write_batch`` keeps a batch's later
-row; the one partition rewrite, behind ``compact`` and ``delete_range``,
-keeps the highest ``seq``). A key's revisions share its date, so a
-partition of one file is already its own live view, and last-write-wins
-is resolved at read time only for partitions of more than one file.
+A data file holds each key at most once, in ``ts_ns`` order: both
+writers, ``write_batch`` and the one partition rewrite behind
+``compact`` and ``delete_range``, fold a key's rows to the one of its
+highest ``seq`` (:func:`_newest`) and publish through one step
+(:func:`_write_part`). A key's revisions share its date, so a partition
+of one file is already its own live view, and last-write-wins is
+resolved at read time only for partitions of more than one file.
 
 The commit point. Every public mutation is one commit: it publishes its
 new data files first, then the log segment that names them (under a
@@ -68,14 +69,16 @@ pyarrow (no Spark job); a commit writes one new file per date from the
 driver with pyarrow (no Spark job, no read-modify-write); delete_range
 retires fully-covered partitions without reading their data and
 rewrites only the two edge partitions; compact rewrites each partition
-that holds more than one file. Both rewrite a partition as one folded
-file, published beside the old ones before their commit retires them,
-as the reference writes a new couch file before it swaps out the old one
-(database.go:136-171). Every file the driver writes (a commit's data
-files, a commit-log segment, the log's fold, a ``QueryCache`` entry)
-goes through one publish step, :func:`publish`: it is staged
-under a hidden unique name and renamed onto its own, so it appears
-whole or not at all. On a real deployment the same API maps onto
+that holds more than one file. Both rewrite a partition on the driver
+with pyarrow (no Spark job; one date partition in driver memory at a
+time) as one folded file, published beside the old ones before their
+commit retires them, as the reference writes a new couch file before it
+swaps out the old one (database.go:136-171). Every file the driver
+writes (a commit's or a rewrite's data file, a commit-log segment, the
+log's fold, a ``QueryCache`` entry) goes through one publish step,
+:func:`publish`: it is staged under a hidden unique name and renamed
+onto its own, so it appears whole or not at all; no Spark job writes
+under a database. On a real deployment the same API maps onto
 Delta/Iceberg (MERGE, OPTIMIZE, CDF) — plain parquet keeps this repo
 dependency-free.
 """
@@ -216,9 +219,12 @@ class SerieslyDB:
     last-write-wins fold only when some partition they cover holds more
     than one file. The one partition rewrite (:meth:`_rewrite`) always
     writes one folded file, so :meth:`compact` leaves a one-file
-    partition as it is (no Spark job, no new file name, no new partition
-    version). A row's ``seq`` comes from the same guarded counter as the
-    commit log's, so the newest write of a key always wins.
+    partition as it is (no new file name, no new partition version).
+    Commits and rewrites run on the driver with pyarrow, and no
+    mutation launches a Spark job; a rewrite holds one date partition
+    in driver memory. A row's ``seq`` comes from the same guarded
+    counter as the commit log's, so the newest write of a key always
+    wins.
 
     The commit log (``<db>/.changelog/``, always on) is the database's
     manifest: every mutation appends one tiny parquet segment naming
@@ -318,12 +324,12 @@ class SerieslyDB:
         returned keys and the log's ``n_rows`` still count every row.
 
         The commit runs on the driver, with no Spark job: the rows are
-        split by ``date=`` partition and every date's table is built
-        before any is published. Each table is then published
-        (:func:`publish`) as ``part-<uuid>.parquet`` in its partition,
-        and the log segment that names them last (:meth:`_commit`): it
-        is the commit point, so a crash before it leaves no row of the
-        batch in the database."""
+        split by ``date=`` partition and every date's table is built,
+        one row per key in ``ts_ns`` order (:func:`_newest`), before any
+        is published. Each table is then published in its partition
+        (:func:`_write_part`), and the log segment that names them last
+        (:meth:`_commit`): it is the commit point, so a crash before it
+        leaves no row of the batch in the database."""
         path = self._path(name)
         if not os.path.isdir(path):
             raise KeyError(f"no such db: {name}")
@@ -346,32 +352,18 @@ class SerieslyDB:
         # stepped back; the log segment is named by the run's last seq.
         last_seq = self._next_seq(name, len(rows))
         first = last_seq - len(rows) + 1
-        tables = {}
-        for day, idx in by_day.items():
-            # No file holds a key twice: the last row of a repeated key
-            # wins, as its higher seq would at read time.
-            last = {keys[i]: i for i in idx}
-            if len(last) < len(idx):
-                idx = sorted(last.values())
-            tables[_ns_date(day * _NS_PER_DAY)] = pa.table({
+        # No file holds a key twice: the last row of a repeated key has
+        # the higher seq, and _newest keeps it.
+        tables = {
+            _ns_date(day * _NS_PER_DAY): _newest(pa.table({
                 "ts_ns": pa.array([keys[i] for i in idx], pa.int64()),
                 "seq": pa.array([first + i for i in idx], pa.int64()),
                 "doc": pa.array([rows[i][1] for i in idx], pa.string()),
-            })
-        add = []
+            }))
+            for day, idx in by_day.items()
+        }
         with self._log_lock(name):
-            for d, table in tables.items():
-                part = f"date={d}/part-{uuid.uuid4().hex}.parquet"
-                os.makedirs(os.path.join(path, f"date={d}"), exist_ok=True)
-                # PLAIN, as Spark's writer falls back to for near-unique
-                # keys and docs: dictionary pages only grow such a file.
-                publish(
-                    os.path.join(path, part),
-                    lambda p, t=table: pq.write_table(
-                        t, p, compression="snappy", use_dictionary=False
-                    ),
-                )
-                add.append(_entry(path, part, table.num_rows))
+            add = [_write_part(path, d, table) for d, table in tables.items()]
             self._commit(name, last_seq, "write", min(keys), max(keys), len(keys), add)
         return keys
 
@@ -495,11 +487,7 @@ class SerieslyDB:
             return [os.path.join(d, s[0]) for s in listing if s not in read]
 
         _, log = _read_listed(unread, schema=_LOG_SCHEMA)
-        if log is None:
-            return listing, _EMPTY_LOG
-        log = log.sort_by("seq")
-        seqs = log.column("seq").to_numpy()
-        return listing, log.filter(np.append(True, seqs[1:] != seqs[:-1]))
+        return listing, _EMPTY_LOG if log is None else _newest(log, "seq")
 
     def change_log(self, name: str) -> DataFrame:
         """Batch view of the commit log, in commit order: one row per
@@ -696,8 +684,8 @@ class SerieslyDB:
         none of it; the retired files are unlinked after it. A file
         committed into the range after this call's snapshot survives.
         The 10k-commit batching of the reference (handlers.go:256) is
-        irrelevant here: the rewrite is one Spark write (2 jobs) per edge
-        partition.
+        irrelevant here: the delete runs no Spark job, and each edge's
+        rewrite is a driver-side fold of that one day.
 
         The commit log's ``n_rows`` (raw rows removed) comes from the
         row counts the log holds, not a scan job: the rows of every
@@ -724,34 +712,31 @@ class SerieslyDB:
     ) -> list[dict]:
         """Write partition ``date``'s ``files`` (a :meth:`_data_files`
         entry) as one new file that holds each of their keys once, with
-        its highest ``seq`` (last write wins), less the keys in ``drop``
-        (an inclusive ns range), and publish it beside them. Returns the
-        log entry of the new file (``path``, ``rows``, ``bytes``), or
-        none when no row is left. The one rewrite of the store, behind
-        :meth:`compact` and :meth:`delete_range`, as the reference
-        compacts into one new couch file (database.go:136-171): 2 Spark
-        jobs. No read sees the new file until the caller's commit names
-        it; Spark stages it in the database's hidden ``.tmp-<uuid>``
-        directory, which the next :meth:`compact` removes if a crash
-        leaves it."""
+        its highest ``seq`` (last write wins), in ``ts_ns`` order, less
+        the keys in ``drop`` (an inclusive ns range), and publish it
+        beside them. Returns the log entry of the new file (``path``,
+        ``rows``, ``bytes``), or none when no row is left. The one
+        rewrite of the store, behind :meth:`compact` and
+        :meth:`delete_range`, as the reference compacts into one new
+        couch file (database.go:136-171).
+
+        A fold on the driver, with no Spark job: pyarrow reads the files,
+        :func:`_newest` keeps each key's newest row, and the same publish
+        step as a commit's (:func:`_write_part`) writes the result. It
+        holds the one date partition in driver memory (about 1.8 MB for
+        the hot day of the ``ingest_live`` benchmark). No read sees the
+        new file until the caller's commit names it. A listed file that
+        is gone raises ``FileNotFoundError`` and publishes nothing."""
         path = self._path(name)
-        rows = self._scan(name, {date: files}).select("ts_ns", "seq", "doc")
+        rows = pq.read_table(
+            [os.path.join(path, f"date={date}", f) for f, _ in files],
+            columns=["ts_ns", "seq", "doc"],
+        )
         if drop is not None:
-            rows = rows.where(f"NOT (ts_ns >= {drop[0]} AND ts_ns <= {drop[1]})")
-        tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}")
-        try:
-            latest_by_key(rows, ["ts_ns"], "seq").coalesce(1).write.parquet(tmp)
-            for f in sorted(filter(_is_data_file, os.listdir(tmp))):
-                # The footer says whether the output holds rows: an empty
-                # one (every key dropped) is never published.
-                n = pq.read_metadata(os.path.join(tmp, f)).num_rows
-                if n:
-                    part = f"date={date}/{f}"
-                    os.replace(os.path.join(tmp, f), os.path.join(path, part))
-                    return [_entry(path, part, n)]
-            return []
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+            ts = rows.column("ts_ns").to_numpy()
+            rows = rows.filter((ts < drop[0]) | (ts > drop[1]))
+        rows = _newest(rows)
+        return [_write_part(path, date, rows)] if rows.num_rows else []
 
     def compact(self, name: str, fold_changelog: bool = True) -> None:
         """Rewrite each partition of more than one file as one file that
@@ -760,23 +745,23 @@ class SerieslyDB:
         compaction drops old revisions).
 
         Idempotent, like OPTIMIZE: a partition of exactly one data file
-        holds each key once, so it is left as it is (no Spark job, same
-        file, same partition version). A second ``compact`` with no
-        commit in between rewrites nothing; it still folds the commit log
-        and records itself there.
+        holds each key once, so it is left as it is (same file, same
+        partition version). A second ``compact`` with no commit in
+        between rewrites nothing; it still folds the commit log and
+        records itself there. Compact runs no Spark job.
 
-        Each partition is rewritten by :meth:`_rewrite` (two Spark jobs,
-        the new file published beside the old ones), and one log segment
-        then switches every rewritten partition to its new file at once;
-        the old files are unlinked after it. A revision committed during
-        the rewrite survives as a file of its own, folded at read time
-        until the next ``compact``. Compact first removes every file
-        under the database that no commit names (:meth:`_sweep`): a
-        crashed commit's data file or staging file, a crashed rewrite's
-        ``.tmp-*`` directory or retired files, a crashed log append's or
-        fold's staging file, and a file dropped into a ``date=``
-        directory by hand. A commit in flight on another handle or
-        thread keeps its files: the sweep waits for no commit, and is
+        Each partition is rewritten by :meth:`_rewrite` (a driver-side
+        fold of one day at a time, the new file published beside the old
+        ones), and one log segment then switches every rewritten
+        partition to its new file at once; the old files are unlinked
+        after it. A revision committed during the rewrite survives as a
+        file of its own, folded at read time until the next ``compact``.
+        Compact first removes every file under the database that no
+        commit names (:meth:`_sweep`): a crashed commit's or rewrite's
+        data file or staging file, a crashed rewrite's retired files, a
+        crashed log append's or fold's staging file, and anything put
+        into the database by hand. A commit in flight on another handle
+        or thread keeps its files: the sweep waits for no commit, and is
         skipped while one holds the database's lock.
 
         ``fold_changelog=False`` skips the commit-log fold — use it when
@@ -810,26 +795,30 @@ class SerieslyDB:
         """Remove every file under database ``name`` that no commit
         names: in ``date=`` directories every file but the snapshot's
         (and the directory, when the snapshot names none), in the commit
-        log every file but a segment, and every ``.tmp-*`` directory. It
-        holds the database's lock exclusively (:meth:`_log_lock`), so no
-        commit is between its first published file and its segment, and
-        a file that the snapshot it then resolves does not name belongs
-        to no commit that can still land. While a commit holds the lock,
-        the sweep is left to the next ``compact``."""
+        log every file but a segment, and every other entry of the
+        database directory, a directory with all it holds (such as the
+        staging directory of a crashed rewrite of an older version, which
+        ran on Spark). It holds the database's lock exclusively
+        (:meth:`_log_lock`), so no commit is between its first published
+        file and its segment, and a file that the snapshot it then
+        resolves does not name belongs to no commit that can still land.
+        While a commit holds the lock, the sweep is left to the next
+        ``compact``."""
         path = self._path(name)
         lock = self._log_lock(name, fcntl.LOCK_EX | fcntl.LOCK_NB)
         with contextlib.suppress(BlockingIOError), lock:
             files = self._snapshot(name).files
             for d in os.listdir(path):
                 sub = os.path.join(path, d)
-                if d.startswith(".tmp-"):
-                    shutil.rmtree(sub, ignore_errors=True)
-                    continue
                 if d == _CHANGELOG_DIR:
                     keep = {s[0] for s in _segments(sub)}
                 elif d.startswith("date="):
                     keep = set(files.get(d[len("date="):], ()))
+                elif os.path.isdir(sub):
+                    shutil.rmtree(sub)
+                    continue
                 else:
+                    os.remove(sub)
                     continue
                 for f in set(os.listdir(sub)) - keep:
                     os.remove(os.path.join(sub, f))
@@ -1030,15 +1019,39 @@ _NS_PER_DAY = 86_400 * 10**9
 
 def _is_data_file(f: str) -> bool:
     """A published parquet file: a data file of a ``date=`` partition, or
-    a commit-log segment. Hidden and ``_``-prefixed names (staging files,
-    Spark's markers) are not, as Spark's readers skip them."""
+    a commit-log segment. Hidden and ``_``-prefixed names (the staging
+    files of :func:`publish`) are not, as Spark's readers skip them."""
     return f.endswith(".parquet") and not f.startswith((".", "_"))
 
 
-def _entry(path: str, part: str, rows: int) -> dict:
-    """The commit-log entry of the published data file ``part`` (its
-    path under the database at ``path``) of ``rows`` rows."""
-    return {"path": part, "rows": rows, "bytes": os.path.getsize(os.path.join(path, part))}
+def _newest(table: pa.Table, key: str = "ts_ns") -> pa.Table:
+    """Last write wins: the rows of ``table`` sorted by ``key``, each
+    ``key`` once, in the row of its highest ``seq``. An empty table is
+    returned as it is."""
+    if not table.num_rows:
+        return table
+    table = table.sort_by([(key, "ascending"), ("seq", "descending")])
+    keys = table.column(key).to_numpy()
+    return table.filter(np.append(True, keys[1:] != keys[:-1]))
+
+
+def _write_part(path: str, date: str, table: pa.Table) -> dict:
+    """Publish ``table`` (:func:`publish`) as a new data file of the
+    ``date`` partition of the database at ``path``, and return its
+    commit-log entry: ``path`` under the database, ``rows``, ``bytes``.
+    The one writer of data files, behind commits and rewrites."""
+    part = f"date={date}/part-{uuid.uuid4().hex}.parquet"
+    os.makedirs(os.path.join(path, f"date={date}"), exist_ok=True)
+    # PLAIN, as Spark's writer falls back to for near-unique keys and
+    # docs: dictionary pages only grow such a file.
+    publish(
+        os.path.join(path, part),
+        lambda p: pq.write_table(table, p, compression="snappy", use_dictionary=False),
+    )
+    return {
+        "path": part, "rows": table.num_rows,
+        "bytes": os.path.getsize(os.path.join(path, part)),
+    }
 
 
 def _pairs(files: dict) -> list[tuple[str, int]]:

@@ -28,7 +28,10 @@ Covered:
     live key (``compact``) or the before/after view (``delete_range``);
     a crash at every step reopens with every kept key intact, and
     running the op again reaches one file per partition; ``compact``
-    removes every staging file a crashed commit left;
+    removes every staging file a crashed commit left, and everything
+    at the database root that is not the database (an older version's
+    rewrite staging directory, a stray file); a rewrite whose listed
+    file is gone raises and commits nothing;
   * ``get`` beside a ``compact`` that unlinks the files it listed reads
     the key's newest doc;
   * a delete that retires a multi-file day switches it in one commit,
@@ -1011,17 +1014,29 @@ def _leftover_staging(dbs):
     ]
 
 
+def _race_read(monkeypatch, race):
+    """Run ``race()`` once, just before the next driver read of data
+    files: a rewrite's read, which it runs after it resolved its
+    snapshot and before it publishes its file."""
+    real, fired = pq.read_table, []
+
+    def racing_read(source, *a, **kw):
+        if not fired and "date=" in str(source):
+            fired.append(source)
+            race()
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(dbmod.pq, "read_table", racing_read)
+    return fired
+
+
 def _race_scan(monkeypatch, dbs, other):
-    """Make ``dbs``'s next ``_scan``, which a rewrite runs after its
-    listing and before its write, first commit a revision through
-    ``other``."""
-    real = dbs._scan
-
-    def racing_scan(name, listing):
-        other.write("t", '{"k": 99}', ts="2024-01-01T02:00:00Z")
-        return real(name, listing)
-
-    monkeypatch.setattr(dbs, "_scan", racing_scan)
+    """Make ``dbs``'s next rewrite read, after its snapshot, land behind a
+    revision committed through ``other``."""
+    return _race_read(
+        monkeypatch,
+        lambda: other.write("t", '{"k": 99}', ts="2024-01-01T02:00:00Z"),
+    )
 
 
 class TestDataPlaneRace:
@@ -1035,9 +1050,10 @@ class TestDataPlaneRace:
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
         _two_file_day(dbs)
         other = SerieslyDB(spark, str(tmp_path / "root"))
-        _race_scan(monkeypatch, dbs, other)
+        fired = _race_scan(monkeypatch, dbs, other)
         dbs.compact("t")
         monkeypatch.undo()
+        assert len(fired) == 1
         assert _docs(dbs) == ['{"k": 1}', '{"k": 2}', '{"k": 99}']
 
     def test_raced_append_leaves_no_tmp_dir(self, spark, tmp_path, monkeypatch):
@@ -1045,27 +1061,28 @@ class TestDataPlaneRace:
         dbs.create("t")
         dbs.write("t", '{"k": 1}', ts="2024-01-01T00:00:00Z")
         other = SerieslyDB(spark, str(tmp_path / "root"))
-        _race_scan(monkeypatch, dbs, other)
+        fired = _race_scan(monkeypatch, dbs, other)
         # A delete of an empty instant rewrites its one-file edge day.
         dbs.delete_range("t", "2024-01-01T05:00:00Z", "2024-01-01T05:00:00Z")
         monkeypatch.undo()
+        assert len(fired) == 1
         assert _leftover_staging(dbs) == []
         assert _docs(dbs) == ['{"k": 1}', '{"k": 99}']
 
     @pytest.mark.parametrize(
         "op,nth",
-        [("replace", 0), ("rmtree", 0), ("remove", 0), ("remove", 1)],
-        ids=["replace", "rmtree", "remove-0", "remove-1"],
+        [("replace", 0), ("remove", 0), ("remove", 1)],
+        ids=["replace", "remove-0", "remove-1"],
     )
     def test_raced_append_at_each_step(self, spark, tmp_path, monkeypatch, op, nth):
         """The append lands just before the ``nth`` ``op`` of a compact
-        of a two-file partition: publishing the output, dropping the
-        staging directory, unlinking each input."""
+        of a two-file partition: publishing the output, unlinking each
+        input."""
         root = str(tmp_path / "root")
         dbs = SerieslyDB(spark, root)
         _two_file_day(dbs)
         other = SerieslyDB(spark, root)
-        seen = {"replace": 0, "rmtree": 0, "remove": 0}
+        seen = {"replace": 0, "remove": 0}
         fired = []
 
         def race(step_op, path):
@@ -1176,6 +1193,64 @@ class TestDataPlaneRace:
         with pytest.raises(FileNotFoundError):
             dbs.get("t", "2024-01-01T00:00:00Z")
 
+    def test_rewrite_of_a_vanished_file_raises_and_commits_nothing(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A second handle compacts the day after this handle's
+        ``compact`` resolved its snapshot and before its rewrite reads
+        the listed files: the read finds them gone and the ``compact``
+        raises, with no segment published and no staging file left. Every
+        handle then reads the second handle's compacted day."""
+        root = str(tmp_path / "root")
+        dbs = SerieslyDB(spark, root)
+        _two_file_day(dbs)
+        k = "2024-01-01T00:00:00Z"
+        dbs.write("t", '{"k": 3}', ts=k)
+        other = SerieslyDB(spark, root)
+        log = os.path.join(dbs._path("t"), ".changelog")
+        segments = []
+
+        def other_compacts():
+            other.compact("t")
+            segments.append(sorted(os.listdir(log)))
+
+        fired = _race_read(monkeypatch, other_compacts)
+        with pytest.raises(FileNotFoundError):
+            dbs.compact("t")
+        monkeypatch.undo()
+        assert len(fired) == 1
+        assert sorted(os.listdir(log)) == segments[0]
+        assert _leftover_staging(dbs) == []
+        for h in (dbs, other, SerieslyDB(spark, root)):
+            assert len(h._data_files("t")["2024-01-01"]) == 1
+            assert h.get("t", k) == '{"k": 3}'
+            assert h.get("t", "2024-01-01T01:00:00Z") == '{"k": 2}'
+            assert _docs(h) == ['{"k": 2}', '{"k": 3}']
+            assert [r.op for r in h.change_log("t").collect()] == ["write"] * 3 + ["compact"]
+
+    def test_sweep_removes_what_is_not_the_database(self, spark, tmp_path):
+        """The staging directory of a crashed rewrite of an older version
+        (``.tmp-<uuid>/`` at the database root, as Spark wrote it) and a
+        stray file at the root are not part of the database: ``compact``
+        removes both, and every key still reads."""
+        dbs = SerieslyDB(spark, str(tmp_path / "root"))
+        _two_file_day(dbs)
+        path = dbs._path("t")
+        tmp = os.path.join(path, ".tmp-0123456789abcdef0123456789abcdef")
+        os.makedirs(tmp)
+        for f in ("part-00000-x.snappy.parquet", "_SUCCESS"):
+            with open(os.path.join(tmp, f), "wb") as fh:
+                fh.write(b"half a parquet file")
+        stray = os.path.join(path, "stray.txt")
+        with open(stray, "w") as fh:
+            fh.write("not a data file")
+        dbs.compact("t")
+        assert not os.path.exists(tmp) and not os.path.exists(stray)
+        assert sorted(os.listdir(path)) == [".changelog", "date=2024-01-01"]
+        for h in (dbs, SerieslyDB(spark, str(tmp_path / "root"))):
+            assert _docs(h) == ['{"k": 1}', '{"k": 2}']
+            assert h.get("t", "2024-01-01T00:00:00Z") == '{"k": 1}'
+
     def test_clean_rewrite_still_succeeds(self, spark, tmp_path):
         dbs = SerieslyDB(spark, str(tmp_path / "root"))
         dbs.create("t")
@@ -1250,6 +1325,8 @@ class TestPartitionRewriteSteps:
             dbs, live = _store(spark, root)
             if compacted:
                 dbs.compact("t")
+            day = os.path.join(dbs._path("t"), "date=2024-01-02")
+            old = [os.path.join(day, f) for f, _ in dbs._data_files("t")["2024-01-02"]]
             counts = []
             steps = _hook_fs_steps(
                 monkeypatch, root, lambda *_: counts.append(dbs.df("t").count())
@@ -1258,7 +1335,12 @@ class TestPartitionRewriteSteps:
             monkeypatch.undo()
             after = dbs.df("t").count()
             assert after == len(live) - 2
-            assert len(steps) >= 3
+            # The publish of the edge's one new file, then one unlink per
+            # retired file.
+            assert [op for op, _ in steps] == ["replace"] + ["remove"] * len(old)
+            assert os.path.dirname(steps[0][1]) == day
+            assert [p for _, p in steps[1:]] == old
+            assert len(old) == (1 if compacted else 2)
             assert set(counts) <= {len(live), after}, list(zip(counts, steps))
 
     def test_read_at_every_retire_step_is_before_or_after(

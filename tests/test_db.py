@@ -8,6 +8,7 @@ import json
 import os
 from datetime import datetime, timezone
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -460,20 +461,20 @@ class TestMaintenance:
         assert [r.op for r in log][-2:] == ["compact", "compact"]
         assert len(os.listdir(os.path.join(dbs._path("t"), ".changelog"))) == 2
 
-    def test_rewrite_takes_two_jobs_a_partition(self, dbs, spark_jobs):
-        """The one partition rewrite costs 2 Spark jobs: ``compact`` of N
-        multi-file partitions takes 2N, and ``delete_range`` with one
-        multi-file edge takes 2: its one commit switches the edge's files
-        at once, so the edge is rewritten without the range in one step."""
+    def test_rewrite_runs_no_spark_job(self, dbs, spark_jobs):
+        """The one partition rewrite is a fold on the driver: ``compact``
+        of 3 multi-file partitions launches no Spark job, and neither
+        does ``delete_range`` with one multi-file edge, whose one commit
+        switches the edge's files at once."""
         self._seed_days(dbs, [1, 2, 3])
         dbs.write_batch(
             "t", [(f"2024-01-0{d}T06:00:00Z", _doc(d)) for d in (1, 2, 3)]
         )
-        assert spark_jobs(lambda: dbs.compact("t")) == (None, 6)
+        assert spark_jobs(lambda: dbs.compact("t")) == (None, 0)
         assert [len(f) for f in dbs._data_files("t").values()] == [1, 1, 1]
         dbs.write("t", _doc(9), ts="2024-01-02T18:00:00Z")
         edge = "2024-01-02T12:00:00Z"
-        assert spark_jobs(lambda: dbs.delete_range("t", edge, edge)) == (None, 2)
+        assert spark_jobs(lambda: dbs.delete_range("t", edge, edge)) == (None, 0)
         assert [len(f) for f in dbs._data_files("t").values()] == [1, 1, 1]
         assert dbs.df("t").count() == 9
 
@@ -530,6 +531,97 @@ class TestMaintenance:
         assert info["doc_count"] == 4
         assert info["n_partitions"] == 2
         assert info["space_used"] > 0
+
+
+def _at(h):
+    return f"2024-01-01T{h:02d}:00:00Z"
+
+
+class TestDataFileInvariant:
+    """Every data file holds each key once, in the row of its newest
+    ``seq``, in strictly increasing ``ts_ns``: the file of a commit and
+    the file of a rewrite alike. A rewritten day's rows are the Spark
+    last-write-wins view (``df``) of the day taken before the rewrite."""
+
+    def _files(self, dbs):
+        """The rows ``(ts_ns, seq, doc)`` of each data file of the day,
+        in file order."""
+        part = os.path.join(dbs._path("t"), "date=2024-01-01")
+        return [
+            [
+                (r["ts_ns"], r["seq"], r["doc"])
+                for r in pq.read_table(
+                    os.path.join(part, f), columns=["ts_ns", "seq", "doc"]
+                ).to_pylist()
+            ]
+            for f, _ in dbs._data_files("t")["2024-01-01"]
+        ]
+
+    def _live(self, dbs):
+        return sorted(tuple(r) for r in dbs.df("t").collect())
+
+    def _assert_invariant(self, rows, newest):
+        keys = [ts for ts, _, _ in rows]
+        assert keys == sorted(set(keys))  # strictly increasing: each key once
+        assert {ts: seq for ts, seq, _ in rows} == {k: newest[k] for k in keys}
+
+    def _max_seq(self, files):
+        newest = {}
+        for rows in files:
+            for ts, seq, _ in rows:
+                newest[ts] = max(seq, newest.get(ts, seq))
+        return newest
+
+    def test_commit_file(self, dbs):
+        """A batch with repeated and out-of-order keys: the later row of a
+        key wins."""
+        dbs.create("t")
+        keys = dbs.write_batch("t", [
+            (_at(3), _doc(1)), (_at(1), _doc(2)), (_at(3), _doc(3)),
+            (_at(2), _doc(4)), (_at(1), _doc(5)),
+        ])
+        (rows,) = self._files(dbs)
+        last = dbs.change_log("t").collect()[-1].seq
+        # Row i of the batch takes seq last - 4 + i.
+        seq = {k: last - 4 + i for i, k in enumerate(keys)}
+        self._assert_invariant(rows, seq)
+        assert [doc for _, _, doc in rows] == [_doc(5), _doc(4), _doc(3)]
+        assert rows == self._live(dbs)
+
+    def test_compacted_file(self, dbs):
+        """A day of 3 files, with revisions of keys across them."""
+        dbs.create("t")
+        dbs.write_batch("t", [(_at(h), _doc(10 + h)) for h in (4, 1, 2, 3)])
+        dbs.write_batch("t", [(_at(h), _doc(20 + h)) for h in (3, 1, 5)])
+        dbs.write_batch("t", [(_at(h), _doc(30 + h)) for h in (2, 3)])
+        files = self._files(dbs)
+        assert len(files) == 3
+        for rows in files:
+            self._assert_invariant(rows, self._max_seq([rows]))
+        before = self._live(dbs)
+        dbs.compact("t")
+        (rows,) = self._files(dbs)
+        self._assert_invariant(rows, self._max_seq(files))
+        assert rows == before
+        assert [doc for _, _, doc in rows] == [
+            _doc(21), _doc(32), _doc(33), _doc(14), _doc(25)
+        ]
+
+    def test_delete_edge_file(self, dbs):
+        """A two-file edge day, with revisions, rewritten without the
+        deleted range."""
+        dbs.create("t")
+        dbs.write_batch("t", [(_at(h), _doc(10 + h)) for h in (5, 1, 2, 3, 4)])
+        dbs.write_batch("t", [(_at(h), _doc(20 + h)) for h in (4, 2, 1)])
+        files = self._files(dbs)
+        lo, hi = _at(2), "2024-01-01T03:30:00Z"
+        gone = {r.ts_ns for r in dbs.df("t", lo, hi).collect()}
+        before = [r for r in self._live(dbs) if r[0] not in gone]
+        dbs.delete_range("t", lo, hi)
+        (rows,) = self._files(dbs)
+        self._assert_invariant(rows, self._max_seq(files))
+        assert len(gone) == 2 and rows == before
+        assert [doc for _, _, doc in rows] == [_doc(21), _doc(24), _doc(15)]
 
 
 class TestChangesFeed:
