@@ -64,7 +64,13 @@ Design for scale: a read names exactly the snapshot's files of the
 in-range partitions and reads them with the declared schema — no
 schema-inference job, no listing of other days — keeping the ts_ns
 bounds on the scan for parquet min/max skipping (the B-tree range-walk
-analogue); a point ``get`` reads only its key's day, on the driver with
+analogue). A read whose files hold at most the session's
+``spark.sql.files.openCostInBytes`` (4 MB by default) is one Spark task:
+the scan is coalesced to one partition, so the fold, a query's
+aggregate, window and ordered take, or a count, run in one stage with no
+shuffle, one job, as the reference answers a query in one walk of one
+process; a larger read keeps the scan's partitions and shuffles between
+those steps. A point ``get`` reads only its key's day, on the driver with
 pyarrow (no Spark job); a commit writes one new file per date from the
 driver with pyarrow (no Spark job, no read-modify-write); delete_range
 retires fully-covered partitions without reading their data and
@@ -217,8 +223,11 @@ class SerieslyDB:
     Storage invariant: no data file holds a key twice, and a key's
     revisions share one ``date=`` partition. Reads therefore apply the
     last-write-wins fold only when some partition they cover holds more
-    than one file. The one partition rewrite (:meth:`_rewrite`) always
-    writes one folded file, so :meth:`compact` leaves a one-file
+    than one file. A Spark read of at most the session's
+    ``spark.sql.files.openCostInBytes`` of files runs as one task, fold
+    and all, in one job (:meth:`_live`). The one partition rewrite
+    (:meth:`_rewrite`) always writes one folded file, so
+    :meth:`compact` leaves a one-file
     partition as it is (no new file name, no new partition version).
     Commits and rewrites run on the driver with pyarrow, and no
     mutation launches a Spark job; a rewrite holds one date partition
@@ -538,7 +547,19 @@ class SerieslyDB:
         A key lives in one partition and no file holds it twice, so the
         last-write-wins fold runs only if some listed partition holds
         more than one file. A range that touches no partition is the
-        empty frame."""
+        empty frame.
+
+        A small read is one Spark task. When the in-range files hold at
+        most the session's ``spark.sql.files.openCostInBytes`` (4 MB by
+        default: the bytes Spark reckons it could scan in the time it
+        takes to open one more file, so a split of fewer bytes buys no
+        time), the filtered scan is coalesced to one partition before
+        the fold.
+        One partition satisfies every distribution the operators above
+        it require, so the fold, a query's bucket aggregate, its rate
+        window and its ordered take, or a ``count``, run in one stage:
+        no exchange, no adaptive re-plan, one job. A larger read keeps
+        the scan's own partitions and shuffles as the operators ask."""
         if files is None:
             files = self._data_files(name)
         lo_d = None if lo is None else _ns_date(lo)
@@ -557,6 +578,9 @@ class SerieslyDB:
             bounds.append(f"ts_ns <= {hi}")
         if bounds:
             raw = raw.where(" AND ".join(bounds))
+        size = sum(b for files in listing.values() for _, b in files)
+        if size <= self.spark._jsparkSession.sessionState().conf().filesOpenCostInBytes():
+            raw = raw.coalesce(1)
         if any(len(files) > 1 for files in listing.values()):
             raw = latest_by_key(raw, ["ts_ns"], "seq")
         return raw
@@ -622,10 +646,13 @@ class SerieslyDB:
         :meth:`dump_lines`, written executor-side with ``df.write.text``
         (no driver materialization — the 100 TB analogue of the
         reference's incrementally streamed ``_dump``,
-        handlers.go:381-420). Files are key-ordered within and across
-        part files (range-partitioned by the sort); returns the row
-        count. Concatenating the sorted part files reproduces the
-        streamed dump byte-for-byte.
+        handlers.go:381-420). Lines are key-ordered within and across
+        part files; returns the row count. A range whose files hold at
+        most the session's ``spark.sql.files.openCostInBytes`` is read
+        in one task (:meth:`_live`) and dumps as one part file; a larger
+        one as part files range-partitioned by the sort. Concatenating
+        the sorted part files reproduces the streamed dump
+        byte-for-byte.
 
         ``compression="gzip"`` is the engine-side analogue of the
         reference's gzip encoding sink (S12, ``newGzippingWriter``,

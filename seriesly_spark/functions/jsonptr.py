@@ -5,8 +5,9 @@ Pointers, e.g. ``/data/children/0/data/score`` (resolution at reference
 query.go:70-84 via jsonpointer.FindMany). Spark's JSON functions speak
 JSONPath, so the engine translates once at plan-build time — a pure Python
 string transform; the per-row work stays in the JVM via
-``get_json_object`` (which Catalyst collapses into a shared JsonTuple-style
-single parse when several pointers hit the same column).
+``get_json_object``. Catalyst does not merge several such calls on one
+column into a shared parse: in Spark 4.1 each call parses the document
+again, so a plan parses a document once per distinct pointer it extracts.
 
 This is the engine's one extraction path, as ``jsonpointer.FindMany`` is the
 reference's. It keeps each value's raw JSON text. Spark's Variant type
@@ -69,6 +70,9 @@ def extract_ptr_sql(doc: str, ptr: str) -> str:
     for missing fields or JSON null — which lines up with the reference's
     value model (scalars stringified, structural values passed through,
     missing/null -> nil; reference query.go:130-143).
+
+    Each call parses ``doc`` on its own: Spark shares no parse among the
+    calls on one column, so a plan should extract each pointer once.
     """
     return f"get_json_object({doc}, {sql_str(ptr_to_jsonpath(ptr))})"
 

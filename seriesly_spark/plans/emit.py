@@ -12,8 +12,9 @@ bounded answer) or a DataFrame plan. There is one renderer, and it reads
 Arrow: the ``bucket_ms`` column zipped with the alias columns. A plan is
 taken to the driver once, whole, with a ``toArrow()`` under a row limit
 no answer reaches: over the query's ``orderBy`` that is a
-``TakeOrderedAndProject`` (2 Spark jobs for a one-file store), which
-needs no range-partition sampling job for a global sort (4 jobs). An
+``TakeOrderedAndProject``, which needs no range-partition sampling job
+for a global sort (4 jobs): 1 Spark job over a store read in one task
+(``SerieslyDB._live``), 2 over a read of several partitions. An
 answer that ``QueryCache`` found over its row cap is taken the same way.
 
 ``iter_seriesly_rows`` yields the same entries one at a time: from a table

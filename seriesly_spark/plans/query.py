@@ -21,17 +21,25 @@ one definition. Catalyst then:
   * the time-range predicate lands on the scan (parquet min/max skipping;
     ``SerieslyDB`` hands it only the in-range date partitions — together
     the B-tree range walk analogue);
-  * all pointers are extracted in one pass (Catalyst collapses multiple
-    ``get_json_object`` over one column into a shared parse — the
-    ``jsonpointer.FindMany`` analogue, reference query.go:94-110). That
-    is the one extraction engine; it keeps each value's raw JSON text
-    (``functions.jsonptr`` says why it is not Spark's Variant type);
+  * each distinct pointer is one ``get_json_object`` call in one
+    projection (the ``jsonpointer.FindMany`` analogue, reference
+    query.go:94-110); a pointer that a filter and several fields share
+    is extracted once. Catalyst does not merge the calls on one column
+    into a shared parse: Spark 4.1 parses a document once per distinct
+    pointer. That is the one extraction engine; it keeps each value's
+    raw JSON text (``functions.jsonptr`` says why it is not Spark's
+    Variant type);
   * equality filters run before any aggregation (reference query.go:112-128);
   * bucket aggregation is a partial+final hash aggregate (the per-bucket
-    map/reduce fan-out, reference query.go:147-217);
+    map/reduce fan-out, reference query.go:147-217). Over a small
+    ``SerieslyDB`` read, which is one partition (``SerieslyDB._live``),
+    both halves run in the scan's one task with no exchange; over a
+    larger one the final half reads a shuffle on the group keys;
   * rate reducers collect each bucket's sorted samples in that same
     aggregate; one window over the bucket rows adds the pair that crosses
-    into the next bucket (operators/rate.py).
+    into the next bucket (operators/rate.py). The window runs in the
+    aggregate's stage when its input is one partition, and otherwise
+    after a shuffle on the series (one partition when there is none).
 
 Semantics pinned by the reference and preserved here:
   * A bucket appears in the output iff at least one document exists in it

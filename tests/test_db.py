@@ -390,8 +390,8 @@ class TestIngestAndRead:
             "t", from_ts="2024-01-01", to_ts="2024-01-02T12:00:00Z"
         )
         assert n == len(expected)
-        # part files are range-partitioned by the sort: reading them back
-        # in part order reproduces the streamed dump exactly
+        # part files are key-ordered (one file for a range this small):
+        # reading them back in part order reproduces the streamed dump
         import glob
 
         lines = []

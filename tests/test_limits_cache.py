@@ -355,7 +355,8 @@ class TestQueryCache:
     def test_answer_over_row_cap_is_taken_once_more(self, spark, tmp_path, spark_jobs, monkeypatch):
         """An answer over the cap: the cache's bounded take of its units
         finds it over, and the renderer takes the whole plan once, with
-        no second bounded take and no global sort."""
+        no second bounded take and no global sort. The store is read in
+        one task, so each take is one job."""
         d = SerieslyDB(spark, str(tmp_path / "dbroot"))
         d.create("t")
         d.write_batch("t", [(f"2024-01-0{day}T{h:02d}:00:00Z", json.dumps({"v": h}))
@@ -367,7 +368,7 @@ class TestQueryCache:
         plain, plain_jobs = spark_jobs(lambda: to_seriesly_json(d.query("t", q), q.aliases))
         assert cached == plain
         assert len(json.loads(cached)) == 120
-        assert (cached_jobs, plain_jobs) == (4, 2)
+        assert (cached_jobs, plain_jobs) == (2, 1)
         assert os.listdir(tmp_path / "cache") == []
 
     def test_answer_over_row_cap_is_not_cached(self, dbs, tmp_path, monkeypatch):
@@ -380,6 +381,86 @@ class TestQueryCache:
             assert qc.query("t", self._q()).collect() == want
         assert os.listdir(cache) == []
         assert (qc.misses, qc.hits) == (2, 0)
+
+
+class TestOneTaskRead:
+    """A read whose in-range files hold at most the session's
+    ``spark.sql.files.openCostInBytes`` runs as one Spark task
+    (``SerieslyDB._live``); a larger one keeps the scan's partitions and
+    their shuffles, and gives the same answers."""
+
+    OPEN_COST = "spark.sql.files.openCostInBytes"
+
+    @pytest.fixture()
+    def dbs(self, spark, tmp_path):
+        """One date partition of three files: three commits, the last two
+        re-sending some keys of the first (last write wins)."""
+        d = SerieslyDB(spark, str(tmp_path / "dbroot"))
+        d.create("t")
+        for i in range(3):
+            d.write_batch("t", [
+                (f"2024-01-01T{h:02d}:{m:02d}:00Z",
+                 json.dumps({"v": h * 60 + m + 1000 * i, "h": f"h{(h + m + i) % 2}"}))
+                for h in range(24) for m in {0, *range(i * 5, 60, 15)}
+            ])
+        assert [len(fs) for fs in d._data_files("t").values()] == [3]
+        return d
+
+    PANELS = {
+        "plain": dict(fields=[("/v", "sum"), ("/v", "avg"), ("/v", "count"), ("/v", "max")]),
+        "list": dict(fields=[("/h", "identity"), ("/h", "distinct"), ("/v", "any")]),
+        "rate": dict(fields=[("/v", "c"), ("/v", "sum")], filters=[("/h", "h0")]),
+    }
+
+    @staticmethod
+    def _q(panel):
+        spec = TestOneTaskRead.PANELS[panel]
+        return SerieslyQuery(
+            group_ms=3_600_000, aliases=[f"f{i}" for i in range(len(spec["fields"]))], **spec
+        )
+
+    @staticmethod
+    def _plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def test_small_read_is_one_job(self, dbs, tmp_path, spark_jobs):
+        """A cache miss, an uncached rendered query and a ``count``: the
+        fold, the aggregate and the take of each run in one stage. Over
+        the scan's own partitions they took 3, 3 and 3 jobs."""
+        q = self._q("plain")
+        qc = QueryCache(dbs, str(tmp_path / "cache"))
+        miss, miss_jobs = spark_jobs(lambda: qc.query("t", q))
+        text, query_jobs = spark_jobs(lambda: to_seriesly_json(dbs.query("t", q), q.aliases))
+        n, count_jobs = spark_jobs(lambda: dbs.df("t").count())
+        assert (miss_jobs, query_jobs, count_jobs) == (1, 1, 1)
+        assert (qc.misses, miss.num_rows, n) == (1, 24, 24 * 12)
+        assert to_seriesly_json(miss, q.aliases) == text
+        plan = self._plan(dbs.query("t", q))
+        assert "Coalesce 1" in plan and "Exchange" not in plan
+
+    @pytest.mark.parametrize("panel", sorted(PANELS))
+    def test_read_over_the_open_cost_keeps_the_shuffled_plan(self, dbs, spark, panel):
+        """With the open cost at 1 byte every read is over it: the plan
+        has no ``Coalesce 1`` and shuffles, and answers as the one-task
+        plan does (exact sums, so partial sums merge in any order)."""
+        q = self._q(panel)
+        one_task = dbs.query("t", q, exact_sums=True)
+        assert "Coalesce 1" in self._plan(one_task)
+        want = one_task.toArrow()
+        assert want.num_rows == 24
+        old = spark.conf.get(self.OPEN_COST, None)
+        spark.conf.set(self.OPEN_COST, "1b")
+        try:
+            shuffled = dbs.query("t", q, exact_sums=True)
+            got = shuffled.toArrow()
+            plan = self._plan(shuffled)
+        finally:
+            if old is None:
+                spark.conf.unset(self.OPEN_COST)
+            else:
+                spark.conf.set(self.OPEN_COST, old)
+        assert "Coalesce" not in plan and "Exchange" in plan
+        assert got.equals(want)
 
 
 MIN_MS, HOUR_MS, DAY_MS = 60_000, 3_600_000, 86_400_000
